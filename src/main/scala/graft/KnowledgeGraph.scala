@@ -124,14 +124,20 @@ final case class KnowledgeGraph(
     edges.join(broadcast(vocab.select(col("relationship_type").as("rel_type"))),
       Seq("rel_type"), "left_semi")
 
-  /** T2/T7: shortest path with hydrated node sequence. */
+  /** T2/T7: shortest path with hydrated node sequence. The accelerator
+    * answers first, as the reference serves /query/connect
+    * (graph_facade.py:316-347): [[GraphOps.shortestPathAuto]] reuses the
+    * graph [[related]] loaded for the same semantic edges, and only a view
+    * over the accelerator threshold runs the distributed engine. */
   def findPath(from: String, to: String, maxHops: Int = 6): Option[(Int, Seq[String])] =
-    GraphOps.shortestPath(semanticEdges, from, to, maxHops)
+    GraphOps.shortestPathAuto(semanticEdges, from, to, maxHops)
 
-  /** T3: k-shortest paths (edge-exclusion contract). */
+  /** T3: k-shortest paths (edge-exclusion contract), accelerator first
+    * like [[findPath]] — the reference's /query/paths
+    * (graph_facade.py:349-411) via [[GraphOps.kShortestPathsAuto]]. */
   def findPaths(from: String, to: String, maxHops: Int = 6,
       maxPaths: Int = 5): Seq[(Int, Seq[String])] =
-    GraphOps.kShortestPaths(semanticEdges, from, to, maxHops, maxPaths)
+    GraphOps.kShortestPathsAuto(semanticEdges, from, to, maxHops, maxPaths)
 
   /** V5 connect-by-search: phrase embeddings → best concept match each →
     * paths between them (queries.py:1498-1658). */

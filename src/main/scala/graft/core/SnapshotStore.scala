@@ -42,7 +42,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   // schemas carry parquet.field.id metadata ([[SnapshotStore.FieldIdKey]])
   // and resolution must match file columns by ID — with the flag off,
   // Spark matches by NAME and a renamed column would silently read NULL
-  // from pre-rename files (probed: FieldIdProbe's CONF-OFF case).
+  // from pre-rename files (probed; SCALE.md, Round 15, field-ID renames).
   // Session-global but semantically a no-op for read schemas without IDs
   // (everything non-graft), so arming it here cannot change other reads.
   spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -1556,11 +1556,12 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       // The metadata path additionally requires every TARGET name to be
       // free of chain history under a different field ID: Spark's reader
       // resolves a requested column by NAME when the file holds that
-      // name, field IDs notwithstanding (probed: FieldIdProbe2's swap
-      // case fails with a type mismatch), so renaming onto a name some
-      // chain file carries for another column would mis-resolve. A name
-      // only ever bound to the SAME id (rename-back: a->b then b->a) is
-      // safe. Swaps and name-reuse fall back to the honest rewrite.
+      // name, field IDs notwithstanding (probed: a swap fails with a type
+      // mismatch; SCALE.md, Round 15, field-ID renames), so renaming onto
+      // a name some chain file carries for another column would
+      // mis-resolve. A name only ever bound to the SAME id (rename-back:
+      // a->b then b->a) is safe. Swaps and name-reuse fall back to the
+      // honest rewrite.
       val targetsIdSafe = SnapshotStore.schemaHasFieldIds(base) && {
         val historical: Map[String, Set[Long]] = chainOf(table, v)
           .flatMap(l => snapshotSchema(table, Some(l)).fields)

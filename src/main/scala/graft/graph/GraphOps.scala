@@ -34,6 +34,16 @@ import scala.collection.mutable
   *  - Filters (confidence, rel-type) are applied to the edge view BEFORE the
   *    loop, so they push into the Parquet scan — the reference instead
   *    post-filters rel types in Python (api/app/lib/graph_facade.py:214-221).
+  *
+  * Engine choice lives here and nowhere else: every `*Auto` entry point
+  * (and every caller routed through one — the KnowledgeGraph facade's
+  * path calls, the graph queries, the `graft_path` TVFs) asks the
+  * driver-side accelerator ([[InMemoryGraph]], [[WeightedGraph]]) first,
+  * the way the reference answers /query/connect and /query/paths
+  * (graph_facade.py:316-411). The graph loads once per edge-view plan into
+  * a plan-keyed cache; only a view over the edge threshold falls back to
+  * the distributed iterative-join engines below, which also serve as the
+  * differential specs' reference.
   */
 object GraphOps {
 
@@ -107,7 +117,16 @@ object GraphOps {
     * that is genuinely cluster territory (~1B+ edges at 100 TB scale).
     * Override per call, or fleet-wide via GRAFT_ACCEL_THRESHOLD. */
   val DefaultAccelThreshold: Long =
-    sys.env.get("GRAFT_ACCEL_THRESHOLD").map(_.toLong).getOrElse(20000000L)
+    parseAccelThreshold(sys.env.get("GRAFT_ACCEL_THRESHOLD"))
+
+  /** A GRAFT_ACCEL_THRESHOLD setting: unset is 20M edges; anything but a
+    * non-negative integer is refused with an error naming the variable. */
+  private[graft] def parseAccelThreshold(raw: Option[String]): Long =
+    raw.fold(20000000L) { v =>
+      v.trim.toLongOption.filter(_ >= 0L).getOrElse(
+        throw new IllegalArgumentException(
+          s"GRAFT_ACCEL_THRESHOLD must be a non-negative edge count, got '$v'"))
+    }
 
   /** Driver-side accel results back into a DataFrame. Small results stay a
     * LocalRelation (Catalyst sees exact stats → broadcasts downstream).
@@ -130,17 +149,17 @@ object GraphOps {
     }
   }
 
-  /** The (name, double) specialization of [[accelResultDF]] for results
-    * aligned with an accel graph's interned node array (PageRank ranks,
-    * full-coverage distances). Even the parallelize path above pays
-    * per-ELEMENT JavaSerializer cost on 2M boxed tuples — measured 3-5 s
-    * per action at sf10 just shipping the result. Chunking the two
-    * parallel arrays into per-partition slices serializes the doubles as
-    * one primitive block per slice and drops the per-tuple wrappers; the
-    * rows only come into existence executor-side. */
-  private[graph] def accelPairsDF(spark: org.apache.spark.sql.SparkSession,
-      names: Array[String], vals: Array[Double],
-      c1: String, c2: String): DataFrame = {
+  /** [[accelResultDF]] for a value array aligned with an accel graph's
+    * interned node array (PageRank ranks, component assignments). Even the
+    * parallelize path above pays per-ELEMENT JavaSerializer cost on 2M
+    * boxed tuples — measured 3-5 s per action at sf10 just shipping the
+    * result. Chunking the two parallel arrays into per-partition slices
+    * serializes each slice as one array block (primitive for doubles) and
+    * drops the per-tuple wrappers; the rows only come into existence
+    * executor-side. */
+  private[graph] def accelPairsDF[V](spark: org.apache.spark.sql.SparkSession,
+      names: Array[String], vals: Array[V], c1: String, c2: String)(
+      implicit enc: org.apache.spark.sql.Encoder[(String, V)]): DataFrame = {
     import spark.implicits._
     val n = names.length
     if (n <= 100000) names.indices.map(i => (names(i), vals(i))).toDF(c1, c2)
@@ -148,34 +167,7 @@ object GraphOps {
       val chunk = 65536
       val slices = (0 until n by chunk).map { i =>
         val hi = math.min(i + chunk, n)
-        (java.util.Arrays.copyOfRange(names.asInstanceOf[Array[AnyRef]], i, hi)
-           .asInstanceOf[Array[String]],
-         java.util.Arrays.copyOfRange(vals, i, hi))
-      }
-      spark.createDataset(
-        spark.sparkContext.parallelize(slices, slices.size)
-          .flatMap { case (ns, vs) =>
-            ns.indices.iterator.map(j => (ns(j), vs(j))) })
-        .toDF(c1, c2)
-    }
-  }
-
-  /** [[accelPairsDF]] for a String-valued companion array (component
-    * assignments). */
-  private[graph] def accelPairsStrDF(spark: org.apache.spark.sql.SparkSession,
-      names: Array[String], vals: Array[String],
-      c1: String, c2: String): DataFrame = {
-    import spark.implicits._
-    val n = names.length
-    if (n <= 100000) names.indices.map(i => (names(i), vals(i))).toDF(c1, c2)
-    else {
-      val chunk = 65536
-      def slice(a: Array[String], i: Int, hi: Int): Array[String] =
-        java.util.Arrays.copyOfRange(a.asInstanceOf[Array[AnyRef]], i, hi)
-          .asInstanceOf[Array[String]]
-      val slices = (0 until n by chunk).map { i =>
-        val hi = math.min(i + chunk, n)
-        (slice(names, i, hi), slice(vals, i, hi))
+        (names.slice(i, hi), vals.slice(i, hi))
       }
       spark.createDataset(
         spark.sparkContext.parallelize(slices, slices.size)
@@ -316,7 +308,7 @@ object GraphOps {
     val spark = edges.sparkSession
     import spark.implicits._
     val filtered = filteredView(edges, minConfidence, relTypes)
-    probeAndLoad(filtered, accelThreshold) match {
+    probeAndLoad(filtered, accelThreshold, graphs) match {
       case Some(g) => accelResultDF(spark,
         g.bfs(startNodes, maxDepth, direction), "node", "distance", "parent")
       case None => bfs(edges, startNodes, maxDepth, direction, minConfidence, relTypes)
@@ -333,8 +325,8 @@ object GraphOps {
       minConfidence: Option[Double] = None,
       accelThreshold: Long = DefaultAccelThreshold): Option[(Int, Seq[String])] = {
     val filtered = filteredView(edges, minConfidence, None)
-    probeAndLoad(filtered, accelThreshold) match {
-      case Some(g) => g.shortestPath(from, to, maxHops, direction)
+    probeAndLoad(filtered, accelThreshold, graphs) match {
+      case Some(g) => g.shortestPathExcluding(from, to, maxHops, direction, Set.empty)
       case None    => shortestPath(edges, from, to, maxHops, direction, minConfidence)
     }
   }
@@ -343,27 +335,30 @@ object GraphOps {
     * edge view — the analog of graph_accel's once-per-backend load with a
     * generation check (`graph_accel_status`/`load`/`invalidate`,
     * api/app/lib/graph_facade.py:50-58,1087-1153): consecutive traversals
-    * over the same edge view reuse the adjacency arrays instead of
-    * re-collecting the graph. Canonicalized plans compare structurally
+    * over the same edge view reuse the loaded graph instead of
+    * re-collecting it. Canonicalized plans compare structurally
     * (normalized expr ids; LocalRelation keys include the data itself), so
     * a hit requires the identical source plan — and the immutable-version
     * storage discipline (SnapshotStore) means changed data always has a
     * changed path, hence a changed plan. In-place external rewrites are the
     * one case that needs an explicit [[invalidateAccel]], exactly like the
-    * reference's `graph_accel_invalidate` after mutations. */
-  private object AccelCache {
+    * reference's `graph_accel_invalidate` after mutations. An LRU of up to
+    * `maxLoaded` graphs plus `maxOver` memoized over-threshold verdicts;
+    * one instance per accelerator graph kind, each building its graphs
+    * from the shared [[InternedEdges]] front end. */
+  private[graph] final class AccelCache[G](maxLoaded: Int, maxOver: Int,
+      val weighted: Boolean, val build: InternedEdges => G) {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    private val MaxLoaded = 8
-    private val MaxOver = 32
-    private val loaded = mutable.LinkedHashMap.empty[LogicalPlan, (Long, InMemoryGraph)]
+    // key -> (edges, nodes, graph)
+    private val loaded = mutable.LinkedHashMap.empty[LogicalPlan, (Long, Int, G)]
     private val over = mutable.LinkedHashMap.empty[LogicalPlan, Long]
 
     /** Some(result) on a conclusive cache hit (loaded graph, or known to
       * exceed `threshold`); None → caller must probe. */
-    def get(key: LogicalPlan, threshold: Long): Option[Option[InMemoryGraph]] =
+    def get(key: LogicalPlan, threshold: Long): Option[Option[G]] =
       synchronized {
         loaded.remove(key) match {
-          case Some(hit @ (n, g)) =>
+          case Some(hit @ (n, _, g)) =>
             loaded.put(key, hit) // re-insert = LRU refresh
             if (n <= threshold) Some(Some(g)) else Some(None)
           case None =>
@@ -373,29 +368,41 @@ object GraphOps {
             }
         }
       }
-    def putLoaded(key: LogicalPlan, n: Long, g: InMemoryGraph): Unit =
+    def putLoaded(key: LogicalPlan, n: Long, nodes: Int, g: G): Unit =
       synchronized {
-        loaded.put(key, (n, g))
-        while (loaded.size > MaxLoaded) loaded.remove(loaded.head._1)
+        loaded.put(key, (n, nodes, g))
+        while (loaded.size > maxLoaded) loaded.remove(loaded.head._1)
       }
     def putOver(key: LogicalPlan, probedThreshold: Long): Unit = synchronized {
       over.put(key, math.max(over.getOrElse(key, Long.MinValue), probedThreshold))
-      while (over.size > MaxOver) over.remove(over.head._1)
+      while (over.size > maxOver) over.remove(over.head._1)
     }
     def clear(): Unit = synchronized { loaded.clear(); over.clear() }
     def stats: (Int, Long, Int) = synchronized {
-      (loaded.size, loaded.valuesIterator.map(_._2.size.toLong).sum, over.size)
+      (loaded.size, loaded.valuesIterator.map(_._2.toLong).sum, over.size)
     }
   }
+
+  /** Unweighted graphs, shared by every traversal, PageRank and components
+    * dispatcher. */
+  private[graph] val graphs =
+    new AccelCache[InMemoryGraph](8, 32, weighted = false, InMemoryGraph(_))
+
+  /** Weighted graphs, keyed by the (src, dst, w) view — the weight
+    * EXPRESSION is part of the key, so differently-weighted calls over one
+    * edge set never collide. Smaller bounds: each entry also carries a
+    * double per edge. */
+  private val weightedGraphs =
+    new AccelCache[WeightedGraph](4, 16, weighted = true, new WeightedGraph(_))
 
   /** Evict every cached accelerator graph (graph_accel_invalidate analog).
     * Needed only when edge INPUT FILES are rewritten in place; versioned
     * snapshot writes change paths and therefore miss the cache naturally. */
-  def invalidateAccel(): Unit = { AccelCache.clear(); WeightedAccelCache.clear() }
+  def invalidateAccel(): Unit = { graphs.clear(); weightedGraphs.clear() }
 
   /** (loaded graphs, total resident nodes, memoized over-threshold
     * entries) — the graph_accel_status freshness/residency probe analog. */
-  def accelStatus: (Int, Long, Int) = AccelCache.stats
+  def accelStatus: (Int, Long, Int) = graphs.stats
 
   /** Probe and (if it fits) load the edge view into the accelerator cache
     * — the graph_accel_load analog. Idempotent: Some(graph) whenever the
@@ -403,35 +410,37 @@ object GraphOps {
     * it exceeds the threshold and the distributed engines own it. */
   def ensureLoaded(edges: DataFrame,
       accelThreshold: Long = DefaultAccelThreshold): Option[InMemoryGraph] =
-    probeAndLoad(filteredView(edges, None, None), accelThreshold)
+    probeAndLoad(filteredView(edges, None, None), accelThreshold, graphs)
 
-  /** Size-probe + accelerator load in one cached scan: the (src, dst) view
-    * is persisted, the probe is a cheap `limit(N+1).count()` (no driver
-    * transfer), and only an under-threshold graph is collected — the cache
-    * makes that collect reuse the probed partitions instead of recomputing
-    * the upstream plan. An over-threshold graph never ships rows to the
-    * driver (the probe short-circuits after N+1 and the distributed engine
-    * takes over). Results are memoized in [[AccelCache]] either way. */
-  private[graph] def probeAndLoad(filtered: DataFrame,
-      accelThreshold: Long): Option[InMemoryGraph] = {
-    val view = filtered
-      .select(col("src").cast("string"), col("dst").cast("string"))
+  /** Size-probe + accelerator load in one cached scan: the
+    * [[InternedEdges.view]] of `edges` is persisted, the probe is a cheap
+    * `limit(N+1).count()` (no driver transfer), and only an
+    * under-threshold graph is interned — the cache makes that load reuse
+    * the probed partitions instead of recomputing the upstream plan. An
+    * over-threshold graph never ships rows to the driver (the probe
+    * short-circuits after N+1 and the distributed engine takes over).
+    * Results are memoized in `cache` either way. The threshold is capped
+    * below Int.MaxValue (the probe's limit is an Int, and no accelerator
+    * graph holds more edges than an array does) and floored at -1, so a
+    * negative threshold sends every view to the distributed engines. */
+  private[graph] def probeAndLoad[G](edges: DataFrame, accelThreshold: Long,
+      cache: AccelCache[G]): Option[G] = {
+    val threshold = math.max(-1L, math.min(accelThreshold, Int.MaxValue - 1L))
+    val view = InternedEdges.view(edges, cache.weighted)
     val key = view.queryExecution.analyzed.canonicalized
-    AccelCache.get(key, accelThreshold).getOrElse {
+    cache.get(key, threshold).getOrElse {
       val cached = view.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val n = cached.limit(accelThreshold.toInt + 1).count()
-        if (n <= accelThreshold) {
-          // Large loads intern DISTRIBUTED (dictionary join + compact int
-          // ship); the probe's n decides, so the extra jobs only run when
-          // driver-side interning would dominate (InMemoryGraph doc).
-          val g =
-            if (n > InMemoryGraph.DistributedLoadThreshold)
-              InMemoryGraph.loadDistributed(cached)
-            else InMemoryGraph.load(cached)
-          AccelCache.putLoaded(key, n, g)
+        val n = cached.limit(threshold.toInt + 1).count()
+        if (n <= threshold) {
+          // Large loads intern DISTRIBUTED (dictionary join + compact
+          // array ship); the probe's n decides, so the extra jobs only run
+          // when driver-side interning would dominate.
+          val e = InternedEdges.load(cached, n, cache.weighted)
+          val g = cache.build(e)
+          cache.putLoaded(key, n, e.names.length, g)
           Some(g)
-        } else { AccelCache.putOver(key, accelThreshold); None }
+        } else { cache.putOver(key, threshold); None }
       } finally { cached.unpersist(); () }
     }
   }
@@ -499,7 +508,7 @@ object GraphOps {
       direction: Direction = Both,
       accelThreshold: Long = DefaultAccelThreshold): Seq[(Int, Seq[String])] = {
     val filtered = filteredView(edges, None, None)
-    probeAndLoad(filtered, accelThreshold) match {
+    probeAndLoad(filtered, accelThreshold, graphs) match {
       case Some(g) => g.kShortestPaths(from, to, maxHops, maxPaths, direction)
       case None    => kShortestPaths(edges, from, to, maxHops, maxPaths, direction)
     }
@@ -508,7 +517,8 @@ object GraphOps {
   /** K-shortest paths via the reference's fallback contract — shortest path
     * plus edge-excluded alternatives (api/app/lib/graph_facade.py:396-411),
     * not full Yen's. Each iteration removes the previous path's edges
-    * (`left_anti` against an exclusion list) and re-runs T2. */
+    * (`left_anti` against an exclusion list) and re-runs the distributed
+    * T2. */
   def kShortestPaths(
       edges: DataFrame,
       from: String,
@@ -518,16 +528,27 @@ object GraphOps {
       direction: Direction = Both): Seq[(Int, Seq[String])] = {
     val spark = edges.sparkSession
     import spark.implicits._
+    kPathsByExclusion(maxPaths) { excluded =>
+      val remaining = edges.join(broadcast(excluded.toSeq.toDF("xsrc", "xdst")),
+        (col("src") === col("xsrc") && col("dst") === col("xdst")) ||
+          (col("src") === col("xdst") && col("dst") === col("xsrc")),
+        "left_anti")
+      shortestPath(remaining, from, to, maxHops, direction)
+    }
+  }
+
+  /** The edge-exclusion loop both engines' k-paths share: take the
+    * shortest path avoiding `excluded` (undirected node pairs), add its
+    * edges to the exclusions, and repeat until `maxPaths` paths, no path,
+    * or a repeated path. */
+  private[graph] def kPathsByExclusion(maxPaths: Int)(
+      shortest: Set[(String, String)] => Option[(Int, Seq[String])])
+      : Seq[(Int, Seq[String])] = {
     var results = Vector.empty[(Int, Seq[String])]
     var excluded = Set.empty[(String, String)]
     var continue = true
     while (continue && results.size < maxPaths) {
-      val excludedDf = excluded.toSeq.toDF("xsrc", "xdst")
-      val remaining = edges.join(broadcast(excludedDf),
-        (col("src") === col("xsrc") && col("dst") === col("xdst")) ||
-          (col("src") === col("xdst") && col("dst") === col("xsrc")),
-        "left_anti")
-      shortestPathAuto(remaining, from, to, maxHops, direction) match {
+      shortest(excluded) match {
         case Some(p @ (_, nodes)) if !results.contains(p) =>
           results :+= p
           excluded ++= nodes.sliding(2).collect { case Seq(a, b) => (a, b) }
@@ -639,43 +660,6 @@ object GraphOps {
     dist
   }
 
-  /** [[AccelCache]]'s weighted sibling: loaded [[WeightedGraph]]s (and
-    * over-threshold verdicts) keyed by the canonicalized plan of the
-    * (src, dst, w) view — the weight EXPRESSION is part of the key, so
-    * differently-weighted calls over one edge set never collide. Smaller
-    * bounds than the unweighted cache: each entry also carries a double
-    * per edge. */
-  private object WeightedAccelCache {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    private val MaxLoaded = 4
-    private val MaxOver = 16
-    private val loaded = mutable.LinkedHashMap.empty[LogicalPlan, (Long, WeightedGraph)]
-    private val over = mutable.LinkedHashMap.empty[LogicalPlan, Long]
-    def get(key: LogicalPlan, threshold: Long): Option[Option[WeightedGraph]] =
-      synchronized {
-        loaded.remove(key) match {
-          case Some(hit @ (n, g)) =>
-            loaded.put(key, hit) // re-insert = LRU refresh
-            if (n <= threshold) Some(Some(g)) else Some(None)
-          case None =>
-            over.get(key) match {
-              case Some(probed) if probed >= threshold => Some(None)
-              case _                                   => None
-            }
-        }
-      }
-    def putLoaded(key: LogicalPlan, n: Long, g: WeightedGraph): Unit =
-      synchronized {
-        loaded.put(key, (n, g))
-        while (loaded.size > MaxLoaded) loaded.remove(loaded.head._1)
-      }
-    def putOver(key: LogicalPlan, probedThreshold: Long): Unit = synchronized {
-      over.put(key, math.max(over.getOrElse(key, Long.MinValue), probedThreshold))
-      while (over.size > MaxOver) over.remove(over.head._1)
-    }
-    def clear(): Unit = synchronized { loaded.clear(); over.clear() }
-  }
-
   /** Auto-dispatched weighted shortest distances: below the edge threshold
     * the weighted edge list loads ONCE per canonicalized view plan into a
     * [[WeightedGraph]] (interned nodes, parallel primitive arrays) and the
@@ -693,34 +677,12 @@ object GraphOps {
       maxHops: Int, accelThreshold: Long = DefaultAccelThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val view = edges
-      .select(col("src").cast("string"), col("dst").cast("string"),
-        col("w").cast("double"))
-      // w.isNotNull matters for dispatch parity: the accel loader's
-      // Row.getDouble unboxes a null weight to 0.0 while the DataFrame
-      // path drops such edges via null propagation — filtering here makes
-      // both sides of the threshold drop null-weight edges identically.
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull)
-    val key = view.queryExecution.analyzed.canonicalized
-    val dispatched: Option[WeightedGraph] =
-      WeightedAccelCache.get(key, accelThreshold).getOrElse {
-        val cached = view.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val n = cached.limit(accelThreshold.toInt + 1).count()
-          if (n <= accelThreshold) {
-            val g =
-              if (n > InMemoryGraph.DistributedLoadThreshold)
-                WeightedGraph.loadDistributed(cached)
-              else WeightedGraph.fromRows(cached.collect())
-            WeightedAccelCache.putLoaded(key, n, g)
-            Some(g)
-          } else { WeightedAccelCache.putOver(key, accelThreshold); None }
-        } finally { cached.unpersist(); () }
-      }
-    dispatched match {
+    probeAndLoad(edges, accelThreshold, weightedGraphs) match {
       case Some(g) => accelResultDF(spark, g.relax(source, maxHops), "node", "dist")
-      case None    => weightedShortestPaths(view, source, maxHops)
+      // the same null-dropping view the accelerator loads, so both sides
+      // of the threshold drop null-weight edges identically
+      case None    => weightedShortestPaths(
+        InternedEdges.view(edges, weighted = true), source, maxHops)
     }
   }
 
@@ -741,15 +703,15 @@ object GraphOps {
     // identically, so the view must come from one helper, not a lookalike
     // inline select.
     val filtered = filteredView(edges, None, None)
-    probeAndLoad(filtered, accelThreshold) match {
+    probeAndLoad(filtered, accelThreshold, graphs) match {
       case Some(g) =>
         accelPairsDF(spark, g.names,
           g.pageRankRanks(iterations, damping, reset), "node", "r")
       case None    =>
-        // string-cast like the accel's load view, so both dispatch paths
-        // return the same node column type whatever the input id type
-        pageRank(filtered.select(col("src").cast("string"),
-          col("dst").cast("string")), iterations, damping, reset)
+        // the accel's load view, so both dispatch paths return the same
+        // node column type whatever the input id type
+        pageRank(InternedEdges.view(filtered, weighted = false),
+          iterations, damping, reset)
     }
   }
 

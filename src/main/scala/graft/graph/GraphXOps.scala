@@ -74,10 +74,11 @@ object GraphXOps {
       accelThreshold: Long = GraphOps.DefaultAccelThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    GraphOps.probeAndLoad(edges.select(col("src"), col("dst")), accelThreshold) match {
+    GraphOps.probeAndLoad(edges.select(col("src"), col("dst")), accelThreshold,
+        GraphOps.graphs) match {
       case Some(g) =>
         val (ns, cs) = g.connectedComponentsArrays()
-        GraphOps.accelPairsStrDF(spark, ns, cs, "node", "component")
+        GraphOps.accelPairsDF(spark, ns, cs, "node", "component")
       case None    => connectedComponents(edges)
     }
   }

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{array, col, explode}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import scala.collection.mutable
 
 /** Driver-side in-memory traversal accelerator — the Spark re-expression of
@@ -147,7 +148,7 @@ final class InMemoryGraph private (
   }
 
   /** [[connectedComponents]] as two parallel arrays aligned with
-    * [[names]] — the shape [[GraphOps.connectedComponentsAuto]] ships via
+    * [[names]] — the shape [[GraphXOps.connectedComponentsAuto]] ships via
     * the chunked-array result path (see [[pageRankRanks]]). */
   def connectedComponentsArrays(): (Array[String], Array[String]) = {
     val parent = Array.tabulate(size)(identity)
@@ -188,22 +189,13 @@ final class InMemoryGraph private (
     * graph_facade.py:396-411), entirely in memory: the graph loads once and
     * each iteration re-runs BFS against the growing exclusion set. */
   def kShortestPaths(from: String, to: String, maxHops: Int, maxPaths: Int,
-      direction: GraphOps.Direction = GraphOps.Both): Seq[(Int, Seq[String])] = {
-    var results = Vector.empty[(Int, Seq[String])]
-    var excluded = Set.empty[(String, String)]
-    var continue = true
-    while (continue && results.size < maxPaths) {
-      shortestPathExcluding(from, to, maxHops, direction, excluded) match {
-        case Some(p @ (_, nodes)) if !results.contains(p) =>
-          results :+= p
-          excluded ++= nodes.sliding(2).collect { case Seq(a, b) => (a, b) }
-        case _ => continue = false
-      }
-    }
-    results
-  }
+      direction: GraphOps.Direction = GraphOps.Both): Seq[(Int, Seq[String])] =
+    GraphOps.kPathsByExclusion(maxPaths)(
+      shortestPathExcluding(from, to, maxHops, direction, _))
 
-  private def shortestPathExcluding(from: String, to: String, maxHops: Int,
+  /** Shortest path with hydrated node sequence, avoiding the listed
+    * (undirected) node pairs; pass no exclusions for the plain path. */
+  def shortestPathExcluding(from: String, to: String, maxHops: Int,
       direction: GraphOps.Direction,
       excluded: Set[(String, String)]): Option[(Int, Seq[String])] = {
     val res = bfs(Seq(from), maxHops, direction, excluded)
@@ -270,78 +262,148 @@ final class InMemoryGraph private (
     }
     (buf ++ ghosts).toSeq
   }
-
-  /** Shortest path with hydrated node sequence. */
-  def shortestPath(from: String, to: String, maxHops: Int,
-      direction: GraphOps.Direction = GraphOps.Both): Option[(Int, Seq[String])] = {
-    val res = bfs(Seq(from), maxHops, direction)
-    val byName = res.map(t => t._1 -> t).toMap
-    byName.get(to).map { case (_, hops, _) =>
-      var path = List(to)
-      var cur = byName(to)._3
-      while (cur != null) { path = cur :: path; cur = byName(cur)._3 }
-      (hops, path)
-    }
-  }
 }
 
 object InMemoryGraph {
 
   /** Bulk-load from an (already filtered) oriented edge DataFrame with
-    * `src`/`dst` string columns — one collect, the analog of the accel's
-    * SPI bulk load. */
-  def load(edges: DataFrame): InMemoryGraph =
-    fromRows(edges.select(col("src").cast("string"), col("dst").cast("string"))
-      .collect())
-
-  /** Edge count above which the dispatchers intern DISTRIBUTED
-    * ([[loadDistributed]]) instead of on the driver: below it the two
-    * dictionary-join jobs cost more than they parallelize away. */
-  val DistributedLoadThreshold: Long = 1000000L
+    * `src`/`dst` columns — one collect, the analog of the accel's SPI bulk
+    * load. */
+  def load(edges: DataFrame): InMemoryGraph = apply(InternedEdges.fromRows(
+    InternedEdges.view(edges, weighted = false).collect(), weighted = false))
 
   /** [[load]] with the interning done as a DISTRIBUTED dictionary join —
-    * the large-graph load path. Driver-side [[fromRows]] pays an
-    * O(2·E) String-keyed HashMap intern plus per-row String allocation,
-    * single-threaded (~15 s at sf10's 17M-row doubled view — more than
-    * the traversal it feeds); here the node dictionary (distinct name →
-    * dense id via zipWithIndex) and both endpoint lookups run as plain
-    * shuffles, and the driver receives COMPACT (int, int) rows plus the
-    * 1-row-per-node dictionary. Same graph by construction: the joins
-    * drop null endpoints exactly like fromRows' filter, parallel edges
-    * survive as join duplicates, and edge/array order is semantically
-    * irrelevant (BFS parents tie-break on min NAME, components are
-    * order-free union-find, PageRank sums exact decimals) — pinned by the
+    * the large-graph load path (see [[InternedEdges.distributed]]). */
+  def loadDistributed(edges: DataFrame): InMemoryGraph =
+    apply(InternedEdges.distributed(edges, weighted = false))
+
+  /** The out/in CSR adjacency over an interned edge list. */
+  private[graph] def apply(e: InternedEdges): InMemoryGraph = {
+    val n = e.names.length
+    val outCount = new Array[Int](n)
+    val inCount = new Array[Int](n)
+    e.src.foreach(outCount(_) += 1)
+    e.dst.foreach(inCount(_) += 1)
+    val outAdj = Array.tabulate(n)(v => new Array[Int](outCount(v)))
+    val inAdj = Array.tabulate(n)(v => new Array[Int](inCount(v)))
+    val outPos = new Array[Int](n)
+    val inPos = new Array[Int](n)
+    var i = 0
+    while (i < e.src.length) {
+      val s = e.src(i); val d = e.dst(i)
+      outAdj(s)(outPos(s)) = d; outPos(s) += 1
+      inAdj(d)(inPos(d)) = s; inPos(d) += 1
+      i += 1
+    }
+    new InMemoryGraph(e.names, e.idOf, outAdj, inAdj)
+  }
+}
+
+/** An interned edge list — node names to dense ints plus parallel
+  * (src, dst[, w]) arrays, `w` empty when unweighted. The one front end
+  * both accelerator graphs ([[InMemoryGraph]], [[WeightedGraph]]) build
+  * from, on the driver ([[fromRows]]) or distributed ([[distributed]]). */
+private[graph] final class InternedEdges(
+    val names: Array[String],
+    val idOf: java.util.HashMap[String, Integer],
+    val src: Array[Int], val dst: Array[Int], val w: Array[Double])
+
+private[graph] object InternedEdges {
+
+  /** Edge count above which [[load]] interns DISTRIBUTED instead of on the
+    * driver: below it the two dictionary-join jobs cost more than they
+    * parallelize away. */
+  val DistributedLoadThreshold: Long = 1000000L
+
+  /** The (src, dst[, w]) view every size probe and load reads: ids cast to
+    * string, the weight to double, rows with a null field dropped. The
+    * distributed engines drop a null endpoint at their equi-joins and a
+    * null weight by null propagation, so the accelerator must drop them
+    * too or the two dispatch paths diverge on the same input (a null
+    * endpoint would intern as a phantom node, and a null weight could not
+    * read as "no edge"). */
+  def view(edges: DataFrame, weighted: Boolean): DataFrame = {
+    val ends = Seq(col("src").cast("string"), col("dst").cast("string"))
+    val kept = col("src").isNotNull && col("dst").isNotNull
+    if (weighted)
+      edges.select((ends :+ col("w").cast("double")): _*)
+        .where(kept && col("w").isNotNull)
+    else edges.select(ends: _*).where(kept)
+  }
+
+  /** Intern a [[view]] of `n` edges: on the driver below
+    * [[DistributedLoadThreshold]], distributed above it. */
+  def load(view: DataFrame, n: Long, weighted: Boolean): InternedEdges =
+    if (n > DistributedLoadThreshold) distributed(view, weighted)
+    else fromRows(view.collect(), weighted)
+
+  /** Intern already-collected (src, dst[, w]) rows on the driver; rows
+    * with a null endpoint are dropped (see [[view]]). */
+  def fromRows(allRows: Array[Row], weighted: Boolean): InternedEdges = {
+    val rows = allRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val idOf = new java.util.HashMap[String, Integer]()
+    val names = mutable.ArrayBuffer[String]()
+    def intern(s: String): Int = {
+      val existing = idOf.get(s)
+      if (existing != null) existing.intValue()
+      else { val id = names.length; idOf.put(s, id); names += s; id }
+    }
+    val srcs = new Array[Int](rows.length)
+    val dsts = new Array[Int](rows.length)
+    val ws = new Array[Double](if (weighted) rows.length else 0)
+    var i = 0
+    while (i < rows.length) {
+      srcs(i) = intern(rows(i).getString(0))
+      dsts(i) = intern(rows(i).getString(1))
+      if (weighted) ws(i) = rows(i).getDouble(2)
+      i += 1
+    }
+    new InternedEdges(names.toArray, idOf, srcs, dsts, ws)
+  }
+
+  /** Intern as a DISTRIBUTED dictionary join — the large-graph load path.
+    * Driver-side [[fromRows]] pays an O(2·E) String-keyed HashMap intern
+    * plus per-row String allocation, single-threaded (~15 s at sf10's
+    * 17M-row doubled view — more than the traversal it feeds); here the
+    * node dictionary (distinct name → dense id via zipWithIndex) and both
+    * endpoint lookups run as plain shuffles, and the driver receives
+    * COMPACT int (and double) arrays plus the 1-row-per-node dictionary.
+    * Same graph by construction: [[view]] drops null fields exactly like
+    * fromRows' filter, parallel edges survive as join duplicates, and
+    * edge/array order is semantically irrelevant (BFS parents tie-break on
+    * min NAME, components are order-free union-find, PageRank sums exact
+    * decimals, weighted relaxation takes an exact min) — pinned by the
     * GraphAccelSpec differential, which runs both paths. */
-  def loadDistributed(edges: DataFrame): InMemoryGraph = {
+  def distributed(edges: DataFrame, weighted: Boolean): InternedEdges = {
     val spark = edges.sparkSession
-    val e = edges
-      .select(col("src").cast("string"), col("dst").cast("string"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
+    val e = view(edges, weighted)
     val dict = e.select(explode(array(col("src"), col("dst"))).as("n"))
       .distinct()
       .rdd.map(_.getString(0)).zipWithIndex()
-      .map { case (n, i) => org.apache.spark.sql.Row(n, i.toInt) }
-    val dictDF = spark.createDataFrame(dict,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
+      .map { case (n, i) => Row(n, i.toInt) }
+    val dictDF = spark.createDataFrame(dict, StructType(Seq(
+        StructField("n", StringType, nullable = false),
+        StructField("id", IntegerType, nullable = false))))
       .localCheckpoint(true) // read 3×: both joins + the names collect
     // Ship COMPACT per-partition arrays, not rows: collect() of 8.5M
     // two-int Rows costs as much as the string interning it replaces
     // (measured ~12 s either way at sf10) — per-row deserialization is
     // the real bottleneck. A handful of primitive-array blocks
     // deserializes in O(bytes).
-    val edgeParts: Array[(Array[Int], Array[Int])] = e
+    val edgeParts: Array[(Array[Int], Array[Int], Array[Double])] = e
       .join(dictDF.toDF("src", "__sid"), "src")
       .join(dictDF.toDF("dst", "__did"), "dst")
-      .select(col("__sid"), col("__did"))
+      .select((Seq(col("__sid"), col("__did")) ++
+        (if (weighted) Seq(col("w")) else Nil)): _*)
       .rdd.mapPartitions { it =>
         val sb = new mutable.ArrayBuilder.ofInt
         val db = new mutable.ArrayBuilder.ofInt
-        it.foreach { r => sb += r.getInt(0); db += r.getInt(1) }
-        Iterator((sb.result(), db.result()))
+        val wb = new mutable.ArrayBuilder.ofDouble
+        it.foreach { r =>
+          sb += r.getInt(0); db += r.getInt(1)
+          if (weighted) wb += r.getDouble(2)
+        }
+        Iterator((sb.result(), db.result(), wb.result()))
       }.collect()
     val nameParts: Array[(Array[Int], Array[String])] = dictDF
       .rdd.mapPartitions { it =>
@@ -359,65 +421,10 @@ object InMemoryGraph {
         names(ids(j)) = ns(j); idOf.put(ns(j), ids(j)); j += 1
       }
     }
-    val m = edgeParts.iterator.map(_._1.length).sum
-    val srcs = new Array[Int](m); val dsts = new Array[Int](m)
-    var off = 0
-    edgeParts.foreach { case (ss, ds) =>
-      System.arraycopy(ss, 0, srcs, off, ss.length)
-      System.arraycopy(ds, 0, dsts, off, ds.length)
-      off += ss.length
-    }
-    fromInterned(names, idOf, srcs, dsts)
-  }
-
-  /** Adjacency build shared by [[fromRows]] and [[loadDistributed]]. */
-  private def fromInterned(names: Array[String],
-      idOf: java.util.HashMap[String, Integer],
-      srcs: Array[Int], dsts: Array[Int]): InMemoryGraph = {
-    val n = names.length
-    val outCount = new Array[Int](n)
-    val inCount = new Array[Int](n)
-    srcs.foreach(outCount(_) += 1)
-    dsts.foreach(inCount(_) += 1)
-    val outAdj = Array.tabulate(n)(v => new Array[Int](outCount(v)))
-    val inAdj = Array.tabulate(n)(v => new Array[Int](inCount(v)))
-    val outPos = new Array[Int](n)
-    val inPos = new Array[Int](n)
-    var i = 0
-    while (i < srcs.length) {
-      val s = srcs(i); val d = dsts(i)
-      outAdj(s)(outPos(s)) = d; outPos(s) += 1
-      inAdj(d)(inPos(d)) = s; inPos(d) += 1
-      i += 1
-    }
-    new InMemoryGraph(names, idOf, outAdj, inAdj)
-  }
-
-  /** Build from already-collected (src, dst) rows — lets auto-dispatchers
-    * size-probe and load with ONE distributed computation instead of a
-    * count() pass followed by a second full collect(). */
-  def fromRows(allRows: Array[org.apache.spark.sql.Row]): InMemoryGraph = {
-    // An edge with a null endpoint carries no adjacency information; the
-    // distributed engines drop such rows implicitly at their equi-joins,
-    // so the accel must drop them too or the two dispatch paths diverge
-    // on the same input (null would otherwise intern as a phantom node).
-    val rows = allRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-    val idOf = new java.util.HashMap[String, Integer]()
-    val names = mutable.ArrayBuffer[String]()
-    def intern(s: String): Int = {
-      val existing = idOf.get(s)
-      if (existing != null) existing.intValue()
-      else { val id = names.length; idOf.put(s, id); names += s; id }
-    }
-    val srcs = new Array[Int](rows.length)
-    val dsts = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      srcs(i) = intern(rows(i).getString(0))
-      dsts(i) = intern(rows(i).getString(1))
-      i += 1
-    }
-    fromInterned(names.toArray, idOf, srcs, dsts)
+    new InternedEdges(names, idOf,
+      Array.concat(edgeParts.map(_._1).toIndexedSeq: _*),
+      Array.concat(edgeParts.map(_._2).toIndexedSeq: _*),
+      Array.concat(edgeParts.map(_._3).toIndexedSeq: _*))
   }
 }
 
@@ -428,12 +435,11 @@ object InMemoryGraph {
   * reused across calls: the load's collect + intern of the edge list is
   * the dominant cost at audit scale (sf10's 17M-row doubled view measured
   * ~20 s to ship + intern vs ~0.3 s for the relaxation itself). */
-final class WeightedGraph private (
-    val names: Array[String],
-    idOf: java.util.HashMap[String, Integer],
-    src: Array[Int], dst: Array[Int], w: Array[Double]) {
+final class WeightedGraph private[graph] (edges: InternedEdges) {
 
-  def edgeCount: Int = src.length
+  def names: Array[String] = edges.names
+
+  def edgeCount: Int = edges.src.length
 
   /** Bounded-Jacobi relaxation, bit-identical to the distributed loop in
     * [[GraphOps.weightedShortestPaths]]: every candidate distance is the
@@ -442,8 +448,9 @@ final class WeightedGraph private (
     * min in edge order — min over IEEE doubles is exact, so the strict-==
     * differential in GraphOpsSpec holds by construction. */
   def relax(source: String, maxHops: Int): Seq[(String, Double)] = {
-    val sid = idOf.get(source)
+    val sid = edges.idOf.get(source)
     if (sid == null) return Seq((source, 0.0))
+    val (src, dst, w) = (edges.src, edges.dst, edges.w)
     val Inf = Double.PositiveInfinity
     val n = names.length
     var dist = Array.fill(n)(Inf)
@@ -470,92 +477,13 @@ final class WeightedGraph private (
 
 object WeightedGraph {
 
-  /** Distributed-interning load for large weighted views — the weighted
-    * twin of [[InMemoryGraph.loadDistributed]] (same dictionary-join
-    * shape, the weight rides the edge row; same order-irrelevance
-    * argument, pinned by GraphOpsSpec's strict-== differential). */
-  def loadDistributed(edges: DataFrame): WeightedGraph = {
-    val spark = edges.sparkSession
-    val e = edges
-      .select(col("src").cast("string"), col("dst").cast("string"),
-        col("w").cast("double"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-    val dict = e.select(explode(array(col("src"), col("dst"))).as("n"))
-      .distinct()
-      .rdd.map(_.getString(0)).zipWithIndex()
-      .map { case (n, i) => org.apache.spark.sql.Row(n, i.toInt) }
-    val dictDF = spark.createDataFrame(dict,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
-      .localCheckpoint(true)
-    // Compact per-partition array shipping — see InMemoryGraph.
-    val edgeParts: Array[(Array[Int], Array[Int], Array[Double])] = e
-      .join(dictDF.toDF("src", "__sid"), "src")
-      .join(dictDF.toDF("dst", "__did"), "dst")
-      .select(col("__sid"), col("__did"), col("w"))
-      .rdd.mapPartitions { it =>
-        val sb = new mutable.ArrayBuilder.ofInt
-        val db = new mutable.ArrayBuilder.ofInt
-        val wb = new mutable.ArrayBuilder.ofDouble
-        it.foreach { r =>
-          sb += r.getInt(0); db += r.getInt(1); wb += r.getDouble(2)
-        }
-        Iterator((sb.result(), db.result(), wb.result()))
-      }.collect()
-    val nameParts: Array[(Array[Int], Array[String])] = dictDF
-      .rdd.mapPartitions { it =>
-        val ib = new mutable.ArrayBuilder.ofInt
-        val nb = mutable.ArrayBuffer.empty[String]
-        it.foreach { r => nb += r.getString(0); ib += r.getInt(1) }
-        Iterator((ib.result(), nb.toArray))
-      }.collect()
-    val n = nameParts.iterator.map(_._1.length).sum
-    val names = new Array[String](n)
-    val idOf = new java.util.HashMap[String, Integer]()
-    nameParts.foreach { case (ids, ns) =>
-      var j = 0
-      while (j < ids.length) {
-        names(ids(j)) = ns(j); idOf.put(ns(j), ids(j)); j += 1
-      }
-    }
-    val m = edgeParts.iterator.map(_._1.length).sum
-    val srcs = new Array[Int](m); val dsts = new Array[Int](m)
-    val ws = new Array[Double](m)
-    var off = 0
-    edgeParts.foreach { case (ss, ds, wws) =>
-      System.arraycopy(ss, 0, srcs, off, ss.length)
-      System.arraycopy(ds, 0, dsts, off, ds.length)
-      System.arraycopy(wws, 0, ws, off, wws.length)
-      off += ss.length
-    }
-    new WeightedGraph(names, idOf, srcs, dsts, ws)
-  }
+  /** Distributed-interning load for large weighted views (see
+    * [[InternedEdges.distributed]]). */
+  def loadDistributed(edges: DataFrame): WeightedGraph =
+    new WeightedGraph(InternedEdges.distributed(edges, weighted = true))
 
   /** Build from already-collected (src: String, dst: String, w: Double)
-    * rows; null endpoints are dropped to match the distributed loop's
-    * implicit equi-join behavior, like [[InMemoryGraph.fromRows]]. */
-  def fromRows(allRows: Array[org.apache.spark.sql.Row]): WeightedGraph = {
-    val rows = allRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-    val idOf = new java.util.HashMap[String, Integer]()
-    val names = mutable.ArrayBuffer[String]()
-    def intern(s: String): Int = {
-      val existing = idOf.get(s)
-      if (existing != null) existing.intValue()
-      else { val id = names.length; idOf.put(s, id); names += s; id }
-    }
-    val srcs = new Array[Int](rows.length)
-    val dsts = new Array[Int](rows.length)
-    val ws = new Array[Double](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      srcs(i) = intern(rows(i).getString(0))
-      dsts(i) = intern(rows(i).getString(1))
-      ws(i) = rows(i).getDouble(2)
-      i += 1
-    }
-    new WeightedGraph(names.toArray, idOf, srcs, dsts, ws)
-  }
+    * rows; rows with a null endpoint are dropped. */
+  def fromRows(rows: Array[Row]): WeightedGraph =
+    new WeightedGraph(InternedEdges.fromRows(rows, weighted = true))
 }

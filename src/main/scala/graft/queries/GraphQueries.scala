@@ -24,14 +24,20 @@ object GraphQueries {
     * ids and its fan-out at C(10k,2) pairs spread across tasks. */
   val AdamicAdarDegreeCeiling: Int = 10000
 
-  /** Directed edge view: supplier s<k> → part p<k>. */
-  def edges(s: SparkSession, dir: String): DataFrame =
+  /** The edge definition, once: distinct (sk: supplier key, pk: part key)
+    * pairs of line-1 `lineitem` rows. [[edges]] names them; q21 shuffles
+    * the keys themselves. */
+  private def keyPairs(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .where(col("l_linenumber") === 1)
-      .select(
-        concat(lit("s"), col("l_suppkey")).as("src"),
-        concat(lit("p"), col("l_partkey")).as("dst"))
+      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
       .distinct()
+
+  /** Directed edge view: supplier s<k> → part p<k>. */
+  def edges(s: SparkSession, dir: String): DataFrame =
+    keyPairs(s, dir).select(
+      concat(lit("s"), col("sk")).as("src"),
+      concat(lit("p"), col("pk")).as("dst"))
 
   private val edgeCte =
     """edges AS (
@@ -55,10 +61,7 @@ object GraphQueries {
     // view), total_degree = the tag-group count, and the output string /
     // ordering are unchanged.
     "q21_degree" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .where(col("l_linenumber") === 1)
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
+      keyPairs(s, dir)
         .select(explode(array(
           struct(lit(0L).as("t"), col("sk").as("k")),
           struct(lit(1L).as("t"), col("pk").as("k")))).as("e"))

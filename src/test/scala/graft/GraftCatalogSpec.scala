@@ -205,7 +205,7 @@ class GraftCatalogSpec extends SparkSpec {
       .contains(("key", 4)),
       "the bucket claim must follow the renamed column name")
     // a SWAP falls back to the honest rewrite (Spark resolves an existing
-    // file NAME over the field id — probed in FieldIdProbe2)
+    // file NAME over the field id — probe results in SCALE.md, Round 15)
     val szPre = dirSize(r2)
     st2.renameColumns("b", Map("key" -> "v", "v" -> "key"))
     assert(dirSize(r2) - szPre > 4096, "a swap must rewrite, not alias")

@@ -92,6 +92,32 @@ class GraphAccelSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a threshold at or past Int.MaxValue still dispatches to the accelerator") {
+    // The size probe's limit is an Int: an uncapped threshold overflowed
+    // it to a negative limit, which Spark refuses at analysis. Edge rows
+    // unique to this test, so no earlier cache entry short-cuts the probe.
+    val es = Seq(("t1", "t2"), ("t2", "t3")).toDF("src", "dst")
+    Seq(Int.MaxValue.toLong, 3000000000L, Long.MaxValue).foreach { t =>
+      GraphOps.invalidateAccel()
+      val auto = GraphOps.bfsAuto(es, Seq("t1"), 3, Outgoing, accelThreshold = t)
+      // the accelerator answers with a local relation, not the hop joins
+      assert(!auto.queryExecution.analyzed.toString.contains("Join"), s"threshold $t")
+      assert(distances(auto) == inMemDistances(es, "t1", 3, Outgoing))
+      assert(distances(auto) == Map("t1" -> 0, "t2" -> 1, "t3" -> 2))
+    }
+  }
+
+  test("a bad GRAFT_ACCEL_THRESHOLD is refused with an error naming it") {
+    assert(GraphOps.parseAccelThreshold(None) == 20000000L)
+    assert(GraphOps.parseAccelThreshold(Some(" 5000 ")) == 5000L)
+    assert(GraphOps.parseAccelThreshold(Some("0")) == 0L)
+    Seq("abc", "-1", "2e7", "").foreach { bad =>
+      val err = intercept[IllegalArgumentException](
+        GraphOps.parseAccelThreshold(Some(bad)))
+      assert(err.getMessage.contains("GRAFT_ACCEL_THRESHOLD"), bad)
+    }
+  }
+
   test("auto shortest path equals distributed shortest path") {
     val es = Seq(("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"), ("d", "e"))
       .toDF("src", "dst")

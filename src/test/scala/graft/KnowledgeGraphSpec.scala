@@ -116,6 +116,33 @@ class KnowledgeGraphSpec extends SparkSpec {
     assert(p.contains((2, Seq("c1", "c2", "c3"))))
   }
 
+  test("findPath and findPaths answer from the graph related loaded, with no Spark job") {
+    kg.related("c1", maxDepth = 2).collect() // loads the semantic graph
+    val statusBefore = GraphOps.accelStatus
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (path, paths) =
+      try {
+        val r = (kg.findPath("c4", "c3"), kg.findPaths("c1", "c3", maxPaths = 3))
+        Thread.sleep(500) // listener events post asynchronously
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"expected no Spark job, saw ${jobs.get()}")
+    assert(GraphOps.accelStatus == statusBefore, "no load, no eviction")
+    assert(path.contains((2, Seq("c4", "c1", "c3"))))
+    assert(paths == Seq((1, Seq("c1", "c3")), (2, Seq("c1", "c2", "c3"))))
+    // the same answers as the distributed engines on the same edges
+    assert(path == GraphOps.shortestPath(kg.semanticEdges, "c4", "c3"))
+    assert(paths == GraphOps.kShortestPaths(kg.semanticEdges, "c1", "c3",
+      maxPaths = 3))
+  }
+
   test("connectBySearch composes V1 + T3 (V5)") {
     val paths = kg.connectBySearch(
       Seq(1, 0, 0, 0, 0, 0, 0, 0), Seq(-1, 0, 0, 0, 0, 0, 0, 0), maxHops = 3)
