@@ -186,30 +186,65 @@ final case class KnowledgeGraph(
 
   /** GET /query/concept/{id} (queries.py:600-700): one hydrated concept
     * card — label, distinct source documents, evidence count, in/out
-    * semantic degree, grounding strength, confidence score+level. Every
-    * side input is filtered to the one concept before aggregating, so
-    * each piece is a pushed-down point lookup. */
+    * semantic degree, grounding strength, confidence score+level.
+    *
+    * A point lookup in one pass: the concept's own rows — its `concepts`
+    * row, its semantic edges (`src` or `dst` = id, rel type in the vocab),
+    * its `evidence` and `instances` rows — are filtered at the scan,
+    * unioned and folded by ONE global aggregate (one exchange, two Spark
+    * jobs once `vocabConstants` is warm). The scores go through the
+    * same [[Scoring]] helpers as the whole-graph [[grounding]] and
+    * [[confidence]], so the card equals their row for the concept:
+    * `grounding_strength` is NULL without an incoming semantic edge, and
+    * the confidence columns are NULL without a semantic edge or an
+    * evidence row. The card's `evidence_count` counts `instances`; the
+    * confidence signal's evidence count counts `evidence` rows. An
+    * unknown id gives no row. A vocab that repeats a relationship_type
+    * is refused: the whole-graph join would count such a type's edges
+    * once per vocab row. */
   def conceptDetails(conceptId: String): DataFrame = {
-    val base = concepts.where(col("concept_id") === conceptId)
-      .select(col("concept_id"), col("label"))
-    val docs = evidence.where(col("concept_id") === conceptId)
-      .agg(countDistinct(col("source_id")).as("n_documents"))
-    val ev = instances.where(col("concept_id") === conceptId)
-      .agg(count(lit(1)).as("evidence_count"))
-    val deg = semanticEdges
-      .where(col("src") === conceptId || col("dst") === conceptId)
+    val vc = vocabConstants
+    require(vc.repeated.isEmpty, "conceptDetails: vocab repeats relationship_type " +
+      s"${vc.repeated.mkString(", ")}; the card needs one polarity projection per type")
+    val id = lit(conceptId)
+    val projection = map(vc.projection.toSeq.flatMap { case (t, p) =>
+      Seq(lit(t), p.fold(lit(null).cast("double"))(lit)) }: _*)
+    val rows = concepts.where(col("concept_id") === id)
+      .select(struct(col("concept_id"), col("label")).as("__concept"))
+      .unionByName(edges
+        .where((col("src") === id || col("dst") === id) &&
+          col("rel_type").isin(vc.projection.keys.toSeq: _*))
+        .select((col("src") === id).as("__out"), (col("dst") === id).as("__in"),
+          col("rel_type"), col("confidence"),
+          element_at(projection, col("rel_type")).as("__proj")),
+        allowMissingColumns = true)
+      .unionByName(evidence.where(col("concept_id") === id)
+        .select(lit(true).as("__evidence"), col("source_id")), allowMissingColumns = true)
+      .unionByName(instances.where(col("concept_id") === id)
+        .select(lit(true).as("__instance")), allowMissingColumns = true)
+    val signals = rows
       .agg(
-        // coalesce: zero matching edges sums to NULL; the card shows 0
-        coalesce(sum(when(col("src") === conceptId, 1L).otherwise(0L)), lit(0L))
-          .as("out_degree"),
-        coalesce(sum(when(col("dst") === conceptId, 1L).otherwise(0L)), lit(0L))
-          .as("in_degree"))
-    base.crossJoin(docs).crossJoin(ev).crossJoin(deg)
-      .join(grounding().where(col("concept_id") === conceptId)
-        .select(col("concept_id"), col("grounding_strength")), Seq("concept_id"), "left")
-      .join(confidence().where(col("concept_id") === conceptId)
-        .select(col("concept_id"), col("confidence_score"), col("confidence_level")),
-        Seq("concept_id"), "left")
+        collect_list(col("__concept")).as("__concepts"),
+        // collect_set, not countDistinct: distinct aggregates would add
+        // an Expand and a second exchange
+        size(collect_set(col("source_id"))).cast("long").as("source_count"),
+        count(col("__evidence")).as("evidence_count"),
+        count(col("__instance")).as("__instances"),
+        count(when(col("__out"), 1)).as("out_degree"),
+        count(when(col("__in"), 1)).as("in_degree"),
+        size(collect_set(col("rel_type"))).cast("long").as("relationship_type_count"),
+        Scoring.groundingMean(col("confidence"), col("__proj"), col("__in"))
+          .as("grounding_strength"))
+      .withColumn("relationship_count", col("out_degree") + col("in_degree"))
+      .withColumn("type_diversity",
+        Scoring.typeDiversity(col("relationship_count"), col("relationship_type_count")))
+    val scored = col("relationship_count") > 0 || col("evidence_count") > 0
+    Scoring.confidenceScore(signals)
+      .select(inline(col("__concepts")), col("source_count").as("n_documents"),
+        col("__instances").as("evidence_count"), col("out_degree"), col("in_degree"),
+        col("grounding_strength"),
+        when(scored, col("confidence_score")).as("confidence_score"),
+        when(scored, col("confidence_level")).as("confidence_level"))
   }
 
   /** T8 / GET /concepts/{id}/lifetime (epoch_facade.py:52-196): the
@@ -241,9 +276,23 @@ final case class KnowledgeGraph(
 
   /** A5: grounding strength for every concept with incoming semantic
     * edges, against the vocabulary polarity axis. */
-  def grounding(): DataFrame = {
+  def grounding(): DataFrame =
+    Scoring.groundingStrength(semanticEdges, vocab, vocabConstants.axis)
+
+  /** The per-snapshot vocab memo: the polarity axis and each vocab type's
+    * projection onto it (its keys are the semantic type set). An instance
+    * is pinned to one immutable snapshot, so this is computed once, on
+    * first use, by two small jobs over vocab, and every later
+    * [[conceptDetails]] and [[grounding]] call reuses it. Fails like
+    * [[Scoring.polarityAxis]] when the vocab has no opposing pair. */
+  private lazy val vocabConstants: KnowledgeGraph.VocabConstants = {
     val axis = Scoring.polarityAxis(vocab, polarityPairs)
-    Scoring.groundingStrength(semanticEdges, vocab, axis)
+    val proj = Scoring.vocabProjection(vocab, axis)
+      .where(col("rel_type").isNotNull)
+      .collect().toSeq
+      .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    KnowledgeGraph.VocabConstants(axis, proj.toMap,
+      proj.groupBy(_._1).collect { case (t, ps) if ps.size > 1 => t }.toSeq.sorted)
   }
 
   /** T4: degree centrality over semantic edges. */
@@ -388,6 +437,12 @@ final case class KnowledgeGraph(
 }
 
 object KnowledgeGraph {
+  /** `KnowledgeGraph.vocabConstants`: the polarity axis, each vocab
+    * type's projection onto it (NULL for a NULL embedding), and the types
+    * that more than one vocab row names. */
+  private final case class VocabConstants(axis: Array[Double],
+      projection: Map[String, Option[Double]], repeated: Seq[String])
+
   /** One scored hit from [[KnowledgeGraph.resolveLabel]]. */
   final case class LabelMatch(conceptId: String, label: String, score: Double)
 

@@ -37,9 +37,14 @@ object Scoring {
       .na.fill(0L, Seq("relationship_count", "relationship_type_count",
         "evidence_count", "source_count"))
       .withColumn("type_diversity",
-        least(lit(1.0), col("relationship_type_count") /
-          greatest(col("relationship_count"), lit(1)).cast("double")))
+        typeDiversity(col("relationship_count"), col("relationship_type_count")))
   }
+
+  /** A3 type diversity: distinct relationship types per relationship,
+    * capped at 1; a concept with no relationships scores 0. */
+  def typeDiversity(relationshipCount: Column, relationshipTypeCount: Column): Column =
+    least(lit(1.0), relationshipTypeCount /
+      greatest(relationshipCount, lit(1)).cast("double"))
 
   /** A4: composite + M-M score + level ladder
     * (confidence_analyzer.py:54-62,561-627). */
@@ -82,17 +87,26 @@ object Scoring {
     * inEdges: (dst=concept_id, rel_type, confidence); vocab joined
     * broadcast (tiny dim table — J9). */
   def groundingStrength(inEdges: DataFrame, vocab: DataFrame,
-      axis: Array[Double]): DataFrame = {
-    val axisCol = VectorOps.vecLit(axis.toSeq)
-    val vocabProj = vocab
-      .select(col("relationship_type").as("rel_type"),
-        VectorOps.dot(col("embedding"), axisCol).as("proj"))
+      axis: Array[Double]): DataFrame =
     inEdges
-      .join(broadcast(vocabProj), Seq("rel_type"), "left")
-      .withColumn("w", coalesce(col("confidence"), lit(1.0)))
+      .join(broadcast(vocabProjection(vocab, axis)), Seq("rel_type"), "left")
       .groupBy(col("dst").as("concept_id"))
-      .agg((sum(col("w") * coalesce(col("proj"), lit(0.0))) / sum(col("w")))
-        .as("grounding_strength"))
+      .agg(groundingMean(col("confidence"), col("proj")).as("grounding_strength"))
+
+  /** Each vocab type's projection onto the polarity axis:
+    * (rel_type, proj). */
+  def vocabProjection(vocab: DataFrame, axis: Array[Double]): DataFrame =
+    vocab.select(col("relationship_type").as("rel_type"),
+      VectorOps.dot(col("embedding"), VectorOps.vecLit(axis.toSeq)).as("proj"))
+
+  /** A5 grounding weighted mean, as an aggregate: the confidence-weighted
+    * mean of the edges' vocab projections over the rows where `include`
+    * holds. NULL confidence weighs 1.0 and a NULL projection counts 0;
+    * no included row gives NULL. */
+  def groundingMean(confidence: Column, projection: Column,
+      include: Column = lit(true)): Column = {
+    val w = when(include, coalesce(confidence, lit(1.0)))
+    sum(w * coalesce(projection, lit(0.0))) / sum(w)
   }
 
   /** A6 authenticated diversity: grounding-gated diversity score —

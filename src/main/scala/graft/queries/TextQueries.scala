@@ -392,7 +392,12 @@ object TextQueries {
       // ~25-byte string: the wire is fixed-width longs. The
       // stop-word-class mega-key is AQE skew-split at runtime where the
       // model outgrows broadcast; collision math as in q72 — negligible
-      // at any gate SF.
+      // at any gate SF. A bgh collision has two failure modes here: two
+      // bigrams with the SAME first token merge into one model row (one
+      // c12/logp for both — a mis-score), while two with DIFFERENT first
+      // tokens keep two model rows under one bgh (the (bgh, w1h)
+      // grouping above), so this join matches each such bigram twice and
+      // inflates n_bigrams as well (probability ~n²/2⁶⁵).
       bi.select(col("doc_id"), col("bgh"))
         .join(model, "bgh")
         .groupBy(col("doc_id"))

@@ -90,7 +90,128 @@ class KnowledgeGraphSpec extends SparkSpec {
     assert(row.getAs[Long]("evidence_count") == 1L) // i1
     assert(row.getAs[Long]("out_degree") == 2L)     // →c2, →c3 (APPEARS excluded)
     assert(row.getAs[Long]("in_degree") == 1L)      // c4→c1
-    assert(!row.isNullAt(row.fieldIndex("confidence_score")))
+    // one incoming CONTRADICTS (-1, 0) at confidence 1.0, projected on the
+    // axis (1.36, 0.96)/√2.7712 of the five opposing-pair differences
+    assert(math.abs(row.getAs[Double]("grounding_strength") -
+      -1.36 / math.sqrt(2.7712)) < 1e-6)
+    // composite 3/10 + 1/5 + 1/10 + 2/3 = 19/15 → (19/15)/(19/15 + 2)
+    assert(math.abs(row.getAs[Double]("confidence_score") - 19.0 / 49.0) < 1e-9)
+    assert(row.getAs[String]("confidence_level") == "tentative")
+  }
+
+  /** The concept card as the whole-graph scorers joined and then filtered
+    * to one concept: the former `conceptDetails` body, kept as the
+    * differential reference for the single-pass card. */
+  private def referenceCard(kg: KnowledgeGraph, conceptId: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val base = kg.concepts.where(col("concept_id") === conceptId)
+      .select(col("concept_id"), col("label"))
+    val docs = kg.evidence.where(col("concept_id") === conceptId)
+      .agg(countDistinct(col("source_id")).as("n_documents"))
+    val ev = kg.instances.where(col("concept_id") === conceptId)
+      .agg(count(lit(1)).as("evidence_count"))
+    val deg = kg.semanticEdges
+      .where(col("src") === conceptId || col("dst") === conceptId)
+      .agg(
+        coalesce(sum(when(col("src") === conceptId, 1L).otherwise(0L)), lit(0L))
+          .as("out_degree"),
+        coalesce(sum(when(col("dst") === conceptId, 1L).otherwise(0L)), lit(0L))
+          .as("in_degree"))
+    base.crossJoin(docs).crossJoin(ev).crossJoin(deg)
+      .join(kg.grounding().where(col("concept_id") === conceptId)
+        .select(col("concept_id"), col("grounding_strength")), Seq("concept_id"), "left")
+      .join(kg.confidence().where(col("concept_id") === conceptId)
+        .select(col("concept_id"), col("confidence_score"), col("confidence_level")),
+        Seq("concept_id"), "left")
+  }
+
+  /** The micro-fixture plus the card's edge cases: a self-loop (c5), an
+    * incoming NULL-confidence edge (c5→c2), a NULL rel type and a
+    * non-vocab MENTIONS edge (c6 has no semantic edge and no evidence),
+    * a concept with evidence and instances but no edge (c7, one source
+    * named twice), a NULL source and a NULL label (c8). */
+  lazy val cardKg: KnowledgeGraph = kg.copy(
+    concepts = kg.concepts.unionByName(Seq(
+      ("c5", Some("loop"), Option(v(0.5, 0.5))), ("c6", Some("island"), None),
+      ("c7", Some("evidenced"), Some(v(0, -1))), ("c8", None, None)
+    ).toDF("concept_id", "label", "embedding")),
+    edges = kg.edges.unionByName(Seq(
+      ("c5", "c5", Some("SUPPORTS"), Some(0.7)),
+      ("c5", "c2", Some("VALIDATES"), None),
+      ("c6", "c1", Some("MENTIONS"), Some(1.0)),
+      ("c3", "c1", None, Some(0.5)),
+      ("c3", "c5", Some("OPPOSES"), Some(0.25))
+    ).toDF("src", "dst", "rel_type", "confidence")),
+    evidence = kg.evidence.unionByName(Seq(
+      ("c7", Some("s2")), ("c7", Some("s2")), ("c7", Some("s3")),
+      ("c3", None), ("c5", Some("s1"))
+    ).toDF("concept_id", "source_id")),
+    instances = kg.instances.unionByName(Seq(
+      ("i2", "c7", "quote two"), ("i3", "c7", "quote three"), ("i4", "c5", "loop quote")
+    ).toDF("instance_id", "concept_id", "quote")))
+
+  private def assertSameCard(kg: KnowledgeGraph, id: String): Unit = {
+    val got = kg.conceptDetails(id)
+    val want = referenceCard(kg, id)
+    assert(got.schema == want.schema, s"$id: schema\n${got.schema}\nvs\n${want.schema}")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g.size == w.size, s"$id: ${g.size} rows vs ${w.size}")
+    g.zip(w).foreach { case (a, b) =>
+      a.zip(b).zip(got.columns).foreach {
+        case ((x: Double, y: Double), c) =>
+          assert(math.abs(x - y) <= 1e-12, s"$id.$c: $x vs $y")
+        case ((x, y), c) => assert(x == y, s"$id.$c: $x vs $y")
+      }
+    }
+  }
+
+  test("conceptDetails equals the whole-graph scorers filtered, column by column") {
+    val ids = cardKg.concepts.select("concept_id").as[String].collect().toSeq
+    assert(ids.size == 8)
+    (ids ++ Seq("nope", "s1")).foreach(assertSameCard(cardKg, _))
+    val byId = ids.map(id => id -> cardKg.conceptDetails(id).head()).toMap
+    def isNull(id: String, c: String) = byId(id).isNullAt(byId(id).fieldIndex(c))
+    // the edge cases hit the NULL branches they are there for
+    assert(isNull("c4", "grounding_strength") && !isNull("c4", "confidence_score"))
+    assert(isNull("c6", "grounding_strength") && isNull("c6", "confidence_level"))
+    assert(isNull("c7", "grounding_strength") && !isNull("c7", "confidence_level"))
+    assert(byId("c5").getAs[Long]("out_degree") == 2L && byId("c5").getAs[Long]("in_degree") == 2L)
+    assert(byId("c7").getAs[Long]("n_documents") == 2L)
+    assert(byId("c7").getAs[Long]("evidence_count") == 2L)
+    assert(cardKg.conceptDetails("nope").isEmpty)
+  }
+
+  test("conceptDetails refuses a vocab that repeats a relationship type, naming it") {
+    val repeated = cardKg.copy(vocab = cardKg.vocab.unionByName(
+      cardKg.vocab.where($"relationship_type" === "OPPOSES")))
+    val e = intercept[IllegalArgumentException](repeated.conceptDetails("c5").collect())
+    assert(e.getMessage.contains("OPPOSES"))
+  }
+
+  test("conceptDetails fails like the whole-graph scorers without an opposing pair") {
+    val unpaired = cardKg.copy(vocab = cardKg.vocab.where(!$"relationship_type".isin(
+      "CONTRADICTS", "REFUTES", "DISPROVES", "OPPOSES", "PREVENTS")))
+    val want = intercept[IllegalArgumentException](referenceCard(unpaired, "c1"))
+    val got = intercept[IllegalArgumentException](unpaired.conceptDetails("c1"))
+    assert(got.getMessage == want.getMessage)
+  }
+
+  test("a warm conceptDetails runs at most 2 Spark jobs") {
+    kg.conceptDetails("c2").collect() // warms the vocab memo
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      kg.conceptDetails("c1").collect()
+      Thread.sleep(500) // listener events post asynchronously
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 2, s"expected at most 2 Spark jobs, saw ${jobs.get()}")
   }
 
   test("lifetime pages the ordered re-evidence stream (T8)") {

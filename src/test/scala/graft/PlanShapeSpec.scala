@@ -533,4 +533,29 @@ class PlanShapeSpec extends SparkSpec {
     val semiF = fact.join(dimF, fact("nfk") === dimF("dk"), "left_semi")
     assert(joins(semiF) > 0, "a filtered FK parent must keep the semi join")
   }
+
+  test("the concept card is one scan-and-aggregate pass: one exchange, no nested loop") {
+    // conceptDetails over parquet tables, the layout KnowledgeGraph.load
+    // reads: the concept's filtered rows fold in one global aggregate,
+    // so the plan holds the single-partition exchange and nothing else
+    // (no broadcast, no cross join)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-card").toString
+    def v(x: Float, y: Float): Seq[Float] = Seq(x, y)
+    Seq(("c1", "alpha", v(1, 0)), ("c2", "beta", v(0, 1)))
+      .toDF("concept_id", "label", "embedding").write.parquet(s"$dir/concepts.parquet")
+    Seq(("c1", "c2", "SUPPORTS", 0.9), ("c2", "c1", "CONTRADICTS", 1.0),
+      ("c1", "s1", "APPEARS", 1.0))
+      .toDF("src", "dst", "rel_type", "confidence").write.parquet(s"$dir/edges.parquet")
+    Seq(("i1", "c1", "quote")).toDF("instance_id", "concept_id", "quote")
+      .write.parquet(s"$dir/instances.parquet")
+    Seq(("SUPPORTS", v(1, 0)), ("CONTRADICTS", v(-1, 0)))
+      .toDF("relationship_type", "embedding").write.parquet(s"$dir/vocab.parquet")
+    val card = KnowledgeGraph.load(spark, dir).conceptDetails("c1")
+    val plan = card.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(plan).size <= 1, s"one exchange at most:\n$plan")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"no nested-loop or cartesian join:\n$plan")
+    assert(card.count() == 1)
+  }
 }
