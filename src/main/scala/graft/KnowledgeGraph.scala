@@ -372,8 +372,8 @@ final case class KnowledgeGraph(
     // "tsne" (the reference's default) and "umap" run driver-side over a
     // bounded sample, like the reference; "pca" = the distributed scale
     // path (embedding_projection_service.py:719-751 vs SURVEY §7.3).
-    // Lazy checkpoint: the projected coordinates feed the eps estimate, the
-    // result join, and DBSCAN — three consumers, one materialization.
+    // Eager checkpoint: the projected coordinates feed the eps estimate,
+    // the result join, and DBSCAN — three consumers, one materialization.
     val p = (algorithm match {
       case "tsne" => graft.analysis.Projection.tsne(embedded, "id", "v", dims = 3,
         maxSamples = maxSamples)

@@ -252,13 +252,88 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Delete a never-exposed (sentinel-less) candidate directory — the
-    * CAS-loser cleanup every conditional commit shares. */
+  /** Delete a version directory recursively — the CAS-loser cleanup every
+    * conditional commit shares, and the store's ONE recursive delete of a
+    * version (refused CHECK candidates, failed relinks, vacuum). */
   private def discardCandidate(table: String, cand: Long): Unit = {
     val w = Files.walk(versionDir(table, cand))
     try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     finally w.close()
   }
+
+  /** The conditional publish: CAS the unexposed candidate `cand` onto
+    * `expectedHead` (None = the table must still be absent), or discard
+    * it. Some(cand) when it won; None when a sibling moved the head first
+    * — the candidate is then gone, never exposed. */
+  private def publishIf(table: String, cand: Long,
+      expectedHead: Option[Long]): Option[Long] =
+    if (casAdvance(table, cand, expectedHead)) Some(cand)
+    else { discardCandidate(table, cand); None }
+
+  /** A candidate that is pure METADATA over its base: a chain link that
+    * writes, tombstones and vectors no row (schema, constraint and
+    * property DDL). Read from the candidate's own directory — never via
+    * the [[fileStats]] memo, which must not learn an unexposed number. */
+  private def isMetadataLink(table: String, cand: Long): Boolean =
+    Files.exists(baseFile(table, cand)) &&
+      !Files.exists(removedFileOf(table, cand)) &&
+      !Files.exists(dvFileOf(table, cand)) && {
+        val s = Files.list(versionDir(table, cand))
+        try !s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      }
+
+  /** The ONE optimistic-commit loop of the single-table read-modify-write
+    * writers: read the head `v`, let `step(v)` build an unexposed
+    * candidate against it (None = nothing to do, `v` is the answer), then
+    * [[publishIf]] it onto `v`; a lost round re-reads the new head and
+    * recomputes. The liveness policy is derived from the candidate, never
+    * passed in:
+    *  - a metadata link ([[isMetadataLink]]) retries until won — its
+    *    recompute re-reads a few small files and every lost round is a
+    *    sibling's progress, so a sustained appender can never starve DDL
+    *    (the delete-starvation lesson, round 12);
+    *  - a data-carrying rewrite is an O(table) recompute: it spends the
+    *    caller's `maxRetries` lost rounds, each followed by
+    *    [[recomputeBackoff]], then fails loudly — `hot` names the
+    *    contention in that message.
+    * [[SnapshotStore.testRaceHook]] fires once per round, between the
+    * candidate write and the CAS. */
+  private def optimisticCommit(table: String, op: String, maxRetries: Int = 0,
+      hot: String = "")(step: Long => Option[Long]): Long = {
+    @tailrec def round(lost: Int): Long = {
+      val v = latestVersion(table).getOrElse(
+        throw new IllegalArgumentException(s"no committed version of $table"))
+      step(v) match {
+        case None => v
+        case Some(cand) =>
+          val metadataOnly = isMetadataLink(table, cand)
+          SnapshotStore.testRaceHook() // spec seam: force a sibling commit
+          publishIf(table, cand, Some(v)) match {
+            case Some(won) => won
+            case None if metadataOnly =>
+              // CAS only fails because the pointer moved off v (forward-
+              // only) — a still-equal head means lock misuse, not a race.
+              require(latestVersion(table).exists(_ != v),
+                s"$op CAS to $table failed with unmoved pointer $v")
+              round(lost)
+            case None if lost < maxRetries =>
+              recomputeBackoff(lost)
+              round(lost + 1)
+            case None => throw new IllegalStateException(
+              s"$op($table) lost the commit race $maxRetries times — " +
+                s"${hot}retry later or widen maxRetries")
+          }
+      }
+    }
+    round(0)
+  }
+
+  /** The pause before a data-carrying writer's recompute after its
+    * `lost`-th lost round (0-based): 25 ms doubling to a 400 ms cap, so
+    * racing rewriters interleave instead of lock-stepping. */
+  private def recomputeBackoff(lost: Int): Unit =
+    Thread.sleep(25L << math.min(lost, 4))
 
   /** CONDITIONAL self-contained commit — [[commit]] whose pointer move
     * succeeds ONLY if the table's head is still `expectedHead` at the CAS
@@ -279,8 +354,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     val cand = commitWith(table, Some(df), None, base = None,
       snapshot = rewriteSnapshotSchema(table, df), props = props,
       advance = false)
-    if (casAdvance(table, cand, expectedHead)) Some(cand)
-    else { discardCandidate(table, cand); None }
+    publishIf(table, cand, expectedHead)
   }
 
   /** [[commitMaintainerProps]] made CONDITIONAL on the head (the same CAS
@@ -288,15 +362,20 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * links): None on a lost race — never the silent retry-until-won a
     * maintainer's stale horizon must not get. */
   private[graft] def commitMaintainerPropsIf(table: String,
-      props: Map[String, String], expectedHead: Long): Option[Long] = {
+      props: Map[String, String], expectedHead: Long): Option[Long] =
+    publishIf(table, propertiesLink(table, props, expectedHead),
+      Some(expectedHead))
+
+  /** The unexposed `set-properties` link over `v` that every property
+    * writer commits: `props` pinned as a data-less chain link, a bucket
+    * claim re-stamped (no file moved). */
+  private def propertiesLink(table: String, props: Map[String, String],
+      v: Long): Long = {
     require(props.nonEmpty, "commitMaintainerPropsIf requires at least one pair")
-    val bucketProps = bucketPropsAt(table, expectedHead)
-    val cand = commitWith(table, None, None, base = Some(expectedHead),
-      snapshot = snapshotSchema(table, Some(expectedHead)), advance = false,
-      props = props ++ bucketProps +
+    commitWith(table, None, None, base = Some(v),
+      snapshot = snapshotSchema(table, Some(v)), advance = false,
+      props = props ++ bucketPropsAt(table, v) +
         (SnapshotStore.OpProp -> "set-properties"))
-    if (casAdvance(table, cand, Some(expectedHead))) Some(cand)
-    else { discardCandidate(table, cand); None }
   }
 
   /** The shared commit machinery: claim a version directory, pin its chain
@@ -469,9 +548,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           written.where(coalesce(expr(sql).cast("boolean"), lit(true)) ===
             lit(false)).head(1).nonEmpty
         }.foreach { case (n, sql) =>
-          val w = Files.walk(versionDir(table, next))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
+          discardCandidate(table, next)
           throw new IllegalArgumentException(
             s"write to $table violates CHECK constraint $n ($sql) — " +
               "candidate discarded, table unchanged")
@@ -692,13 +769,19 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     Files.deleteIfExists(committedMarker(table, v))
 
   /** Compare-and-swap pointer move — the optimistic-concurrency commit
-    * step for read-modify-write operations (`append`, `compact`): under
-    * the same cross-process lock as [[advancePointer]], move the pointer
-    * to `next` ONLY if it still reads `expectedBase` (the snapshot the
-    * operation was built on). Returns false — having moved nothing — when
-    * a sibling committed first; the caller re-bases onto the new head and
-    * retries, Delta/Iceberg's commit-log protocol reduced to a pointer
-    * file. */
+    * step for read-modify-write operations: under the same cross-process
+    * lock as [[advancePointer]], move the pointer to `next` ONLY if it
+    * still reads `expectedBase` (the snapshot the operation was built
+    * on). Returns false — having moved nothing — when a sibling committed
+    * first; the caller re-bases onto the new head and retries,
+    * Delta/Iceberg's commit-log protocol reduced to a pointer file.
+    *
+    * Single-table writers reach it through [[publishIf]], and those that
+    * retry do so in ONE loop, [[optimisticCommit]]. The only other
+    * callers keep their own rebase policy: `append`'s relink loop
+    * ([[occAppendCommit]]) and [[rowMutation]]'s rebase over pure
+    * appends. (Multi-table transactions publish through intents and
+    * [[forwardPointer]].) */
   private def casAdvance(table: String, next: Long,
       expectedBase: Option[Long]): Boolean = {
     def attempt(): Boolean = {
@@ -908,9 +991,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       // The delta can never commit against this head. Remove the
       // never-exposed directory rather than leaving an orphan that reads
       // as a crashed commit.
-      val w = Files.walk(versionDir(table, oldVersion))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
+      discardCandidate(table, oldVersion)
       throw reason
     }
     // The base this delta was WRITTEN against (its current `_base`), for
@@ -1179,32 +1260,30 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * unconditional forward move would have replaced the head with a
     * snapshot that predates the append's delta). A compaction that loses
     * the race discards its candidate (never exposed) and re-compacts the
-    * new head; a continuously-hot table bounds this at `maxRetries` and
-    * fails loudly — compaction is an optimization, losing data is not an
-    * acceptable fallback. */
+    * new head, backing off between rounds ([[optimisticCommit]]); a
+    * continuously-hot table bounds this at `maxRetries` and fails loudly
+    * — compaction is an optimization, losing data is not an acceptable
+    * fallback. */
   def compact(table: String, targetPartitions: Int = 0,
-      clusterBy: Seq[String] = Nil, maxRetries: Int = 5): Long = {
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
-      compactOnce(table, v, targetPartitions, clusterBy) match {
-        case Some(c) => c
-        case None if retriesLeft > 0 => attempt(retriesLeft - 1)
-        case None => throw new IllegalStateException(
-          s"compact($table) lost the commit race $maxRetries times — " +
-            "table is append-hot; retry later or widen maxRetries")
-      }
-    }
-    attempt(maxRetries)
-  }
+      clusterBy: Seq[String] = Nil, maxRetries: Int = 5): Long =
+    optimisticCommit(table, "compact", maxRetries, "table is append-hot; ")(v =>
+      Some(compactCandidate(table, v, targetPartitions, clusterBy)))
 
   /** One compaction attempt over an explicitly-pinned scan version — the
-    * CAS write step of [[compact]], exposed to specs so a lost race (head
-    * moved past `scanVersion` before the pointer CAS) can be forced
-    * deterministically. Returns None after discarding the never-exposed
-    * candidate. */
+    * write step of [[compact]] published once, exposed to specs so a lost
+    * race (head moved past `scanVersion` before the pointer CAS) can be
+    * forced deterministically. Returns None after discarding the
+    * never-exposed candidate. */
   private[graft] def compactOnce(table: String, scanVersion: Long,
-      targetPartitions: Int = 0, clusterBy: Seq[String] = Nil): Option[Long] = {
+      targetPartitions: Int = 0, clusterBy: Seq[String] = Nil): Option[Long] =
+    publishIf(table,
+      compactCandidate(table, scanVersion, targetPartitions, clusterBy),
+      Some(scanVersion))
+
+  /** The unexposed self-contained rewrite of the snapshot at
+    * `scanVersion` that [[compact]] publishes. */
+  private def compactCandidate(table: String, scanVersion: Long,
+      targetPartitions: Int, clusterBy: Seq[String]): Long = {
     val snap = readAt(table, scanVersion)
     // A DEFAULT compaction of a bucketed chain preserves the bucket
     // layout: the whole snapshot repartitions by the claimed spec, so the
@@ -1243,20 +1322,13 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     // otherwise they are DROPPED — the compacted files are not bucket-
     // attributed, and inheriting the claim would silently corrupt
     // storage-partitioned joins.
-    val cand = commitWith(table, Some(df), changeSet = None, base = None,
+    commitWith(table, Some(df), changeSet = None, base = None,
       snapshot = snapshotSchema(table, Some(scanVersion)), advance = false,
       props = resolvedProps(table, scanVersion) -
         SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
         SnapshotStore.BucketSortedProp - // re-stamped above ONLY if sorted
         SnapshotStore.DroppedColsProp ++ bucketProps +
         (SnapshotStore.OpProp -> "compact"))
-    if (casAdvance(table, cand, Some(scanVersion))) Some(cand)
-    else {
-      val w = Files.walk(versionDir(table, cand))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-      None
-    }
   }
 
   /** Fold the chain's accumulated DELETION VECTORS away WITHOUT collapsing
@@ -1276,12 +1348,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * the chain crosses [[SnapshotStore.DvMaxChainRows]] (seam:
     * [[dvChainFoldRows]]); long mutation-quiesced tables can call it
     * directly. Same CAS + bounded-recompute contract as [[compact]]. */
-  def compactVectored(table: String, maxRetries: Int = 5): Long = {
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+  def compactVectored(table: String, maxRetries: Int = 5): Long =
+    optimisticCommit(table, "compactVectored", maxRetries,
+        "table is mutation-hot; ") { v =>
       val dvs = dvInChain(table, v)
-      if (dvs.isEmpty) v
+      if (dvs.isEmpty) None
       else {
         val schema = snapshotSchema(table, Some(v))
         val keys = dvs.keys.toSeq.sorted
@@ -1294,28 +1365,16 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         // spec, so the fold's rewrite files are bucket-attributed and a
         // bucketed fact table's zero-exchange joins survive the DV fold.
         val (bucketProps, bucketed) = bucketClaimOf(table, v)
-        val cand = commitWith(table, Some(bucketed(survivors)), changeSet = None,
+        Some(commitWith(table, Some(bucketed(survivors)), changeSet = None,
           base = Some(v), snapshot = schema, advance = false,
           removed = keys,
           props = resolvedProps(table, v) -
             SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
             SnapshotStore.BucketSortedProp - // per-link claim: never inherited
             SnapshotStore.DroppedColsProp ++ bucketProps +
-            (SnapshotStore.OpProp -> "compact-dv"))
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          if (retriesLeft > 0) attempt(retriesLeft - 1)
-          else throw new IllegalStateException(
-            s"compactVectored($table) lost the commit race $maxRetries " +
-              "times — table is mutation-hot; retry later or widen maxRetries")
-        }
+            (SnapshotStore.OpProp -> "compact-dv")))
       }
     }
-    attempt(maxRetries)
-  }
 
   /** The chain-accumulated DV row count above which a mutation folds the
     * vectors ([[compactVectored]]) before proceeding. A spec seam and an
@@ -1374,9 +1433,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * retry. */
   def addColumns(table: String, columns: StructType): Long = {
     require(columns.nonEmpty, "addColumns requires at least one column")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "addColumns") { v =>
       val base = snapshotSchema(table, Some(v))
       val dups = columns.fieldNames.filter(n =>
         base.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -1402,23 +1459,10 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       // Carry the bucket claim forward iff the head holds one: files are
       // untouched, so the layout is exactly as valid after the link.
       val bucketProps = bucketPropsAt(table, v)
-      val cand = commitWith(table, None, None, base = Some(v),
+      Some(commitWith(table, None, None, base = Some(v),
         snapshot = merged, advance = false,
-        props = bucketProps + (SnapshotStore.OpProp -> "add-columns"))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        // CAS only fails because the pointer moved off v (forward-only) —
-        // a still-equal head means lock misuse, not a race to retry.
-        require(latestVersion(table).exists(_ != v),
-          s"addColumns CAS to $table failed with unmoved pointer $v")
-        attempt()
-      }
+        props = bucketProps + (SnapshotStore.OpProp -> "add-columns")))
     }
-    attempt()
   }
 
   /** SCHEMA-ONLY narrowing — `ALTER TABLE … DROP COLUMN`'s engine: remove
@@ -1450,9 +1494,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * an appender to starve). */
   def dropColumns(table: String, names: Seq[String]): Long = {
     require(names.nonEmpty, "dropColumns requires at least one column")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "dropColumns") { v =>
       val base = snapshotSchema(table, Some(v))
       val missing = names.filterNot(n =>
         base.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -1478,26 +1520,15 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         .fold(Map.empty[String, String]) { case (cols, dims) =>
           SnapshotStore.bucketLayoutProps(cols, dims)
         }
-      val cand = commitWith(table, None, None, base = Some(v),
+      Some(commitWith(table, None, None, base = Some(v),
         snapshot = narrowed, advance = false,
         props = bucketProps +
           (SnapshotStore.OpProp -> "drop-columns") +
           (SnapshotStore.DroppedColsProp ->
             org.json4s.jackson.JsonMethods.compact(
               org.json4s.jackson.JsonMethods.render(org.json4s.JArray(
-                dropSet.toList.sorted.map(org.json4s.JString(_)))))))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        require(latestVersion(table).exists(_ != v),
-          s"dropColumns CAS to $table failed with unmoved pointer $v")
-        attempt()
-      }
+                dropSet.toList.sorted.map(org.json4s.JString(_))))))))
     }
-    attempt()
   }
 
   /** `ALTER TABLE … RENAME COLUMN`'s engine. Two paths by chain lineage:
@@ -1527,9 +1558,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   def renameColumns(table: String, renames: Map[String, String],
       maxRetries: Int = 5): Long = {
     require(renames.nonEmpty, "renameColumns requires at least one rename")
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "renameColumns", maxRetries) { v =>
       val base = snapshotSchema(table, Some(v))
       val missing = renames.keys.filterNot(n =>
         base.fieldNames.exists(_.equalsIgnoreCase(n)))
@@ -1591,53 +1620,30 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           .fold(Map.empty[String, String]) { case (cols, dims) =>
             SnapshotStore.bucketLayoutProps(cols.map(renamed), dims)
           }
-        val cand = commitWith(table, None, None, base = Some(v),
+        // a metadata link: the commit loop retries it until won, and the
+        // retry budget is only spent by the legacy rewrite path below
+        Some(commitWith(table, None, None, base = Some(v),
           snapshot = renamedSchema, advance = false,
           props = bucketProps +
-            (SnapshotStore.OpProp -> "rename-columns-metadata"))
-        SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          // metadata-only recompute: CAS-until-won like addColumns (a
-          // sustained appender must not starve schema DDL); the retry
-          // budget is only spent by the legacy rewrite path below
-          require(latestVersion(table).exists(_ != v),
-            s"renameColumns CAS to $table failed with unmoved pointer $v")
-          attempt(retriesLeft)
-        }
+            (SnapshotStore.OpProp -> "rename-columns-metadata")))
       } else {
-      // LEGACY (ID-less chain) path — an OCC REWRITE: parquet resolves
-      // these files by name, so a data-less rename would read null
-      // everywhere. The rewrite stays ID-less (table lineage is a birth
-      // property — see `commit`'s note on why mid-lineage upgrades would
-      // break cross-version feed reads).
-      val df = readAt(table, v).select(base.fieldNames.map(n =>
-        org.apache.spark.sql.functions.col(n).as(renamed(n))).toIndexedSeq: _*)
-      val cand = commitWith(table, Some(df), changeSet = None, base = None,
-        snapshot = ParquetTableShim.asNullable(df.schema),
-        advance = false,
-        props = resolvedProps(table, v) -
-          SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
-          SnapshotStore.BucketSortedProp - // per-link claim: never inherited
-          SnapshotStore.DroppedColsProp +
-          (SnapshotStore.OpProp -> "rename-columns"))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        if (retriesLeft > 0) attempt(retriesLeft - 1)
-        else throw new IllegalStateException(
-          s"renameColumns($table) lost the commit race $maxRetries times — " +
-            "retry later or widen maxRetries")
-      }
+        // LEGACY (ID-less chain) path — an OCC REWRITE: parquet resolves
+        // these files by name, so a data-less rename would read null
+        // everywhere. The rewrite stays ID-less (table lineage is a birth
+        // property — see `commit`'s note on why mid-lineage upgrades
+        // would break cross-version feed reads).
+        val df = readAt(table, v).select(base.fieldNames.map(n =>
+          org.apache.spark.sql.functions.col(n).as(renamed(n))).toIndexedSeq: _*)
+        Some(commitWith(table, Some(df), changeSet = None, base = None,
+          snapshot = ParquetTableShim.asNullable(df.schema),
+          advance = false,
+          props = resolvedProps(table, v) -
+            SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
+            SnapshotStore.BucketSortedProp - // per-link claim: never inherited
+            SnapshotStore.DroppedColsProp +
+            (SnapshotStore.OpProp -> "rename-columns")))
       }
     }
-    attempt(maxRetries)
   }
 
   /** UPGRADE a legacy (pre-field-ID) table to field-ID lineage: ONE
@@ -1651,37 +1657,20 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * content-neutral: row content is identical, so feeds skip it —
     * pre-adoption history stays readable to feed consumers by NAME (the
     * planners fall back to name resolution for ID-less versions). */
-  def adoptFieldIds(table: String, maxRetries: Int = 5): Long = {
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+  def adoptFieldIds(table: String, maxRetries: Int = 5): Long =
+    optimisticCommit(table, "adoptFieldIds", maxRetries) { v =>
       val schema = snapshotSchema(table, Some(v))
-      if (SnapshotStore.schemaHasFieldIds(schema)) v
-      else {
-        val df = readAt(table, v)
-        val cand = commitWith(table, Some(df), changeSet = None, base = None,
-          snapshot = withFieldIds(ParquetTableShim.asNullable(schema), None),
-          advance = false,
-          props = resolvedProps(table, v) -
-            SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
-            SnapshotStore.BucketSortedProp - // per-link claim: never inherited
-            SnapshotStore.DroppedColsProp +
-            (SnapshotStore.OpProp -> "adopt-field-ids"))
-        SnapshotStore.testRaceHook()
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          if (retriesLeft > 0) attempt(retriesLeft - 1)
-          else throw new IllegalStateException(
-            s"adoptFieldIds($table) lost the commit race $maxRetries times " +
-              "— retry later or widen maxRetries")
-        }
-      }
+      if (SnapshotStore.schemaHasFieldIds(schema)) None
+      else Some(commitWith(table, Some(readAt(table, v)), changeSet = None,
+        base = None,
+        snapshot = withFieldIds(ParquetTableShim.asNullable(schema), None),
+        advance = false,
+        props = resolvedProps(table, v) -
+          SnapshotStore.BucketColProp - SnapshotStore.BucketNProp -
+          SnapshotStore.BucketSortedProp - // per-link claim: never inherited
+          SnapshotStore.DroppedColsProp +
+          (SnapshotStore.OpProp -> "adopt-field-ids")))
     }
-    attempt(maxRetries)
-  }
 
   /** Lowercased top-level column names each active constraint (CHECK
     * predicate attributes + key-constraint columns) references — what
@@ -1727,9 +1716,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name '$name' — use [A-Za-z0-9_]+")
     require(predicateSql.trim.nonEmpty, "empty CHECK predicate")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "addCheckConstraint") { v =>
       require(!checkConstraintsOf(table, v).contains(name) &&
         !keyConstraintsOf(table, v).contains(name),
         s"constraint $name already exists on $table")
@@ -1743,58 +1730,29 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       require(violating.head(1).isEmpty,
         s"cannot add CHECK constraint $name to $table: existing rows " +
           s"violate ($predicateSql)")
-      val bucketProps = bucketPropsAt(table, v)
-      val cand = commitWith(table, None, None, base = Some(v),
+      Some(commitWith(table, None, None, base = Some(v),
         snapshot = snapshotSchema(table, Some(v)), advance = false,
-        props = bucketProps +
+        props = bucketPropsAt(table, v) +
           (SnapshotStore.CheckPropPrefix + name -> predicateSql) +
-          (SnapshotStore.OpProp -> "add-constraint"))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        require(latestVersion(table).exists(_ != v),
-          s"addCheckConstraint CAS to $table failed with unmoved pointer $v")
-        attempt()
-      }
+          (SnapshotStore.OpProp -> "add-constraint")))
     }
-    attempt()
   }
 
   /** Drop a CHECK constraint: a data-less link whose `graft.check.<name>`
     * is EMPTY — the inheritance-safe drop marker (later links override
     * earlier keys; an absent key cannot be expressed down-chain). */
   def dropCheckConstraint(table: String, name: String,
-      ifExists: Boolean = false): Long = {
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+      ifExists: Boolean = false): Long =
+    optimisticCommit(table, "dropCheckConstraint") { v =>
       if (!checkConstraintsOf(table, v).contains(name)) {
         require(ifExists, s"no CHECK constraint $name on $table")
-        v
-      } else {
-        val bucketProps = bucketPropsAt(table, v)
-        val cand = commitWith(table, None, None, base = Some(v),
-          snapshot = snapshotSchema(table, Some(v)), advance = false,
-          props = bucketProps +
-            (SnapshotStore.CheckPropPrefix + name -> "") +
-            (SnapshotStore.OpProp -> "drop-constraint"))
-        SnapshotStore.testRaceHook()
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          require(latestVersion(table).exists(_ != v),
-            s"dropCheckConstraint CAS to $table failed with unmoved pointer $v")
-          attempt()
-        }
-      }
+        None
+      } else Some(commitWith(table, None, None, base = Some(v),
+        snapshot = snapshotSchema(table, Some(v)), advance = false,
+        props = bucketPropsAt(table, v) +
+          (SnapshotStore.CheckPropPrefix + name -> "") +
+          (SnapshotStore.OpProp -> "drop-constraint")))
     }
-    attempt()
-  }
 
   /** INFORMATIONAL key constraints — `PRIMARY KEY` / `UNIQUE` / `FOREIGN
     * KEY … NOT ENFORCED`' engine (the Delta/engine-hint idiom): standing
@@ -1828,9 +1786,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           s"${refColumns.size} — counts must match")
     } else require(refTable.isEmpty && refColumns.isEmpty,
       s"$kind constraint $name must not name a referenced table")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "addKeyConstraint") { v =>
       require(!checkConstraintsOf(table, v).contains(name) &&
         !keyConstraintsOf(table, v).contains(name),
         s"constraint $name already exists on $table")
@@ -1840,7 +1796,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       require(missing.isEmpty,
         s"key constraint $name on $table: no such column(s) " +
           missing.mkString(", "))
-      val bucketProps = bucketPropsAt(table, v)
       import org.json4s._
       val json = jackson.JsonMethods.compact(jackson.JsonMethods.render(JObject(
         List("kind" -> JString(kind),
@@ -1850,56 +1805,28 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           (if (refColumns.nonEmpty)
             List("refColumns" -> JArray(refColumns.toList.map(JString(_))))
           else Nil))))
-      val cand = commitWith(table, None, None, base = Some(v),
+      Some(commitWith(table, None, None, base = Some(v),
         snapshot = schema, advance = false,
-        props = bucketProps +
+        props = bucketPropsAt(table, v) +
           (SnapshotStore.KeyConsPropPrefix + name -> json) +
-          (SnapshotStore.OpProp -> "add-key-constraint"))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        require(latestVersion(table).exists(_ != v),
-          s"addKeyConstraint CAS to $table failed with unmoved pointer $v")
-        attempt()
-      }
+          (SnapshotStore.OpProp -> "add-key-constraint")))
     }
-    attempt()
   }
 
   /** Drop an informational key constraint — the same empty-value
     * tombstone as [[dropCheckConstraint]]. */
   def dropKeyConstraint(table: String, name: String,
-      ifExists: Boolean = false): Long = {
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+      ifExists: Boolean = false): Long =
+    optimisticCommit(table, "dropKeyConstraint") { v =>
       if (!keyConstraintsOf(table, v).contains(name)) {
         require(ifExists, s"no key constraint $name on $table")
-        v
-      } else {
-        val bucketProps = bucketPropsAt(table, v)
-        val cand = commitWith(table, None, None, base = Some(v),
-          snapshot = snapshotSchema(table, Some(v)), advance = false,
-          props = bucketProps +
-            (SnapshotStore.KeyConsPropPrefix + name -> "") +
-            (SnapshotStore.OpProp -> "drop-key-constraint"))
-        SnapshotStore.testRaceHook()
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          require(latestVersion(table).exists(_ != v),
-            s"dropKeyConstraint CAS to $table failed with unmoved pointer $v")
-          attempt()
-        }
-      }
+        None
+      } else Some(commitWith(table, None, None, base = Some(v),
+        snapshot = snapshotSchema(table, Some(v)), advance = false,
+        props = bucketPropsAt(table, v) +
+          (SnapshotStore.KeyConsPropPrefix + name -> "") +
+          (SnapshotStore.OpProp -> "drop-key-constraint")))
     }
-    attempt()
-  }
 
   /** Active informational key constraints of a version: name ->
     * [[SnapshotStore.KeyConstraint]], from the chain-resolved
@@ -1947,53 +1874,21 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       s"setTableProperties on $table: empty value for ${empties.mkString(", ")}" +
         " — an empty value is the store's UNSET tombstone; use " +
         "unsetTableProperties to forget a key")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
-      // Re-stamp a bucket claim like addColumns: no file moved.
-      val bucketProps = bucketPropsAt(table, v)
-      val cand = commitWith(table, None, None, base = Some(v),
-        snapshot = snapshotSchema(table, Some(v)), advance = false,
-        props = props ++ bucketProps +
-          (SnapshotStore.OpProp -> "set-properties"))
-      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-      if (casAdvance(table, cand, Some(v))) cand
-      else {
-        val w = Files.walk(versionDir(table, cand))
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally w.close()
-        require(latestVersion(table).exists(_ != v),
-          s"setTableProperties CAS to $table failed with unmoved pointer $v")
-        attempt()
-      }
-    }
-    attempt()
+    optimisticCommit(table, "setTableProperties")(v =>
+      Some(propertiesLink(table, props, v)))
   }
 
   /** Data-less chain link carrying MAINTAINER-owned props — the
     * materialized views' horizon carriers, which are `graft.*` keys the
     * user-facing [[setTableProperties]] rightly refuses. Lets a view
     * refresh that folded NOTHING advance its horizon in one metadata
-    * commit instead of rewriting the whole view's rows. Same
-    * CAS-until-won liveness as [[setTableProperties]]. */
+    * commit instead of rewriting the whole view's rows. The
+    * retry-until-won face of [[commitMaintainerPropsIf]]: one link
+    * ([[propertiesLink]]), two liveness policies. */
   private[graft] def commitMaintainerProps(table: String,
-      props: Map[String, String]): Long = {
-    // The retry-until-won face of [[commitMaintainerPropsIf]] — ONE
-    // commit recipe (bucket-prop carry, set-properties link, candidate
-    // discard), two liveness policies.
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
-      commitMaintainerPropsIf(table, props, v) match {
-        case Some(cand) => cand
-        case None =>
-          require(latestVersion(table).exists(_ != v),
-            s"commitMaintainerProps CAS to $table failed with unmoved pointer $v")
-          attempt()
-      }
-    }
-    attempt()
-  }
+      props: Map[String, String]): Long =
+    optimisticCommit(table, "commitMaintainerProps")(v =>
+      Some(propertiesLink(table, props, v)))
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES`' engine: forget keys as a
     * DATA-LESS chain link whose `_props.json` carries EMPTY values — the
@@ -2012,9 +1907,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     require(reserved.isEmpty,
       s"unsetTableProperties on $table: key(s) ${reserved.mkString(", ")} " +
         "are reserved store protocol (graft.*)")
-    @tailrec def attempt(): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    optimisticCommit(table, "unsetTableProperties") { v =>
       val live = tablePropertiesOf(table, v)
       val missing = keys.filterNot(live.contains)
       if (missing.nonEmpty && !ifExists)
@@ -2023,26 +1916,12 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
             s"${if (missing.size == 1) "y" else "ies"} " +
             missing.mkString(", "))
       val present = keys.filter(live.contains)
-      if (present.isEmpty) v
-      else {
-        val bucketProps = bucketPropsAt(table, v)
-        val cand = commitWith(table, None, None, base = Some(v),
-          snapshot = snapshotSchema(table, Some(v)), advance = false,
-          props = present.map(_ -> "").toMap ++ bucketProps +
-            (SnapshotStore.OpProp -> "unset-properties"))
-        SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          require(latestVersion(table).exists(_ != v),
-            s"unsetTableProperties CAS to $table failed with unmoved pointer $v")
-          attempt()
-        }
-      }
+      if (present.isEmpty) None
+      else Some(commitWith(table, None, None, base = Some(v),
+        snapshot = snapshotSchema(table, Some(v)), advance = false,
+        props = present.map(_ -> "").toMap ++ bucketPropsAt(table, v) +
+          (SnapshotStore.OpProp -> "unset-properties")))
     }
-    attempt()
   }
 
   /** USER-VISIBLE table properties of a version — what `SHOW
@@ -2253,8 +2132,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       snapshot = rewriteSnapshotSchema(table, routed), advance = false,
       props = SnapshotStore.bucketLayoutProps(bucketBy, dims) +
         (SnapshotStore.BucketSortedProp -> "true") ++ extraProps)
-    if (casAdvance(table, cand, expectedHead)) Some(cand)
-    else { discardCandidate(table, cand); None }
+    publishIf(table, cand, expectedHead)
   }
 
   /** CONDITIONAL bucketed append — [[appendBucketed]] with
@@ -2293,16 +2171,14 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       base = expectedHead, snapshot = merged, advance = false,
       props = SnapshotStore.bucketLayoutProps(bucketBy, dims) +
         (SnapshotStore.BucketSortedProp -> "true") ++ extraProps)
-    if (casAdvance(table, v, expectedHead)) {
-      // Auto-fold AFTER the landed delta (appendBucketed folds before;
-      // here a pre-fold would advance the head and fail this very CAS):
-      // an incrementally-maintained view's chain stays under the merge
-      // fan-in cap without its maintainers ever compacting by hand. The
-      // fold link inherits the view's props (horizon included), so
-      // maintenance and folding compose.
-      autoFoldSortedRuns(table, dims.product)
-      Some(v)
-    } else { discardCandidate(table, v); None }
+    // Auto-fold AFTER the landed delta (appendBucketed folds before;
+    // here a pre-fold would advance the head and fail this very CAS):
+    // an incrementally-maintained view's chain stays under the merge
+    // fan-in cap without its maintainers ever compacting by hand. The
+    // fold link inherits the view's props (horizon included), so
+    // maintenance and folding compose.
+    publishIf(table, v, expectedHead).map { won =>
+      autoFoldSortedRuns(table, dims.product); won }
   }
 
   /** AUTO-FOLD on sorted-run fan-in — the missing twin of the DV chain
@@ -2898,11 +2774,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       changeSetOf: (DataFrame, StructType) => Option[DataFrame]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val hit = coalesce(predicate, lit(false))
-    def discardCand(): Unit = {
-      val w = Files.walk(versionDir(table, cand))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
       val newLinks = { val c = chainOf(table, head); c.drop(c.indexOf(base) + 1) }
       val schemaH = snapshotSchema(table, Some(head))
       val newFiles = newLinks.flatMap(dataFilesOf(table, _))
@@ -2983,7 +2854,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
             written.where(coalesce(expr(sql).cast("boolean"), lit(true)) ===
               lit(false)).head(1).nonEmpty
           }.foreach { case (n, sql) =>
-            discardCand()
+            discardCandidate(table, cand)
             throw new IllegalArgumentException(
               s"$op to $table violates CHECK constraint $n ($sql) added " +
                 "concurrently with the mutation — candidate discarded, " +
@@ -3051,12 +2922,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         .where(predicate).select(col("_metadata.file_path")).distinct()
         .collect().map(r => uriFileKey(r.getString(0))).toSeq.sorted
 
-    def discard(cand: Long): Unit = {
-      val w = Files.walk(versionDir(table, cand))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
-
     def pureAppendsSince(base: Long, head: Long): Boolean =
       pureAppendsBetween(table, base, head)
 
@@ -3072,7 +2937,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           throw new IllegalStateException(s"pointer of $table vanished mid-CAS"))
         require(head != base, s"$op CAS to $table failed with unmoved pointer $head")
         if (pureAppendsSince(base, head)) casLoop(rebaseOnto(cand, base, head), head)
-        else { discard(cand); None }
+        else { discardCandidate(table, cand); None }
       }
 
     @tailrec def attempt(retriesLeft: Int): Long = {
@@ -3101,7 +2966,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
               // rewrite): recompute against the new head after a short
               // backoff so racing mutators interleave instead of
               // lock-stepping.
-              Thread.sleep(math.min(25L << (maxRetries - retriesLeft), 400L))
+              recomputeBackoff(maxRetries - retriesLeft)
               attempt(retriesLeft - 1)
             case None => throw new IllegalStateException(
               s"$op($table) lost the commit race to conflicting rewrites " +
@@ -3379,9 +3244,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     val src = source.localCheckpoint(true)
       .withColumn("__src_hit", lit(true)).alias("source")
 
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
+    /** One merge candidate against head `v` (None: a no-op merge). */
+    def candidate(v: Long): Option[Long] = {
       val schema = snapshotSchema(table, Some(v))
       val selTarget = schema.fieldNames
         .map(n => col(s"target.$n").as(n)).toIndexedSeq
@@ -3552,7 +3416,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       // No-op guard: nothing to rewrite, nothing to vector, nothing to
       // insert — return the unchanged version instead of committing an
       // empty one. The isEmpty probe only runs on this already-rare path.
-      if (!doRewrite && dvRecord.isEmpty && inserts.forall(_.isEmpty)) v
+      if (!doRewrite && dvRecord.isEmpty && inserts.forall(_.isEmpty)) None
       else {
         val data = (rewritten.toSeq ++ dvPost.toSeq ++ inserts.toSeq)
           .reduceOption(_.unionByName(_))
@@ -3565,24 +3429,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         // zero-exchange storage-partitioned joins.
         val (bucketProps, bucketed) = bucketClaimOf(table, v)
         val dataOut = data.map(bucketed)
-        val cand = commitWith(table, dataOut, changeSet = changeSet,
+        Some(commitWith(table, dataOut, changeSet = changeSet,
           base = Some(v), snapshot = schema, advance = false,
           removed = if (hasMatchedAction) cowKeys else Nil,
           removedRows = preImages, dv = dvRecord,
-          props = bucketProps + (SnapshotStore.OpProp -> "merge"))
-        SnapshotStore.testRaceHook()
-        if (casAdvance(table, cand, Some(v))) cand
-        else {
-          val w = Files.walk(versionDir(table, cand))
-          try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-          if (retriesLeft > 0) {
-            Thread.sleep(math.min(25L << (maxRetries - retriesLeft), 400L))
-            attempt(retriesLeft - 1)
-          } else throw new IllegalStateException(
-            s"merge($table) lost the commit race $maxRetries times — " +
-              "retry later or widen maxRetries")
-        }
+          props = bucketProps + (SnapshotStore.OpProp -> "merge")))
       }
     }
     // Chain-vector backstop (see rowMutation): fold an over-cap vector
@@ -3593,7 +3444,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           dvChainFoldRows)
         compactVectored(table)
     }
-    attempt(maxRetries)
+    optimisticCommit(table, "merge", maxRetries)(candidate)
   }
 
   /** [[fileKey]] for a `_metadata.file_path` URI: the last two path
@@ -4221,11 +4072,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         "updates — one mutation per table per transaction")
     recoverPendingTxns()
     val tables = (deletes.keySet ++ updates.keySet).toSeq.sorted
-    def discard(t: String, cand: Long): Unit = {
-      val w = Files.walk(versionDir(t, cand))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
     /** A table's transaction half: predicate, op tag, and the rewrite
       * functions — needed both to PREPARE a candidate and to RE-BASE it
       * over pure-append conflicts. */
@@ -4333,19 +4179,19 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
               } catch {
                 case e: Throwable =>
                   tables.foreach(t => cands.getOrElse(t, None).foreach { c =>
-                    try discard(t, c)
+                    try discardCandidate(t, c)
                     catch { case c2: Throwable => e.addSuppressed(c2) }
                   })
                   throw e
               }
             } else if (retriesLeft > 0) {
-              withCand.foreach(t => discard(t, cands(t).get))
-              Thread.sleep(math.min(25L << (maxRetries - retriesLeft), 400L))
+              withCand.foreach(t => discardCandidate(t, cands(t).get))
+              recomputeBackoff(maxRetries - retriesLeft)
               retriesLeft -= 1
               bases = backstopAndBases()
               cands = tables.map(t => t -> prepare(t)).toMap
             } else {
-              withCand.foreach(t => discard(t, cands(t).get))
+              withCand.foreach(t => discardCandidate(t, cands(t).get))
               throw new IllegalStateException(
                 s"mutateAll(${tables.mkString(", ")}) lost the commit race " +
                   s"to conflicting rewrites $maxRetries times — retry later " +
@@ -4614,11 +4460,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       val h = math.max(prev, reclaimedCommitted.max)
       if (h > prev) Files.writeString(f, h.toString)
     }
-    (reclaimedCommitted ++ orphans).foreach { v =>
-      val w = Files.walk(versionDir(table, v))
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
+    (reclaimedCommitted ++ orphans).foreach(discardCandidate(table, _))
   }
 
   /** The highest committed version `vacuum` has ever reclaimed from

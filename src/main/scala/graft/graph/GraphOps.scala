@@ -585,7 +585,7 @@ object GraphOps {
     * two engines — the q68 oracle replays these iterations in SQL) agree
     * bit-for-bit. Per iteration: one join keyed by src (co-locates with
     * bucketing at scale), one partially-aggregated shuffle on dst, one
-    * lineage-cutting lazy checkpoint. */
+    * lineage-cutting eager checkpoint. */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       damping: Double = 0.85, reset: Double = 0.15,
       checkpointEvery: Int = 1): DataFrame = {

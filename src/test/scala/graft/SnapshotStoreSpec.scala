@@ -481,6 +481,165 @@ class SnapshotStoreSpec extends SparkSpec {
       "the append that won the first CAS round must survive the rename rewrite")
   }
 
+  /** Version directories of `table` lacking the completed-write marker
+    * (`_SUCCESS`) or the publish sentinel (`_committed`): a candidate that
+    * was neither published nor discarded. */
+  private def orphanDirs(root: String, table: String): Seq[String] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(root, table))
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("v="))
+      .filterNot(d => Seq("_SUCCESS", "_committed")
+        .forall(m => java.nio.file.Files.exists(d.resolve(m))))
+      .map(_.getFileName.toString).toSeq
+    finally s.close()
+  }
+
+  /** Strip the field-id metadata from every pinned snapshot schema of
+    * `table`: a pre-field-id (legacy) table, read by column name. */
+  private def stripFieldIds(root: String, table: String): Unit = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(root, table))
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("v=")).foreach { vd =>
+        val f = vd.resolve("_snapshot_schema.json")
+        if (java.nio.file.Files.exists(f)) {
+          val sch = org.apache.spark.sql.types.DataType.fromJson(
+            java.nio.file.Files.readString(f))
+            .asInstanceOf[org.apache.spark.sql.types.StructType]
+          java.nio.file.Files.writeString(f,
+            org.apache.spark.sql.types.StructType(sch.fields.map(x =>
+              x.copy(metadata = org.apache.spark.sql.types.Metadata.empty))).json)
+        }
+      }
+    finally s.close()
+    SnapshotStore.dropCachesForTests()
+  }
+
+  /** One single-table writer on the optimistic-commit loop: its fixture
+    * on top of the 20-row table `t(id, s)`, the write, the check that
+    * its effect landed, and the id column's name after it. */
+  private case class LoopWriter(name: String,
+      setup: SnapshotStore => Unit = _ => (),
+      write: SnapshotStore => Long,
+      applied: SnapshotStore => Boolean,
+      idCol: String = "id")
+
+  private val loopWriters: Seq[LoopWriter] = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    def props(st: SnapshotStore) = st.tablePropertiesOf("t", st.latestVersion("t").get)
+    def checks(st: SnapshotStore) = st.checkConstraintsOf("t", st.latestVersion("t").get)
+    def keys(st: SnapshotStore) = st.keyConstraintsOf("t", st.latestVersion("t").get)
+    def legacy(st: SnapshotStore): Unit = stripFieldIds(st.root, "t")
+    Seq(
+      LoopWriter("compact", setup = _.append("t", Seq((500L, "x")).toDF("id", "s")),
+        write = _.compact("t"),
+        applied = st => st.baseOf("t", st.latestVersion("t").get).isEmpty),
+      LoopWriter("compactVectored",
+        // sparse delete over 4 clustered files: a deletion vector, no rewrite
+        setup = st => {
+          st.commitClustered("t", spark.range(0, 400)
+            .select(col("id"), col("id").cast("string").as("s")), Seq("id"),
+            targetPartitions = 4)
+          val d = st.delete("t", col("id") === 7L)
+          assert(st.dvAt("t", d).nonEmpty, "fixture must exercise the DV path")
+        },
+        write = _.compactVectored("t"),
+        applied = st => st.dvInChain("t", st.latestVersion("t").get).isEmpty &&
+          st.read("t").where(col("id") === 7L).head(1).isEmpty),
+      LoopWriter("addColumns",
+        write = _.addColumns("t", StructType(Seq(StructField("w", DoubleType)))),
+        applied = _.read("t").columns.contains("w")),
+      LoopWriter("dropColumns", write = _.dropColumns("t", Seq("s")),
+        applied = _.read("t").columns.toSeq == Seq("id")),
+      LoopWriter("renameColumns (metadata link)",
+        write = _.renameColumns("t", Map("id" -> "key")),
+        applied = st => st.read("t").columns.toSeq == Seq("key", "s") &&
+          st.commitProps("t", st.latestVersion("t").get)
+            .get(SnapshotStore.OpProp).contains("rename-columns-metadata"),
+        idCol = "key"),
+      LoopWriter("renameColumns (legacy rewrite)", setup = legacy,
+        write = _.renameColumns("t", Map("id" -> "key")),
+        applied = st => st.read("t").columns.toSeq == Seq("key", "s") &&
+          st.baseOf("t", st.latestVersion("t").get).isEmpty,
+        idCol = "key"),
+      LoopWriter("adoptFieldIds", setup = legacy, write = _.adoptFieldIds("t"),
+        applied = st => SnapshotStore.schemaHasFieldIds(st.snapshotSchema("t"))),
+      LoopWriter("addCheckConstraint",
+        write = _.addCheckConstraint("t", "id_nonneg", "id >= 0"),
+        applied = checks(_).contains("id_nonneg")),
+      LoopWriter("dropCheckConstraint",
+        setup = _.addCheckConstraint("t", "id_nonneg", "id >= 0"),
+        write = _.dropCheckConstraint("t", "id_nonneg"),
+        applied = checks(_).isEmpty),
+      LoopWriter("addKeyConstraint",
+        write = _.addKeyConstraint("t", "pk", "primary", Seq("id")),
+        applied = keys(_).contains("pk")),
+      LoopWriter("dropKeyConstraint",
+        setup = _.addKeyConstraint("t", "pk", "primary", Seq("id")),
+        write = _.dropKeyConstraint("t", "pk"),
+        applied = keys(_).isEmpty),
+      LoopWriter("setTableProperties",
+        write = _.setTableProperties("t", Map("owner" -> "kg")),
+        applied = props(_).get("owner").contains("kg")),
+      LoopWriter("unsetTableProperties",
+        setup = _.setTableProperties("t", Map("owner" -> "kg")),
+        write = _.unsetTableProperties("t", Seq("owner")),
+        applied = props(_).isEmpty),
+      LoopWriter("merge",
+        write = _.merge("t", Seq((3L, "merged"), (700L, "new")).toDF("id", "s"),
+          col("target.id") === col("source.id"),
+          matchedUpdate = Some(Map("s" -> col("source.s")))),
+        applied = st => st.read("t").where(col("id").isin(3L, 700L))
+          .select("s").as[String].collect().toSet == Set("merged", "new")),
+      LoopWriter("commitMaintainerProps",
+        write = _.commitMaintainerProps("t", Map("graft.view.horizon" -> "7")),
+        applied = st => st.resolvedProps("t", st.latestVersion("t").get)
+          .get("graft.view.horizon").contains("7")))
+  }
+
+  test("every writer on the commit loop survives a lost first round: effect applied, sibling kept, no orphan") {
+    loopWriters.foreach { w =>
+      val root = java.nio.file.Files.createTempDirectory("graft-loop").toString
+      val st = new SnapshotStore(spark, root)
+      val sibling = new SnapshotStore(spark, root)
+      st.commit("t", spark.range(0, 20)
+        .select(col("id"), col("id").cast("string").as("s")))
+      w.setup(st)
+      val before = st.read("t").select("id").as[Long].collect().toSet
+      var siblingV = Option.empty[Long]
+      SnapshotStore.testRaceHook = () => if (siblingV.isEmpty)
+        siblingV = Some(sibling.append("t", Seq((1000L, "sib")).toDF("id", "s")))
+      val won = try w.write(st) finally SnapshotStore.testRaceHook = () => ()
+      assert(siblingV.nonEmpty, s"${w.name}: the race hook must fire")
+      assert(won > siblingV.get && st.latestVersion("t").contains(won),
+        s"${w.name}: the writer republishes above the sibling that won round one")
+      assert(w.applied(st), s"${w.name}: effect applied")
+      val ids = st.read("t").select(w.idCol).as[Long].collect().toSet
+      assert(ids.contains(1000L), s"${w.name}: the sibling's row is readable")
+      assert(before.subsetOf(ids), s"${w.name}: no earlier row lost")
+      assert(orphanDirs(root, "t").isEmpty,
+        s"${w.name}: orphaned candidate(s) ${orphanDirs(root, "t")}")
+    }
+  }
+
+  test("a bounded rewrite out of budget fails loudly, keeps every append, orphans nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val st = new SnapshotStore(spark, root)
+    val sibling = new SnapshotStore(spark, root)
+    st.commit("t", spark.range(0, 10).toDF("id"))
+    var appended = Seq.empty[Long]
+    SnapshotStore.testRaceHook = () => {
+      val id = 100L + appended.size
+      sibling.append("t", Seq(id).toDF("id"))
+      appended :+= id
+    }
+    val e = try intercept[IllegalStateException](st.compact("t", maxRetries = 1))
+    finally SnapshotStore.testRaceHook = () => ()
+    assert(e.getMessage.contains("compact(t) lost the commit race 1 times"))
+    assert(appended.size == 2, "one initial round plus one retry")
+    assert(st.read("t").as[Long].collect().sorted.toSeq ==
+      ((0L until 10L) ++ appended))
+    assert(orphanDirs(root, "t").isEmpty)
+  }
+
   test("delete re-bases over a pure-append conflict: no recompute, no starvation") {
     // Force the exact interleaving that starved the old recompute loop: a
     // sibling append lands AFTER the delete's survivor candidate is fully
@@ -1160,25 +1319,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // and rewrite the unexposed delta stamped.
     val st = freshStore()
     st.append("t", Seq((1L, 2L)).toDF("k", "v"))
-    locally { // strip minted ids: the pre-field-id store
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(st.root, "t")
-      val s0 = java.nio.file.Files.list(dir)
-      try s0.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("v=")).foreach { vd =>
-          val f = vd.resolve("_snapshot_schema.json")
-          if (java.nio.file.Files.exists(f)) {
-            val sch = org.apache.spark.sql.types.DataType.fromJson(
-              java.nio.file.Files.readString(f))
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-            java.nio.file.Files.writeString(f,
-              org.apache.spark.sql.types.StructType(sch.fields.map(x =>
-                x.copy(metadata = org.apache.spark.sql.types.Metadata.empty))).json)
-          }
-        }
-      finally s0.close()
-    }
-    SnapshotStore.dropCachesForTests()
+    stripFieldIds(st.root, "t") // the pre-field-id store
     assert(!SnapshotStore.schemaHasFieldIds(st.snapshotSchema("t")))
     val legacyBase = st.latestVersion("t")
     st.adoptFieldIds("t") // the adoption wins first
