@@ -475,18 +475,7 @@ object KnowledgeGraph {
     import spark.implicits._
     val wanted = Seq("concepts", "edges", "instances", "vocab")
       .map(tablePrefix + _)
-    // the absent set is re-checked after the cut (a transaction can
-    // create a table and append to present ones atomically — see
-    // IngestPipeline.storeState): retry until it is stable
-    var cut = Map.empty[String, Long]
-    var stable = false
-    while (!stable) {
-      val present = wanted.filter(t => store.latestVersion(t).isDefined)
-      cut = if (present.isEmpty) Map.empty[String, Long]
-        else store.snapshotAll(present)
-      stable = wanted.filter(t => store.latestVersion(t).isDefined)
-        .toSet == present.toSet
-    }
+    val cut = store.snapshotPresent(wanted)
     def tbl(role: String, empty: => DataFrame): DataFrame =
       cut.get(tablePrefix + role)
         .map(v => store.readAt(tablePrefix + role, v)).getOrElse(empty)

@@ -677,33 +677,45 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * makes the sibling's own CAS see the post-transaction head and
     * re-base/relink like any lost race. The intent FILE stays in place
     * for [[recoverPendingTxns]] to finish its other tables and delete;
-    * both applications are idempotent. A concurrent recovery may delete
-    * an intent between the listing and the read — by then it is fully
-    * applied, so the read failure is skipped. */
-  private def applyPendingIntentsFor(table: String): Unit = {
-    if (!Files.exists(txnDir)) return
+    * both applications are idempotent. */
+  private def applyPendingIntentsFor(table: String): Unit =
+    pendingIntents().foreach { case (_, versions) =>
+      versions.collect { case (t, v) if t == table => v }
+        .foreach(rollForward(table, _))
+    }
+
+  /** Every pending `_txn/` intent, oldest name first: the intent file and
+    * its (table, version) entries. The store's ONE reader of intents. A
+    * live writer or a recovery (this JVM or another) may delete an intent
+    * between the listing and the read — by then it is fully applied — so
+    * a vanished or torn intent reads as no entries. Cheap when `_txn/` is
+    * absent: one directory stat. */
+  private def pendingIntents(): Seq[(Path, Seq[(String, Long)])] = {
+    if (!Files.exists(txnDir)) return Nil
     val s = Files.list(txnDir)
     val intents =
       try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
         .toSeq.sortBy(_.getFileName.toString)
       finally s.close()
-    intents.foreach { f =>
-      val versions =
-        try org.json4s.jackson.JsonMethods.parse(Files.readString(f)) match {
-          case org.json4s.JObject(fields) => fields.collect {
-            case (t, org.json4s.JLong(v)) => t -> v
-            case (t, org.json4s.JInt(v))  => t -> v.toLong
-          }
-          case _ => Nil
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      versions.collect { case (t, v) if t == table => v }.foreach { v =>
-        if (hasSuccessMarker(table, v)) {
-          stampCommitted(table, v)
-          forwardPointer(table, v)
+    intents.map { f =>
+      f -> (try org.json4s.jackson.JsonMethods.parse(Files.readString(f)) match {
+        case org.json4s.JObject(fields) => fields.collect {
+          case (t, org.json4s.JLong(v)) => t -> v
+          case (t, org.json4s.JInt(v))  => t -> v.toLong
         }
-      }
+        case _ => Nil
+      } catch { case scala.util.control.NonFatal(_) => Nil })
     }
   }
+
+  /** Roll one intent entry forward: if the candidate `v` is fully written
+    * (`_SUCCESS`), stamp it committed, then move `table`'s pointer
+    * forward to it. The caller holds `table`'s publish exclusion. */
+  private def rollForward(table: String, v: Long): Unit =
+    if (hasSuccessMarker(table, v)) {
+      stampCommitted(table, v)
+      forwardPointer(table, v)
+    }
 
   /** Move the pointer to `next` unless an already-committed version is newer.
     * Forward-only is enforced under a cross-process FILE LOCK (plus a
@@ -780,8 +792,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * retry do so in ONE loop, [[optimisticCommit]]. The only other
     * callers keep their own rebase policy: `append`'s relink loop
     * ([[occAppendCommit]]) and [[rowMutation]]'s rebase over pure
-    * appends. (Multi-table transactions publish through intents and
-    * [[forwardPointer]].) */
+    * appends. (Multi-table transactions publish through ONE step,
+    * [[publishTxn]]: a `_txn/` intent, then [[forwardPointer]].) */
   private def casAdvance(table: String, next: Long,
       expectedBase: Option[Long]): Boolean = {
     def attempt(): Boolean = {
@@ -2418,11 +2430,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     commit(table, ZOrder.clustered(df, zorderBy, targetPartitions),
       changeSet, props)
 
-  /** `append` with Z-order clustering of the delta (see [[commitZOrdered]]). */
-  def appendZOrdered(table: String, rows: DataFrame,
-      zorderBy: Seq[String], targetPartitions: Int = 0): Long =
-    append(table, ZOrder.clustered(rows, zorderBy, targetPartitions))
-
   def latestVersion(table: String): Option[Long] =
     heads.read(root, table).map(_.version)
 
@@ -2494,7 +2501,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     while (true) {
       recoverPendingTxns()
       val cut = underPointerLocks(ts) {
-        if (pendingTxnTables().exists(ts.contains)) None
+        if (pendingIntents().exists(_._2.exists(e => ts.contains(e._1)))) None
         else Some(ts.map(t => t -> latestVersion(t).getOrElse(
           throw new IllegalArgumentException(
             s"snapshotAll: no committed version of $t"))).toMap)
@@ -2512,20 +2519,19 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   def readAll(tables: Seq[String]): Map[String, DataFrame] =
     snapshotAll(tables).map { case (t, v) => t -> readAt(t, v) }
 
-  /** Tables named by any pending `_txn/` intent (crashed-writer debris the
-    * locked [[snapshotAll]] fallback must route back through recovery). */
-  private def pendingTxnTables(): Set[String] = {
-    if (!Files.exists(txnDir)) return Set.empty
-    val s = Files.list(txnDir)
-    val intents =
-      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json")).toSeq
-      finally s.close()
-    intents.flatMap { f =>
-      try org.json4s.jackson.JsonMethods.parse(Files.readString(f)) match {
-        case org.json4s.JObject(fields) => fields.map(_._1)
-        case _ => Nil
-      } catch { case scala.util.control.NonFatal(_) => Nil }
-    }.toSet
+  /** [[snapshotAll]] of whichever of `tables` exist (empty when none do).
+    * The absent set is re-checked AFTER the cut and the cut retaken if it
+    * changed: a transaction can CREATE an absent table and append to
+    * present ones atomically, and the post-transaction cut of the present
+    * tables paired with the new table read as absent is exactly the torn
+    * view the cut exists to prevent. */
+  @tailrec private[graft] final def snapshotPresent(tables: Seq[String])
+      : Map[String, Long] = {
+    val present = tables.filter(latestVersion(_).isDefined)
+    val cut = if (present.isEmpty) Map.empty[String, Long]
+      else snapshotAll(present)
+    if (tables.filter(latestVersion(_).isDefined) == present) cut
+    else snapshotPresent(tables)
   }
 
   /** Time travel: read a specific version — the multi-directory parquet
@@ -2910,18 +2916,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       rewrite: (DataFrame, StructType) => DataFrame,
       changeSetOf: (DataFrame, StructType) => Option[DataFrame],
       dvReplacement: (DataFrame, StructType) => Option[DataFrame]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val hit = coalesce(predicate, lit(false))
-
-    /** Store-relative keys of files under `paths` holding ≥1 matching
-      * row: one pass, pruned by the predicate, collecting at most #files
-      * paths (metadata scale). */
-    def matchedKeysIn(paths: Seq[Path], schema: StructType): Seq[String] =
-      if (paths.isEmpty) Seq.empty
-      else spark.read.schema(schema).parquet(paths.map(_.toString): _*)
-        .where(predicate).select(col("_metadata.file_path")).distinct()
-        .collect().map(r => uriFileKey(r.getString(0))).toSeq.sorted
-
     def pureAppendsSince(base: Long, head: Long): Boolean =
       pureAppendsBetween(table, base, head)
 
@@ -3919,12 +3913,13 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     *   2. Under the root monitor + every table's pointer file lock (sorted
     *      order, deadlock-free), the bases are re-validated; if any table
     *      moved, its candidate RELINKS onto the new head (append's rebase
-    *      machinery — appends commute) and the multi-CAS retries.
-    *   3. With all bases current, a TXN INTENT file (table -> version)
-    *      lands in `_txn/` by atomic rename. THIS is the commit point: a
-    *      crash after it rolls FORWARD — recovery stamps the sentinels and
-    *      advances the remaining pointers — so the transaction is again
-    *      all-or-none, just 'all' this time.
+    *      machinery — appends commute) and the multi-CAS retries
+    *      ([[appendAllCommit]]).
+    *   3. With all bases current, [[publishTxn]]: a TXN INTENT file
+    *      (table -> version) lands in `_txn/` by atomic rename. THIS is
+    *      the commit point: a crash after it rolls FORWARD — recovery
+    *      stamps the sentinels and advances the remaining pointers — so
+    *      the transaction is again all-or-none, just 'all' this time.
     *   4. Sentinels + pointer moves per table, then the intent is removed.
     *
     * Recovery runs from [[recoverPendingTxns]] — invoked by every
@@ -3934,7 +3929,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   def appendAll(rows: Map[String, DataFrame]): Map[String, Long] = {
     require(rows.nonEmpty, "appendAll requires at least one table")
     recoverPendingTxns()
-    appendAllCommit(appendAllPrepare(rows), rows)
+    appendAllCommit(appendAllPrepare(rows), rows).get // no read set: never None
   }
 
   /** [[appendAll]] with READ-SET VALIDATION — the SERIALIZABLE commit a
@@ -3951,64 +3946,18 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * still validates the read), and un-guarded write tables (the epoch
     * log) relink as usual. The reference gets this from Postgres
     * serializable transactions (ingestion.py:31-152); here it is OCC
-    * read-set validation over the pointer protocol. */
+    * read-set validation over the pointer protocol: [[appendAll]]'s
+    * commit loop ([[appendAllCommit]]) with the read set, publishing
+    * through the same [[publishTxn]]. */
   def appendAllSerialized(rows: Map[String, DataFrame],
       readSet: Map[String, Option[Long]]): Option[Map[String, Long]] = {
     require(rows.nonEmpty, "appendAllSerialized requires at least one table")
     recoverPendingTxns()
-    // cheap pre-check before paying the candidate writes
-    if (readSet.exists { case (t, v) => latestVersion(t) != v }) return None
-    val cands = appendAllPrepare(rows)
-    // a guarded WRITE table's candidate must be based on the read cut —
-    // a head moved between the pre-check and prepare shows up here
-    if (readSet.exists { case (t, v) =>
-        cands.get(t).exists(_._2 != v) }) {
-      cands.foreach { case (t, (c, _)) => discardCandidate(t, c) }
-      return None
-    }
-    val writeTables = rows.keys.toSeq
-    val lockTables = (writeTables ++ readSet.keys).distinct.sorted
-    var cands2 = cands
-    var result = Option.empty[Map[String, Long]]
-    var done = false
-    while (!done) {
-      val outcome = underPointerLocks(lockTables) {
-        lockTables.foreach(applyPendingIntentsFor)
-        // serialization conflict: any guarded head moved past the cut
-        if (readSet.exists { case (t, v) => latestVersion(t) != v }) Left(None)
-        else {
-          val stale = writeTables
-            .filter(t => latestVersion(t) != cands2(t)._2)
-          if (stale.nonEmpty) Left(Some(stale))
-          else {
-            val intent = writeTxnIntent(cands2.map { case (t, (v, _)) => t -> v })
-            writeTables.sorted.foreach { t =>
-              val v = cands2(t)._1
-              stampCommitted(t, v)
-              forwardPointer(t, v)
-            }
-            Files.deleteIfExists(intent)
-            Right(cands2.map { case (t, (v, _)) => t -> v })
-          }
-        }
-      }
-      outcome match {
-        case Right(r) => result = Some(r); done = true
-        case Left(None) => // guarded head moved: abort whole, nothing visible
-          cands2.foreach { case (t, (c, _)) => discardCandidate(t, c) }
-          result = None; done = true
-        case Left(Some(stale)) =>
-          // only UN-guarded tables can be stale here (guarded staleness
-          // aborted above): relink them over the sibling, like appendAll
-          stale.foreach { t =>
-            val head = latestVersion(t).getOrElse(throw new IllegalStateException(
-              s"pointer of $t vanished during appendAllSerialized"))
-            val relinked = relink(t, cands2(t)._1, head, rows(t).schema)
-            cands2 += t -> ((relinked, Some(head)))
-          }
-      }
-    }
-    result
+    // cheap pre-check before paying the candidate writes; a head that
+    // moves later fails the commit loop's validation (pointers only move
+    // forward, so a candidate based past the cut cannot pass it)
+    if (readSet.exists { case (t, v) => latestVersion(t) != v }) None
+    else appendAllCommit(appendAllPrepare(rows), rows, readSet)
   }
 
   /** ATOMIC MULTI-TABLE DELETE — the reference's CASCADE-delete shape
@@ -4053,7 +4002,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * the reference's reassign-then-dissolve shape (move an ontology's
     * members, update, AND retire the ontology row, delete, in one tx:
     * ontology_scoring.py:447-731) with exactly [[deleteAll]]'s intent
-    * protocol, crash contract, and stale-base re-prepare. A table may
+    * protocol (published through [[publishTxn]], like [[appendAll]]),
+    * crash contract, and stale-base re-prepare. A table may
     * appear in `deletes` or `updates`, not both (one mutation per table
     * per tx — split the predicate instead). */
   def mutateAll(
@@ -4127,15 +4077,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           val stale = tables.filter(t => !latestVersion(t).contains(bases(t)))
           if (stale.nonEmpty) None
           else {
-            val intent = writeTxnIntent(
-              withCand.map(t => t -> cands(t).get).toMap)
-            SnapshotStore.testTxnIntentHook() // spec seam: crash after intent
-            withCand.foreach { t =>
-              val v = cands(t).get
-              stampCommitted(t, v)
-              forwardPointer(t, v)
-            }
-            Files.deleteIfExists(intent)
+            publishTxn(withCand.map(t => t -> cands(t).get).toMap)
             Some(tables.map(t => t -> cands(t).getOrElse(bases(t))).toMap)
           }
         }
@@ -4176,13 +4118,9 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
                     prepare(t)
                 }
                 cands += t -> rebased
-              } catch {
-                case e: Throwable =>
-                  tables.foreach(t => cands.getOrElse(t, None).foreach { c =>
-                    try discardCandidate(t, c)
-                    catch { case c2: Throwable => e.addSuppressed(c2) }
-                  })
-                  throw e
+              } catch { case e: Throwable =>
+                discardCandidates(tables.flatMap(t => cands(t).map(t -> _)), Some(e))
+                throw e
               }
             } else if (retriesLeft > 0) {
               withCand.foreach(t => discardCandidate(t, cands(t).get))
@@ -4205,46 +4143,85 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     attempt(maxRetries)
   }
 
-  /** Steps 2-4 of [[appendAll]] (multi-CAS with relink-on-stale), exposed
-    * so a spec can force a sibling commit between prepare and commit. */
+  /** Steps 2-4 of [[appendAll]] and [[appendAllSerialized]] — their ONE
+    * commit loop (multi-CAS with relink-on-stale), exposed so a spec can
+    * force a sibling commit between prepare and commit. Each round takes
+    * every write and guarded table's publish exclusion, then:
+    *  - a guarded head moved off its `readSet` cut (a serialization
+    *    conflict): every candidate is discarded, None;
+    *  - a write table went stale (a sibling committed to it): its
+    *    candidate relinks onto the new head (schema re-merged, retypes
+    *    re-checked) and the round retries — every round some writer
+    *    commits, so no livelock. A relink refusal discards EVERY
+    *    remaining candidate before it rethrows: nothing exposed, nothing
+    *    orphaned;
+    *  - all bases current: [[publishTxn]].
+    * [[SnapshotStore.testRaceHook]] fires once per round, before the
+    * exclusion is taken. An empty `readSet` ([[appendAll]]) never
+    * answers None. */
   private[graft] def appendAllCommit(cands0: Map[String, (Long, Option[Long])],
-      rows: Map[String, DataFrame]): Map[String, Long] = {
+      rows: Map[String, DataFrame],
+      readSet: Map[String, Option[Long]] = Map.empty)
+      : Option[Map[String, Long]] = {
+    val writeTables = rows.keys.toSeq.sorted
+    val lockTables = (writeTables ++ readSet.keys).distinct.sorted
     var cands = cands0
-    val tables = rows.keys.toSeq.sorted
-    var result = Map.empty[String, Long]
-    var done = false
-    while (!done) {
-      val staleOrDone = underPointerLocks(tables) {
-        tables.foreach(applyPendingIntentsFor) // crashed-txn intents first
-        val stale = tables.filter(t => latestVersion(t) != cands(t)._2)
-        if (stale.nonEmpty) Left(stale)
+    def versions = cands.map { case (t, (v, _)) => t -> v }
+    while (true) {
+      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
+      val stale = underPointerLocks(lockTables) {
+        lockTables.foreach(applyPendingIntentsFor) // crashed-txn intents first
+        if (readSet.exists { case (t, v) => latestVersion(t) != v }) None
         else {
-          val intent = writeTxnIntent(cands.map { case (t, (v, _)) => t -> v })
-          SnapshotStore.testTxnIntentHook() // spec seam: crash after intent
-          tables.foreach { t =>
-            val v = cands(t)._1
-            stampCommitted(t, v)
-            forwardPointer(t, v)
-          }
-          Files.deleteIfExists(intent)
-          Right(cands.map { case (t, (v, _)) => t -> v })
+          val s = writeTables.filter(t => latestVersion(t) != cands(t)._2)
+          if (s.isEmpty) publishTxn(versions)
+          Some(s)
         }
       }
-      staleOrDone match {
-        case Right(r) => result = r; done = true
-        case Left(stale) => stale.foreach { t =>
-          // A sibling committed to this table: relink our candidate onto
-          // its head (schema re-merged, retypes re-checked) and retry the
-          // multi-CAS — every round some writer commits, so no livelock.
-          val head = latestVersion(t).getOrElse(throw new IllegalStateException(
-            s"pointer of $t vanished during appendAll"))
-          val relinked = relink(t, cands(t)._1, head, rows(t).schema)
-          cands += t -> ((relinked, Some(head)))
-        }
+      stale match {
+        case None => discardCandidates(versions); return None
+        case Some(Nil) => return Some(versions)
+        case Some(s) =>
+          try s.foreach { t =>
+            val head = latestVersion(t).getOrElse(throw new IllegalStateException(
+              s"pointer of $t vanished during appendAll"))
+            cands += t -> ((relink(t, cands(t)._1, head, rows(t).schema), Some(head)))
+          } catch { case e: Throwable =>
+            discardCandidates(versions, Some(e))
+            throw e
+          }
       }
     }
-    result
+    throw new IllegalStateException("unreachable")
   }
+
+  /** The ONE multi-table publish step. The caller holds every table's
+    * publish exclusion ([[underPointerLocks]]) and has validated every
+    * base. The `_txn/` intent lands first — THE commit point: a crash
+    * after it rolls the whole transaction forward
+    * ([[recoverPendingTxns]]) — then [[SnapshotStore.testTxnIntentHook]]
+    * fires, each table's candidate is stamped committed and its pointer
+    * moved forward in table-name order, and the intent is removed. */
+  private def publishTxn(versions: Map[String, Long]): Unit = {
+    val intent = writeTxnIntent(versions)
+    SnapshotStore.testTxnIntentHook() // spec seam: crash after intent
+    versions.toSeq.sortBy(_._1).foreach { case (t, v) =>
+      stampCommitted(t, v)
+      forwardPointer(t, v)
+    }
+    Files.deleteIfExists(intent)
+  }
+
+  /** Discard every still-present candidate of an aborted transaction.
+    * With a `cause` (the refusal the caller rethrows), a failing discard
+    * is suppressed into it instead of masking it. */
+  private def discardCandidates(cands: Iterable[(String, Long)],
+      cause: Option[Throwable] = None): Unit =
+    cands.foreach { case (t, c) =>
+      if (Files.exists(versionDir(t, c)))
+        try discardCandidate(t, c)
+        catch { case e: Throwable if cause.isDefined => cause.get.addSuppressed(e) }
+    }
 
   /** Step 1 of [[appendAll]], exposed so specs can crash the protocol
     * between candidate write and intent: every table's delta written as an
@@ -4281,33 +4258,16 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * (one directory stat — the cost every read resolution pays). */
   def recoverPendingTxns(): Unit = {
     if (!Files.exists(txnDir)) return
+    // rootLock is JVM-only mutual exclusion: a live writer or recovery in
+    // ANOTHER process can delete an intent under us — pendingIntents reads
+    // it as empty. This path is hot (snapshotAll runs it per cut,
+    // appendAllBatch per micro-batch), so that race is routine.
     SnapshotStore.rootLock(root) {
-      val s = Files.list(txnDir)
-      val intents =
-        try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally s.close()
-      intents.foreach { f =>
-        // rootLock is JVM-only mutual exclusion: a live writer or sibling
-        // recovery in ANOTHER process can delete this intent between the
-        // listing and the read — by then it is fully applied, so a
-        // vanished (or torn) intent reads as Nil and is skipped, exactly
-        // as applyPendingIntentsFor guards the same race. This path is
-        // hot (snapshotAll runs it per cut, appendAllBatch per
-        // micro-batch), so the race is routine, not exotic.
-        val versions =
-          try org.json4s.jackson.JsonMethods.parse(Files.readString(f)) match {
-            case org.json4s.JObject(fields) => fields.collect {
-              case (t, org.json4s.JLong(v)) => t -> v
-              case (t, org.json4s.JInt(v))  => t -> v.toLong
-            }
-            case _ => Nil
-          } catch { case scala.util.control.NonFatal(_) => Nil }
+      pendingIntents().foreach { case (f, versions) =>
+        // the marker test before the lock: an entry whose table holds no
+        // such version must not create the table's lock file
         versions.sortBy(_._1).foreach { case (t, v) =>
-          if (hasSuccessMarker(t, v)) underPointerLock(t) {
-            stampCommitted(t, v)
-            forwardPointer(t, v)
-          }
+          if (hasSuccessMarker(t, v)) underPointerLock(t)(rollForward(t, v))
         }
         Files.deleteIfExists(f)
       }

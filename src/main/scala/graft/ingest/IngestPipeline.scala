@@ -201,13 +201,8 @@ object IngestPipeline {
   }
 
   /** The four ingest tables at ONE transactionally consistent cut
-    * ([[graft.core.SnapshotStore.snapshotAll]]); tables that do not exist
-    * yet read as their empty birth schema. The absent set is re-checked
-    * AFTER the cut and the cut retried if it grew: a transaction can
-    * CREATE an absent table and append to present ones atomically, and
-    * reading the post-transaction cut of the present tables with the
-    * new table as empty would be exactly the torn view the cut exists
-    * to prevent. */
+    * ([[graft.core.SnapshotStore.snapshotPresent]]); tables that do not
+    * exist yet read as their empty birth schema. */
   private def storeState(spark: SparkSession, store: graft.core.SnapshotStore,
       prefix: String): Map[String, DataFrame] =
     storeStateWithCut(spark, store, prefix)._1
@@ -219,22 +214,32 @@ object IngestPipeline {
       : (Map[String, DataFrame], Map[String, Option[Long]]) = {
     val empties = emptyState(spark)
     val names = empties.keys.map(t => prefix + t).toSeq
-    while (true) {
-      val present = names.filter(t => store.latestVersion(t).isDefined)
-      val cut =
-        if (present.isEmpty) Map.empty[String, Long]
-        else store.snapshotAll(present)
-      val nowPresent = names.filter(t => store.latestVersion(t).isDefined)
-      if (nowPresent.toSet == present.toSet) {
-        val state = empties.map { case (role, empty) =>
-          role -> cut.get(prefix + role)
-            .map(v => store.readAt(prefix + role, v)).getOrElse(empty)
-        }
-        return (state, names.map(t => t -> cut.get(t)).toMap)
-      }
+    val cut = store.snapshotPresent(names)
+    val state = empties.map { case (role, empty) =>
+      role -> cut.get(prefix + role)
+        .map(v => store.readAt(prefix + role, v)).getOrElse(empty)
     }
-    throw new IllegalStateException("unreachable")
+    (state, names.map(t => t -> cut.get(t)).toMap)
   }
+
+  /** The batch's four deltas keyed by store table — the one delta map
+    * every store entry point commits. */
+  private def deltaTables(d: IngestDeltas, prefix: String)
+      : Map[String, DataFrame] = Map(
+    prefix + "concepts" -> d.newConcepts,
+    prefix + "instances" -> d.newInstances,
+    prefix + "edges" -> d.newEdges,
+    prefix + "epoch_log" -> d.epochRecord)
+
+  /** [[deltaTables]] as a batch commit takes it: each delta checkpointed
+    * — the multi-table append evaluates it twice (data + change set), and
+    * the extraction plan must not recompute against moved state between
+    * the two — and the empty ones dropped. */
+  private def committableDeltas(d: IngestDeltas, prefix: String)
+      : Map[String, DataFrame] =
+    deltaTables(d, prefix)
+      .map { case (t, df) => t -> df.localCheckpoint(true) }
+      .filter { case (_, df) => !df.isEmpty }
 
   /** STORE-BACKED ATOMIC INGEST — the reference's ingestion transaction
     * end to end (concepts + instances + sources + epoch written in ONE
@@ -264,16 +269,7 @@ object IngestPipeline {
     val st = storeState(spark, store, tablePrefix)
     val d = ingestDeltas(spark, docs, st("concepts"), st("instances"),
       st("edges"), batchEpoch)
-    val deltas = Map(
-      tablePrefix + "concepts" -> d.newConcepts,
-      tablePrefix + "instances" -> d.newInstances,
-      tablePrefix + "edges" -> d.newEdges,
-      tablePrefix + "epoch_log" -> d.epochRecord)
-      // localCheckpoint: appendAll evaluates each delta twice (data +
-      // change set) — the extraction plan must not recompute against
-      // moved state between the two
-      .map { case (t, df) => t -> df.localCheckpoint(true) }
-      .filter { case (_, df) => !df.isEmpty }
+    val deltas = committableDeltas(d, tablePrefix)
     if (deltas.isEmpty) Map.empty else store.appendAll(deltas)
   }
 
@@ -297,13 +293,7 @@ object IngestPipeline {
       val (st, readSet0) = storeStateWithCut(spark, store, tablePrefix)
       val d = ingestDeltas(spark, docs, st("concepts"), st("instances"),
         st("edges"), batchEpoch)
-      val deltas = Map(
-        tablePrefix + "concepts" -> d.newConcepts,
-        tablePrefix + "instances" -> d.newInstances,
-        tablePrefix + "edges" -> d.newEdges,
-        tablePrefix + "epoch_log" -> d.epochRecord)
-        .map { case (t, df) => t -> df.localCheckpoint(true) }
-        .filter { case (_, df) => !df.isEmpty }
+      val deltas = committableDeltas(d, tablePrefix)
       if (deltas.isEmpty) return Map.empty
       store.appendAllSerialized(deltas,
         readSet0 - (tablePrefix + "epoch_log")) match {
@@ -335,11 +325,8 @@ object IngestPipeline {
         val d = ingestDeltas(spark, batch.toDF().localCheckpoint(true),
           st("concepts"), st("instances"), st("edges"),
           batchEpoch = batchId + 1)
-        graft.streaming.SnapshotSink.appendAllBatch(store, Map(
-          tablePrefix + "concepts" -> d.newConcepts,
-          tablePrefix + "instances" -> d.newInstances,
-          tablePrefix + "edges" -> d.newEdges,
-          tablePrefix + "epoch_log" -> d.epochRecord), batchId)
+        graft.streaming.SnapshotSink.appendAllBatch(store,
+          deltaTables(d, tablePrefix), batchId)
         ()
       }
       .start()

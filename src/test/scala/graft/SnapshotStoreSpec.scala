@@ -1161,7 +1161,7 @@ class SnapshotStoreSpec extends SparkSpec {
       "instances" -> Seq((70L, 7L)).toDF("iid", "concept_id"))
     val prep = st.appendAllPrepare(txnRows)
     sibling.append("concepts", Seq((6L, "c6")).toDF("id", "label"))
-    val r2 = st.appendAllCommit(prep, txnRows)
+    val r2 = st.appendAllCommit(prep, txnRows).get
     assert(st.read("concepts").select("id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L, 4L, 6L, 7L), "sibling's row AND the txn's row both present")
     assert(st.read("instances").select("iid").as[Long].collect().sorted.toSeq ==
@@ -1308,6 +1308,129 @@ class SnapshotStoreSpec extends SparkSpec {
     st.recoverPendingTxns() // nothing to roll forward
     assert(st.read("concepts").count() == 1L, "no half-cascade exposed")
     assert(st.read("edges").count() == 1L)
+  }
+
+  /** Intent files left in the store's `_txn/` directory. */
+  private def pendingIntentFiles(root: String): Seq[String] = {
+    val d = java.nio.file.Paths.get(root, "_txn")
+    if (!java.nio.file.Files.isDirectory(d)) Nil
+    else {
+      val s = java.nio.file.Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".json")).toSeq
+      finally s.close()
+    }
+  }
+
+  private def ids(st: SnapshotStore, table: String): Seq[Long] =
+    st.read(table).select("id").as[Long].collect().sorted.toSeq
+
+  test("a relink refusal in a multi-table append discards every candidate: nothing exposed, no orphan") {
+    val st = freshStore()
+    st.append("a", Seq(1L).toDF("id"))
+    st.append("b", Seq(1L).toDF("id"))
+    val rows = Map(
+      "a" -> Seq((2L, "two")).toDF("id", "x"),
+      "b" -> Seq(2L).toDF("id"))
+    val prep = st.appendAllPrepare(rows)
+    // a sibling adds the same column to `a` with another type: a's
+    // candidate can never relink onto that head
+    new SnapshotStore(spark, st.root).append("a", Seq((3L, 3)).toDF("id", "x"))
+    intercept[IllegalArgumentException](st.appendAllCommit(prep, rows))
+    assert(orphanDirs(st.root, "a").isEmpty, s"a: ${orphanDirs(st.root, "a")}")
+    assert(orphanDirs(st.root, "b").isEmpty,
+      s"b's candidate outlived the refusal: ${orphanDirs(st.root, "b")}")
+    assert(ids(st, "a") == Seq(1L, 3L), "only the sibling's append exposed")
+    assert(ids(st, "b") == Seq(1L), "b's half not exposed")
+  }
+
+  test("a crash after the intent rolls every multi-table writer forward: intent gone, no orphan") {
+    // each writer over a(id) = b(id) = {1, 2}, and the ids each table
+    // holds once the transaction is rolled forward
+    val writers: Seq[(String, SnapshotStore => Any, Map[String, Set[Long]])] = Seq(
+      ("appendAll", _.appendAll(Map(
+        "a" -> Seq(3L).toDF("id"), "b" -> Seq(3L).toDF("id"))),
+        Map("a" -> Set(1L, 2L, 3L), "b" -> Set(1L, 2L, 3L))),
+      ("appendAllSerialized", st => st.appendAllSerialized(Map(
+        "a" -> Seq(3L).toDF("id"), "b" -> Seq(3L).toDF("id")),
+        Map("a" -> st.latestVersion("a"), "b" -> st.latestVersion("b"))),
+        Map("a" -> Set(1L, 2L, 3L), "b" -> Set(1L, 2L, 3L))),
+      ("deleteAll", _.deleteAll(Map(
+        "a" -> (col("id") === 1L), "b" -> (col("id") === 1L))),
+        Map("a" -> Set(2L), "b" -> Set(2L))),
+      ("mutateAll", _.mutateAll(
+        deletes = Map("a" -> (col("id") === 1L)),
+        updates = Map("b" -> ((col("id") === 1L, Map("id" -> lit(9L)))))),
+        Map("a" -> Set(2L), "b" -> Set(2L, 9L))))
+    writers.foreach { case (name, write, expected) =>
+      val st = freshStore()
+      st.commit("a", Seq(1L, 2L).toDF("id"))
+      st.commit("b", Seq(1L, 2L).toDF("id"))
+      val before = Seq("a", "b").map(t => t -> st.latestVersion(t)).toMap
+      SnapshotStore.testTxnIntentHook =
+        () => throw new RuntimeException("simulated crash after intent")
+      val e = try intercept[RuntimeException](write(st))
+        finally SnapshotStore.testTxnIntentHook = () => ()
+      assert(e.getMessage.contains("simulated crash"), name)
+      assert(Seq("a", "b").forall(t => st.latestVersion(t) == before(t)),
+        s"$name: a pointer moved before the crash")
+      assert(pendingIntentFiles(st.root).size == 1, s"$name: the intent landed")
+      val fresh = new SnapshotStore(spark, st.root)
+      expected.foreach { case (t, want) =>
+        assert(ids(fresh, t).toSet == want, s"$name: $t rolled forward")
+      }
+      assert(pendingIntentFiles(st.root).isEmpty, s"$name: intent removed")
+      Seq("a", "b").foreach(t => assert(orphanDirs(st.root, t).isEmpty,
+        s"$name: orphaned candidate(s) of $t ${orphanDirs(st.root, t)}"))
+    }
+  }
+
+  test("appendAllSerialized: a guarded table moving before the commit aborts whole: None, nothing exposed, no orphan") {
+    val st = freshStore()
+    st.append("concepts", Seq(1L).toDF("id"))
+    st.append("epoch_log", Seq(1L).toDF("id"))
+    val readSet = Map("concepts" -> st.latestVersion("concepts"))
+    val epochBefore = st.latestVersion("epoch_log")
+    val sibling = new SnapshotStore(spark, st.root)
+    var fired = false
+    SnapshotStore.testRaceHook = () => if (!fired) {
+      fired = true // after prepare: the guarded table moves off the cut
+      sibling.append("concepts", Seq(2L).toDF("id"))
+    }
+    val r = try st.appendAllSerialized(Map(
+        "concepts" -> Seq(3L).toDF("id"), "epoch_log" -> Seq(3L).toDF("id")),
+        readSet)
+      finally SnapshotStore.testRaceHook = () => ()
+    assert(fired, "the race hook must fire between prepare and commit")
+    assert(r.isEmpty, "a serialization conflict commits nothing")
+    assert(ids(st, "concepts") == Seq(1L, 2L), "only the sibling's row")
+    assert(st.latestVersion("epoch_log") == epochBefore, "epoch_log untouched")
+    Seq("concepts", "epoch_log").foreach(t =>
+      assert(orphanDirs(st.root, t).isEmpty, s"$t: ${orphanDirs(st.root, t)}"))
+  }
+
+  test("appendAllSerialized: a stale un-guarded table relinks above the sibling and keeps its rows") {
+    val st = freshStore()
+    st.append("concepts", Seq(1L).toDF("id"))
+    st.append("epoch_log", Seq(1L).toDF("id"))
+    val readSet = Map("concepts" -> st.latestVersion("concepts"))
+    val sibling = new SnapshotStore(spark, st.root)
+    var siblingV = Option.empty[Long]
+    SnapshotStore.testRaceHook = () => if (siblingV.isEmpty)
+      siblingV = Some(sibling.append("epoch_log", Seq(2L).toDF("id")))
+    val r = try st.appendAllSerialized(Map(
+        "concepts" -> Seq(3L).toDF("id"), "epoch_log" -> Seq(3L).toDF("id")),
+        readSet)
+      finally SnapshotStore.testRaceHook = () => ()
+    assert(siblingV.isDefined, "the race hook must fire between prepare and commit")
+    val won = r.getOrElse(fail("an un-guarded sibling append must not abort"))
+    assert(won("epoch_log") > siblingV.get &&
+      st.baseOf("epoch_log", won("epoch_log")).contains(siblingV.get),
+      "epoch_log's candidate relinked onto the sibling's head")
+    assert(ids(st, "epoch_log") == Seq(1L, 2L, 3L), "sibling's row kept")
+    assert(ids(st, "concepts") == Seq(1L, 3L))
+    Seq("concepts", "epoch_log").foreach(t =>
+      assert(orphanDirs(st.root, t).isEmpty, s"$t: ${orphanDirs(st.root, t)}"))
   }
 
   test("a legacy append relinking over a winning adoptFieldIds restamps its files") {
