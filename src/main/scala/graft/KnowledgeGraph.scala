@@ -36,11 +36,26 @@ final case class KnowledgeGraph(
     "ENABLES" -> "PREVENTS")
 
   /** §3.1 V1: semantic concept search — scored scan, threshold, top-k
-    * (queries.py:529-620). */
+    * (queries.py:529-620): every `concepts` column plus `sim`, best first,
+    * ties on `concept_id` ascending. The scan runs on the driver over the
+    * resident concept table ([[GraphOps.residentConcepts]]: loaded once
+    * per `concepts` plan in one Spark job while it fits the table's byte
+    * budget), and the ≤`limit` hits return as a local relation, so a warm
+    * search runs no Spark job at all. A table over the budget runs the
+    * same scan as a Spark plan ([[Ann.bruteForceTopK]]); both give the
+    * same schema, rows and `sim` bits. */
   def search(queryVec: Seq[Double], limit: Int = 10,
       minSimilarity: Double = 0.0): DataFrame =
-    Ann.bruteForceTopK(concepts.where(col("embedding").isNotNull),
-      "concept_id", "embedding", queryVec, limit, minSimilarity)
+    resident(limit) match {
+      case Some(t) => t.search(spark, queryVec, limit, minSimilarity)
+      case None => Ann.bruteForceTopK(concepts.where(col("embedding").isNotNull),
+        "concept_id", "embedding", queryVec, limit, minSimilarity)
+    }
+
+  /** The resident concept table for a top-`limit` answer; a negative
+    * limit keeps the Spark plan, which refuses it. */
+  private def resident(limit: Int): Option[graft.graph.ConceptTable] =
+    if (limit < 0) None else GraphOps.residentConcepts(concepts)
 
   /** V6 semantic label resolution (reference
     * cli/src/mcp/graph-operations.ts:263-292): graph edits reference
@@ -50,7 +65,8 @@ final case class KnowledgeGraph(
     * threshold (0.75), [[KnowledgeGraph.DidYouMean]] when the best hit is
     * a near-miss in [0.60, 0.75) (the "did you mean?" candidates, best
     * first), [[KnowledgeGraph.NoMatch]] when nothing reaches the floor.
-    * One bounded scan; the ≤3-row result is the only driver transfer. */
+    * One bounded scan ([[search]]: on the driver, with no Spark job, while
+    * the concept table is resident). */
   def resolveLabel(queryVec: Seq[Double], acceptThreshold: Double = 0.75,
       suggestionFloor: Double = 0.60): KnowledgeGraph.LabelResolution = {
     val hits = search(queryVec, limit = 3, minSimilarity = suggestionFloor)
@@ -80,47 +96,74 @@ final case class KnowledgeGraph(
     * no self-joins, no anti-joins, no re-reading concepts per term. A
     * NULL cosine (zero-norm embedding) fails every include (never
     * matches) and never triggers an exclude, matching the per-term
-    * search-then-set-op semantics it replaces. */
+    * search-then-set-op semantics it replaces.
+    *
+    * Like [[search]], the scan runs on the driver over the resident
+    * concept table and the hits return as a local relation; the final
+    * `round(sim, 6)` stays a Spark projection over it, which Spark
+    * evaluates while optimizing the plan — no job. Over the table's byte
+    * budget the whole algebra is the Spark plan below, with the same
+    * result. */
   def fuseQuery(include: Seq[Seq[Double]], exclude: Seq[Seq[Double]] = Nil,
       threshold: Double = 0.5, limit: Int = 10): DataFrame = {
     require(include.nonEmpty, "at least one include query vector")
-    def sims(vs: Seq[Seq[Double]]): Seq[Column] =
-      vs.map(v => VectorOps.cosine(col("embedding"), VectorOps.vecLit(v)))
-    val incSims = sims(include)
-    val includeOk = incSims.map(_ >= threshold).reduce(_ && _)
-    val excludeOk = sims(exclude)
-      .map(s => coalesce(s < threshold, lit(true)))
-      .foldLeft(lit(true))(_ && _)
-    concepts.where(col("embedding").isNotNull)
-      .select(col("concept_id"), col("label"),
-        incSims.reduce(least(_, _)).as("sim"),
-        includeOk.as("__inc"), excludeOk.as("__exc"))
-      .where(col("__inc") && col("__exc"))
-      .orderBy(col("sim").desc, col("concept_id").asc)
-      .limit(limit)
-      .select(col("concept_id"), col("label"), round(col("sim"), 6).as("similarity"))
+    val hits = resident(limit) match {
+      case Some(t) => t.fuse(spark, include, exclude, threshold, limit)
+      case None =>
+        def sims(vs: Seq[Seq[Double]]): Seq[Column] =
+          vs.map(v => VectorOps.cosine(col("embedding"), VectorOps.vecLit(v)))
+        val incSims = sims(include)
+        val includeOk = incSims.map(_ >= threshold).reduce(_ && _)
+        val excludeOk = sims(exclude)
+          .map(s => coalesce(s < threshold, lit(true)))
+          .foldLeft(lit(true))(_ && _)
+        concepts.where(col("embedding").isNotNull)
+          .select(col("concept_id"), col("label"),
+            incSims.reduce(least(_, _)).as("sim"),
+            includeOk.as("__inc"), excludeOk.as("__exc"))
+          .where(col("__inc") && col("__exc"))
+          .orderBy(col("sim").desc, col("concept_id").asc)
+          .limit(limit)
+          .select(col("concept_id"), col("label"), col("sim"))
+    }
+    hits.select(col("concept_id"), col("label"), round(col("sim"), 6).as("similarity"))
   }
 
   /** §3.2 T1: BFS neighborhood with rel-type/confidence filters and
-    * hydrated labels (J3) (queries.py:1306-1416). Routed through
-    * [[GraphOps.bfsAuto]] — the reference serves /query/related from the
-    * accelerator with distributed fallback (graph_facade.py:186-310), and
-    * the two engines are differentially proven identical
-    * (GraphAccelSpec), so consecutive facade traversals over one snapshot
-    * reuse the loaded graph. */
+    * hydrated labels (J3) (queries.py:1306-1416): `(concept_id, label,
+    * distance)` for every concept within `maxDepth`, the start excluded.
+    * The reference serves /query/related from its accelerator with a
+    * distributed fallback (graph_facade.py:186-310); here the traversal
+    * runs on the resident semantic graph, which keeps each edge's rel
+    * type and confidence, so every filter subset shares one loaded graph,
+    * and the labels come from the resident concept table — a warm call
+    * runs no Spark job. Hydration keeps the inner join's semantics: a
+    * reached node with no concept row drops out, a duplicated concept row
+    * repeats. When either structure is over its size bound,
+    * [[GraphOps.bfsAuto]] and a join against `concepts` answer instead;
+    * the engines are differentially proven identical (GraphAccelSpec,
+    * KnowledgeGraphSpec). */
   def related(conceptId: String, maxDepth: Int = 2,
       direction: GraphOps.Direction = GraphOps.Both,
       minConfidence: Option[Double] = None,
       relTypes: Option[Seq[String]] = None): DataFrame =
-    GraphOps.bfsAuto(semanticEdges, Seq(conceptId), maxDepth, direction,
-        minConfidence, relTypes)
-      .where(col("distance") > 0)
-      .join(concepts.select(col("concept_id").as("node"), col("label")), Seq("node"))
-      .select(col("node").as("concept_id"), col("label"), col("distance"))
+    GraphOps.ensureLoaded(semanticEdges)
+      .flatMap(g => GraphOps.residentConcepts(concepts).map(g -> _)) match {
+      case Some((g, t)) => t.hydrate(spark,
+        g.bfs(Seq(conceptId), maxDepth, direction, Set.empty, minConfidence, relTypes))
+      case None =>
+        GraphOps.bfsAuto(semanticEdges, Seq(conceptId), maxDepth, direction,
+            minConfidence, relTypes)
+          .where(col("distance") > 0)
+          .join(concepts.select(col("concept_id").as("node"), col("label")), Seq("node"))
+          .select(col("node").as("concept_id"), col("label"), col("distance"))
+    }
 
   /** Only Concept↔Concept semantic edges load into traversals — the
-    * accelerator's pruned-load rule (graph_facade.py:1033-1069). */
-  def semanticEdges: DataFrame =
+    * accelerator's pruned-load rule (graph_facade.py:1033-1069). Planned
+    * once per instance (it is pinned to one snapshot), so every traversal
+    * and path call hands the accelerator cache the same plan. */
+  lazy val semanticEdges: DataFrame =
     edges.join(broadcast(vocab.select(col("relationship_type").as("rel_type"))),
       Seq("rel_type"), "left_semi")
 
@@ -164,24 +207,31 @@ final case class KnowledgeGraph(
   }
 
   /** F4: epistemic-status → rel-type resolution — translate include/
-    * exclude status lists into an allowed rel-type list applied to the
-    * traversal as a broadcast semi-join filter (queries.py:259-314).
-    * Requires vocab to carry `epistemic_status`. */
+    * exclude status lists into an allowed rel-type list and run
+    * [[related]] with it, undirected (queries.py:259-314). The status
+    * filter runs over [[epistemicVocab]], so a warm call runs no Spark
+    * job. Requires vocab to carry `epistemic_status`. */
   def relatedByEpistemicStatus(conceptId: String, maxDepth: Int,
       includeStatuses: Seq[String] = Seq.empty,
       excludeStatuses: Seq[String] = Seq.empty): DataFrame = {
-    val allowed = vocab
+    val allowed = epistemicVocab
       .where(if (includeStatuses.nonEmpty)
         col("epistemic_status").isin(includeStatuses: _*) else lit(true))
       .where(if (excludeStatuses.nonEmpty)
         !col("epistemic_status").isin(excludeStatuses: _*) else lit(true))
       .select("relationship_type")
       .collect().map(_.getString(0)).toSeq
-    GraphOps.bfsAuto(semanticEdges, Seq(conceptId), maxDepth, GraphOps.Both,
-        relTypes = Some(allowed))
-      .where(col("distance") > 0)
-      .join(concepts.select(col("concept_id").as("node"), col("label")), Seq("node"))
-      .select(col("node").as("concept_id"), col("label"), col("distance"))
+    related(conceptId, maxDepth, GraphOps.Both, relTypes = Some(allowed))
+  }
+
+  /** vocab's `(relationship_type, epistemic_status)` rows as a local
+    * relation, collected once per instance (one small job on first use):
+    * Spark evaluates a filter over a local relation while optimizing, so
+    * the status lists resolve with Spark's own `isin` semantics and no
+    * job. */
+  private lazy val epistemicVocab: DataFrame = {
+    val v = vocab.select("relationship_type", "epistemic_status")
+    spark.createDataFrame(java.util.Arrays.asList(v.collect(): _*), v.schema)
   }
 
   /** GET /query/concept/{id} (queries.py:600-700): one hydrated concept

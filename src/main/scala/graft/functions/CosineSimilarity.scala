@@ -52,41 +52,29 @@ case class CosineSimilarity(left: Expression, right: Expression)
     else Option(right.eval(org.apache.spark.sql.catalyst.InternalRow.empty))
       .flatMap { r =>
         val arr = r.asInstanceOf[ArrayData].toDoubleArray()
-        var ny = 0.0; var i = 0
-        while (i < arr.length) { ny += arr(i) * arr(i); i += 1 }
-        // NaN/Inf norms also fall back: they'd render as invalid Java
-        // literals in the generated code (and the result is degenerate).
-        if (ny == 0.0 || java.lang.Double.isNaN(ny) || java.lang.Double.isInfinite(ny)) None
-        else Some((arr, math.sqrt(ny)))
+        val qn = CosineSimilarity.norm(arr)
+        // NaN/Inf norms also fall back (the result is degenerate either way)
+        if (qn == 0.0 || java.lang.Double.isNaN(qn) || java.lang.Double.isInfinite(qn)) None
+        else Some((arr, qn))
       }
 
-  override def nullSafeEval(a: Any, b: Any): Any = foldedRight match {
-    case Some((q, qn)) =>
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != q.length) return null
-      var dot = 0.0; var nx = 0.0; var i = 0
-      while (i < n) {
-        val xv = x.getDouble(i)
-        dot += xv * q(i); nx += xv * xv
-        i += 1
-      }
-      if (nx == 0.0) null else dot / (math.sqrt(nx) * qn)
-    case None =>
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) return null
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < n) {
-        val xv = x.getDouble(i); val yv = y.getDouble(i)
-        dot += xv * yv; nx += xv * xv; ny += yv * yv
-        i += 1
-      }
-      if (nx == 0.0 || ny == 0.0) null
-      else dot / (math.sqrt(nx) * math.sqrt(ny))
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData].toDoubleArray()
+    foldedRight match {
+      case Some((q, qn)) => CosineSimilarity.score(x, 0, x.length, q, qn)
+      case None =>
+        val y = b.asInstanceOf[ArrayData].toDoubleArray()
+        val ny = CosineSimilarity.norm(y)
+        if (ny == 0.0) null else CosineSimilarity.score(x, 0, x.length, y, ny)
+    }
   }
 
+  /** Both generated kernels spell out [[CosineSimilarity.score]]'s loop
+    * (same accumulation order, so the same bits). The folded query and
+    * its norm enter as reference objects, never as source text: the
+    * codegen cache is keyed by the generated source, so a compiled-in
+    * value would compile a fresh class for every distinct query vector
+    * and churn the cache every other query shares. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val i = ctx.freshName("i")
     val n = ctx.freshName("n")
@@ -96,6 +84,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     foldedRight match {
       case Some((q, qn)) =>
         val qref = ctx.addReferenceObj("cosineQuery", q, "double[]")
+        val qnref = ctx.addReferenceObj("cosineQueryNorm", Array(qn), "double[]")
         nullSafeCodeGen(ctx, ev, (a, _) => {
           s"""
              |final int $n = $a.numElements();
@@ -110,7 +99,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
              |  if ($nx == 0.0) {
              |    ${ev.isNull} = true;
              |  } else {
-             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * ${qn}D);
+             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * $qnref[0]);
              |  }
              |}
            """.stripMargin
@@ -147,6 +136,34 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+
+  /** The L2 norm of `q`: the squares summed left to right, then one
+    * sqrt — the same bits as the generic kernel's per-row `ny`. */
+  def norm(q: Array[Double]): Double = {
+    var ny = 0.0; var i = 0
+    while (i < q.length) { ny += q(i) * q(i); i += 1 }
+    math.sqrt(ny)
+  }
+
+  /** The one cosine scoring loop: `x[off, off + n)` against the query `q`
+    * of norm `qn` (see [[norm]]). NULL when the lengths differ or `x` has
+    * zero norm. Products accumulate left to right, as in the generated
+    * kernels, so every engine that scores through here — the expression's
+    * interpreted path and the driver-resident concept table — returns the
+    * codegen path's bits. A null element of `x` reads as 0.0, as
+    * `ArrayData.getDouble` reads it. */
+  def score(x: Array[Double], off: Int, n: Int, q: Array[Double],
+      qn: Double): java.lang.Double = {
+    if (n != q.length) return null
+    var dot = 0.0; var nx = 0.0; var i = 0
+    while (i < n) {
+      val xv = x(off + i)
+      dot += xv * q(i); nx += xv * xv
+      i += 1
+    }
+    if (nx == 0.0) null else dot / (math.sqrt(nx) * qn)
+  }
+
   /** Column-API entry point: `cosine(a, b)`. */
   def apply(a: Column, b: Column): Column =
     Bridge.column(CosineSimilarity(

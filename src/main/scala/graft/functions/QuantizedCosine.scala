@@ -160,7 +160,10 @@ case class QuantizedCosine(left: Expression, right: Expression)
          |                                                : java.lang.Math.ceil($d - 0.5D));""".stripMargin
     foldedRight match {
       case Some((q, qn)) =>
+        // the norm rides a reference like the query: a compiled-in value
+        // would make every query's stage a new codegen-cache entry
         val qref = ctx.addReferenceObj("quantQuery", q, "double[]")
+        val qnref = ctx.addReferenceObj("quantQueryNorm", Array(qn), "double[]")
         nullSafeCodeGen(ctx, ev, (a, _) => {
           s"""
              |${scalePass(a)}
@@ -175,7 +178,7 @@ case class QuantizedCosine(left: Expression, right: Expression)
              |  if ($nx == 0.0) {
              |    ${ev.isNull} = true;
              |  } else {
-             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * ${qn}D);
+             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * $qnref[0]);
              |  }
              |}
            """.stripMargin

@@ -37,13 +37,20 @@ import scala.collection.mutable
   *
   * Engine choice lives here and nowhere else: every `*Auto` entry point
   * (and every caller routed through one — the KnowledgeGraph facade's
-  * path calls, the graph queries, the `graft_path` TVFs) asks the
-  * driver-side accelerator ([[InMemoryGraph]], [[WeightedGraph]]) first,
-  * the way the reference answers /query/connect and /query/paths
-  * (graph_facade.py:316-411). The graph loads once per edge-view plan into
-  * a plan-keyed cache; only a view over the edge threshold falls back to
-  * the distributed iterative-join engines below, which also serve as the
-  * differential specs' reference.
+  * traversals and path calls, the graph queries, the `graft_path` TVFs)
+  * asks the driver-side accelerator ([[InMemoryGraph]], [[WeightedGraph]])
+  * first, the way the reference answers /query/related, /query/connect and
+  * /query/paths (graph_facade.py:186-411). The graph loads once per
+  * edge-view plan into a plan-keyed cache, with its rel types and
+  * confidences, so every filter subset traverses the one resident graph;
+  * only a view over the edge threshold falls back to the distributed
+  * iterative-join engines below, which filter in [[oriented]] and also
+  * serve as the differential specs' reference. The facade's concept table
+  * goes through the same dispatch ([[residentConcepts]]): it loads once
+  * per `concepts` plan, in one job, while its resident bytes fit
+  * [[ConceptTable.BudgetBytes]], and then search, fuse and label
+  * hydration run on the driver with no Spark job; a larger table keeps
+  * the facade's Spark plans.
   */
 object GraphOps {
 
@@ -71,8 +78,8 @@ object GraphOps {
     val hasRel = edges.columns.contains("rel_type")
     val relCol = if (hasRel) col("rel_type") else lit(null).cast("string")
     // No confidence column ≡ all-NULL confidence ≡ every edge passes (F5:
-    // NULL passes) — mirrors filteredView's accel-path behavior so both
-    // dispatch targets of bfsAuto stay result-identical by contract.
+    // NULL passes) — mirrors the resident graph's traversal filters so
+    // both dispatch targets of bfsAuto stay result-identical by contract.
     val hasConf = edges.columns.contains("confidence")
     val filtered = edges
       .where(if (hasConf) confidencePredicate(minConfidence) else lit(true))
@@ -307,10 +314,10 @@ object GraphOps {
       accelThreshold: Long = DefaultAccelThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val filtered = filteredView(edges, minConfidence, relTypes)
-    probeAndLoad(filtered, accelThreshold, graphs) match {
+    probeAndLoad(edges, accelThreshold, graphs) match {
       case Some(g) => accelResultDF(spark,
-        g.bfs(startNodes, maxDepth, direction), "node", "distance", "parent")
+        g.bfs(startNodes, maxDepth, direction, Set.empty, minConfidence, relTypes),
+        "node", "distance", "parent")
       case None => bfs(edges, startNodes, maxDepth, direction, minConfidence, relTypes)
     }
   }
@@ -324,37 +331,39 @@ object GraphOps {
       direction: Direction = Both,
       minConfidence: Option[Double] = None,
       accelThreshold: Long = DefaultAccelThreshold): Option[(Int, Seq[String])] = {
-    val filtered = filteredView(edges, minConfidence, None)
-    probeAndLoad(filtered, accelThreshold, graphs) match {
-      case Some(g) => g.shortestPathExcluding(from, to, maxHops, direction, Set.empty)
+    probeAndLoad(edges, accelThreshold, graphs) match {
+      case Some(g) =>
+        g.shortestPathExcluding(from, to, maxHops, direction, Set.empty, minConfidence)
       case None    => shortestPath(edges, from, to, maxHops, direction, minConfidence)
     }
   }
 
-  /** Loaded-graph cache keyed by the CANONICALIZED logical plan of the
-    * edge view — the analog of graph_accel's once-per-backend load with a
-    * generation check (`graph_accel_status`/`load`/`invalidate`,
-    * api/app/lib/graph_facade.py:50-58,1087-1153): consecutive traversals
-    * over the same edge view reuse the loaded graph instead of
-    * re-collecting it. Canonicalized plans compare structurally
-    * (normalized expr ids; LocalRelation keys include the data itself), so
-    * a hit requires the identical source plan — and the immutable-version
-    * storage discipline (SnapshotStore) means changed data always has a
-    * changed path, hence a changed plan. In-place external rewrites are the
-    * one case that needs an explicit [[invalidateAccel]], exactly like the
-    * reference's `graph_accel_invalidate` after mutations. An LRU of up to
-    * `maxLoaded` graphs plus `maxOver` memoized over-threshold verdicts;
-    * one instance per accelerator graph kind, each building its graphs
-    * from the shared [[InternedEdges]] front end. */
+  /** Resident-structure cache keyed by the CANONICALIZED logical plan of
+    * its input view — the analog of graph_accel's once-per-backend load
+    * with a generation check (`graph_accel_status`/`load`/`invalidate`,
+    * api/app/lib/graph_facade.py:50-58,1087-1153): consecutive calls over
+    * the same view reuse the loaded structure instead of re-collecting
+    * it. Canonicalized plans compare structurally (normalized expr ids;
+    * LocalRelation keys include the data itself), so a hit requires the
+    * identical source plan — and the immutable-version storage discipline
+    * (SnapshotStore) means changed data always has a changed path, hence
+    * a changed plan. In-place external rewrites are the one case that
+    * needs an explicit [[invalidateAccel]], exactly like the reference's
+    * `graph_accel_invalidate` after mutations. An LRU of up to
+    * `maxLoaded` structures plus `maxOver` memoized over-threshold
+    * verdicts; one instance per resident kind, each with its own `view`
+    * of the input and its own `load`: Some((size, nodes, structure)) when
+    * the view fits the threshold, None past it. */
   private[graph] final class AccelCache[G](maxLoaded: Int, maxOver: Int,
-      val weighted: Boolean, val build: InternedEdges => G) {
+      val view: DataFrame => DataFrame,
+      val load: (DataFrame, Long) => Option[(Long, Int, G)]) {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    // key -> (edges, nodes, graph)
+    // key -> (size, nodes, structure)
     private val loaded = mutable.LinkedHashMap.empty[LogicalPlan, (Long, Int, G)]
     private val over = mutable.LinkedHashMap.empty[LogicalPlan, Long]
 
-    /** Some(result) on a conclusive cache hit (loaded graph, or known to
-      * exceed `threshold`); None → caller must probe. */
+    /** Some(result) on a conclusive cache hit (loaded structure, or known
+      * to exceed `threshold`); None → caller must probe. */
     def get(key: LogicalPlan, threshold: Long): Option[Option[G]] =
       synchronized {
         loaded.remove(key) match {
@@ -383,22 +392,59 @@ object GraphOps {
     }
   }
 
+  /** An accelerator graph's load: the [[InternedEdges.view]] is
+    * persisted, the probe is a cheap `limit(N+1).count()` (no driver
+    * transfer), and only an under-threshold graph is interned — the cache
+    * makes that load reuse the probed partitions instead of recomputing
+    * the upstream plan. An over-threshold graph never ships rows to the
+    * driver (the probe short-circuits after N+1 and the distributed
+    * engine takes over). */
+  private def graphLoad[G](weighted: Boolean, build: InternedEdges => G)(
+      view: DataFrame, threshold: Long): Option[(Long, Int, G)] = {
+    val cached = view.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = cached.limit(threshold.toInt + 1).count()
+      if (n > threshold) None
+      else {
+        // Large loads intern DISTRIBUTED (dictionary join + compact
+        // array ship); the probe's n decides, so the extra jobs only run
+        // when driver-side interning would dominate.
+        val e = InternedEdges.load(cached, n, weighted)
+        Some((n, e.names.length, build(e)))
+      }
+    } finally { cached.unpersist(); () }
+  }
+
   /** Unweighted graphs, shared by every traversal, PageRank and components
-    * dispatcher. */
-  private[graph] val graphs =
-    new AccelCache[InMemoryGraph](8, 32, weighted = false, InMemoryGraph(_))
+    * dispatcher. One graph per edge view whatever the filters: the view
+    * keeps rel types and confidences, and the traversals filter on them. */
+  private val graphs = new AccelCache[InMemoryGraph](8, 32,
+    InternedEdges.view(_, weighted = false), graphLoad(weighted = false, InMemoryGraph(_)))
 
   /** Weighted graphs, keyed by the (src, dst, w) view — the weight
     * EXPRESSION is part of the key, so differently-weighted calls over one
     * edge set never collide. Smaller bounds: each entry also carries a
     * double per edge. */
-  private val weightedGraphs =
-    new AccelCache[WeightedGraph](4, 16, weighted = true, new WeightedGraph(_))
+  private val weightedGraphs = new AccelCache[WeightedGraph](4, 16,
+    InternedEdges.view(_, weighted = true), graphLoad(weighted = true, new WeightedGraph(_)))
 
-  /** Evict every cached accelerator graph (graph_accel_invalidate analog).
-    * Needed only when edge INPUT FILES are rewritten in place; versioned
-    * snapshot writes change paths and therefore miss the cache naturally. */
-  def invalidateAccel(): Unit = { graphs.clear(); weightedGraphs.clear() }
+  /** Resident concept tables, keyed by the `concepts` plan itself and
+    * sized in bytes against [[conceptBudget]]. */
+  private val conceptTables =
+    new AccelCache[ConceptTable](4, 16, identity, ConceptTable.load)
+
+  /** The byte budget concept tables load against,
+    * [[ConceptTable.BudgetBytes]]. Specs lower it to send the facade down
+    * its Spark path; nothing else writes it. */
+  @volatile private[graft] var conceptBudget: Long = ConceptTable.BudgetBytes
+
+  /** Evict every cached accelerator graph and concept table
+    * (graph_accel_invalidate analog). Needed only when INPUT FILES are
+    * rewritten in place; versioned snapshot writes change paths and
+    * therefore miss the cache naturally. */
+  def invalidateAccel(): Unit = {
+    graphs.clear(); weightedGraphs.clear(); conceptTables.clear()
+  }
 
   /** (loaded graphs, total resident nodes, memoized over-threshold
     * entries) — the graph_accel_status freshness/residency probe analog. */
@@ -410,58 +456,34 @@ object GraphOps {
     * it exceeds the threshold and the distributed engines own it. */
   def ensureLoaded(edges: DataFrame,
       accelThreshold: Long = DefaultAccelThreshold): Option[InMemoryGraph] =
-    probeAndLoad(filteredView(edges, None, None), accelThreshold, graphs)
+    probeAndLoad(edges, accelThreshold, graphs)
 
-  /** Size-probe + accelerator load in one cached scan: the
-    * [[InternedEdges.view]] of `edges` is persisted, the probe is a cheap
-    * `limit(N+1).count()` (no driver transfer), and only an
-    * under-threshold graph is interned — the cache makes that load reuse
-    * the probed partitions instead of recomputing the upstream plan. An
-    * over-threshold graph never ships rows to the driver (the probe
-    * short-circuits after N+1 and the distributed engine takes over).
-    * Results are memoized in `cache` either way. The threshold is capped
-    * below Int.MaxValue (the probe's limit is an Int, and no accelerator
-    * graph holds more edges than an array does) and floored at -1, so a
-    * negative threshold sends every view to the distributed engines. */
-  private[graph] def probeAndLoad[G](edges: DataFrame, accelThreshold: Long,
+  /** The resident concept table of `concepts`, loaded on first use in one
+    * Spark job; None when the table has another shape than the facade
+    * reads ([[ConceptTable.eligible]]) or exceeds the budget, and the
+    * facade's Spark plans answer instead. */
+  private[graft] def residentConcepts(concepts: DataFrame): Option[ConceptTable] =
+    if (!ConceptTable.eligible(concepts.schema)) None
+    else probeAndLoad(concepts, conceptBudget, conceptTables)
+
+  /** The one residency decision: a cache hit answers at once; a miss
+    * loads the cache's view of `input` against the threshold and
+    * memoizes the verdict either way. The threshold is capped below
+    * Int.MaxValue (a graph probe's limit is an Int, and no resident
+    * structure holds more entries than an array does) and floored at -1,
+    * so a negative threshold sends every view to the distributed
+    * engines. */
+  private def probeAndLoad[G](input: DataFrame, accelThreshold: Long,
       cache: AccelCache[G]): Option[G] = {
     val threshold = math.max(-1L, math.min(accelThreshold, Int.MaxValue - 1L))
-    val view = InternedEdges.view(edges, cache.weighted)
+    val view = cache.view(input)
     val key = view.queryExecution.analyzed.canonicalized
     cache.get(key, threshold).getOrElse {
-      val cached = view.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = cached.limit(threshold.toInt + 1).count()
-        if (n <= threshold) {
-          // Large loads intern DISTRIBUTED (dictionary join + compact
-          // array ship); the probe's n decides, so the extra jobs only run
-          // when driver-side interning would dominate.
-          val e = InternedEdges.load(cached, n, cache.weighted)
-          val g = cache.build(e)
-          cache.putLoaded(key, n, e.names.length, g)
-          Some(g)
-        } else { cache.putOver(key, threshold); None }
-      } finally { cached.unpersist(); () }
+      cache.load(view, threshold) match {
+        case Some((n, nodes, g)) => cache.putLoaded(key, n, nodes, g); Some(g)
+        case None                => cache.putOver(key, threshold); None
+      }
     }
-  }
-
-  /** Confidence/rel-type-filtered (src, dst) view, pre-orientation. A
-    * no-op filter adds NO plan node, so differently-sourced calls over the
-    * same unfiltered edges canonicalize identically and share one
-    * [[AccelCache]] entry. */
-  private def filteredView(edges: DataFrame, minConfidence: Option[Double],
-      relTypes: Option[Seq[String]]): DataFrame = {
-    val hasRel = edges.columns.contains("rel_type")
-    val hasConf = edges.columns.contains("confidence")
-    val confFiltered =
-      if (hasConf && minConfidence.isDefined)
-        edges.where(confidencePredicate(minConfidence))
-      else edges
-    val relFiltered = relTypes match {
-      case Some(ts) if hasRel => confFiltered.where(col("rel_type").isin(ts: _*))
-      case _                  => confFiltered
-    }
-    relFiltered.select("src", "dst")
   }
 
   /** Shortest path (reference T2): returns the hop count and the node
@@ -507,8 +529,7 @@ object GraphOps {
       maxPaths: Int = 5,
       direction: Direction = Both,
       accelThreshold: Long = DefaultAccelThreshold): Seq[(Int, Seq[String])] = {
-    val filtered = filteredView(edges, None, None)
-    probeAndLoad(filtered, accelThreshold, graphs) match {
+    probeAndLoad(edges, accelThreshold, graphs) match {
       case Some(g) => g.kShortestPaths(from, to, maxHops, maxPaths, direction)
       case None    => kShortestPaths(edges, from, to, maxHops, maxPaths, direction)
     }
@@ -698,19 +719,16 @@ object GraphOps {
       accelThreshold: Long = DefaultAccelThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // The SAME filteredView the traversal dispatchers probe with — the
-    // documented cache sharing depends on the plans canonicalizing
-    // identically, so the view must come from one helper, not a lookalike
-    // inline select.
-    val filtered = filteredView(edges, None, None)
-    probeAndLoad(filtered, accelThreshold, graphs) match {
+    // the cache's own view of the edges, as every traversal dispatcher
+    // probes with it, so they share one resident graph
+    probeAndLoad(edges, accelThreshold, graphs) match {
       case Some(g) =>
         accelPairsDF(spark, g.names,
           g.pageRankRanks(iterations, damping, reset), "node", "r")
       case None    =>
         // the accel's load view, so both dispatch paths return the same
         // node column type whatever the input id type
-        pageRank(InternedEdges.view(filtered, weighted = false),
+        pageRank(InternedEdges.view(edges, weighted = false),
           iterations, damping, reset)
     }
   }

@@ -74,8 +74,7 @@ object GraphXOps {
       accelThreshold: Long = GraphOps.DefaultAccelThreshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    GraphOps.probeAndLoad(edges.select(col("src"), col("dst")), accelThreshold,
-        GraphOps.graphs) match {
+    GraphOps.ensureLoaded(edges, accelThreshold) match {
       case Some(g) =>
         val (ns, cs) = g.connectedComponentsArrays()
         GraphOps.accelPairsDF(spark, ns, cs, "node", "component")

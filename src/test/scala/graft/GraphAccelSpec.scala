@@ -220,4 +220,58 @@ class GraphAccelSpec extends SparkSpec {
     assert(wDist.relax("n0", 4).toMap == wDriver.relax("n0", 4).toMap)
     } finally { spark.conf.set("spark.sql.adaptive.enabled", aqeWas); () }
   }
+
+  test("rel-type and confidence filters on the resident graph equal the distributed BFS") {
+    // seeded random typed graphs: NULL and NaN confidences (both pass
+    // every threshold, as Spark orders NaN greatest), NULL rel types
+    // (never in an allow-list), a threshold of NaN, an empty allow-list,
+    // an unknown type; both loaders, every direction
+    val rnd = new scala.util.Random(31)
+    val types = Seq("A", "B", "C")
+    val dirs = Seq[Direction](Outgoing, Incoming, Both)
+    def triples(rows: Seq[(String, Int, String)]): Set[(String, Int, String)] = rows.toSet
+    (1 to 8).foreach { trial =>
+      val n = 4 + rnd.nextInt(10)
+      val es = Seq.fill(5 + rnd.nextInt(30))((s"n${rnd.nextInt(n)}", s"n${rnd.nextInt(n)}",
+          if (rnd.nextInt(6) == 0) null else types(rnd.nextInt(3)),
+          rnd.nextInt(6) match {
+            case 0 => None
+            case 1 => Some(Double.NaN)
+            case 2 => Some(-0.0)
+            case _ => Some(rnd.nextInt(10) / 10.0)
+          }))
+        .toDF("src", "dst", "rel_type", "confidence")
+      val viaDriver = InMemoryGraph.load(es)
+      val viaDist = InMemoryGraph.loadDistributed(es)
+      (1 to 4).foreach { call =>
+        val depth = 1 + rnd.nextInt(4)
+        val dir = dirs(rnd.nextInt(3))
+        val minConf = Seq(None, Some(0.5), Some(0.0), Some(Double.NaN))(rnd.nextInt(4))
+        val relTypes = rnd.nextInt(4) match {
+          case 0 => None
+          case 1 => Some(Nil)
+          case _ => Some(rnd.shuffle(types :+ "Z").take(1 + rnd.nextInt(2)))
+        }
+        val what = s"trial $trial call $call: depth $depth $dir $minConf $relTypes edges=${es.collect().toSeq}"
+        val dist = GraphOps.bfs(es, Seq("n0"), depth, dir, minConf, relTypes)
+          .select("node", "distance", "parent").as[(String, Int, String)].collect().toSet
+        Seq(viaDriver, viaDist).foreach { g =>
+          assert(triples(g.bfs(Seq("n0"), depth, dir, Set.empty, minConf, relTypes)) == dist, what)
+        }
+        val auto = GraphOps.bfsAuto(es, Seq("n0"), depth, dir, minConf, relTypes)
+          .select("node", "distance", "parent").as[(String, Int, String)].collect().toSet
+        assert(auto == dist, what)
+        assert(GraphOps.shortestPathAuto(es, "n0", s"n${n - 1}", depth, dir, minConf) ==
+          GraphOps.shortestPath(es, "n0", s"n${n - 1}", depth, dir, minConf), what)
+      }
+    }
+  }
+
+  test("a rel-type filter over edges without a rel_type column filters nothing, both engines") {
+    val es = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
+    val want = Map("a" -> 0, "b" -> 1, "c" -> 2)
+    assert(distances(GraphOps.bfs(es, Seq("a"), 3, Outgoing, relTypes = Some(Seq("X")))) == want)
+    assert(distances(GraphOps.bfsAuto(es, Seq("a"), 3, Outgoing,
+      minConfidence = Some(0.9), relTypes = Some(Seq("X")))) == want)
+  }
 }

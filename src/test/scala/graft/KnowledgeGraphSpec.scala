@@ -503,4 +503,229 @@ class KnowledgeGraphSpec extends SparkSpec {
     assert(kg.concepts.count() == n0, "the facade must stay pinned to its cut")
     assert(KnowledgeGraph.fromStore(spark, st).concepts.count() > n0)
   }
+
+  /** Run `f` with every concept table over its byte budget, so the facade
+    * answers through its Spark plans. */
+  private def onSparkPath[T](f: => T): T = {
+    val was = GraphOps.conceptBudget
+    GraphOps.conceptBudget = -1L
+    try f finally GraphOps.conceptBudget = was
+  }
+
+  /** A value with every double and float replaced by its bits: NaN equals
+    * NaN, -0.0 differs from 0.0. */
+  private def bits(v: Any): Any = v match {
+    case d: Double => ("d", java.lang.Double.doubleToLongBits(d))
+    case f: Float => ("f", java.lang.Float.floatToIntBits(f))
+    case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
+    case m: KnowledgeGraph.LabelMatch => (m.conceptId, m.label, bits(m.score))
+    case KnowledgeGraph.Resolved(m) => ("resolved", bits(m))
+    case KnowledgeGraph.DidYouMean(ms) => ("did you mean", bits(ms))
+    case xs: scala.collection.Seq[_] => xs.map(bits)
+    case x => x
+  }
+
+  /** A plan Spark answers while optimizing it: collecting runs no job. */
+  private def optimizesToLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Same schema and the same rows in the same order, bit for bit. */
+  private def assertSameAnswer(resident: DataFrame, viaSpark: DataFrame, what: String): Unit = {
+    assert(optimizesToLocal(resident), s"$what: the resident answer is a local relation")
+    assert(resident.schema == viaSpark.schema, what)
+    assert(resident.collect().toSeq.map(bits) == viaSpark.collect().toSeq.map(bits), what)
+  }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500) // listener events post asynchronously
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A concept table for the differential specs: seeded random 6-dim
+    * float embeddings plus every edge case of the scoring contract. */
+  lazy val vecKg: KnowledgeGraph = {
+    val rnd = new scala.util.Random(11)
+    def vec(d: Int = 6): Seq[Option[Float]] = Seq.fill(d)(Some(rnd.nextGaussian().toFloat))
+    val tied = vec()
+    val random = (1 to 60).map(i => (s"r$i", s"label $i", Some(vec())))
+    val rows = random ++ Seq(
+      ("t1", "tie", Some(tied)), ("t0", "tie", Some(tied)),      // exact ties
+      ("t2", "tie x2", Some(tied.map(_.map(_ * 2f)))),           // same bits, scaled
+      ("dup", "twin", Some(random(3)._3.get)),                   // a duplicated
+      ("dup", "twin", Some(random(3)._3.get)),                   //   concept row
+      ("none", "no embedding", None),
+      ("zero", "zero norm", Some(Seq.fill(6)(Some(0f)))),
+      ("nan", "NaN-bearing", Some(vec().updated(2, Some(Float.NaN)))),
+      ("inf", "infinite", Some(vec().updated(4, Some(Float.PositiveInfinity)))),
+      ("short", "wrong length", Some(vec(5))),
+      ("long", "wrong length", Some(vec(7))),
+      ("hole", "null element", Some(vec().updated(1, None))),
+      (null, "no id", Some(vec())),
+      ("nolabel", null, Some(vec())))
+    kg.copy(concepts = rows.toDF("concept_id", "label", "embedding"))
+  }
+
+  /** Query vectors for the differential specs, degenerate ones included. */
+  private lazy val queries: Seq[Seq[Double]] = {
+    val rnd = new scala.util.Random(3)
+    val tied = vecKg.concepts.where($"concept_id" === "t1")
+      .select($"embedding".cast("array<double>")).head().getSeq[Double](0)
+    Seq.fill(8)(Seq.fill(6)(rnd.nextGaussian())) ++ Seq(
+      tied,                                  // three rows tie at the top
+      Seq.fill(6)(0.0),                      // zero-norm query: no hit
+      Seq.fill(5)(1.0),                      // matches only the 5-dim row
+      Seq(1.0, Double.NaN, 0, 0, 0, 0),      // NaN query: every sim NaN
+      Seq(-0.0, 0.0, 1.0, 0, 0, 0))
+  }
+
+  test("search and resolveLabel: the resident table equals the Spark plan bit for bit") {
+    val rnd = new scala.util.Random(17)
+    GraphOps.invalidateAccel()
+    queries.zipWithIndex.foreach { case (q, i) =>
+      Seq((100, -1.0), (1 + rnd.nextInt(6), Seq(0.0, 0.3, -0.5, Double.NaN)(rnd.nextInt(4))))
+        .foreach { case (limit, floor) =>
+          assertSameAnswer(vecKg.search(q, limit, floor),
+            onSparkPath(vecKg.search(q, limit, floor)), s"query $i limit $limit floor $floor")
+        }
+      assert(bits(vecKg.resolveLabel(q, 0.9, 0.2)) ==
+        bits(onSparkPath(vecKg.resolveLabel(q, 0.9, 0.2))), s"query $i")
+    }
+    assert(GraphOps.residentConcepts(vecKg.concepts).isDefined, "the table was resident")
+  }
+
+  test("fuseQuery: the resident table equals the Spark plan bit for bit") {
+    val rnd = new scala.util.Random(19)
+    (1 to 14).foreach { trial =>
+      val include = Seq.fill(1 + rnd.nextInt(3))(queries(rnd.nextInt(queries.size)))
+      val exclude = Seq.fill(rnd.nextInt(3))(queries(rnd.nextInt(queries.size)))
+      val threshold = Seq(0.5, 0.0, -1.0, 0.2, Double.NaN)(rnd.nextInt(5))
+      val limit = Seq(3, 10, 100)(rnd.nextInt(3))
+      assertSameAnswer(vecKg.fuseQuery(include, exclude, threshold, limit),
+        onSparkPath(vecKg.fuseQuery(include, exclude, threshold, limit)),
+        s"trial $trial: threshold $threshold limit $limit")
+    }
+  }
+
+  test("related: the resident graph and table equal distributed bfs and the join, " +
+      "under random rel-type and confidence filters") {
+    val rnd = new scala.util.Random(5)
+    val semantic = Seq("SUPPORTS", "CONTRADICTS", "ENABLES", "PREVENTS")
+    val types = semantic :+ "MENTIONS" // not in the vocab: never traversed
+    val dirs = Seq[GraphOps.Direction](GraphOps.Outgoing, GraphOps.Incoming, GraphOps.Both)
+    (1 to 4).foreach { trial =>
+      val edges = Seq.fill(45)((s"n${rnd.nextInt(15)}", s"n${rnd.nextInt(15)}",
+          types(rnd.nextInt(types.size)),
+          rnd.nextInt(6) match {
+            case 0 => None
+            case 1 => Some(Double.NaN)
+            case _ => Some(rnd.nextInt(10) / 10.0)
+          }))
+        .toDF("src", "dst", "rel_type", "confidence")
+      // n12..n14 have no concept row; n3 has two
+      val concepts = ((0 until 12).map(i => (s"n$i", s"concept $i")) :+ (("n3", "concept 3 bis")))
+        .toDF("concept_id", "label")
+        .withColumn("embedding", org.apache.spark.sql.functions.array(
+          org.apache.spark.sql.functions.lit(1.0)))
+      val typed = kg.copy(concepts = concepts, edges = edges,
+        vocab = semantic.toDF("relationship_type"))
+      (1 to 6).foreach { call =>
+        val start = s"n${rnd.nextInt(15)}"
+        val depth = 1 + rnd.nextInt(3)
+        val dir = dirs(rnd.nextInt(3))
+        val minConf = Seq(None, Some(0.5), Some(0.0), Some(Double.NaN))(rnd.nextInt(4))
+        val relTypes = rnd.nextInt(4) match {
+          case 0 => None
+          case 1 => Some(Nil)
+          case _ => Some(rnd.shuffle(types :+ "UNKNOWN").take(1 + rnd.nextInt(3)))
+        }
+        val what = s"trial $trial call $call: $start depth $depth $dir $minConf $relTypes"
+        val resident = typed.related(start, depth, dir, minConf, relTypes)
+        val expected = GraphOps.bfs(typed.semanticEdges, Seq(start), depth, dir, minConf, relTypes)
+          .where($"distance" > 0)
+          .join(concepts.select($"concept_id".as("node"), $"label"), Seq("node"))
+          .select($"node".as("concept_id"), $"label", $"distance")
+        assert(optimizesToLocal(resident), what)
+        assert(resident.schema == expected.schema, what)
+        assert(resident.collect().toSeq.map(bits).sortBy(_.toString) ==
+          expected.collect().toSeq.map(bits).sortBy(_.toString), what)
+      }
+    }
+  }
+
+  test("an over-budget concept table answers through the Spark path and is probed once") {
+    val q = Seq(0.9, 0.1, 0, 0, 0, 0, 0, 0)
+    GraphOps.invalidateAccel()
+    val resident = kg.search(q, limit = 3)
+    val was = GraphOps.conceptBudget
+    GraphOps.invalidateAccel()
+    GraphOps.conceptBudget = 64L // bytes: the 4-row fixture is past it
+    try {
+      val (first, coldJobs) = jobsDuring {
+        val df = kg.search(q, limit = 3); (df, df.collect())
+      }
+      val (second, warmJobs) = jobsDuring {
+        val df = kg.search(q, limit = 3); (df, df.collect())
+      }
+      // the memoized over-budget verdict skips the probe on the second call
+      assert(coldJobs == warmJobs + 1, s"the probe is one job, run once: $coldJobs then $warmJobs")
+      assert(!optimizesToLocal(first._1) && !optimizesToLocal(second._1),
+        "the Spark plan answers")
+      assert(first._1.schema == resident.schema)
+      assert(first._2.toSeq.map(bits) == resident.collect().toSeq.map(bits))
+      assert(second._2.toSeq.map(bits) == resident.collect().toSeq.map(bits))
+    } finally GraphOps.conceptBudget = was
+  }
+
+  test("warm search, fuseQuery, resolveLabel and related, filtered or not, schedule no Spark job") {
+    val q = Seq(1.0, 0, 0, 0, 0, 0, 0, 0)
+    val inc = Seq(q, Seq(0.9, 0.1, 0, 0, 0, 0, 0, 0))
+    val exc = Seq(Seq(0.0, 1, 0, 0, 0, 0, 0, 0))
+    val kg2 = kg.copy(vocab = kg.vocab.withColumn("epistemic_status",
+      org.apache.spark.sql.functions.when($"relationship_type" === "SUPPORTS",
+        "WELL_GROUNDED").otherwise("INSUFFICIENT_DATA")))
+    def calls(): Seq[Any] = Seq(
+      kg.search(q).collect().toSeq.map(bits),
+      kg.fuseQuery(inc, exc, 0.5).collect().toSeq.map(bits),
+      kg.resolveLabel(q),
+      kg.related("c1").collect().toSet,
+      kg.related("c1", relTypes = Some(Seq("SUPPORTS"))).collect().toSet,
+      kg.related("c1", minConfidence = Some(0.95)).collect().toSet,
+      kg2.relatedByEpistemicStatus("c1", 2, includeStatuses = Seq("WELL_GROUNDED"))
+        .collect().toSet)
+    val cold = calls()
+    val (warm, jobs) = jobsDuring(calls())
+    assert(jobs == 0, s"expected no Spark job on warm calls, saw $jobs")
+    assert(warm == cold)
+    assert(kg.related("c1", relTypes = Some(Seq("SUPPORTS")))
+      .select("concept_id").as[String].collect().toSet == Set("c2", "c3"))
+  }
+
+  test("every rel-type subset traverses the one resident graph") {
+    GraphOps.invalidateAccel()
+    val types = Seq("SUPPORTS", "CONTRADICTS", "VALIDATES", "REFUTES")
+    val subsets = (1 to 12).map(m => types.zipWithIndex.collect {
+      case (t, b) if ((m >> b) & 1) == 1 => t })
+    assert(subsets.distinct.size == 12)
+    subsets.foreach { ts =>
+      val got = kg.related("c1", relTypes = Some(ts))
+        .select("concept_id", "distance").as[(String, Int)].collect().toMap
+      val want = GraphOps.bfs(kg.semanticEdges, Seq("c1"), 2, relTypes = Some(ts))
+        .where($"distance" > 0).select("node", "distance").as[(String, Int)].collect().toMap
+      assert(got == want, ts.toString)
+    }
+    assert(GraphOps.accelStatus._1 == 1, s"one loaded graph: ${GraphOps.accelStatus}")
+  }
 }

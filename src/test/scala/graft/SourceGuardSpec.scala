@@ -19,7 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `publishTxn`, `_txn/` is listed only in `pendingIntents` (intent names
   * are random, so reaching an intent means listing the directory), and
   * the `"_txn"` name is spelled only in `txnDir`. A copy of either
-  * protocol half elsewhere fails here with `file:line`. */
+  * protocol half elsewhere fails here with `file:line`.
+  *
+  * The choice between a driver-resident structure and the Spark engines
+  * has one owner: an `AccelCache` is constructed, and `probeAndLoad` is
+  * called, only in `graph/GraphOps.scala`. */
 class SourceGuardSpec extends AnyFunSuite {
   private val lazyCheckpoint = Seq(
     """\b(?:localCheckpoint|checkpoint)\s*\(\s*\)""",
@@ -126,5 +130,41 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "txn intents are written only by publishTxn and listed only by " +
         s"pendingIntents: ${offenders.mkString(", ")}")
+  }
+
+  /** An accelerator-cache construction or a `probeAndLoad` call. */
+  private val residencyChoice =
+    """\bnew\s+AccelCache\b|(?<!def )\bprobeAndLoad\s*[\[(]""".r
+
+  /** 1-based numbers of the lines that make a residency choice. */
+  private def residencyChoiceLines(lines: Seq[String]): Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (line, i) if code(line).exists(residencyChoice.findFirstIn(_).isDefined) => i + 1
+    }
+
+  test("the residency matcher flags cache constructions and probeAndLoad calls only") {
+    val flagged = Seq(
+      "  private val graphs = new AccelCache[InMemoryGraph](8, 32,",
+      "    GraphOps.probeAndLoad(edges, t, GraphOps.graphs) match {",
+      "    probeAndLoad[ConceptTable](concepts, budget, tables)")
+    val passed = Seq(
+      "  private def probeAndLoad[G](input: DataFrame, accelThreshold: Long,",
+      "  private[graph] final class AccelCache[G](maxLoaded: Int, maxOver: Int,",
+      "    // probeAndLoad(x) in prose", "  * a new AccelCache per kind",
+      "    GraphOps.ensureLoaded(edges, accelThreshold) match {")
+    assert(residencyChoiceLines(flagged) == flagged.indices.map(_ + 1))
+    assert(residencyChoiceLines(passed).isEmpty)
+  }
+
+  test("src/main/scala chooses resident or Spark in graph/GraphOps.scala only") {
+    val owner = java.nio.file.Paths.get("src", "main", "scala", "graft", "graph", "GraphOps.scala")
+    val files = mainSources()
+    assert(files.contains(owner))
+    val offenders = files.filter(_ != owner).flatMap { f =>
+      residencyChoiceLines(linesOf(f)).map(n => s"$f:$n")
+    }
+    assert(offenders.isEmpty,
+      s"AccelCache and probeAndLoad belong to GraphOps: ${offenders.mkString(", ")}")
+    assert(residencyChoiceLines(linesOf(owner)).nonEmpty)
   }
 }

@@ -177,4 +177,43 @@ class VectorOpsSpec extends SparkSpec {
         else Some(java.lang.Double.doubleToLongBits(r.getDouble(0))))
     assert(colCol == viaHof, "generic two-sided kernel agrees")
   }
+
+  test("the cosine kernels compile one class for every query vector, sims unchanged") {
+    // the codegen cache is keyed by the generated source: a query value
+    // compiled into it would cost a fresh compile per distinct query
+    import graft.functions.QuantizedCosine
+    import org.apache.spark.sql.Column
+    val df = spark.range(40).select($"id", array((0 until 6).map(j =>
+      sin($"id" * (j + 1)) * 3 + lit(j)): _*).as("v"))
+    val q1 = Seq(0.3, -0.7, 0.2, 0.9, 1.5, -2.0)
+    val q2 = Seq(-1.1, 0.4, 0.0, 2.5, 0.25, 0.6)
+    def stageCode(c: Column): Seq[String] =
+      org.apache.spark.sql.execution.debug.codegenStringSeq(
+        df.select($"id", c.as("s")).queryExecution.executedPlan).map(_._2)
+    def sims(c: Column): Seq[Option[Long]] =
+      df.select(c).collect().toSeq.map(r =>
+        if (r.isNullAt(0)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(0))))
+    Seq[Seq[Double] => Column](
+      q => VectorOps.cosine($"v", VectorOps.vecLit(q)),
+      q => QuantizedCosine($"v", VectorOps.vecLit(q))).foreach { kernel =>
+      val code1 = stageCode(kernel(q1))
+      assert(code1.nonEmpty && code1 == stageCode(kernel(q2)))
+    }
+    // the folded kernel's sims: dot / (sqrt(nx) * |q|), sums left to right
+    val rows = df.select("v").collect().map(_.getSeq[Double](0))
+    Seq(q1, q2).foreach { q =>
+      val qn = math.sqrt(q.map(x => x * x).foldLeft(0.0)(_ + _))
+      val want = rows.toSeq.map { x =>
+        val dot = x.zip(q).map { case (a, b) => a * b }.foldLeft(0.0)(_ + _)
+        val nx = x.map(a => a * a).foldLeft(0.0)(_ + _)
+        Some(java.lang.Double.doubleToLongBits(dot / (math.sqrt(nx) * qn)))
+      }
+      val c = VectorOps.cosine($"v", VectorOps.vecLit(q))
+      assert(sims(c) == want)
+      withSQLConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+          "spark.sql.codegen.wholeStage" -> "false") {
+        assert(sims(c) == want, "the interpreted path scores through the same loop")
+      }
+    }
+  }
 }
