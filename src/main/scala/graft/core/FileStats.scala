@@ -218,18 +218,25 @@ object FileStats {
 
   // ---------------------------------------------------------------- write / read
 
+  /** The `*.parquet` files directly under `dir`, by name. */
+  def partFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .sortBy(_.getFileName.toString)
+    finally listing.close()
+  }
+
+  /** Rows in the part files directly under `dir`, from their footers. */
+  def footerRows(conf: Configuration, dir: Path): Long = partFiles(dir)
+    .map(p => ofParquetFile(conf, new org.apache.hadoop.fs.Path(p.toUri), 0L, 0L).rows).sum
+
   /** Compute and atomically write `_stats.json` for every `*.parquet`
     * directly under `versionDir` (the `_changes` subdirectory keeps its own
     * lifecycle and is not covered). Best-effort by contract: callers wrap
     * in try/catch — a failed stats write must never fail the commit. */
   def writeStatsFile(conf: Configuration, versionDir: Path): Unit = {
-    val listing = Files.list(versionDir)
-    val files =
-      try listing.iterator().asScala.toSeq
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.getFileName.toString)
-      finally listing.close()
-    val stats = files.map { p =>
+    val stats = partFiles(versionDir).map { p =>
       p.getFileName.toString ->
         ofParquetFile(conf, new org.apache.hadoop.fs.Path(p.toUri),
           Files.size(p), Files.getLastModifiedTime(p).toMillis)

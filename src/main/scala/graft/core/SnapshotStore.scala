@@ -219,11 +219,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * the streaming change feed (`spark.readStream.format("graft")
     * .option("feed", "changes")`, sources/GraftDataSource) reads exactly
     * these per-version deltas as micro-batches. `append` records its
-    * incoming batch automatically; a bare `commit` is a REWRITE with no
-    * well-defined delta, records nothing, and is skipped by the feed
-    * (document the same way Delta CDF treats overwrites). The change set is
-    * written before the pointer moves, so every version the pointer exposes
-    * has its delta complete on disk. */
+    * delta by copying the written files ([[appendCandidate]]); a bare
+    * `commit` is a REWRITE with no well-defined delta, records nothing,
+    * and is skipped by the feed (document the same way Delta CDF treats
+    * overwrites). The change set is written before the pointer moves, so
+    * every version the pointer exposes has its delta complete on disk. */
   def commit(table: String, df: DataFrame, changeSet: Option[DataFrame],
       props: Map[String, String] = Map.empty): Long =
     commitWith(table, Some(df), changeSet, base = None,
@@ -938,9 +938,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * file (the reference gets the same linearization from Postgres
     * transactions, schema/00_baseline.sql:2198-2240).
     *
-    * `rows` is evaluated twice — once as the delta data, once as the
-    * version's recorded change set — so a non-deterministic plan should be
-    * checkpointed by the caller first (DedupIngest already does).
+    * `rows` is evaluated once ([[appendCandidate]]): no caller checkpoint.
     *
     * SCHEMA EVOLUTION CONTRACT: adding or omitting whole columns is
     * allowed (the pinned snapshot schema grows; files missing a column
@@ -966,9 +964,27 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   private[graft] def appendFrom(table: String, rows: DataFrame,
       base: Option[Long], props: Map[String, String] = Map.empty): Long = {
     val merged = mergedAppendSchema(table, base, rows.schema)
-    val v = commitWith(table, Some(rows), Some(rows), base = base,
-      snapshot = merged, advance = false, props = props)
+    val v = appendCandidate(table, rows, base, merged, props)
     occAppendCommit(table, rows.schema, v, base)
+  }
+
+  /** Every append's unexposed candidate: `rows` written ONCE as the
+    * link's data, then its part files (checksums too) copied into
+    * `_changes/` under their own `_SUCCESS`, before any pointer move. The
+    * delta IS the change set, so the caller's plan runs once. */
+  private def appendCandidate(table: String, rows: DataFrame,
+      base: Option[Long], snapshot: StructType,
+      props: Map[String, String] = Map.empty): Long = {
+    val v = commitWith(table, Some(rows), None, base = base,
+      snapshot = snapshot, advance = false, props = props)
+    val changes = Files.createDirectory(changesDir(table, v))
+    FileStats.partFiles(versionDir(table, v)).foreach { p =>
+      Files.copy(p, changes.resolve(p.getFileName))
+      val crc = p.resolveSibling(s".${p.getFileName}.crc")
+      if (Files.exists(crc)) Files.copy(crc, changes.resolve(crc.getFileName))
+    }
+    Files.writeString(changes.resolve("_SUCCESS"), "")
+    v
   }
 
   /** CAS until won: each failed round means a sibling committed, so the
@@ -2179,9 +2195,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     val cols = bucketBy.map(org.apache.spark.sql.functions.col)
     val routed = bucketRoute(rows, bucketBy, dims).sortWithinPartitions(cols: _*)
     val merged = mergedAppendSchema(table, expectedHead, routed.schema)
-    val v = commitWith(table, Some(routed), Some(routed),
-      base = expectedHead, snapshot = merged, advance = false,
-      props = SnapshotStore.bucketLayoutProps(bucketBy, dims) +
+    val v = appendCandidate(table, routed, expectedHead, merged,
+      SnapshotStore.bucketLayoutProps(bucketBy, dims) +
         (SnapshotStore.BucketSortedProp -> "true") ++ extraProps)
     // Auto-fold AFTER the landed delta (appendBucketed folds before;
     // here a pre-fold would advance the head and fail this very CAS):
@@ -3925,7 +3940,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * Recovery runs from [[recoverPendingTxns]] — invoked by every
     * resolution that notices a pending `_txn/` entry, by the next
     * `appendAll`, and by `vacuum` (so a txn-pending candidate is never
-    * reclaimed as an orphan). Returns the committed version per table. */
+    * reclaimed as an orphan). Returns the committed version per table;
+    * an empty delta commits nothing and is absent ([[appendAllPrepare]]). */
   def appendAll(rows: Map[String, DataFrame]): Map[String, Long] = {
     require(rows.nonEmpty, "appendAll requires at least one table")
     recoverPendingTxns()
@@ -4155,7 +4171,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     *    commits, so no livelock. A relink refusal discards EVERY
     *    remaining candidate before it rethrows: nothing exposed, nothing
     *    orphaned;
-    *  - all bases current: [[publishTxn]].
+    *  - all bases current: [[publishTxn]] (nothing if every delta was empty).
     * [[SnapshotStore.testRaceHook]] fires once per round, before the
     * exclusion is taken. An empty `readSet` ([[appendAll]]) never
     * answers None. */
@@ -4163,7 +4179,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       rows: Map[String, DataFrame],
       readSet: Map[String, Option[Long]] = Map.empty)
       : Option[Map[String, Long]] = {
-    val writeTables = rows.keys.toSeq.sorted
+    val writeTables = cands0.keys.toSeq.sorted
     val lockTables = (writeTables ++ readSet.keys).distinct.sorted
     var cands = cands0
     def versions = cands.map { case (t, (v, _)) => t -> v }
@@ -4174,7 +4190,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         if (readSet.exists { case (t, v) => latestVersion(t) != v }) None
         else {
           val s = writeTables.filter(t => latestVersion(t) != cands(t)._2)
-          if (s.isEmpty) publishTxn(versions)
+          if (s.isEmpty && cands.nonEmpty) publishTxn(versions)
           Some(s)
         }
       }
@@ -4225,15 +4241,17 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
 
   /** Step 1 of [[appendAll]], exposed so specs can crash the protocol
     * between candidate write and intent: every table's delta written as an
-    * unexposed candidate; returns table -> (candidate version, base). */
+    * unexposed candidate; returns table -> (candidate version, base). A
+    * candidate whose parquet footers count zero rows is discarded and its
+    * table left out, so no caller probes its deltas for rows. */
   private[graft] def appendAllPrepare(rows: Map[String, DataFrame])
       : Map[String, (Long, Option[Long])] =
-    rows.map { case (t, df) =>
+    rows.flatMap { case (t, df) =>
       val base = latestVersion(t)
-      val merged = mergedAppendSchema(t, base, df.schema)
-      val v = commitWith(t, Some(df), Some(df), base = base,
-        snapshot = merged, advance = false)
-      t -> ((v, base))
+      val v = appendCandidate(t, df, base, mergedAppendSchema(t, base, df.schema))
+      if (FileStats.footerRows(spark.sparkContext.hadoopConfiguration,
+          versionDir(t, v)) > 0) Some(t -> ((v, base)))
+      else { discardCandidate(t, v); None }
     }
 
   /** The txn intent record: {table: version}, written temp + atomic

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * api/app/lib/similarity_calculator.py:31-80) and runs it row-at-a-time on
   * the driver; here it compiles into the generated stage so a 100 TB scan
   * never leaves codegen. Null in either input, mismatched lengths, or a
-  * zero-norm vector yields NULL (the reference returns 0.0 for zero-norm;
-  * callers that need that use `coalesce(cosine, 0.0)`).
+  * non-finite result (zero norm, a NaN or infinite element) yields NULL —
+  * Spark ranks NaN above every number — (the reference returns 0.0 for
+  * zero-norm; callers that need that use `coalesce(cosine, 0.0)`).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -64,14 +65,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
       case Some((q, qn)) => CosineSimilarity.score(x, 0, x.length, q, qn)
       case None =>
         val y = b.asInstanceOf[ArrayData].toDoubleArray()
-        val ny = CosineSimilarity.norm(y)
-        if (ny == 0.0) null else CosineSimilarity.score(x, 0, x.length, y, ny)
+        CosineSimilarity.score(x, 0, x.length, y, CosineSimilarity.norm(y))
     }
   }
 
   /** Both generated kernels spell out [[CosineSimilarity.score]]'s loop
-    * (same accumulation order, so the same bits). The folded query and
-    * its norm enter as reference objects, never as source text: the
+    * and final check (same order, so the same bits and NULLs). The folded
+    * query and its norm enter as reference objects, never as source text: the
     * codegen cache is keyed by the generated source, so a compiled-in
     * value would compile a fresh class for every distinct query vector
     * and churn the cache every other query shares. */
@@ -96,11 +96,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
              |    final double $xv = $a.getDouble($i);
              |    $dot += $xv * $qref[$i]; $nx += $xv * $xv;
              |  }
-             |  if ($nx == 0.0) {
-             |    ${ev.isNull} = true;
-             |  } else {
-             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * $qnref[0]);
-             |  }
+             |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * $qnref[0]);
+             |  ${ev.isNull} = !java.lang.Double.isFinite(${ev.value});
              |}
            """.stripMargin
         })
@@ -119,11 +116,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
              |    final double $yv = $b.getDouble($i);
              |    $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
              |  }
-             |  if ($nx == 0.0 || $ny == 0.0) {
-             |    ${ev.isNull} = true;
-             |  } else {
-             |    ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-             |  }
+             |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
+             |  ${ev.isNull} = !java.lang.Double.isFinite(${ev.value});
              |}
            """.stripMargin
         })
@@ -146,9 +140,9 @@ object CosineSimilarity {
   }
 
   /** The one cosine scoring loop: `x[off, off + n)` against the query `q`
-    * of norm `qn` (see [[norm]]). NULL when the lengths differ or `x` has
-    * zero norm. Products accumulate left to right, as in the generated
-    * kernels, so every engine that scores through here — the expression's
+    * of norm `qn` (see [[norm]]). NULL when the lengths differ or the
+    * result is not finite (a zero norm, a NaN or infinite element).
+    * Products accumulate left to right, as in the generated kernels, so every engine that scores through here — the expression's
     * interpreted path and the driver-resident concept table — returns the
     * codegen path's bits. A null element of `x` reads as 0.0, as
     * `ArrayData.getDouble` reads it. */
@@ -161,7 +155,8 @@ object CosineSimilarity {
       dot += xv * q(i); nx += xv * xv
       i += 1
     }
-    if (nx == 0.0) null else dot / (math.sqrt(nx) * qn)
+    val r = dot / (math.sqrt(nx) * qn)
+    if (java.lang.Double.isFinite(r)) r else null
   }
 
   /** Column-API entry point: `cosine(a, b)`. */

@@ -42,10 +42,8 @@ object IngestPipeline {
     * (ingestion.py:432-507, concept_matcher.py:50-80). Returns the
     * candidate table with a `resolved_id` column. */
   def twoTierMatch(candidates: DataFrame, existing: DataFrame): DataFrame = {
-    if (existing.isEmpty) {
-      return candidates.withColumn("resolved_id", col("concept_id"))
-        .withColumn("matched", lit(false))
-    }
+    // An empty `existing` needs no special case: the left join keeps every
+    // candidate with a NULL sim, so it comes out unmatched under its own id.
     val ex = existing.select(
       col("concept_id").as("ex_id"),
       lower(trim(col("label"))).as("ex_label"),
@@ -82,25 +80,35 @@ object IngestPipeline {
       existingInstances: DataFrame,
       existingEdges: DataFrame,
       epochLog: DataFrame,
-      batchEpoch: Long): IngestResult = {
-    val d = ingestDeltas(spark, docs, existingConcepts, existingInstances,
-      existingEdges, batchEpoch)
-    IngestResult(
-      existingConcepts.unionByName(d.newConcepts, allowMissingColumns = true),
-      existingInstances.unionByName(d.newInstances, allowMissingColumns = true),
-      existingEdges.unionByName(d.newEdges, allowMissingColumns = true),
-      epochLog.unionByName(d.epochRecord, allowMissingColumns = true),
-      d.matchedCount, d.createdCount)
-  }
+      batchEpoch: Long): IngestResult =
+    ingestBatchWith(spark, docs, existingConcepts, existingInstances,
+      existingEdges, epochLog, batchEpoch)(identity)
 
-  /** The batch's computation, delta-shaped (see [[IngestDeltas]]). */
-  def ingestDeltas(
+  /** [[ingestBatch]] lent to `use` while its caches are held. */
+  private def ingestBatchWith[T](spark: SparkSession, docs: DataFrame,
+      existingConcepts: DataFrame, existingInstances: DataFrame,
+      existingEdges: DataFrame, epochLog: DataFrame, batchEpoch: Long)(
+      use: IngestResult => T): T =
+    ingestDeltas(spark, docs, existingConcepts, existingInstances,
+      existingEdges, batchEpoch) { d =>
+      use(IngestResult(
+        existingConcepts.unionByName(d.newConcepts, allowMissingColumns = true),
+        existingInstances.unionByName(d.newInstances, allowMissingColumns = true),
+        existingEdges.unionByName(d.newEdges, allowMissingColumns = true),
+        epochLog.unionByName(d.epochRecord, allowMissingColumns = true),
+        d.matchedCount, d.createdCount))
+    }
+
+  /** The batch's computation, delta-shaped (see [[IngestDeltas]]), lent to
+    * `use`: the extraction and resolved candidates stay cached until `use`
+    * returns or throws, then both are released. */
+  private def ingestDeltas[T](
       spark: SparkSession,
       docs: DataFrame, // (doc_id: string, text: string)
       existingConcepts: DataFrame,
       existingInstances: DataFrame,
       existingEdges: DataFrame,
-      batchEpoch: Long): IngestDeltas = {
+      batchEpoch: Long)(use: IngestDeltas => T): T = {
     import spark.implicits._
 
     // S2 chunk + S4 extract, fanned out in executors
@@ -118,7 +126,6 @@ object IngestPipeline {
             ("rel", r.from, r.to, Seq.empty[Float], r.relType, r.confidence))
       }
       .toDF("kind", "a", "b", "emb", "s", "conf")
-      .persist()
 
     val candidates = extractions.where($"kind" === "concept")
       .select($"a".as("concept_id"), $"b".as("label"), $"emb".cast("array<float>").as("embedding"))
@@ -140,7 +147,6 @@ object IngestPipeline {
           .otherwise(min(when(!$"matched", $"resolved_id")).over(batchCanon)))
       .drop("resolved_id")
       .withColumnRenamed("canonical_id", "resolved_id")
-      .persist()
 
     val idMap = resolved.select($"concept_id".as("orig_id"), $"resolved_id")
 
@@ -172,16 +178,22 @@ object IngestPipeline {
       .dropDuplicates("src", "dst", "rel_type")
       .withColumn("created_at", lit(batchEpoch))
 
-    // M8: epoch record
-    val matchedCount = resolved.where($"matched").count()
-    val createdCount = resolved.where(!$"matched" && $"concept_id" === $"resolved_id").count()
-    val record = Seq((batchEpoch, "ingestion", "graft",
-        matchedCount, createdCount)).toDF(
-      "event_id", "kind", "actor", "matched_concepts", "created_concepts")
-
-    extractions.unpersist()
-    IngestDeltas(newConcepts, newInstances, newEdges, record,
-      matchedCount, createdCount)
+    extractions.persist() // first, so resolved's cached plan reads it
+    resolved.persist()
+    try {
+      // M8: epoch record, both counts in one pass
+      val counts = resolved.agg(count(when($"matched", 1)),
+        count(when(!$"matched" && $"concept_id" === $"resolved_id", 1))).head()
+      val (matchedCount, createdCount) = (counts.getLong(0), counts.getLong(1))
+      val record = Seq((batchEpoch, "ingestion", "graft",
+          matchedCount, createdCount)).toDF(
+        "event_id", "kind", "actor", "matched_concepts", "created_concepts")
+      use(IngestDeltas(newConcepts, newInstances, newEdges, record,
+        matchedCount, createdCount))
+    } finally {
+      resolved.unpersist()
+      extractions.unpersist()
+    }
   }
 
   /** Empty frames with the ingest tables' birth schemas — what a first
@@ -202,14 +214,10 @@ object IngestPipeline {
 
   /** The four ingest tables at ONE transactionally consistent cut
     * ([[graft.core.SnapshotStore.snapshotPresent]]); tables that do not
-    * exist yet read as their empty birth schema. */
-  private def storeState(spark: SparkSession, store: graft.core.SnapshotStore,
-      prefix: String): Map[String, DataFrame] =
-    storeStateWithCut(spark, store, prefix)._1
-
-  /** The matcher state AND the cut it was read at — (table → version,
-    * None = table absent), the READ SET the serialized commit validates. */
-  private def storeStateWithCut(spark: SparkSession,
+    * exist yet read as their empty birth schema. Also returns the cut —
+    * (table → version, None = table absent), the READ SET the serialized
+    * commit validates. */
+  private def storeState(spark: SparkSession,
       store: graft.core.SnapshotStore, prefix: String)
       : (Map[String, DataFrame], Map[String, Option[Long]]) = {
     val empties = emptyState(spark)
@@ -230,16 +238,6 @@ object IngestPipeline {
     prefix + "instances" -> d.newInstances,
     prefix + "edges" -> d.newEdges,
     prefix + "epoch_log" -> d.epochRecord)
-
-  /** [[deltaTables]] as a batch commit takes it: each delta checkpointed
-    * — the multi-table append evaluates it twice (data + change set), and
-    * the extraction plan must not recompute against moved state between
-    * the two — and the empty ones dropped. */
-  private def committableDeltas(d: IngestDeltas, prefix: String)
-      : Map[String, DataFrame] =
-    deltaTables(d, prefix)
-      .map { case (t, df) => t -> df.localCheckpoint(true) }
-      .filter { case (_, df) => !df.isEmpty }
 
   /** STORE-BACKED ATOMIC INGEST — the reference's ingestion transaction
     * end to end (concepts + instances + sources + epoch written in ONE
@@ -266,11 +264,9 @@ object IngestPipeline {
   def ingestBatchToStore(spark: SparkSession, store: graft.core.SnapshotStore,
       docs: DataFrame, batchEpoch: Long, tablePrefix: String = "")
       : Map[String, Long] = {
-    val st = storeState(spark, store, tablePrefix)
-    val d = ingestDeltas(spark, docs, st("concepts"), st("instances"),
-      st("edges"), batchEpoch)
-    val deltas = committableDeltas(d, tablePrefix)
-    if (deltas.isEmpty) Map.empty else store.appendAll(deltas)
+    val (st, _) = storeState(spark, store, tablePrefix)
+    ingestDeltas(spark, docs, st("concepts"), st("instances"), st("edges"),
+      batchEpoch)(d => store.appendAll(deltaTables(d, tablePrefix)))
   }
 
   /** [[ingestBatchToStore]] under SERIALIZABLE match-or-create — closes
@@ -290,13 +286,10 @@ object IngestPipeline {
       tablePrefix: String = "", maxRetries: Int = 16): Map[String, Long] = {
     var attempt = 0
     while (attempt < maxRetries) {
-      val (st, readSet0) = storeStateWithCut(spark, store, tablePrefix)
-      val d = ingestDeltas(spark, docs, st("concepts"), st("instances"),
-        st("edges"), batchEpoch)
-      val deltas = committableDeltas(d, tablePrefix)
-      if (deltas.isEmpty) return Map.empty
-      store.appendAllSerialized(deltas,
-        readSet0 - (tablePrefix + "epoch_log")) match {
+      val (st, readSet0) = storeState(spark, store, tablePrefix)
+      ingestDeltas(spark, docs, st("concepts"), st("instances"), st("edges"),
+        batchEpoch)(d => store.appendAllSerialized(deltaTables(d, tablePrefix),
+        readSet0 - (tablePrefix + "epoch_log"))) match {
         case Some(r) => return r
         case None => attempt += 1 // cut moved: re-read, re-match, retry
       }
@@ -321,12 +314,11 @@ object IngestPipeline {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val st = storeState(spark, store, tablePrefix)
-        val d = ingestDeltas(spark, batch.toDF().localCheckpoint(true),
-          st("concepts"), st("instances"), st("edges"),
-          batchEpoch = batchId + 1)
-        graft.streaming.SnapshotSink.appendAllBatch(store,
-          deltaTables(d, tablePrefix), batchId)
+        val (st, _) = storeState(spark, store, tablePrefix)
+        ingestDeltas(spark, batch.toDF(), st("concepts"), st("instances"),
+          st("edges"), batchEpoch = batchId + 1)(d =>
+          graft.streaming.SnapshotSink.appendAllBatch(store,
+            deltaTables(d, tablePrefix), batchId))
         ()
       }
       .start()
@@ -345,16 +337,13 @@ object IngestPipeline {
         .outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           val s = state
-          // localCheckpoint each table so state doesn't chain plans across
-          // micro-batches (same lineage-truncation rule as the BFS loop)
-          val r = ingestBatch(spark, batch.toDF(), s.concepts, s.instances,
-            s.edges, s.epochLog, batchEpoch = batchId + 1)
-          state = IngestResult(
-            r.concepts.localCheckpoint(true),
-            r.instances.localCheckpoint(true),
-            r.edges.localCheckpoint(true),
-            r.epochLog.localCheckpoint(true),
-            r.matchedCount, r.createdCount)
+          // localCheckpoint truncates lineage, so state doesn't chain plans
+          // across micro-batches (the BFS loop's rule)
+          state = ingestBatchWith(spark, batch.toDF(), s.concepts,
+            s.instances, s.edges, s.epochLog, batchEpoch = batchId + 1) { r =>
+            r.copy(r.concepts.localCheckpoint(true), r.instances.localCheckpoint(true),
+              r.edges.localCheckpoint(true), r.epochLog.localCheckpoint(true))
+          }
           ()
         }
         .start()

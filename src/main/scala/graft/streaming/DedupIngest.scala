@@ -47,15 +47,12 @@ final class DedupIngest(spark: SparkSession, store: SnapshotStore,
     // (crash between sink success and checkpoint write) skips everything,
     // anti-join included.
     if (SnapshotSink.lastBatchId(store, indexTable).exists(_ >= batchId)) return
-    val ix = store.latestVersion(indexTable).map(_ => store.read(indexTable))
+    // Lazy outputs over ONE pinned index version: the docs append cannot
+    // move what the index append's anti-join reads.
+    val ix = store.latestVersion(indexTable).map(store.readAt(indexTable, _))
     val (fresh, delta) = Dedup.dedupAgainstIndex(batch, idCol, textCol, ix)
-    // Materialize BOTH outputs before any append: delta's lazy plan
-    // shares the anti-join against the pinned index version, and
-    // appending docs first must not re-run it against a moved pointer.
-    val freshM = fresh.localCheckpoint(true)
-    val deltaM = delta.localCheckpoint(true)
-    SnapshotSink.appendBatch(store, docsTable, freshM, batchId)
-    SnapshotSink.appendBatch(store, indexTable, deltaM, batchId)
+    SnapshotSink.appendBatch(store, docsTable, fresh, batchId)
+    SnapshotSink.appendBatch(store, indexTable, delta, batchId)
     ()
   }
 

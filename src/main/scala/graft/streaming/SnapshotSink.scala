@@ -18,6 +18,9 @@ import graft.core.SnapshotStore
   * read from the newest version's change set (O(delta), never a snapshot
   * scan) and the batch is skipped.
   *
+  * Deltas go to the store as lazy plans: it writes each once and drops an
+  * empty one, so nothing here checkpoints or probes a batch.
+  *
   * Contract: the table is written only through this sink (mixed writers
   * would leave `_batch_id`-less deltas on top and break the replay check);
   * batch ids are monotone per checkpoint, which Structured Streaming
@@ -43,23 +46,13 @@ object SnapshotSink {
           .map(_.asInstanceOf[Long]))
     }.collectFirst { case Some(id) => id }
 
-  /** Append one micro-batch idempotently; returns true iff the batch was
-    * new (false = replay of an already-committed id, skipped). Public so
-    * the replay contract is directly testable without crashing a query. */
+  /** Append one micro-batch idempotently: [[appendAllBatch]] over one
+    * table. True iff the batch was new (false = replay, skipped); an empty
+    * batch commits nothing. Public so the replay contract is directly
+    * testable without crashing a query. */
   def appendBatch(store: SnapshotStore, table: String,
-      batch: DataFrame, batchId: Long): Boolean = {
-    val replay = lastBatchId(store, table).exists(_ >= batchId)
-    if (!replay) {
-      // localCheckpoint: the batch plan must not re-execute against moved
-      // state when append evaluates it twice (snapshot union + change set)
-      val b = batch.withColumn("_batch_id", lit(batchId)).localCheckpoint(true)
-      // An empty micro-batch commits nothing: a zero-row version adds
-      // churn and carries no `_batch_id` evidence (its max is null), and
-      // skipping it is idempotent — a replayed empty batch skips again.
-      if (!b.isEmpty) store.append(table, b)
-    }
-    !replay
-  }
+      batch: DataFrame, batchId: Long): Boolean =
+    appendAllBatch(store, Map(table -> batch), batchId)
 
   /** Run a stream into `table` exactly-once. Plain foreachBatch
     * composition — checkpointing, triggers, and restart semantics are the
@@ -97,12 +90,8 @@ object SnapshotSink {
     store.recoverPendingTxns()
     val replay = split.keys.exists(t =>
       lastBatchId(store, t).exists(_ >= batchId))
-    if (!replay) {
-      val nonEmpty = split.toSeq.map { case (t, df) =>
-        t -> df.withColumn("_batch_id", lit(batchId)).localCheckpoint(true)
-      }.filter { case (_, b) => !b.isEmpty }.toMap
-      if (nonEmpty.nonEmpty) store.appendAll(nonEmpty)
-    }
+    if (!replay) store.appendAll(split.map { case (t, df) =>
+      t -> df.withColumn("_batch_id", lit(batchId)) })
     !replay
   }
 
@@ -116,9 +105,7 @@ object SnapshotSink {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // checkpoint the parent ONCE: every per-table projection then
-        // reads stable state however many times appendAll evaluates it
-        appendAllBatch(store, split(batch.toDF().localCheckpoint(true)), id)
+        appendAllBatch(store, split(batch.toDF()), id)
         ()
       }
       .start()

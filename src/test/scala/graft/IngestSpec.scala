@@ -172,4 +172,49 @@ class IngestSpec extends SparkSpec {
       .foreach { case (s0, d0) =>
         assert(cids.contains(s0) && cids.contains(d0)) }
   }
+
+  test("store ingest leaves no cache entry behind") {
+    import graft.core.SnapshotStore
+    val st = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-ing-cache").toString)
+    spark.catalog.clearCache()
+    (1L to 3L).foreach(e => IngestPipeline.ingestBatchToStore(spark, st, docs, e))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "every batch releases its extraction and resolved candidates")
+  }
+
+  test("twoTierMatch over an empty existing table leaves every candidate unmatched") {
+    val candidates = Seq(("c1", "alpha", Seq(1f, 0f)), ("c2", "beta", Seq(0f, 1f)))
+      .toDF("concept_id", "label", "embedding")
+    val m = IngestPipeline.twoTierMatch(candidates, emptyConcepts)
+      .select("concept_id", "resolved_id", "matched")
+      .as[(String, String, Boolean)].collect().sortBy(_._1).toSeq
+    assert(m == Seq(("c1", "c1", false), ("c2", "c2", false)))
+  }
+
+  test("a NaN-embedded existing concept absorbs no candidate") {
+    // cosine against a NaN element is NaN, and Spark holds NaN >= 0.75:
+    // unless the score is NULL, this concept matches every candidate
+    val existing = Seq(("nan", "broken",
+        MockExtractor.pseudoEmbedding("broken").toSeq.updated(0, Float.NaN)))
+      .toDF("concept_id", "label", "embedding")
+    val r = IngestPipeline.ingestBatch(spark, docs, existing, emptyInstances,
+      emptyEdges, emptyLog, batchEpoch = 1L)
+    assert(r.matchedCount == 0L && r.createdCount > 0L)
+    assert(r.concepts.where($"concept_id" === "nan").count() == 1L)
+    assert(!r.instances.select("concept_id").as[String].collect().contains("nan"))
+  }
+
+  test("one store-ingest batch runs at most 17 Spark jobs") {
+    import graft.core.SnapshotStore
+    val st = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-ing-jobs").toString)
+    IngestPipeline.ingestBatchToStore(spark, st, docs, batchEpoch = 1L)
+    val docs2 = Seq(
+      ("d3", "alpha observations support new theory building today again")
+    ).toDF("doc_id", "text")
+    val (_, jobs) = sparkJobsDuring(
+      IngestPipeline.ingestBatchToStore(spark, st, docs2, batchEpoch = 2L))
+    assert(jobs <= 17, s"$jobs Spark jobs for one batch")
+  }
 }

@@ -619,6 +619,42 @@ class KnowledgeGraphSpec extends SparkSpec {
     }
   }
 
+  test("a NaN or infinite embedding scores NULL on both paths and heads no answer") {
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import graft.functions.CosineSimilarity
+    val broken = Seq("inf", "nan")
+    // a shuffled copy, so the Spark plan runs the kernels instead of
+    // folding the local relation on the driver
+    val scanned = vecKg.concepts.repartition(2)
+    queries.take(8).zipWithIndex.foreach { case (q, i) =>
+      Seq(Map.empty[String, String], Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).foreach { conf =>
+        withSQLConf(conf.toSeq: _*) {
+          val sims = scanned.where(col("concept_id").isin(broken: _*))
+            .select(col("concept_id"),
+              CosineSimilarity(col("embedding"), typedLit(q)).as("folded"),
+              CosineSimilarity(col("embedding"), col("embedding")).as("generic"))
+            .collect().map(r => (r.getString(0), r.isNullAt(1), r.isNullAt(2)))
+          assert(sims.sortBy(_._1).toSeq == broken.map((_, true, true)), s"query $i $conf")
+        }
+      }
+      Seq(false, true).foreach { viaSpark =>
+        def run[T](f: => T): T = if (viaSpark) onSparkPath(f) else f
+        val hits = run(vecKg.search(q, 100, -1.0)).select("concept_id")
+          .as[String].collect().toSeq
+        assert(hits.nonEmpty && hits.forall(h => !broken.contains(h)),
+          s"query $i viaSpark $viaSpark: $hits")
+        val offered = run(vecKg.resolveLabel(q, 0.9, -1.0)) match {
+          case KnowledgeGraph.Resolved(m) => Seq(m.conceptId)
+          case KnowledgeGraph.DidYouMean(ms) => ms.map(_.conceptId)
+          case _ => Seq.empty
+        }
+        assert(offered.nonEmpty && offered.forall(h => !broken.contains(h)),
+          s"query $i viaSpark $viaSpark: $offered")
+      }
+    }
+  }
+
   test("related: the resident graph and table equal distributed bfs and the join, " +
       "under random rel-type and confidence filters") {
     val rnd = new scala.util.Random(5)

@@ -1640,4 +1640,66 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(st.readAt("concepts", cut("concepts")).count() == 0L)
     assert(st.readAt("edges", cut("edges")).count() == 0L)
   }
+
+  /** `ids` through a UDF that counts its calls: the frame and the count.
+    * Non-deterministic, so the optimizer never copies the call into a
+    * second expression. */
+  private def counted(ids: Seq[Long])
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.util.LongAccumulator) = {
+    val calls = spark.sparkContext.longAccumulator
+    val tick = org.apache.spark.sql.functions.udf { (x: Long) => calls.add(1L); x }
+      .asNondeterministic()
+    (ids.toDF("id").repartition(2).select(tick(col("id")).as("id")), calls)
+  }
+
+  test("every append path evaluates its delta once, and its change set is the delta") {
+    // (path, write one counted delta per table, the versions it committed)
+    type Write = (SnapshotStore, Map[String, org.apache.spark.sql.DataFrame]) =>
+      Map[String, Long]
+    val paths: Seq[(String, Seq[String], Write)] = Seq(
+      ("append", Seq("a"), (st, d) => Map("a" -> st.append("a", d("a")))),
+      ("appendAll", Seq("a", "b"), (st, d) => st.appendAll(d)),
+      ("appendAllSerialized", Seq("a", "b"), (st, d) =>
+        st.appendAllSerialized(d, Map("a" -> st.latestVersion("a"))).get),
+      ("appendBucketedIfHead", Seq("a"), (st, d) => Map("a" ->
+        st.appendBucketedIfHead("a", d("a"), Seq("id"), Seq(4),
+          st.latestVersion("a")).get)))
+    paths.foreach { case (name, tables, write) =>
+      val st = freshStore()
+      tables.foreach(t =>
+        if (name == "appendBucketedIfHead")
+          st.commitBucketed(t, Seq(0L).toDF("id"), Seq("id"), Seq(4), None)
+        else st.append(t, Seq(0L).toDF("id")))
+      val rows = tables.zipWithIndex.map { case (t, i) =>
+        t -> (1L to 5L).map(_ + 10L * i) }.toMap
+      val deltas = rows.map { case (t, ids) => t -> counted(ids) }
+      val committed = write(st, deltas.map { case (t, (df, _)) => t -> df })
+      assert(committed.keySet == tables.toSet, name)
+      tables.foreach { t =>
+        assert(deltas(t)._2.value == rows(t).size.toLong,
+          s"$name: $t's delta evaluated ${deltas(t)._2.value} times for ${rows(t).size} rows")
+        val changes = st.changesAt(t, committed(t))
+          .getOrElse(fail(s"$name: $t recorded no change set"))
+        assert(changes.select("id").as[Long].collect().sorted.toSeq == rows(t), name)
+        assert(st.read(t).select("id").as[Long].collect().sorted.toSeq ==
+          0L +: rows(t), name)
+      }
+    }
+  }
+
+  test("appendAll over an empty and a non-empty delta commits only the non-empty table") {
+    val st = freshStore()
+    st.append("a", Seq(1L).toDF("id"))
+    st.append("b", Seq(1L).toDF("id"))
+    val aBefore = st.history("a")
+    val (committed, jobs) = sparkJobsDuring(st.appendAll(Map(
+      "a" -> spark.range(0).toDF("id"), "b" -> Seq(2L, 3L).toDF("id"))))
+    assert(committed.keySet == Set("b"))
+    assert(jobs <= 2, s"$jobs Spark jobs: one write per delta and nothing else")
+    assert(st.history("a") == aBefore, "the empty delta committed no version")
+    assert(ids(st, "b") == Seq(1L, 2L, 3L))
+    assert(st.changesAt("b", committed("b")).get.count() == 2L)
+    Seq("a", "b").foreach(t => assert(orphanDirs(st.root, t).isEmpty,
+      s"$t: ${orphanDirs(st.root, t)}"))
+  }
 }

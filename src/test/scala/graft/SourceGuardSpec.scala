@@ -23,7 +23,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The choice between a driver-resident structure and the Spark engines
   * has one owner: an `AccelCache` is constructed, and `probeAndLoad` is
-  * called, only in `graph/GraphOps.scala`. */
+  * called, only in `graph/GraphOps.scala`.
+  *
+  * An append records its change set one way: the store copies the delta
+  * files it wrote into `_changes/`. A `commitWith(` call handed the same
+  * identifier as data and as change set (`Some(x), Some(x)`) would
+  * evaluate the delta twice, and fails here with `file:line`. */
 class SourceGuardSpec extends AnyFunSuite {
   private val lazyCheckpoint = Seq(
     """\b(?:localCheckpoint|checkpoint)\s*\(\s*\)""",
@@ -166,5 +171,39 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"AccelCache and probeAndLoad belong to GraphOps: ${offenders.mkString(", ")}")
     assert(residencyChoiceLines(linesOf(owner)).nonEmpty)
+  }
+
+  /** A `commitWith(` call whose data and change set are one identifier. */
+  private val doubleEvaluatedAppend =
+    """\bcommitWith\s*\(.*\bSome\((\w+)\)\s*,\s*(?:changeSet\s*=\s*)?Some\(\1\)""".r
+
+  /** 1-based numbers of the lines that write one frame twice. */
+  private def doubleEvaluatedAppendLines(lines: Seq[String]): Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (line, i) if code(line).exists(doubleEvaluatedAppend.findFirstIn(_).isDefined) => i + 1
+    }
+
+  test("the change-set matcher flags one frame passed as data and change set only") {
+    val flagged = Seq(
+      "    val v = commitWith(table, Some(rows), Some(rows), base = base,",
+      "      val v = commitWith(t, Some(df),Some(df), base = base,",
+      "    commitWith(table, Some(routed), changeSet = Some(routed),")
+    val passed = Seq(
+      "    val v = commitWith(table, Some(rows), None, base = base,",
+      "    commitWith(table, Some(df), changeSet, base = None,",
+      "    commitWith(table, Some(df), Some(dfChanges), base = None,",
+      "    // commitWith(t, Some(df), Some(df)) in prose",
+      "    write(Some(df), Some(df))")
+    assert(doubleEvaluatedAppendLines(flagged) == flagged.indices.map(_ + 1))
+    assert(doubleEvaluatedAppendLines(passed).isEmpty)
+  }
+
+  test("src/main/scala never hands commitWith one frame as data and change set") {
+    val offenders = mainSources().flatMap { f =>
+      doubleEvaluatedAppendLines(linesOf(f)).map(n => s"$f:$n")
+    }
+    assert(offenders.isEmpty,
+      "an append's change set is a copy of its written files (appendCandidate): " +
+        offenders.mkString(", "))
   }
 }

@@ -23,6 +23,25 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `f`'s result and the Spark jobs started while it ran, counted by a
+    * SparkListener (events post asynchronously, so the count settles
+    * after a short wait). */
+  def sparkJobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Data files the executed plan will actually scan — pins FileIndex-level
     * pruning (zone maps) where result equality alone can't see it. */
   def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
