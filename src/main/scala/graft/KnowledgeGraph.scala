@@ -238,41 +238,78 @@ final case class KnowledgeGraph(
     * card — label, distinct source documents, evidence count, in/out
     * semantic degree, grounding strength, confidence score+level.
     *
-    * A point lookup in one pass: the concept's own rows — its `concepts`
-    * row, its semantic edges (`src` or `dst` = id, rel type in the vocab),
-    * its `evidence` and `instances` rows — are filtered at the scan,
-    * unioned and folded by ONE global aggregate (one exchange, two Spark
-    * jobs once `vocabConstants` is warm). The scores go through the
-    * same [[Scoring]] helpers as the whole-graph [[grounding]] and
-    * [[confidence]], so the card equals their row for the concept:
-    * `grounding_strength` is NULL without an incoming semantic edge, and
-    * the confidence columns are NULL without a semantic edge or an
-    * evidence row. The card's `evidence_count` counts `instances`; the
-    * confidence signal's evidence count counts `evidence` rows. An
-    * unknown id gives no row. A vocab that repeats a relationship_type
-    * is refused: the whole-graph join would count such a type's edges
-    * once per vocab row. */
+    * A lookup: every concept's card is computed once per snapshot by
+    * [[cardPlan]] and held on the driver ([[GraphOps.residentCards]]:
+    * loaded once per card plan while it fits the concept byte budget), and
+    * the card returns as a local relation, so a warm call runs no Spark
+    * job — the reference likewise serves the card from per-concept values
+    * it already holds. Cards over the budget run the same plan as a point
+    * lookup (`id` pushed into each scan; two Spark jobs once
+    * `vocabConstants` is warm). Both give the same schema and rows. The
+    * scores go through the same [[Scoring]] helpers as the whole-graph
+    * [[grounding]] and [[confidence]], so the card equals their row for
+    * the concept: `grounding_strength` is NULL without an incoming
+    * semantic edge, and the confidence columns are NULL without a
+    * semantic edge or an evidence row. The card's `evidence_count` counts
+    * `instances`; the confidence signal's evidence count counts `evidence`
+    * rows. A NULL or unknown id gives no row; a duplicated concept row
+    * gives one card per row. A vocab that repeats a relationship_type is
+    * refused, on both paths: the whole-graph join would count such a
+    * type's edges once per vocab row. */
   def conceptDetails(conceptId: String): DataFrame = {
+    val vc = cardVocab
+    GraphOps.residentCards(cards) match {
+      case Some(t) => t.lookup(spark, conceptId)
+      case None => cardPlan(vc, Some(conceptId))
+    }
+  }
+
+  /** [[vocabConstants]] once the card's checks pass: it fails without an
+    * opposing pair, and a repeated relationship_type is refused. */
+  private def cardVocab: KnowledgeGraph.VocabConstants = {
     val vc = vocabConstants
     require(vc.repeated.isEmpty, "conceptDetails: vocab repeats relationship_type " +
       s"${vc.repeated.mkString(", ")}; the card needs one polarity projection per type")
-    val id = lit(conceptId)
+    vc
+  }
+
+  /** Every concept's card, [[cardPlan]] with no key. Planned once per
+    * instance (it is pinned to one snapshot), so every call hands the card
+    * cache the same plan. */
+  private[graft] lazy val cards: DataFrame = cardPlan(cardVocab, None)
+
+  /** The concept card as ONE grouped aggregate. Concept, evidence and
+    * instance rows are keyed by their `concept_id`; each semantic edge
+    * (rel type in the vocab) gives two rows, its `src` row marked out and
+    * its `dst` row marked in, so a self-loop counts once each way. The
+    * rows are grouped by key, scored, and joined to the key's concept rows
+    * by `inline`. `key` Some(id) keeps only `id`'s rows, filtered at each
+    * scan (the point lookup); None keeps every non-NULL key (every card). */
+  private def cardPlan(vc: KnowledgeGraph.VocabConstants, key: Option[String]): DataFrame = {
+    def at(c: Column): Column = key.fold(c.isNotNull)(c === lit(_))
     val projection = map(vc.projection.toSeq.flatMap { case (t, p) =>
       Seq(lit(t), p.fold(lit(null).cast("double"))(lit)) }: _*)
-    val rows = concepts.where(col("concept_id") === id)
-      .select(struct(col("concept_id"), col("label")).as("__concept"))
+    def end(node: String, out: Boolean): Column =
+      struct(col(node).as("__key"), lit(out).as("__out"), lit(!out).as("__in"))
+    val rows = concepts.where(at(col("concept_id")))
+      .select(col("concept_id").as("__key"),
+        struct(col("concept_id"), col("label")).as("__concept"))
       .unionByName(edges
-        .where((col("src") === id || col("dst") === id) &&
+        .where((at(col("src")) || at(col("dst"))) &&
           col("rel_type").isin(vc.projection.keys.toSeq: _*))
-        .select((col("src") === id).as("__out"), (col("dst") === id).as("__in"),
+        .select(explode(array(end("src", out = true), end("dst", out = false))).as("__end"),
           col("rel_type"), col("confidence"),
-          element_at(projection, col("rel_type")).as("__proj")),
+          element_at(projection, col("rel_type")).as("__proj"))
+        .where(at(col("__end.__key")))
+        .select(col("__end.*"), col("rel_type"), col("confidence"), col("__proj")),
         allowMissingColumns = true)
-      .unionByName(evidence.where(col("concept_id") === id)
-        .select(lit(true).as("__evidence"), col("source_id")), allowMissingColumns = true)
-      .unionByName(instances.where(col("concept_id") === id)
-        .select(lit(true).as("__instance")), allowMissingColumns = true)
-    val signals = rows
+      .unionByName(evidence.where(at(col("concept_id")))
+        .select(col("concept_id").as("__key"), lit(true).as("__evidence"), col("source_id")),
+        allowMissingColumns = true)
+      .unionByName(instances.where(at(col("concept_id")))
+        .select(col("concept_id").as("__key"), lit(true).as("__instance")),
+        allowMissingColumns = true)
+    val signals = rows.groupBy(col("__key"))
       .agg(
         collect_list(col("__concept")).as("__concepts"),
         // collect_set, not countDistinct: distinct aggregates would add

@@ -63,10 +63,12 @@ object Scoring {
 
   /** Polarity axis: mean of the opposing-pair difference vectors,
     * L2-normalized — a driver-side constant computed from the (tiny) vocab
-    * table (grounding.py:125-204). vocab: (relationship_type, embedding). */
+    * table (grounding.py:125-204). vocab: (relationship_type, embedding).
+    * A type without an embedding forms no pair. */
   def polarityAxis(vocab: DataFrame, pairs: Seq[(String, String)]): Array[Double] = {
     val emb = vocab.select(col("relationship_type"),
         col("embedding").cast("array<double>").as("e"))
+      .where(col("e").isNotNull)
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
     val diffs = pairs.flatMap { case (pos, neg) =>
       for (p <- emb.get(pos); n <- emb.get(neg))
@@ -320,10 +322,13 @@ object Scoring {
   }
 
   /** A13: epistemic status classification of relationship types from
-    * sampled grounding stats (epistemic_status_service.py:1-50). */
+    * sampled grounding stats (epistemic_status_service.py:1-50): under 3
+    * samples, or a NULL sample count or mean, is INSUFFICIENT_DATA; then
+    * mean > 0.8 WELL_GROUNDED, < -0.5 CONTRADICTED, >= 0
+    * PARTIALLY_GROUNDED, else WEAKLY_CONTRADICTED. */
   def epistemicStatus(perType: DataFrame, avgCol: String, nCol: String): DataFrame =
     perType.withColumn("epistemic_status",
-      when(col(nCol) < 3, "INSUFFICIENT_DATA")
+      when(col(nCol).isNull || col(avgCol).isNull || col(nCol) < 3, "INSUFFICIENT_DATA")
         .when(col(avgCol) > 0.8, "WELL_GROUNDED")
         .when(col(avgCol) < -0.5, "CONTRADICTED")
         .when(col(avgCol) >= 0.0, "PARTIALLY_GROUNDED")

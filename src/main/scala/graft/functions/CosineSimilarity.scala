@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<double>` columns, with whole-stage codegen.
@@ -14,10 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Python `cosine_similarity` 15+ times (reference
   * api/app/lib/similarity_calculator.py:31-80) and runs it row-at-a-time on
   * the driver; here it compiles into the generated stage so a 100 TB scan
-  * never leaves codegen. Null in either input, mismatched lengths, or a
-  * non-finite result (zero norm, a NaN or infinite element) yields NULL —
-  * Spark ranks NaN above every number — (the reference returns 0.0 for
-  * zero-norm; callers that need that use `coalesce(cosine, 0.0)`).
+  * never leaves codegen. Null in either input, a NULL element, mismatched
+  * lengths, or a non-finite result (zero norm, a NaN or infinite element)
+  * yields NULL — Spark ranks NaN above every number — (the reference
+  * returns 0.0 for zero-norm; callers that need that use
+  * `coalesce(cosine, 0.0)`).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -52,35 +54,50 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (!right.foldable) None
     else Option(right.eval(org.apache.spark.sql.catalyst.InternalRow.empty))
       .flatMap { r =>
-        val arr = r.asInstanceOf[ArrayData].toDoubleArray()
+        val data = r.asInstanceOf[ArrayData]
+        val arr = data.toDoubleArray()
         val qn = CosineSimilarity.norm(arr)
-        // NaN/Inf norms also fall back (the result is degenerate either way)
-        if (qn == 0.0 || java.lang.Double.isNaN(qn) || java.lang.Double.isInfinite(qn)) None
+        // NaN/Inf norms and NULL elements also fall back (the result is
+        // degenerate either way)
+        if (qn == 0.0 || java.lang.Double.isNaN(qn) || java.lang.Double.isInfinite(qn) ||
+          CosineSimilarity.holdsNull(data)) None
         else Some((arr, qn))
       }
 
+  // only a side that can hold a NULL element pays the NULL-element check
+  @transient private lazy val leftHoles = CosineSimilarity.mayHoldNull(left)
+  @transient private lazy val rightHoles = CosineSimilarity.mayHoldNull(right)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData].toDoubleArray()
+    val xs = a.asInstanceOf[ArrayData]
+    if (leftHoles && CosineSimilarity.holdsNull(xs)) return null
+    val x = xs.toDoubleArray()
     foldedRight match {
       case Some((q, qn)) => CosineSimilarity.score(x, 0, x.length, q, qn)
       case None =>
-        val y = b.asInstanceOf[ArrayData].toDoubleArray()
+        val ys = b.asInstanceOf[ArrayData]
+        if (rightHoles && CosineSimilarity.holdsNull(ys)) return null
+        val y = ys.toDoubleArray()
         CosineSimilarity.score(x, 0, x.length, y, CosineSimilarity.norm(y))
     }
   }
 
   /** Both generated kernels spell out [[CosineSimilarity.score]]'s loop
-    * and final check (same order, so the same bits and NULLs). The folded
-    * query and its norm enter as reference objects, never as source text: the
-    * codegen cache is keyed by the generated source, so a compiled-in
-    * value would compile a fresh class for every distinct query vector
-    * and churn the cache every other query shares. */
+    * and final check (same order, so the same bits and NULLs). A side that
+    * can hold a NULL element adds [[CosineSimilarity.holdsNull]] to the
+    * length check, once per row, so the loop itself never tests an
+    * element. The folded query and its norm enter as reference objects, never
+    * as source text: the codegen cache is keyed by the generated source, so
+    * a compiled-in value would compile a fresh class for every distinct
+    * query vector and churn the cache every other query shares. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val i = ctx.freshName("i")
     val n = ctx.freshName("n")
     val dot = ctx.freshName("dot")
     val nx = ctx.freshName("nx")
     val xv = ctx.freshName("xv")
+    def hole(holes: Boolean, arr: String): String =
+      if (holes) s" || graft.functions.CosineSimilarity.holdsNull($arr)" else ""
     foldedRight match {
       case Some((q, qn)) =>
         val qref = ctx.addReferenceObj("cosineQuery", q, "double[]")
@@ -88,7 +105,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
         nullSafeCodeGen(ctx, ev, (a, _) => {
           s"""
              |final int $n = $a.numElements();
-             |if ($n != $qref.length) {
+             |if ($n != $qref.length${hole(leftHoles, a)}) {
              |  ${ev.isNull} = true;
              |} else {
              |  double $dot = 0.0; double $nx = 0.0;
@@ -107,7 +124,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
         nullSafeCodeGen(ctx, ev, (a, b) => {
           s"""
              |final int $n = $a.numElements();
-             |if ($n != $b.numElements()) {
+             |if ($n != $b.numElements()${hole(leftHoles, a)}${hole(rightHoles, b)}) {
              |  ${ev.isNull} = true;
              |} else {
              |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
@@ -142,10 +159,12 @@ object CosineSimilarity {
   /** The one cosine scoring loop: `x[off, off + n)` against the query `q`
     * of norm `qn` (see [[norm]]). NULL when the lengths differ or the
     * result is not finite (a zero norm, a NaN or infinite element).
-    * Products accumulate left to right, as in the generated kernels, so every engine that scores through here — the expression's
-    * interpreted path and the driver-resident concept table — returns the
-    * codegen path's bits. A null element of `x` reads as 0.0, as
-    * `ArrayData.getDouble` reads it. */
+    * Products accumulate left to right, as in the generated kernels, so
+    * every engine that scores through here — the expression's interpreted
+    * path and the driver-resident concept table — returns the codegen
+    * path's bits. `x` holds no NULL element: both callers give NULL for a
+    * row with one before scoring it ([[holdsNull]], and the concept
+    * table's `vecLen = -1`). */
   def score(x: Array[Double], off: Int, n: Int, q: Array[Double],
       qn: Double): java.lang.Double = {
     if (n != q.length) return null
@@ -157,6 +176,30 @@ object CosineSimilarity {
     }
     val r = dot / (math.sqrt(nx) * qn)
     if (java.lang.Double.isFinite(r)) r else null
+  }
+
+  /** Whether the array `e` evaluates to can hold a NULL element. A cast
+    * that cannot make a NULL element out of a non-NULL one (float to
+    * double, say) is looked through, since the Column entry point casts
+    * every input. */
+  private def mayHoldNull(e: Expression): Boolean = e match {
+    case c: Cast => c.child.dataType match {
+      case ArrayType(t, containsNull) => containsNull || Cast.forceNullable(t, DoubleType)
+      case _ => true
+    }
+    case _ => e.dataType.asInstanceOf[ArrayType].containsNull
+  }
+
+  /** Whether any element of `a` is NULL. An unsafe array keeps one null
+    * bit per element in the words after its 8-byte element count, so its
+    * check reads one word per 64 elements. */
+  def holdsNull(a: ArrayData): Boolean = a match {
+    case u: UnsafeArrayData =>
+      BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8, (u.numElements() + 63) / 64)
+    case _ =>
+      var i = 0
+      while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+      false
   }
 
   /** Column-API entry point: `cosine(a, b)`. */

@@ -45,12 +45,14 @@ import scala.collection.mutable
   * confidences, so every filter subset traverses the one resident graph;
   * only a view over the edge threshold falls back to the distributed
   * iterative-join engines below, which filter in [[oriented]] and also
-  * serve as the differential specs' reference. The facade's concept table
-  * goes through the same dispatch ([[residentConcepts]]): it loads once
-  * per `concepts` plan, in one job, while its resident bytes fit
-  * [[ConceptTable.BudgetBytes]], and then search, fuse and label
-  * hydration run on the driver with no Spark job; a larger table keeps
-  * the facade's Spark plans.
+  * serve as the differential specs' reference. Four kinds are resident,
+  * each in its own cache: unweighted graphs, weighted graphs, the
+  * facade's concept tables ([[residentConcepts]]) and its concept cards
+  * ([[residentCards]]). A concept table loads once per `concepts` plan,
+  * and the cards once per card plan, each in one result task, while its
+  * resident bytes fit [[ConceptTable.BudgetBytes]]; then search, fuse,
+  * label hydration and the concept card run on the driver with no Spark
+  * job. A larger table keeps the facade's Spark plans.
   */
 object GraphOps {
 
@@ -433,17 +435,21 @@ object GraphOps {
   private val conceptTables =
     new AccelCache[ConceptTable](4, 16, identity, ConceptTable.load)
 
-  /** The byte budget concept tables load against,
+  /** Resident concept cards, keyed by the card plan over the whole
+    * snapshot and sized in bytes against [[conceptBudget]]. */
+  private val cardTables = new AccelCache[CardTable](4, 16, identity, CardTable.load)
+
+  /** The byte budget concept tables and concept cards load against,
     * [[ConceptTable.BudgetBytes]]. Specs lower it to send the facade down
     * its Spark path; nothing else writes it. */
   @volatile private[graft] var conceptBudget: Long = ConceptTable.BudgetBytes
 
-  /** Evict every cached accelerator graph and concept table
+  /** Evict every cached accelerator graph, concept table and card table
     * (graph_accel_invalidate analog). Needed only when INPUT FILES are
     * rewritten in place; versioned snapshot writes change paths and
     * therefore miss the cache naturally. */
   def invalidateAccel(): Unit = {
-    graphs.clear(); weightedGraphs.clear(); conceptTables.clear()
+    graphs.clear(); weightedGraphs.clear(); conceptTables.clear(); cardTables.clear()
   }
 
   /** (loaded graphs, total resident nodes, memoized over-threshold
@@ -465,6 +471,12 @@ object GraphOps {
   private[graft] def residentConcepts(concepts: DataFrame): Option[ConceptTable] =
     if (!ConceptTable.eligible(concepts.schema)) None
     else probeAndLoad(concepts, conceptBudget, conceptTables)
+
+  /** The resident concept cards of the facade's card plan `cards` (every
+    * concept's card), loaded on first use in one collect; None when they
+    * exceed the budget, and the card's point lookup answers instead. */
+  private[graft] def residentCards(cards: DataFrame): Option[CardTable] =
+    probeAndLoad(cards, conceptBudget, cardTables)
 
   /** The one residency decision: a cache hit answers at once; a miss
     * loads the cache's view of `input` against the threshold and

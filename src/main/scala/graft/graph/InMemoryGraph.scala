@@ -590,7 +590,8 @@ object WeightedGraph {
   * resident accelerator rather than from a query plan per call
   * (graph_facade.py:186-411). It holds the rows of `concepts` (every
   * column, as Spark would return them), the embeddings as one row-major
-  * matrix (each row at `vecOff`, `vecLen` long; -1 for a NULL embedding)
+  * matrix (each row at `vecOff`, `vecLen` long; -1 for a NULL embedding
+  * or one with a NULL element)
   * and an id → row index for label hydration. Loaded once per
   * canonicalized `concepts` plan through [[GraphOps]]' accelerator
   * dispatch, and only while it fits [[ConceptTable.BudgetBytes]].
@@ -619,8 +620,8 @@ final class ConceptTable private (
     .filter(ids(_) != null).groupBy(ids(_).toString).map { case (k, v) => k -> v.toArray }
 
   /** Each row's cosine against `q` (of norm `qn`), boxed NULL where Spark
-    * gives NULL: a NULL embedding, a zero-norm query, a length mismatch
-    * or a zero-norm embedding. */
+    * gives NULL: a NULL embedding or element, a zero-norm query, a length
+    * mismatch or a zero-norm embedding. */
   private def scores(q: Array[Double]): Array[java.lang.Double] = {
     val qn = CosineSimilarity.norm(q)
     Array.tabulate(rows.length) { i =>
@@ -706,15 +707,17 @@ final class ConceptTable private (
 object ConceptTable {
   import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-  /** Resident bytes (concept rows plus the 8-byte embedding matrix) past
-    * which the table stays in Spark. The serve-size KG (2,000 concepts ×
-    * 64 dims) is ~1.5 MB; 64 MiB holds ~100k such concepts or ~5k at
-    * 1,536 dims — the interactive scale the reference's accelerator
-    * serves (its whole graph was 312 KB) — while a few resident tables
-    * stay small beside a 2-4 GB driver heap. A larger table is cluster
-    * territory: its scored scan distributes. A constant, not a setting:
-    * the resident and Spark answers are equal, so the choice is only
-    * where the bytes live. */
+  /** Resident bytes past which a table stays in Spark: for the concept
+    * table, its rows plus the 8-byte embedding matrix; for the concept
+    * cards ([[CardTable]]), their rows. The serve-size KG (2,000 concepts
+    * × 64 dims) is ~1.5 MB of concept table and ~0.2 MB of cards; 64 MiB
+    * holds ~100k such concepts or ~5k at 1,536 dims — the interactive
+    * scale the reference's accelerator serves (its whole graph was
+    * 312 KB) — while a few resident tables stay small beside a 2-4 GB
+    * driver heap. A larger table is cluster territory: its scored scan and
+    * its card aggregate distribute. A constant, not a setting: the
+    * resident and Spark answers are equal, so the choice is only where
+    * the bytes live. */
   val BudgetBytes: Long = 64L << 20
 
   /** The tables the facade reads have `concept_id` and `label` strings
@@ -732,33 +735,46 @@ object ConceptTable {
       }) && !schema.fieldNames.exists(_.equalsIgnoreCase("sim"))
   }
 
-  /** Load `concepts` in ONE Spark job of one task — a scan coalesced to a
-    * single partition that stops reading as soon as the rows' resident
-    * bytes pass `budget`, so an over-budget table ships at most `budget`
-    * bytes and never its whole extent. Some((bytes, rows, table)) when it
-    * fits, None past the budget. */
-  private[graph] def load(concepts: DataFrame, budget: Long): Option[(Long, Int, ConceptTable)] = {
+  /** The rows of `df` in ONE result task — the plan coalesced to a single
+    * partition that stops reading as soon as the rows' resident bytes
+    * (each row's unsafe size plus `extra` of it) pass `budget`, so an
+    * over-budget plan ships at most `budget` bytes and never its whole
+    * extent. Some((bytes, rows)) when they fit, None past the budget. The
+    * one residency collect of [[ConceptTable]] and [[CardTable]]. */
+  private[graph] def collectWithin(df: DataFrame, budget: Long, what: String)(
+      extra: org.apache.spark.sql.catalyst.InternalRow => Long)
+      : Option[(Long, Array[org.apache.spark.sql.catalyst.InternalRow])] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-    val schema = concepts.schema
-    val emb = schema.fieldIndex("embedding")
-    val qe = concepts.coalesce(1).queryExecution
-    val taken = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
-        Some("resident concept table")) {
+    val schema = df.schema
+    val qe = df.coalesce(1).queryExecution
+    val taken = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(what)) {
       qe.toRdd.mapPartitions { it =>
         val toUnsafe = UnsafeProjection.create(schema)
         val buf = mutable.ArrayBuffer.empty[InternalRow]
         var bytes = 0L
         while (bytes <= budget && it.hasNext) {
           val r = toUnsafe(it.next()).copy()
-          bytes += r.getSizeInBytes + 8L * (if (r.isNullAt(emb)) 0 else r.getArray(emb).numElements())
+          bytes += r.getSizeInBytes + extra(r)
           buf += r
         }
         Iterator((bytes, if (bytes <= budget) buf.toArray else null))
       }.collect()
     }
-    val bytes = taken.map(_._1).sum
-    Option(taken.headOption.fold(Array.empty[InternalRow])(_._2)).map { rs =>
+    Option(taken.headOption.fold(Array.empty[InternalRow])(_._2))
+      .map(taken.map(_._1).sum -> _)
+  }
+
+  /** Load `concepts` through [[collectWithin]], counting each row's
+    * embedding as 8 bytes an element. Some((bytes, rows, table)) when it
+    * fits, None past the budget. A row whose embedding holds a NULL
+    * element has no vector (`vecLen` -1), as a NULL embedding has: the
+    * cosine is NULL for both. */
+  private[graph] def load(concepts: DataFrame, budget: Long): Option[(Long, Int, ConceptTable)] = {
+    val schema = concepts.schema
+    val emb = schema.fieldIndex("embedding")
+    collectWithin(concepts, budget, "resident concept table")(r =>
+      8L * (if (r.isNullAt(emb)) 0 else r.getArray(emb).numElements())).map { case (bytes, rs) =>
       val floats = schema("embedding").dataType match {
         case ArrayType(FloatType, _) => true
         case _ => false
@@ -766,7 +782,10 @@ object ConceptTable {
       val (idAt, labelAt) = (schema.fieldIndex("concept_id"), schema.fieldIndex("label"))
       val ids = rs.map(r => if (r.isNullAt(idAt)) null else r.getUTF8String(idAt).clone())
       val labels = rs.map(r => if (r.isNullAt(labelAt)) null else r.getUTF8String(labelAt).toString)
-      val vecLen = rs.map(r => if (r.isNullAt(emb)) -1 else r.getArray(emb).numElements())
+      val vecLen = rs.map(r => if (r.isNullAt(emb)) -1 else {
+        val a = r.getArray(emb)
+        if (graft.functions.CosineSimilarity.holdsNull(a)) -1 else a.numElements()
+      })
       val vecOff = vecLen.scanLeft(0)((o, n) => o + math.max(n, 0)).init
       val matrix = new Array[Double](vecLen.map(math.max(_, 0)).sum)
       rs.indices.foreach { i =>
@@ -780,6 +799,43 @@ object ConceptTable {
         }
       }
       (bytes, rs.length, new ConceptTable(schema, rs, ids, labels, vecOff, vecLen, matrix))
+    }
+  }
+}
+
+/** The driver-resident concept cards: every concept's
+  * [[graft.KnowledgeGraph.conceptDetails]] card, computed by the card's
+  * grouped aggregate over the whole snapshot in one collect and held by
+  * concept id — the reference keeps such per-concept values on the
+  * Concept node (schema/init.cypher:36-43) instead of computing them per
+  * request. Loaded once per canonicalized card plan through [[GraphOps]]'
+  * accelerator dispatch, and only while it fits
+  * [[ConceptTable.BudgetBytes]]. A card answers as a LocalRelation with
+  * the Spark card's schema, so collecting it runs no job. */
+final class CardTable private (schema: StructType, byId: Map[String, Array[Row]]) {
+  import org.apache.spark.sql.SparkSession
+
+  /** The card rows of `id` — one per concept row of `id`, none for a NULL
+    * or unknown id. */
+  def lookup(spark: SparkSession, id: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(byId.getOrElse(id, Array.empty[Row]): _*), schema)
+}
+
+object CardTable {
+
+  /** Load the card plan through [[ConceptTable.collectWithin]].
+    * Some((bytes, rows, table)) when it fits, None past the budget. */
+  private[graph] def load(cards: DataFrame, budget: Long): Option[(Long, Int, CardTable)] = {
+    val schema = cards.schema
+    val idAt = schema.fieldIndex("concept_id")
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow => Row]
+    ConceptTable.collectWithin(cards, budget, "resident concept cards")(_ => 0L).map {
+      case (bytes, rs) =>
+        val rows = rs.map(toRow)
+        (bytes, rows.length, new CardTable(schema, rows.groupBy(_.getString(idAt))))
     }
   }
 }

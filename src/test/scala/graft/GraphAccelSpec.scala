@@ -67,15 +67,7 @@ class GraphAccelSpec extends SparkSpec {
     val g = Seq(("x", "y"), ("y", "z"), ("z", "w")).toDF("src", "dst")
     // prime the cache (probe + load jobs run here)
     GraphOps.bfsAuto(g, Seq("x"), 3, Outgoing).count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = sparkJobsDuring {
       // the traversal itself is driver-side on the cached adjacency — only
       // materializing the RESULT DataFrame may schedule work, so call the
       // path that returns plain values
@@ -87,9 +79,8 @@ class GraphAccelSpec extends SparkSpec {
       val ranks = GraphOps.pageRankAuto(g, iterations = 2)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(ranks("y") > ranks("x")) // y has incoming mass, x has none
-      Thread.sleep(500) // listener events post asynchronously
-      assert(jobs.get() == 0, s"expected zero jobs on cache hit, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"expected zero jobs on cache hit, saw $jobs")
   }
 
   test("a threshold at or past Int.MaxValue still dispatches to the accelerator") {

@@ -199,19 +199,8 @@ class KnowledgeGraphSpec extends SparkSpec {
 
   test("a warm conceptDetails runs at most 2 Spark jobs") {
     kg.conceptDetails("c2").collect() // warms the vocab memo
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      kg.conceptDetails("c1").collect()
-      Thread.sleep(500) // listener events post asynchronously
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 2, s"expected at most 2 Spark jobs, saw ${jobs.get()}")
+    val (_, jobs) = sparkJobsDuring(kg.conceptDetails("c1").collect())
+    assert(jobs <= 2, s"expected at most 2 Spark jobs, saw $jobs")
   }
 
   test("lifetime pages the ordered re-evidence stream (T8)") {
@@ -240,21 +229,9 @@ class KnowledgeGraphSpec extends SparkSpec {
   test("findPath and findPaths answer from the graph related loaded, with no Spark job") {
     kg.related("c1", maxDepth = 2).collect() // loads the semantic graph
     val statusBefore = GraphOps.accelStatus
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (path, paths) =
-      try {
-        val r = (kg.findPath("c4", "c3"), kg.findPaths("c1", "c3", maxPaths = 3))
-        Thread.sleep(500) // listener events post asynchronously
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, s"expected no Spark job, saw ${jobs.get()}")
+    val ((path, paths), jobs) = sparkJobsDuring(
+      (kg.findPath("c4", "c3"), kg.findPaths("c1", "c3", maxPaths = 3)))
+    assert(jobs == 0, s"expected no Spark job, saw $jobs")
     assert(GraphOps.accelStatus == statusBefore, "no load, no eviction")
     assert(path.contains((2, Seq("c4", "c1", "c3"))))
     assert(paths == Seq((1, Seq("c1", "c3")), (2, Seq("c1", "c2", "c3"))))
@@ -537,23 +514,6 @@ class KnowledgeGraphSpec extends SparkSpec {
     assert(resident.collect().toSeq.map(bits) == viaSpark.collect().toSeq.map(bits), what)
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500) // listener events post asynchronously
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** A concept table for the differential specs: seeded random 6-dim
     * float embeddings plus every edge case of the scoring contract. */
   lazy val vecKg: KnowledgeGraph = {
@@ -655,6 +615,164 @@ class KnowledgeGraphSpec extends SparkSpec {
     }
   }
 
+  test("an embedding with a NULL element scores NULL on both paths, codegen on and off") {
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import graft.functions.CosineSimilarity
+    // shuffled copies, so the Spark plan runs the kernels instead of
+    // folding the local relation on the driver: float elements reach the
+    // kernels cast, double ones as the shuffled (unsafe) arrays themselves
+    val scanned = Seq(vecKg.concepts.repartition(2), vecKg.concepts
+      .withColumn("embedding", col("embedding").cast("array<double>")).repartition(2))
+    queries.take(8).zipWithIndex.foreach { case (q, i) =>
+      Seq(Map.empty[String, String], Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).foreach { conf =>
+        withSQLConf(conf.toSeq: _*) {
+          scanned.foreach { table =>
+            val sims = table.where(col("concept_id") === "hole")
+              .select(CosineSimilarity(col("embedding"), typedLit(q)).as("folded"),
+                CosineSimilarity(col("embedding"), col("embedding")).as("generic"),
+                CosineSimilarity(typedLit(q), col("embedding")).as("right"))
+              .collect()
+            assert(sims.length == 1 && (0 until 3).forall(sims.head.isNullAt),
+              s"query $i $conf ${table.schema("embedding").dataType}: ${sims.toSeq}")
+          }
+          Seq(false, true).foreach { viaSpark =>
+            def run[T](f: => T): T = if (viaSpark) onSparkPath(f) else f
+            val hits = run(vecKg.search(q, 100, -1.0)).select("concept_id")
+              .as[String].collect().toSeq
+            assert(hits.nonEmpty && !hits.contains("hole"),
+              s"query $i $conf viaSpark $viaSpark: $hits")
+          }
+        }
+      }
+    }
+  }
+
+  /** The same schema, nullability included, and the same rows in any
+    * order; doubles within 1e-12 (NaN matching NaN), other values equal. */
+  private def assertSameCards(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema\n${got.schema}\nvs\n${want.schema}")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g.size == w.size, s"$what: ${g.size} rows vs ${w.size}")
+    g.zip(w).foreach { case (a, b) =>
+      a.zip(b).zip(got.columns).foreach {
+        case ((x: Double, y: Double), c) =>
+          assert((x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-12, s"$what.$c: $x vs $y")
+        case ((x, y), c) => assert(x == y, s"$what.$c: $x vs $y")
+      }
+    }
+  }
+
+  /** Every card of `g` — each id, an unknown one and a NULL one — from the
+    * resident table, against the point lookup. */
+  private def assertResidentCardsEqualLookup(g: KnowledgeGraph, ids: Seq[String]): Unit = {
+    GraphOps.invalidateAccel()
+    ids.foreach { id =>
+      val resident = g.conceptDetails(id)
+      assert(optimizesToLocal(resident), s"$id: the resident card is a local relation")
+      assertSameCards(resident, onSparkPath(g.conceptDetails(id)), s"card $id")
+    }
+    assert(GraphOps.residentCards(g.cards).isDefined, "the cards were resident")
+  }
+
+  test("the resident cards equal the point lookup: every cardKg id, nope, s1 and NULL") {
+    val ids = cardKg.concepts.select("concept_id").as[String].collect().toSeq
+    assertResidentCardsEqualLookup(cardKg, ids ++ Seq("nope", "s1", null))
+  }
+
+  test("the resident cards equal the point lookup on a seeded random KG") {
+    val rnd = new scala.util.Random(23)
+    val types = Seq("SUPPORTS", "CONTRADICTS", "VALIDATES", "OPPOSES", "RELATES", "MENTIONS", null)
+    def node(): String = s"n${rnd.nextInt(15)}"
+    val edges = (Seq.fill(60)((node(), Option(node()))) ++
+        Seq(("n1", Some("n1")), ("n2", Some("n2")), ("n2", None)))   // self-loops, a NULL dst
+      .map { case (a, b) => (a, b.orNull, types(rnd.nextInt(types.size)),
+        rnd.nextInt(5) match {
+          case 0 => None
+          case 1 => Some(Double.NaN)
+          case _ => Some(rnd.nextInt(10) / 10.0)
+        }) }
+      .toDF("src", "dst", "rel_type", "confidence")
+    // n12..n14 have no concept row; n3 and n7 have two
+    val concepts = ((0 until 12).map(i => (s"n$i", s"concept $i", v(i, 1))) ++
+        Seq(("n3", "concept 3 bis", v(3, 2)), ("n7", "concept 7", v(7, 1))))
+      .toDF("concept_id", "label", "embedding")
+    val evidence = Seq.fill(25)((node(), if (rnd.nextInt(6) == 0) null else s"s${rnd.nextInt(5)}"))
+      .toDF("concept_id", "source_id")
+    val instances = Seq.fill(20)(node()).zipWithIndex
+      .map { case (c, i) => (s"i$i", c, s"quote $i") }.toDF("instance_id", "concept_id", "quote")
+    // RELATES is a vocab type without an embedding: its projection is NULL
+    val vocab = kg.vocab.unionByName(
+      Seq(("RELATES", Option.empty[Seq[Float]])).toDF("relationship_type", "embedding"))
+    val random = KnowledgeGraph(spark, concepts, edges, evidence, instances, vocab)
+    assertResidentCardsEqualLookup(random,
+      (0 until 15).map(i => s"n$i") ++ Seq("nope", null))
+  }
+
+  test("a warm conceptDetails schedules no Spark job") {
+    kg.conceptDetails("c2").collect() // loads the card table
+    val (rows, jobs) = sparkJobsDuring(kg.conceptDetails("c1").collect())
+    assert(jobs == 0, s"expected no Spark job, saw $jobs")
+    assert(rows.length == 1 && rows.head.getAs[String]("label") == "alpha")
+    assert(optimizesToLocal(kg.conceptDetails("c1")))
+  }
+
+  /** The micro-fixture written as the parquet tables
+    * [[KnowledgeGraph.load]] reads. */
+  private lazy val kgDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-kg-cards").toString
+    Seq("concepts" -> kg.concepts, "edges" -> kg.edges, "instances" -> kg.instances,
+      "vocab" -> kg.vocab).foreach { case (n, df) => df.write.parquet(s"$dir/$n.parquet") }
+    dir
+  }
+
+  test("two instances over the same parquet tables share one card table load") {
+    val (a, b) = (KnowledgeGraph.load(spark, kgDir), KnowledgeGraph.load(spark, kgDir))
+    GraphOps.invalidateAccel()
+    val card = a.conceptDetails("c1").collect()
+    val loaded = GraphOps.residentCards(a.cards)
+    assert(loaded.isDefined)
+    b.vocabularyScores() // b's own plan; its card must not load again
+    assert(b.conceptDetails("c1").collect().toSeq == card.toSeq)
+    assert(GraphOps.residentCards(b.cards).exists(_ eq loaded.get), "one load serves both")
+    val (_, jobs) = sparkJobsDuring(b.conceptDetails("c4").collect())
+    assert(jobs == 0, s"expected no Spark job, saw $jobs")
+  }
+
+  test("invalidateAccel forces the card table to reload") {
+    val g = KnowledgeGraph.load(spark, kgDir)
+    val card = g.conceptDetails("c1").collect()
+    val before = GraphOps.residentCards(g.cards)
+    GraphOps.invalidateAccel()
+    val (again, jobs) = sparkJobsDuring(g.conceptDetails("c1").collect())
+    assert(jobs > 0, "the reload runs a Spark job")
+    val after = GraphOps.residentCards(g.cards)
+    assert(before.isDefined && after.isDefined && !(after.get eq before.get), "a new table")
+    assert(again.toSeq == card.toSeq)
+  }
+
+  test("an over-budget card table is probed once, then answers by the point lookup " +
+      "in at most 2 jobs") {
+    val resident = kg.conceptDetails("c1").collect()
+    val was = GraphOps.conceptBudget
+    GraphOps.invalidateAccel()
+    GraphOps.conceptBudget = 64L // bytes: the fixture's cards are past it
+    try {
+      def card() = sparkJobsDuring { val df = kg.conceptDetails("c1"); (df, df.collect()) }
+      val (first, coldJobs) = card()
+      val (second, warmJobs) = card()
+      val (_, laterJobs) = card()
+      // the memoized over-budget verdict skips the probe after the first call
+      assert(warmJobs <= 2 && laterJobs == warmJobs && coldJobs > warmJobs,
+        s"jobs: $coldJobs, then $warmJobs, then $laterJobs")
+      assert(!optimizesToLocal(first._1) && !optimizesToLocal(second._1),
+        "the point lookup answers")
+      assert(GraphOps.residentCards(kg.cards).isEmpty)
+      assert(first._2.toSeq == resident.toSeq && second._2.toSeq == resident.toSeq)
+    } finally GraphOps.conceptBudget = was
+  }
+
   test("related: the resident graph and table equal distributed bfs and the join, " +
       "under random rel-type and confidence filters") {
     val rnd = new scala.util.Random(5)
@@ -709,10 +827,10 @@ class KnowledgeGraphSpec extends SparkSpec {
     GraphOps.invalidateAccel()
     GraphOps.conceptBudget = 64L // bytes: the 4-row fixture is past it
     try {
-      val (first, coldJobs) = jobsDuring {
+      val (first, coldJobs) = sparkJobsDuring {
         val df = kg.search(q, limit = 3); (df, df.collect())
       }
-      val (second, warmJobs) = jobsDuring {
+      val (second, warmJobs) = sparkJobsDuring {
         val df = kg.search(q, limit = 3); (df, df.collect())
       }
       // the memoized over-budget verdict skips the probe on the second call
@@ -742,7 +860,7 @@ class KnowledgeGraphSpec extends SparkSpec {
       kg2.relatedByEpistemicStatus("c1", 2, includeStatuses = Seq("WELL_GROUNDED"))
         .collect().toSet)
     val cold = calls()
-    val (warm, jobs) = jobsDuring(calls())
+    val (warm, jobs) = sparkJobsDuring(calls())
     assert(jobs == 0, s"expected no Spark job on warm calls, saw $jobs")
     assert(warm == cold)
     assert(kg.related("c1", relTypes = Some(Seq("SUPPORTS")))

@@ -24,9 +24,12 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** `f`'s result and the Spark jobs started while it ran, counted by a
-    * SparkListener (events post asynchronously, so the count settles
-    * after a short wait). */
+    * SparkListener. Events post asynchronously, so the listener bus is
+    * drained before the listener is added (an earlier job's late event is
+    * not counted) and again before the count is read (none of `f`'s is
+    * missed). */
   def sparkJobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -34,12 +37,13 @@ trait SparkSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    org.apache.spark.graftspec.SparkTestBridge.drain(sc)
+    sc.addSparkListener(listener)
     try {
       val r = f
-      Thread.sleep(500)
+      org.apache.spark.graftspec.SparkTestBridge.drain(sc)
       (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Data files the executed plan will actually scan — pins FileIndex-level
