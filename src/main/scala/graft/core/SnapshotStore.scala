@@ -3923,8 +3923,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     *
     * Protocol (write-ahead intent + roll-forward):
     *   1. Every table's delta writes as an ordinary UNEXPOSED candidate
-    *      (no sentinel, pointer untouched). A crash here leaves invisible
-    *      orphans — NEITHER table exposed; vacuum reclaims them.
+    *      (no sentinel, pointer untouched), the tables side by side, one
+    *      thread each ([[appendAllPrepare]]). A refused or failed write
+    *      discards every candidate the others wrote before its error is
+    *      rethrown. A crash here leaves invisible orphans — NEITHER table
+    *      exposed; vacuum reclaims them.
     *   2. Under the root monitor + every table's pointer file lock (sorted
     *      order, deadlock-free), the bases are re-validated; if any table
     *      moved, its candidate RELINKS onto the new head (append's rebase
@@ -4241,18 +4244,70 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
 
   /** Step 1 of [[appendAll]], exposed so specs can crash the protocol
     * between candidate write and intent: every table's delta written as an
-    * unexposed candidate; returns table -> (candidate version, base). A
-    * candidate whose parquet footers count zero rows is discarded and its
-    * table left out, so no caller probes its deltas for rows. */
-  private[graft] def appendAllPrepare(rows: Map[String, DataFrame])
-      : Map[String, (Long, Option[Long])] =
-    rows.flatMap { case (t, df) =>
-      val base = latestVersion(t)
-      val v = appendCandidate(t, df, base, mergedAppendSchema(t, base, df.schema))
-      if (FileStats.footerRows(spark.sparkContext.hadoopConfiguration,
-          versionDir(t, v)) > 0) Some(t -> ((v, base)))
-      else { discardCandidate(t, v); None }
+    * unexposed candidate whose `_props.json` carries `props`; returns
+    * table -> (candidate version, base). A candidate whose parquet footers
+    * count zero rows is discarded and its table left out, so no caller
+    * probes its deltas for rows.
+    *
+    * The tables write side by side, one thread each, joined before this
+    * returns: a small delta's write leaves most cores idle, so writing
+    * them one after another costs the sum of their latencies. Each thread
+    * runs under the caller's Spark local properties (job group, SQL
+    * execution id, trace spans), so cancelling the caller's job group
+    * cancels its writes and their jobs are charged to the caller. When a
+    * write is refused (a retype, a CHECK) or fails, or the caller is
+    * interrupted, every candidate already written is discarded once all
+    * threads are done, and the first error in table order (for an
+    * interrupted caller, an InterruptedException) is rethrown: nothing
+    * exposed, nothing orphaned. A write that dies inside its Spark job
+    * leaves the marker-less directory any crashed append leaves, which
+    * `vacuum(dropOrphans = true)` reclaims. */
+  private[graft] def appendAllPrepare(rows: Map[String, DataFrame],
+      props: Map[String, String] = Map.empty)
+      : Map[String, (Long, Option[Long])] = {
+    import java.util.concurrent.{ExecutionException, Executors}
+    import scala.util.{Failure, Success, Try}
+    val pool = Executors.newFixedThreadPool(rows.size, (r: Runnable) => {
+      val th = new Thread(r, "graft-append-prepare")
+      th.setDaemon(true)
+      th
+    })
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val writes = try rows.toSeq.sortBy(_._1).map { case (t, df) =>
+      t -> org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(session, pool) {
+          val base = latestVersion(t)
+          val v = appendCandidate(t, df, base,
+            mergedAppendSchema(t, base, df.schema), props)
+          if (FileStats.footerRows(spark.sparkContext.hadoopConfiguration,
+              versionDir(t, v)) > 0) Some((v, base))
+          else { discardCandidate(t, v); None }
+        }
+    } finally pool.shutdown()
+    // join every write, even after an interrupt: a candidate finishing
+    // after the discard below would be an orphan
+    var interrupted = false
+    val results = writes.map { case (t, f) =>
+      var r: Option[Try[Option[(Long, Option[Long])]]] = None
+      while (r.isEmpty)
+        try r = Some(Success(f.get()))
+        catch {
+          case _: InterruptedException => interrupted = true
+          case e: ExecutionException => r = Some(Failure(e.getCause))
+        }
+      t -> r.get
     }
+    val written = results.collect { case (t, Success(Some(c))) => t -> c }.toMap
+    val errors = (if (interrupted) Seq(new InterruptedException(
+      s"interrupted while appending to ${rows.keys.toSeq.sorted.mkString(", ")}"))
+      else Nil) ++ results.collect { case (_, Failure(e)) => e }
+    errors.headOption.foreach { e =>
+      errors.tail.foreach(e.addSuppressed)
+      discardCandidates(written.map { case (t, (v, _)) => t -> v }, Some(e))
+      throw e
+    }
+    written
+  }
 
   /** The txn intent record: {table: version}, written temp + atomic
     * rename. Exposed so specs can crash between intent and pointer moves. */

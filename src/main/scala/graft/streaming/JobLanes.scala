@@ -165,8 +165,6 @@ final class JobLanes(spark: SparkSession, store: SnapshotStore,
   def job(jobId: String): Option[Job] = state.get(jobId)
   private def inLane(l: LaneConfig) =
     state.values.filter(j => laneOf(j.jobType).name == l.name)
-  def runningCount(lane: String): Int =
-    inLane(lanes.find(_.name == lane).get).count(_.status == "running")
 
   /** One poll cycle for `lane` (the `_lane_loop` body): claim approved
     * jobs of the lane's types — priority DESC, submission seq ASC —

@@ -872,6 +872,35 @@ class GraftChangeFeedSpec extends SparkSpec {
       Seq(99L).toDF("id"), 0L)) // replay still detected
   }
 
+  test("the replay check reads the batch id from commit properties: no Spark job, kept across a relink") {
+    import graft.streaming.SnapshotSink
+    val st = new SnapshotStore(spark, tmp("graft-sink-props"))
+    def batch(c: Long, e: Long) = Map(
+      "concepts" -> Seq(c).toDF("id"), "edges" -> Seq(e).toDF("id"))
+    assert(SnapshotSink.appendAllBatch(st, batch(1L, 10L), 0L))
+    // a sibling commits to `edges` between this batch's candidate writes
+    // and its commit: the edges candidate relinks onto the sibling's head
+    var fired = false
+    SnapshotStore.testRaceHook = () => if (!fired) {
+      fired = true
+      new SnapshotStore(spark, st.root).append("edges", Seq(11L).toDF("id"))
+    }
+    val won = try SnapshotSink.appendAllBatch(st, batch(2L, 20L), 1L)
+      finally SnapshotStore.testRaceHook = () => ()
+    assert(won && fired)
+    assert(st.commitProps("edges", st.latestVersion("edges").get)
+      .get(SnapshotSink.BatchIdProp).contains("1"), "the relinked candidate lost its batch id")
+    val (last, jobs) = sparkJobsDuring(
+      Seq("concepts", "edges").map(SnapshotSink.lastBatchId(st, _)))
+    assert(last == Seq(Some(1L), Some(1L)))
+    assert(jobs == 0, s"$jobs Spark jobs to read two tables' last batch ids")
+    val before = (st.history("concepts"), st.history("edges"))
+    assert(!SnapshotSink.appendAllBatch(st, batch(3L, 30L), 1L), "replay not detected")
+    assert((st.history("concepts"), st.history("edges")) == before)
+    assert(st.read("edges").select("id").as[Long].collect().sorted.toSeq
+      == Seq(10L, 11L, 20L))
+  }
+
   test("DedupIngest replay is exactly-once, including a crash between appends") {
     val root = tmp("graft-di-replay")
     val st = new SnapshotStore(spark, root)

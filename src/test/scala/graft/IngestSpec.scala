@@ -217,4 +217,37 @@ class IngestSpec extends SparkSpec {
       IngestPipeline.ingestBatchToStore(spark, st, docs2, batchEpoch = 2L))
     assert(jobs <= 17, s"$jobs Spark jobs for one batch")
   }
+
+  test("one streaming store-ingest micro-batch runs at most 17 Spark jobs") {
+    import graft.core.SnapshotStore
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val st = new SnapshotStore(spark, tmp("graft-ing-str-jobs"))
+    val (src, stage) = (tmp("graft-ing-str-jobs-src"), tmp("graft-ing-str-jobs-stage"))
+    docs.write.parquet(s"$src/p1")
+    // every job the engine runs for micro-batch 1, on whatever thread,
+    // carries the batch id as a local property
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty("streaming.sql.batchId") == "1"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val q = IngestPipeline.startStoreIngest(spark, st,
+      spark.readStream.schema("doc_id STRING, text STRING").parquet(s"$src/*"),
+      tmp("graft-ing-str-jobs-ck"))
+    try {
+      q.processAllAvailable()
+      Seq(("d3", "alpha observations support new theory building today again"))
+        .toDF("doc_id", "text").write.parquet(s"$stage/p2")
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$stage/p2"),
+        java.nio.file.Paths.get(s"$src/p2"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      org.apache.spark.graftspec.SparkTestBridge.drain(sc)
+    } finally { q.stop(); sc.removeSparkListener(listener) }
+    assert(st.read("epoch_log").count() == 2L, "both micro-batches committed")
+    assert(jobs.get() <= 17, s"${jobs.get()} Spark jobs for one micro-batch")
+  }
 }

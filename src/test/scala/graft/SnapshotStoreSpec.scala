@@ -1344,6 +1344,30 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(ids(st, "b") == Seq(1L), "b's half not exposed")
   }
 
+  test("a write refused in a multi-table append's prepare discards every candidate: nothing exposed, no orphan") {
+    val st = freshStore()
+    st.append("a", Seq(1L).toDF("id"))
+    st.append("b", Seq(1L).toDF("id"))
+    st.append("c", Seq(1L).toDF("id"))
+    st.addCheckConstraint("c", "id_pos", "id > 0")
+    val refusals = Seq(
+      // b's delta retypes its column: refused before it writes
+      "b" -> (Seq("x").toDF("id"), "retype"),
+      // c's delta fails its CHECK: refused after it writes
+      "c" -> (Seq(-1L).toDF("id"), "CHECK"))
+    refusals.foreach { case (t, (delta, why)) =>
+      val before = Seq("a", t).map(u => u -> st.history(u)).toMap
+      val err = intercept[IllegalArgumentException](st.appendAll(Map(
+        "a" -> Seq(2L).toDF("id"), t -> delta)))
+      assert(err.getMessage.contains(why), err.getMessage)
+      Seq("a", t).foreach { u =>
+        assert(st.history(u) == before(u), s"$t refused, yet $u moved")
+        assert(orphanDirs(st.root, u).isEmpty, s"$t refused: $u ${orphanDirs(st.root, u)}")
+      }
+    }
+    assert(ids(st, "a") == Seq(1L))
+  }
+
   test("a crash after the intent rolls every multi-table writer forward: intent gone, no orphan") {
     // each writer over a(id) = b(id) = {1, 2}, and the ids each table
     // holds once the transaction is rolled forward

@@ -28,7 +28,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * An append records its change set one way: the store copies the delta
   * files it wrote into `_changes/`. A `commitWith(` call handed the same
   * identifier as data and as change set (`Some(x), Some(x)`) would
-  * evaluate the delta twice, and fails here with `file:line`. */
+  * evaluate the delta twice, and fails here with `file:line`.
+  *
+  * The engine runs its Spark work on the caller's thread, so a caller's
+  * job group, SQL execution and trace spans cover it. The one exception
+  * is the snapshot store's multi-table append, which writes each table's
+  * candidate on its own thread under the caller's captured local
+  * properties: a thread, executor or `Future` is created only in
+  * `SnapshotStore.appendAllPrepare`, and one anywhere else fails here
+  * with `file:line`. */
 class SourceGuardSpec extends AnyFunSuite {
   private val lazyCheckpoint = Seq(
     """\b(?:localCheckpoint|checkpoint)\s*\(\s*\)""",
@@ -61,18 +69,19 @@ class SourceGuardSpec extends AnyFunSuite {
   private val memberDef =
     """^  (?:@\w+\s+)*(?:(?:private|protected)(?:\[\w+\])?\s+|(?:override|final|lazy|implicit)\s+)*def\s+(\w+)""".r
 
-  /** (1-based line, what) for each txn-protocol step outside its owner —
-    * the member `def` a line sits in is the last one declared above it. */
-  private def txnProtocolBreaches(lines: Seq[String]): Seq[(Int, String)] = {
-    var member = ""
-    lines.zipWithIndex.flatMap { case (line, i) =>
-      memberDef.findFirstMatchIn(line).foreach(m => member = m.group(1))
+  /** The member `def` each line sits in: the last one declared above it. */
+  private def members(lines: Seq[String]): Seq[String] =
+    lines.scanLeft("")((m, line) =>
+      memberDef.findFirstMatchIn(line).map(_.group(1)).getOrElse(m)).tail
+
+  /** (1-based line, what) for each txn-protocol step outside its owner. */
+  private def txnProtocolBreaches(lines: Seq[String]): Seq[(Int, String)] =
+    lines.zip(members(lines)).zipWithIndex.flatMap { case ((line, member), i) =>
       code(line).toSeq.flatMap(c => txnProtocol.collect {
         case (re, owner, what) if member != owner &&
             re.findFirstIn(c).isDefined => (i + 1, what)
       })
     }
-  }
 
   private def mainSources(): Seq[java.nio.file.Path] = {
     val root = java.nio.file.Paths.get("src", "main", "scala")
@@ -205,5 +214,65 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "an append's change set is a copy of its written files (appendCandidate): " +
         offenders.mkString(", "))
+  }
+
+  /** A thread, thread pool, executor or `Future` created. */
+  private val concurrency = Seq(
+    """\bnew\s+(?:Thread|ForkJoinPool|\w*Executor|CompletableFuture|FutureTask)\b""",
+    """\b(?:Executors|ThreadUtils)\s*\.\s*new\w*""",
+    """\bCompletableFuture\s*\.\s*(?:supplyAsync|runAsync)\b""",
+    """\bExecutionContext\s*\.\s*from\w*""",
+    """(?<![\w.])Future\s*(?:\.\s*apply\s*)?[({]""",
+    """\bwithThreadLocalCaptured\b""",
+    """\.par\b(?!\s*[=(])""").map(_.r)
+
+  /** 1-based numbers of the lines that create a thread outside the
+    * member `owner` (None: anywhere). */
+  private def concurrencyLines(lines: Seq[String], owner: Option[String]): Seq[Int] =
+    lines.zip(members(lines)).zipWithIndex.collect {
+      case ((line, member), i) if !owner.contains(member) &&
+          code(line).exists(c => concurrency.exists(_.findFirstIn(c).isDefined)) => i + 1
+    }
+
+  test("the concurrency matcher flags thread, executor and Future creation outside its owner only") {
+    val src = Seq(
+      "  private[graft] def appendAllPrepare(rows: Map[String, DataFrame]) = {",
+      "    val pool = Executors.newFixedThreadPool(rows.size, (r: Runnable) => {",
+      "      val th = new Thread(r, \"graft-append-prepare\")",
+      "      t -> SQLExecution.withThreadLocalCaptured(session, pool) {",
+      "  def appendAll(rows: Map[String, DataFrame]): Unit = {",
+      "    val pool = Executors.newCachedThreadPool()",
+      "    new Thread(() => write(t)).start()",
+      "    val f = Future { write(t) }",
+      "    val g = Future(write(t))(ec)",
+      "    CompletableFuture.supplyAsync(() => write(t))",
+      "    val ec = ExecutionContext.fromExecutorService(pool)",
+      "    rows.par.foreach(write)",
+      "    new ForkJoinPool(4)",
+      "    new ThreadPoolExecutor(1, 4, 0L, TimeUnit.SECONDS, q)",
+      "    SQLExecution.withThreadLocalCaptured(session, pool)(write(t))",
+      "    Thread.sleep(backoff)",
+      "    private val owner = new ThreadLocal[Option[String]] {",
+      "    b.relationFuture.get().value",
+      "    spark.read.parquet(dir)",
+      "    // new Thread(r) and Future { x } in prose",
+      "    val t = Thread.currentThread()")
+    assert(concurrencyLines(src, Some("appendAllPrepare")) == (6 to 15))
+    assert(concurrencyLines(src, None) == (2 to 4) ++ (6 to 15))
+  }
+
+  test("src/main/scala creates threads in SnapshotStore.appendAllPrepare only") {
+    val owner = java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "SnapshotStore.scala")
+    val files = mainSources()
+    assert(files.contains(owner))
+    val offenders = files.flatMap { f =>
+      concurrencyLines(linesOf(f), Some("appendAllPrepare").filter(_ => f == owner))
+        .map(n => s"$f:$n")
+    }
+    assert(offenders.isEmpty,
+      "Spark work runs on the caller's thread; only appendAllPrepare " +
+        s"writes side by side: ${offenders.mkString(", ")}")
+    assert(concurrencyLines(linesOf(owner), None).nonEmpty,
+      "appendAllPrepare no longer writes its tables side by side")
   }
 }
