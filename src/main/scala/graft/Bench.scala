@@ -33,6 +33,36 @@ object Bench {
       if (baseline > 0 && samples.nonEmpty) samples.max / baseline else -1.0
   }
 
+  /** One timed run of `fn` at `sfDir`: build the frame and count it. */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  // Per-QUERY litter control (the between-block sweep in runSuite is not
+  // enough): a single localCheckpoint-heavy query can park tens of GB
+  // in the BlockManager per RUN, and with min-of-2 runs the SECOND run
+  // plus every later query in the block then measures storage-memory
+  // eviction and spill churn, not its plan (observed in the first sf10
+  // audit: the q70-79 block read 5-20x its standalone times purely from
+  // in-block litter — q76 215 s benched vs 10 s standalone in a fresh
+  // JVM). Unpersisting after each timed run keeps every measurement a
+  // measurement of the QUERY. Driver-side caches (graph accel,
+  // over-threshold verdicts) are not RDDs and survive, as they should.
+  // clearCache() first: unpersisting a cached query's blocks WITHOUT
+  // dropping its CacheManager entry leaves a stale entry whose storage
+  // level was cleared — the query's next run then recomputes through the
+  // dead InMemoryRelation WITHOUT re-caching (every consumer recomputes
+  // the subtree), so min-of-2 never sees a warm run. Dropping the entry
+  // makes the second run re-persist properly while blocks still never
+  // carry between timed runs.
+  private[graft] def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
   /** One adjudicated suite run at `sfDir`: every query timed min-of-2 in
     * sorted order, canary-checked per 10-query block, contended blocks
     * re-run min-merged. */
@@ -80,11 +110,6 @@ object Bench {
     // requeries in the dual-scale run; 2× keeps retries for real spikes.
     val Bar = 2.0
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
     // Two timed runs per query, report the min (steady-state cost; the
     // machine shows ±30% noisy-neighbor variance on single runs). A failed
     // query reports -1 (never a plausible timing) and the failure goes to
@@ -94,29 +119,8 @@ object Bench {
     val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
     var requeried = 0
     var sustained = false
-    // Per-QUERY litter control (the between-block sweep below is not
-    // enough): a single localCheckpoint-heavy query can park tens of GB
-    // in the BlockManager per RUN, and with min-of-2 runs the SECOND run
-    // plus every later query in the block then measures storage-memory
-    // eviction and spill churn, not its plan (observed in the first sf10
-    // audit: the q70-79 block read 5-20x its standalone times purely from
-    // in-block litter — q76 215 s benched vs 10 s standalone in a fresh
-    // JVM). Unpersisting after each timed run keeps every measurement a
-    // measurement of the QUERY. Driver-side caches (graph accel,
-    // over-threshold verdicts) are not RDDs and survive, as they should.
-    // clearCache() first: unpersisting a cached query's blocks WITHOUT
-    // dropping its CacheManager entry leaves a stale entry whose storage
-    // level was cleared — the query's next run then recomputes through the
-    // dead InMemoryRelation WITHOUT re-caching (every consumer recomputes
-    // the subtree), so min-of-2 never sees a warm run. Dropping the entry
-    // makes the second run re-persist properly while blocks still never
-    // carry between timed runs.
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     def timeOnceClean(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = { val t = timeOnce(fn); sweep(); t }
+        : Double = { val t = timeOnce(spark, sfDir, fn); sweep(spark); t }
     SparkEntry.queries.toSeq.sortBy(_._1).grouped(10).foreach { block =>
       block.foreach { case (name, fn) =>
         times(name) =
@@ -133,7 +137,7 @@ object Bench {
       }
       // Belt-and-braces sweep before the canary (per-query sweeps above
       // already keep the BlockManager clean between timed runs).
-      sweep()
+      sweep(spark)
       var canary = timeCanary(); canarySamples += canary
       if (canary > Bar * canaryBaseline) {
         // the machine was busy during this block — its timings are

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single source of truth for the engine's session configuration
-  * (VERDICT r19 #8: Bench, BenchOne and Verify each constructed their own
-  * SparkSession, so the AQE shuffled-hash rewrite benched plans Verify
-  * never validated). Every driver-contract main now builds through
-  * [[configured]], so the plans the oracle gates are the plans the bench
-  * times.
+  * (VERDICT r19 #8: the mains each constructed their own SparkSession, so
+  * the AQE shuffled-hash rewrite benched plans Verify never validated).
+  * Every main (Bench, Verify, Smoke, ScaleUp, tools.Inspect) builds
+  * through [[local]], so the plans the oracle gates are the plans the
+  * bench times and the inspector prints; SourceGuardSpec fails on a
+  * session builder anywhere else in `src/main/scala`.
   *
   * All values are engine-level tuning, scale-adaptive by construction or
   * env-parameterized for cluster profiles — nothing here is a local[32]
@@ -43,7 +44,7 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
 
-  /** local[cpus] session with the shared config (the three mains' shape). */
+  /** local[cpus] session with the shared config (every main's shape). */
   def local(cpus: String): SparkSession =
     configured(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
 }

@@ -1,24 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Local smoke runner for the driver's t1 check: builds the session the way
-  * the driver does, runs `SparkEntry.entry`, prints rows. */
+/** Local smoke runner for the driver's t1 check: builds the session
+  * through GraftSession, runs `SparkEntry.entry`, prints rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // full extension surface (TVFs, optimizer rules, strategies, AQE
-      // stage rules — band pruning is extension-only; see GraftExtensions)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // INT96 is deprecated and carries no parquet stats; micros keeps
-      // snapshot-store writes zone-map-prunable (FileStats) and smaller.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

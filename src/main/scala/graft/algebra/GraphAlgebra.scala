@@ -106,18 +106,6 @@ object GraphAlgebra {
     * (program_dispatch.py:46-77). */
   final case class Statement(op: Op, produce: WorkingGraph => WorkingGraph)
 
-  /** P7 conditionals (program_executor.py:198-221). */
-  sealed trait Condition
-  final case class HasResults(negate: Boolean = false) extends Condition
-  final case class CountGte(n: Long) extends Condition
-  final case class CountLte(n: Long) extends Condition
-
-  def evalCondition(c: Condition, g: WorkingGraph): Boolean = c match {
-    case HasResults(neg) => g.nodes.isEmpty == neg
-    case CountGte(n)     => g.nodes.limit((n).toInt + 1).count() >= n
-    case CountLte(n)     => g.nodes.limit((n).toInt + 1).count() <= n
-  }
-
   final case class StepLog(statement: Int, op: String, wNodes: Long, wLinks: Long,
       durationMs: Long)
 

@@ -33,15 +33,7 @@ object ScaleUp {
     val srcDir   = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir   = if (args.length > 1) args(1) else "/tmp/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 is deprecated and carries no parquet stats; micros keeps
-      // snapshot-store writes zone-map-prunable (FileStats) and smaller.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     build(spark, srcDir, outDir, replicas)
     spark.stop()

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.Freshness
 import graft.functions.DecodeFloatArray
 
@@ -26,6 +27,25 @@ class FreshnessDecodeSpec extends SparkSpec {
     assert(computes == 2)
     assert(f.cachedEpoch("doubled").contains(2L))
     intercept[IllegalArgumentException] { f.get("nope") }
+  }
+
+  test("invalidateAll evicts every tier; the next get recomputes at the same epoch") {
+    var computes = 0
+    val f = new Freshness(() => 7L)
+    f.register("a") { computes += 1; Seq(701, 702).toDF("fa") }
+    f.register("b") { computes += 1; Seq(703).toDF("fb") }
+    val a = f.get("a"); val b = f.get("b")
+    a.count(); b.count()
+    assert(computes == 2)
+    assert(a.storageLevel != StorageLevel.NONE)
+    f.invalidateAll()
+    assert(f.registered.forall(f.cachedEpoch(_).isEmpty))
+    assert(a.storageLevel == StorageLevel.NONE)
+    assert(b.storageLevel == StorageLevel.NONE)
+    f.get("a").count()
+    assert(computes == 3) // same epoch, yet recomputed: the tier was dropped
+    assert(f.cachedEpoch("a").contains(7L))
+    f.invalidateAll()
   }
 
   def packF32(vs: Seq[Float]): Array[Byte] = {

@@ -36,7 +36,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * candidate on its own thread under the caller's captured local
   * properties: a thread, executor or `Future` is created only in
   * `SnapshotStore.appendAllPrepare`, and one anywhere else fails here
-  * with `file:line`. */
+  * with `file:line`.
+  *
+  * Every main gets its session from `GraftSession`, so the plans the
+  * oracle gates, the bench times and the inspector prints share one
+  * configuration: a `SparkSession.builder` or `.getOrCreate(` anywhere
+  * else in `src/main/scala` fails here with `file:line`. */
 class SourceGuardSpec extends AnyFunSuite {
   private val lazyCheckpoint = Seq(
     """\b(?:localCheckpoint|checkpoint)\s*\(\s*\)""",
@@ -274,5 +279,42 @@ class SourceGuardSpec extends AnyFunSuite {
         s"writes side by side: ${offenders.mkString(", ")}")
     assert(concurrencyLines(linesOf(owner), None).nonEmpty,
       "appendAllPrepare no longer writes its tables side by side")
+  }
+
+  /** A SparkSession built: a builder chain or its `getOrCreate()`. */
+  private val sessionBuilder = """\bSparkSession\s*\.\s*builder\b|\.getOrCreate\s*\(""".r
+
+  /** 1-based numbers of the lines that build a session. */
+  private def sessionBuilderLines(lines: Seq[String]): Seq[Int] =
+    lines.zipWithIndex.collect {
+      case (line, i) if code(line).exists(sessionBuilder.findFirstIn(_).isDefined) => i + 1
+    }
+
+  test("the session matcher flags builder chains only") {
+    val flagged = Seq(
+      "    val spark = SparkSession.builder()",
+      "      .getOrCreate()",
+      "    configured(SparkSession.builder().master(s\"local[$cpus]\"), cpus).getOrCreate()",
+      "    val s = SparkSession .builder.master(\"local[4]\")")
+    val passed = Seq(
+      "  *   SparkSession.builder().withExtensions(new GraftExtensions)",
+      "    // SparkSession.builder() and .getOrCreate() in prose",
+      "    val s = SparkSession.active",
+      "    val other = spark.newSession()",
+      "    SparkSession.getActiveSession.getOrElse(spark)")
+    assert(sessionBuilderLines(flagged) == flagged.indices.map(_ + 1))
+    assert(sessionBuilderLines(passed).isEmpty)
+  }
+
+  test("src/main/scala builds a SparkSession in GraftSession.scala only") {
+    val owner = java.nio.file.Paths.get("src", "main", "scala", "graft", "GraftSession.scala")
+    val files = mainSources()
+    assert(files.contains(owner))
+    val offenders = files.filter(_ != owner).flatMap { f =>
+      sessionBuilderLines(linesOf(f)).map(n => s"$f:$n")
+    }
+    assert(offenders.isEmpty,
+      s"build sessions through GraftSession.local: ${offenders.mkString(", ")}")
+    assert(sessionBuilderLines(linesOf(owner)).nonEmpty)
   }
 }
