@@ -61,13 +61,14 @@ object SparkEntry {
         element_at(array(vocabNames.map(lit): _*), col("label_id") + 1))
       .select(col("relationship_type"), col("embedding"))
 
-    // semantic edges: top-2 NN per concept, typed by (a+b) % 10
+    // semantic edges: each concept's 2 nearest neighbors, typed by a hash
+    // of the pair. A concept scores cosine 1 against itself, so its top 3
+    // holds its self-match; dropping that leaves the 2 neighbors.
     val edges = Ann.topKJoin(
         emb.select(col("concept_id"), col("embedding")), "concept_id", "embedding",
         emb.select(col("concept_id").as("qid"), col("embedding").as("qv"),
           col("vec_id").as("q_vec")), "qid", "qv", k = 3)
-      .where(col("corpus_id") =!= col("query_id")) // self-match holds rank 1
-      .where(col("rn") <= 3)                       // → 2 real neighbors remain
+      .where(col("corpus_id") =!= col("query_id"))
       .select(col("query_id").as("src"), col("corpus_id").as("dst"),
         element_at(array(vocabNames.map(lit): _*),
           (abs(hash(col("query_id"), col("corpus_id"))) % 10 + 1).cast("int"))

@@ -163,7 +163,7 @@ object Scoring {
     * of the double explode's k²), and the missing orientation is MIRRORED
     * after aggregation, on the tiny (ont_a, ont_b) group table instead of
     * the fact-scale pair stream. Same output, same order-insensitivity;
-    * ~5-10% off q43's sf10 wall on its own (BenchOne min-of-2: 7.45 →
+    * ~5-10% off q43's sf10 wall on its own (tools.Inspect min-of-2: 7.45 →
     * 6.8-7.1 s). The bigger r16 lever is the BITMASK fast path below —
     * with the domain hint, q43's sf10 min-of-2 lands at 5.0-5.3 s
     * (~30% off) because the fact-stream set aggregation leaves the

@@ -29,6 +29,8 @@ case class Scored(score: java.lang.Double, key: String)
   * from a k-bounded result only diverges when fewer than k non-null rows
   * exist in a group — document-ordering semantics callers can coalesce
   * around if they need NULLs ranked).
+  * `similarity.Ann.topKJoin` does not rank with it: its String key would
+  * order Long ids `"10" < "9"`, and it drops the NULL scores the join ranks.
   */
 class TopKAggregator(k: Int) extends Aggregator[Scored, List[Scored], Seq[Scored]] {
   require(k > 0, "k must be positive")

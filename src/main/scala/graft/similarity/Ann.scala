@@ -1,9 +1,12 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorOps
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import graft.functions.{CosineSimilarity, VectorOps}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -184,20 +187,105 @@ object Ann {
       .where(col("cosine") >= minCosine)
   }
 
-  /** Batched exact top-k: many query vectors at once — broadcast the query
-    * set, one pass over the corpus, per-query window head (the shape of the
-    * reference's batch grounding joins J3/J4 applied to V1). */
+  /** Batched exact top-k: for each query row, the `k` corpus rows whose
+    * vectors are most cosine-similar to its vector, as
+    * `(query_id, rn, corpus_id, sim)`, ranked by `sim` descending (NULL
+    * last), then `corpus_id` ascending — V1 run as a join, the shape of the
+    * reference's batch grounding joins J3/J4.
+    *
+    * The query set is collected once to the driver as dense vectors with
+    * their norms, and the corpus spreads over the session's cores with one
+    * `repartition(defaultParallelism)`, so the n×m scoring runs on every
+    * core whatever the corpus's file layout. Each partition scores its rows
+    * through [[CosineSimilarity.score]] (the codegen kernel's bits and
+    * NULLs) and keeps, per query, only the rows whose score reaches that
+    * partition's k-th best score, ties included. NULL ranks lowest: a
+    * NULL-scored row survives only while the partition holds fewer than k
+    * scores. A row of the global top k is in its own partition's top k, so
+    * the `row_number` window over the survivors returns exactly the rows a
+    * window over every pair would, for any id type, while sorting at most
+    * partitions × queries × (k + ties) rows instead of n×m.
+    *
+    * Memory: the query set on the driver and in each task (it must fit, as
+    * the broadcast this replaces had to), plus O(queries × k) candidates
+    * per task — more only where scores tie at the k-th place, or where a
+    * partition holds fewer than k scores for a query. */
   def topKJoin(corpus: DataFrame, corpusId: String, corpusVec: String,
       queries: DataFrame, queryId: String, queryVec: String, k: Int): DataFrame = {
+    require(k > 0, s"topKJoin needs k > 0 (got $k)")
+    val q = queries.select(col(queryId).as("query_id"), col(queryVec).cast("array<double>"))
+    val qRows = q.collect()
+    val qIds = qRows.map(_.get(0))
+    val qVecs = qRows.map(dense(_, 1))
+    val qNorms = qVecs.map(v => if (v == null) 0.0 else CosineSimilarity.norm(v))
+    val c = corpus.select(col(corpusId).as("corpus_id"), col(corpusVec).cast("array<double>"))
+    val survivors = StructType(Seq(q.schema("query_id"), c.schema("corpus_id"),
+      StructField("sim", DoubleType)))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("corpus_id").asc)
-    corpus
-      .select(col(corpusId).as("corpus_id"), col(corpusVec).as("cv"))
-      .join(broadcast(
-        queries.select(col(queryId).as("query_id"), col(queryVec).as("qv"))))
-      .withColumn("sim", VectorOps.cosine(col("cv"), col("qv")))
+    c.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+      .mapPartitions { rows =>
+        val best = Array.fill(qIds.length)(new Candidates(k))
+        rows.foreach { r =>
+          val id = r.get(0)
+          val x = dense(r, 1)
+          var i = 0
+          while (i < best.length) {
+            best(i).offer(id,
+              if (x == null || qVecs(i) == null) null
+              else CosineSimilarity.score(x, 0, x.length, qVecs(i), qNorms(i)))
+            i += 1
+          }
+        }
+        best.iterator.zip(qIds).flatMap { case (b, qid) => b.rows(qid) }
+      }(Encoders.row(survivors))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("corpus_id"), col("sim"))
+  }
+
+  /** Field `i` of `r` (an `array<double>`) as a dense vector; null for a
+    * NULL array or one holding a NULL element, which the cosine kernels
+    * score NULL. */
+  private def dense(r: Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null
+    else {
+      val v = r.getSeq[java.lang.Double](i)
+      if (v.contains(null)) null else v.iterator.map(_.doubleValue).toArray
+    }
+
+  /** One query's candidates from one corpus partition: the k best-scored
+    * rows in a min-heap on score, the rows tied with the heap's least score
+    * outside it, and the NULL-scored rows while fewer than k rows have a
+    * score. Scores are finite ([[CosineSimilarity.score]] gives NULL for
+    * the rest), so `>` and `==` order them as the window does. */
+  private final class Candidates(k: Int) {
+    private val heap = new java.util.PriorityQueue[(Double, Any)](
+      (a: (Double, Any), b: (Double, Any)) => java.lang.Double.compare(a._1, b._1))
+    private val tied = ArrayBuffer.empty[(Double, Any)]
+    private val nulls = ArrayBuffer.empty[Any]
+
+    def offer(id: Any, score: java.lang.Double): Unit =
+      if (score == null) { if (heap.size < k) nulls += id }
+      else {
+        val s = score.doubleValue
+        if (heap.size < k) {
+          heap.add((s, id))
+          if (heap.size == k) nulls.clear()
+        } else {
+          val floor = heap.peek._1
+          if (s > floor) {
+            val out = heap.poll()
+            heap.add((s, id))
+            // the evicted row still ties the new k-th score, or it and every
+            // row tied with it now rank below it
+            if (heap.peek._1 == out._1) tied += out else tied.clear()
+          } else if (s == floor) tied += ((s, id))
+        }
+      }
+
+    def rows(qid: Any): Iterator[Row] =
+      (heap.iterator.asScala ++ tied.iterator).map { case (s, id) => Row(qid, id, s) } ++
+        nulls.iterator.map(id => Row(qid, id, null))
   }
 }

@@ -72,7 +72,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("AQE rewrites sort-merge to shuffled-hash under the bench session's threshold") {
     // GraftSession sets spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold
-    // (default 64m) for Bench/BenchOne/Verify alike (VERDICT r19 #7/#8) —
+    // (default 64m) for Bench/Verify/tools.Inspect alike (VERDICT r19 #7/#8) —
     // this pins that the rewrite actually FIRES on the q03/q18 fact-join
     // shape: with broadcast disabled (as it effectively is for a fact-fact
     // join at scale) and every post-shuffle partition under the bound, the
