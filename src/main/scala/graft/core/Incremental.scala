@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of algebraic aggregates over an append-only,
@@ -30,11 +30,9 @@ object Incremental {
     * greater). */
   final case class MaintainedAgg(upToEpoch: Long, agg: DataFrame)
 
-  private def baseAgg(df: DataFrame, keyCol: String, valCol: String,
-      extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        (sum(col(valCol).cast("decimal(28,4)")).as("total") +: extra): _*)
+  /** Per-group `n` and `total` of the plain (unsigned) aggregate. */
+  private def plainAggs(valCol: String): (Column, Column) =
+    (count(lit(1)), sum(col(valCol).cast("decimal(28,4)")))
 
   /** Fold everything in `appendLog` with `epochCol` > the state's horizon
     * into the maintained `groupBy(keyCol).agg(count, sum(valCol))`.
@@ -54,29 +52,8 @@ object Incremental {
     * possible, stamp the epoch at fold time (e.g. the streaming batchId),
     * not at the source. */
   def advance(state: Option[MaintainedAgg], appendLog: DataFrame,
-      keyCol: String, valCol: String, epochCol: String): MaintainedAgg = {
-    val horizon = state.map(_.upToEpoch).getOrElse(Long.MinValue)
-    val deltaAgg = baseAgg(
-        appendLog.where(col(epochCol) > horizon), keyCol, valCol,
-        extra = Seq(max(col(epochCol)).as("__max_epoch")))
-      .localCheckpoint(true)
-    val newHorizon = deltaAgg.agg(max(col("__max_epoch"))).head().get(0) match {
-      case null       => horizon // empty delta: nothing advanced
-      case e: Long    => e
-      case e: Int     => e.toLong
-      case other      => throw new IllegalArgumentException(
-        s"epoch column must be integral, got $other")
-    }
-    val deltaOnly = deltaAgg.drop("__max_epoch")
-    val merged = state match {
-      case None => deltaOnly
-      case Some(prev) =>
-        prev.agg.unionByName(deltaOnly)
-          .groupBy(col(keyCol))
-          .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
-    }
-    MaintainedAgg(newHorizon, merged.localCheckpoint(true))
-  }
+      keyCol: String, valCol: String, epochCol: String): MaintainedAgg =
+    fold(state, appendLog, keyCol, epochCol, plainAggs(valCol), dropEmpty = false)
 
   /** [[advance]] over a SIGNED change log — the retractable form: each
     * row carries `signCol` = +1 (insert) or -1 (delete) and contributes
@@ -90,16 +67,28 @@ object Incremental {
     * insert/delete tags map directly onto the sign. */
   def advanceSigned(state: Option[MaintainedAgg], changeLog: DataFrame,
       keyCol: String, valCol: String, epochCol: String,
-      signCol: String): MaintainedAgg = {
+      signCol: String): MaintainedAgg =
+    fold(state, changeLog, keyCol, epochCol,
+      (sum(col(signCol).cast("long")),
+        sum((col(valCol) * col(signCol)).cast("decimal(28,4)"))),
+      dropEmpty = true)
+
+  /** The fold both advances share (see [[advance]]): the rows past the
+    * state's horizon grouped by `keyCol` into `aggs` = (`n`, `total`)
+    * plus their max epoch, eagerly checkpointed; the new horizon read off
+    * that result; the merge into the prior groups, also checkpointed.
+    * `dropEmpty` drops merged groups whose count reached 0. */
+  private def fold(state: Option[MaintainedAgg], log: DataFrame,
+      keyCol: String, epochCol: String, aggs: (Column, Column),
+      dropEmpty: Boolean): MaintainedAgg = {
     val horizon = state.map(_.upToEpoch).getOrElse(Long.MinValue)
-    val deltaAgg = changeLog.where(col(epochCol) > horizon)
+    val deltaAgg = log.where(col(epochCol) > horizon)
       .groupBy(col(keyCol))
-      .agg(sum(col(signCol).cast("long")).as("n"),
-        sum((col(valCol) * col(signCol)).cast("decimal(28,4)")).as("total"),
+      .agg(aggs._1.as("n"), aggs._2.as("total"),
         max(col(epochCol)).as("__max_epoch"))
       .localCheckpoint(true)
     val newHorizon = deltaAgg.agg(max(col("__max_epoch"))).head().get(0) match {
-      case null    => horizon
+      case null    => horizon // empty delta: nothing advanced
       case e: Long => e
       case e: Int  => e.toLong
       case other   => throw new IllegalArgumentException(
@@ -114,10 +103,12 @@ object Incremental {
           .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
     }
     MaintainedAgg(newHorizon,
-      merged.where(col("n") =!= 0).localCheckpoint(true))
+      (if (dropEmpty) merged.where(col("n") =!= 0) else merged).localCheckpoint(true))
   }
 
   /** The full-recompute reference the incremental path must equal. */
-  def recompute(appendLog: DataFrame, keyCol: String, valCol: String): DataFrame =
-    baseAgg(appendLog, keyCol, valCol)
+  def recompute(appendLog: DataFrame, keyCol: String, valCol: String): DataFrame = {
+    val (n, total) = plainAggs(valCol)
+    appendLog.groupBy(col(keyCol)).agg(n.as("n"), total.as("total"))
+  }
 }

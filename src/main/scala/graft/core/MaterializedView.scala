@@ -71,13 +71,7 @@ object MaterializedView {
     * Reads the commit-props carrier; pre-r12 views fall back to the row
     * carrier (those can't be empty — the unsigned fold never retracted). */
   def horizon(store: SnapshotStore, viewTable: String): Option[Long] =
-    store.latestVersion(viewTable).map { v =>
-      store.commitProps(viewTable, v).get(HorizonProp) match {
-        case Some(s) => s.toLong
-        case None =>
-          store.read(viewTable).agg(max(col("_up_to_version"))).head().getLong(0)
-      }
-    }
+    store.latestVersion(viewTable).map(horizonAt(store, viewTable, _))
 
   /** Fold all unseen change sets of `srcTable` into the view; returns the
     * new horizon. No-op (no new version committed) when the source has
@@ -106,6 +100,16 @@ object MaterializedView {
             "refresh — a concurrent maintainer committed; re-run refresh " +
             "from the new horizon")
       }
+    // One signed fold of a change feed: a delete image retracts (-1),
+    // every other image adds (+1).
+    def foldFeed(state: Option[Incremental.MaintainedAgg], feed: DataFrame) =
+      Incremental.advanceSigned(state, feed.withColumn("_sign",
+          when(col("_change_type") === "delete", lit(-1)).otherwise(lit(1))),
+        keyCol, valCol, "_version", "_sign")
+    def commitFold(advanced: Incremental.MaintainedAgg): Option[Long] =
+      commitView(
+        advanced.agg.withColumn("_up_to_version", lit(advanced.upToEpoch)),
+        advanced.upToEpoch)
     def recomputeFromSnapshot(): Option[Long] = {
       val v = store.latestVersion(srcTable).getOrElse(return h)
       val full = Incremental.recompute(store.read(srcTable), keyCol, valCol)
@@ -127,11 +131,7 @@ object MaterializedView {
       if (store.nonFeedMutationsSince(srcTable, b).nonEmpty)
         recomputeFromSnapshot()
       else {
-        val delta = store.changeFeedBootstrap(srcTable)
-          .withColumn("_sign",
-            when(col("_change_type") === "delete", lit(-1)).otherwise(lit(1)))
-        val advanced = Incremental.advanceSigned(None, delta, keyCol, valCol,
-          "_version", "_sign")
+        val advanced = foldFeed(None, store.changeFeedBootstrap(srcTable))
         // An EMPTY bootstrap frame is NOT "nothing changed" (the normal
         // branch's meaning): here the old state is unusable by
         // construction, so an empty frame means the table IS empty at
@@ -140,9 +140,7 @@ object MaterializedView {
         // stale. Recompute from the (empty) snapshot, which commits the
         // empty aggregate under the head horizon.
         if (advanced.upToEpoch == Long.MinValue) recomputeFromSnapshot()
-        else commitView(
-          advanced.agg.withColumn("_up_to_version", lit(advanced.upToEpoch)),
-          advanced.upToEpoch)
+        else commitFold(advanced)
       }
     } else if (store.nonFeedMutationsSince(srcTable, since).nonEmpty) {
       // A rewrite's effect is not in any feed: recompute ONCE from the
@@ -150,19 +148,13 @@ object MaterializedView {
       // sets have strictly greater versions).
       recomputeFromSnapshot()
     } else {
-      val delta = store.changeFeedSince(srcTable, since)
-        .withColumn("_sign",
-          when(col("_change_type") === "delete", lit(-1)).otherwise(lit(1)))
       val state = h.map(v => Incremental.MaintainedAgg(v, read(store, viewTable)))
-      val advanced = Incremental.advanceSigned(state, delta, keyCol, valCol,
-        "_version", "_sign")
+      val advanced = foldFeed(state, store.changeFeedSince(srcTable, since))
       // Nothing new (or a first refresh over a source with no change sets
       // yet): keep the current version — never commit an empty horizonless
       // view. Long.MinValue is Incremental's "no rows folded" sentinel.
       if (h.contains(advanced.upToEpoch) || advanced.upToEpoch == Long.MinValue) h
-      else commitView(
-        advanced.agg.withColumn("_up_to_version", lit(advanced.upToEpoch)),
-        advanced.upToEpoch)
+      else commitFold(advanced)
     }
   }
 }

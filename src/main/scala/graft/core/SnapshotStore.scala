@@ -788,12 +788,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * first; the caller re-bases onto the new head and retries,
     * Delta/Iceberg's commit-log protocol reduced to a pointer file.
     *
-    * Single-table writers reach it through [[publishIf]], and those that
-    * retry do so in ONE loop, [[optimisticCommit]]. The only other
-    * callers keep their own rebase policy: `append`'s relink loop
-    * ([[occAppendCommit]]) and [[rowMutation]]'s rebase over pure
-    * appends. (Multi-table transactions publish through ONE step,
-    * [[publishTxn]]: a `_txn/` intent, then [[forwardPointer]].) */
+    * Two callers: [[publishIf]], through which single-table writers that
+    * retry do so in ONE loop, [[optimisticCommit]]; and `append`'s relink
+    * loop ([[occAppendCommit]]). Row mutations and multi-table
+    * transactions publish through ONE step, [[publishTxn]]: a `_txn/`
+    * intent, then [[forwardPointer]]. */
   private def casAdvance(table: String, next: Long,
       expectedBase: Option[Long]): Boolean = {
     def attempt(): Boolean = {
@@ -1388,7 +1387,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         val survivors = scanWithDv(table, paths, schema, dvs)
           .select(schema.fieldNames
             .map(org.apache.spark.sql.functions.col(_)).toIndexedSeq: _*)
-        // Bucket-claim preservation, same contract as rowMutation: the
+        // Bucket-claim preservation, same contract as mutationCandidate: the
         // vectored files' survivors repartition by the chain's bucket
         // spec, so the fold's rewrite files are bucket-attributed and a
         // bucketed fact table's zero-exchange joins survive the DV fold.
@@ -1408,6 +1407,19 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * vectors ([[compactVectored]]) before proceeding. A spec seam and an
     * ops lever; the default is [[SnapshotStore.DvMaxChainRows]]. */
   private[graft] var dvChainFoldRows: Long = SnapshotStore.DvMaxChainRows
+
+  /** The chain-vector backstop every mutation runs before it reads its
+    * head ([[mutateAll]] per table and round, [[merge]] once): the
+    * accumulated vectors ride every reader's broadcast (scanWithDv),
+    * unbounded across many sparse mutations until something folds them.
+    * Over [[dvChainFoldRows]], fold first (O(vectored files)); the
+    * mutation then runs against the clean head. Committed on its own,
+    * before the mutation: the fold is content-neutral. */
+  private def foldVectorsOverCap(table: String): Unit =
+    latestVersion(table).foreach { v =>
+      if (dvInChain(table, v).valuesIterator.map(_.size.toLong).sum >
+          dvChainFoldRows) compactVectored(table)
+    }
 
   /** Write-time clustering (Iceberg sort-order / Delta OPTIMIZE ZORDER's
     * role for the single-dimension case): range-partition + sort within
@@ -2735,42 +2747,32 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * them into a self-contained version and `vacuum` then reclaims the
     * replaced bytes.
     *
-    * CONCURRENCY: CAS commit like `compact` — but with a LIVENESS
-    * guarantee a bounded recompute loop cannot give. A lost race whose
-    * conflicting commits are all PURE APPENDS re-bases like `append`
-    * does: appends only ADD files, so the already-written survivor
-    * rewrite and tombstones stay exactly valid against the new head —
-    * the candidate is renamed above it, its `_base` repointed, and ONLY
-    * the newly-appended files are scanned for additional matches (work
-    * per round shrinks to the delta, so a sustained appender can no
-    * longer starve the delete; every CAS round has a system-wide
-    * winner). Conflicts with sibling deletes/updates/compactions/
-    * rewrites still discard and recompute — the survivors are only
-    * valid against the exact files scanned — bounded by `maxRetries`
-    * with backoff. Deletes record no change set as inserts; the removed
-    * rows go to `_changes_removed` for the change-DATA feed, while the
-    * insert-only streaming feed's contract stays "rows `append`
-    * admitted" (a delete is "resubscribe" there, as Delta CDF treats
-    * non-CDF commits). */
+    * CONCURRENCY: one call into [[mutateAll]] over this table, so the
+    * delete publishes through the `_txn/` intent like every transaction
+    * and returns the table's new version. Its commit loop gives the
+    * LIVENESS guarantee a bounded recompute loop cannot: a lost race
+    * whose conflicting commits are all PURE APPENDS re-bases the
+    * candidate over the appended files (work per round shrinks to the
+    * delta, so a sustained appender cannot starve the delete), while
+    * conflicts with sibling deletes/updates/compactions/rewrites discard
+    * and recompute, bounded by `maxRetries` with backoff. Deletes record
+    * no change set as inserts; the removed rows go to `_changes_removed`
+    * for the change-DATA feed, while the insert-only streaming feed's
+    * contract stays "rows `append` admitted" (a delete is "resubscribe"
+    * there, as Delta CDF treats non-CDF commits). */
   def delete(table: String, predicate: org.apache.spark.sql.Column,
       maxRetries: Int = 5,
-      dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val hit = coalesce(predicate, lit(false))
-    rowMutation(table, predicate, "delete", maxRetries, dvMaxFraction)(
-      rewrite = (matchedScan, _) => matchedScan.where(not(hit)),
-      changeSetOf = (_, _) => None,
-      dvReplacement = (_, _) => None)
-  }
+      dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long =
+    mutateAll(deletes = Map(table -> predicate), maxRetries = maxRetries,
+      dvMaxFraction = dvMaxFraction)(table)
 
   /** Every commit between `base` and `head` is a pure APPEND — `base`
     * is still in `head`'s chain and no link above it tombstoned
     * anything (delete/update links always carry tombstones; compactions
     * and rewrites are self-contained, which breaks the chain). Exactly
     * the conflicts whose effect is "files were added", against which
-    * the candidate's survivors + tombstones remain valid as-is.
-    * Class-level so [[mutateAll]]'s transaction retry can classify
-    * per-table conflicts the same way [[rowMutation]] does. */
+    * the candidate's survivors + tombstones remain valid as-is; how
+    * [[mutateAll]]'s commit loop classifies each stale table's conflict. */
   private def pureAppendsBetween(table: String, base: Long, head: Long)
       : Boolean = {
       val chain = chainOf(table, head)
@@ -2785,10 +2787,9 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * change images into the candidate's own directory, then relink it
     * above the new head — O(delta-since-base) work however hot the
     * appender. The mutation serializes AFTER the appends it scanned,
-    * same as a recompute. Shared by [[rowMutation]]'s CAS loop and
-    * [[mutateAll]]'s transaction retry (which re-bases each stale
-    * table's candidate instead of discarding the whole cascade when
-    * every conflict is a pure append). */
+    * same as a recompute. [[mutateAll]]'s commit loop re-bases each stale
+    * table's candidate this way instead of discarding the whole
+    * transaction when every conflict is a pure append. */
   private def rebaseMutationCandidate(table: String, cand: Long, base: Long,
       head: Long, predicate: org.apache.spark.sql.Column, op: String,
       rewrite: (DataFrame, StructType) => DataFrame,
@@ -2897,18 +2898,17 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       next
     }
 
-
-  /** The shared copy-on-write engine of [[delete]] and [[update]]:
-    * find matched files (metadata-scale, predicate-pruned), write the
-    * replacement rows `rewrite` produces as a chain-link candidate that
-    * tombstones the matched files, CAS-commit — re-basing over
-    * pure-append conflicts, recomputing (bounded, with backoff) over
-    * everything else. `rewrite(matchedFilesScan, snapshotSchema)` returns
-    * the rows replacing the matched files; `changeSetOf` the rows
-    * recorded as the version's admitted change set (update's
-    * post-images; None for delete). Matched rows (`predicate` TRUE,
-    * null-safe) are always recorded to `_changes_removed` as the
-    * change-data feed's delete images.
+  /** One UNEXPOSED mutation candidate against snapshot `v` — the write
+    * step of [[mutateAll]], so of [[delete]], [[update]] and
+    * [[deleteAll]]: matched-file scan, DV policy split, rewrite/post-image
+    * data (bucket-attributed when the chain claims a layout), tombstones,
+    * change images — committed with `advance = false`, pointer untouched.
+    * None when nothing matched. `rewrite(matchedFilesScan, schema)`
+    * returns the rows replacing the matched files; `changeSetOf` the rows
+    * recorded as the version's admitted change set (update's post-images;
+    * None for delete). Matched rows (`predicate` TRUE, null-safe) are
+    * always recorded to `_changes_removed` as the change-data feed's
+    * delete images.
     *
     * DELETION VECTORS (the row-granular escape from copy-on-write's
     * worst case): one matching row in a fat, badly-clustered file forces
@@ -2925,73 +2925,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * per-mutation vector is capped at [[SnapshotStore.DvMaxRowsPerMutation]]
     * (it transits the driver and every reader's broadcast) — over the
     * cap, the dense-predicate reality wins and those files rewrite. */
-  private def rowMutation(table: String,
-      predicate: org.apache.spark.sql.Column, op: String, maxRetries: Int,
-      dvMaxFraction: Double = 0.0)(
-      rewrite: (DataFrame, StructType) => DataFrame,
-      changeSetOf: (DataFrame, StructType) => Option[DataFrame],
-      dvReplacement: (DataFrame, StructType) => Option[DataFrame]): Long = {
-    def pureAppendsSince(base: Long, head: Long): Boolean =
-      pureAppendsBetween(table, base, head)
-
-    def rebaseOnto(cand: Long, base: Long, head: Long): Long =
-      rebaseMutationCandidate(table, cand, base, head, predicate, op,
-        rewrite, changeSetOf)
-
-    /** CAS until won or a non-append conflict forces a recompute (None). */
-    @tailrec def casLoop(cand: Long, base: Long): Option[Long] =
-      if (casAdvance(table, cand, Some(base))) Some(cand)
-      else {
-        val head = latestVersion(table).getOrElse(
-          throw new IllegalStateException(s"pointer of $table vanished mid-CAS"))
-        require(head != base, s"$op CAS to $table failed with unmoved pointer $head")
-        if (pureAppendsSince(base, head)) casLoop(rebaseOnto(cand, base, head), head)
-        else { discardCandidate(table, cand); None }
-      }
-
-    @tailrec def attempt(retriesLeft: Int): Long = {
-      val v = latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version of $table"))
-      val live = liveDataFiles(table, v)
-      if (live.isEmpty) v
-      else if (dvInChain(table, v).valuesIterator.map(_.size.toLong).sum >
-          dvChainFoldRows) {
-        // Chain-vector backstop: the accumulated vectors ride every
-        // reader's broadcast (scanWithDv) — unbounded across many sparse
-        // mutations until something folds them. Fold first (O(vectored
-        // files)), then mutate against the clean head; the fold empties
-        // the chain's vectors, so this branch cannot re-trigger.
-        compactVectored(table)
-        attempt(retriesLeft)
-      } else mutationCandidate(table, v, predicate, op, dvMaxFraction)(
-        rewrite, changeSetOf, dvReplacement) match {
-        case None => v
-        case Some(cand) =>
-          SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-          casLoop(cand, v) match {
-            case Some(won) => won
-            case None if retriesLeft > 0 =>
-              // Non-append conflict (sibling delete/update/compact/
-              // rewrite): recompute against the new head after a short
-              // backoff so racing mutators interleave instead of
-              // lock-stepping.
-              recomputeBackoff(maxRetries - retriesLeft)
-              attempt(retriesLeft - 1)
-            case None => throw new IllegalStateException(
-              s"$op($table) lost the commit race to conflicting rewrites " +
-                s"$maxRetries times — retry later or widen maxRetries " +
-                "(pure-append contention re-bases and cannot starve this)")
-          }
-      }
-    }
-    attempt(maxRetries)
-  }
-
-  /** One UNEXPOSED mutation candidate against snapshot `v` — the shared
-    * write step of [[rowMutation]] and [[deleteAll]]: matched-file scan,
-    * DV policy split, rewrite/post-image data (bucket-attributed when the
-    * chain claims a layout), tombstones, change images — committed with
-    * `advance = false`, pointer untouched. None when nothing matched. */
   private def mutationCandidate(table: String, v: Long,
       predicate: org.apache.spark.sql.Column, op: String,
       dvMaxFraction: Double)(
@@ -3108,8 +3041,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * version's change SET (so the streaming insert feed and
     * `changesSince` see them as admitted rows, and
     * [[graft.core.Incremental.advanceSigned]] folds the net effect of
-    * the update into a maintained aggregate exactly). Same CAS commit,
-    * append-rebase liveness, and non-append recompute as `delete`.
+    * the update into a maintained aggregate exactly).
+    *
+    * CONCURRENCY: one call into [[mutateAll]] over this table, exactly
+    * like `delete`: one `_txn/` intent, append-rebase liveness, and
+    * bounded recompute over non-append conflicts.
     *
     * TYPE SAFETY: each assignment's resolved type must equal the pinned
     * column type or up-cast to it losslessly ([[Cast.canUpCast]]) —
@@ -3121,15 +3057,13 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
   def update(table: String, predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       maxRetries: Int = 5,
-      dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long = {
-    val (rw, cs, dv) = updateFns(predicate, assignments)
-    rowMutation(table, predicate, "update", maxRetries, dvMaxFraction)(
-      rewrite = rw, changeSetOf = cs, dvReplacement = dv)
-  }
+      dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long =
+    mutateAll(updates = Map(table -> ((predicate, assignments))),
+      maxRetries = maxRetries, dvMaxFraction = dvMaxFraction)(table)
 
   /** The rewrite / change-set / DV-replacement functions of a predicate
-    * UPDATE with `assignments` — [[update]]'s machinery factored out so
-    * [[mutateAll]]'s per-table candidates reuse it verbatim. */
+    * UPDATE with `assignments`, for [[mutateAll]]'s per-table candidates.
+    * The assignments are validated once per snapshot schema they meet. */
   private def updateFns(predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column])
       : ((DataFrame, StructType) => DataFrame,
@@ -3143,8 +3077,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       assignments.collectFirst {
         case (k, c) if k.equalsIgnoreCase(fieldName) => c
       }
-    var validated = false
-    def validate(schema: StructType): Unit = if (!validated) {
+    var validatedFor = Option.empty[StructType]
+    def validate(schema: StructType): Unit = if (!validatedFor.contains(schema)) {
       val badCols = assignments.keys.filterNot(k =>
         schema.fieldNames.exists(_.equalsIgnoreCase(k)))
       require(badCols.isEmpty,
@@ -3164,7 +3098,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
               "cast explicitly in the assignment expression if intended")
         }
       }
-      validated = true
+      validatedFor = Some(schema)
     }
     def postImage(rows: DataFrame, schema: StructType): DataFrame = {
       validate(schema)
@@ -3431,7 +3365,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           .reduceOption(_.unionByName(_))
         val changeSet = (postImages.toSeq ++ inserts.toSeq)
           .reduceOption(_.unionByName(_))
-        // Same bucket-claim preservation as rowMutation: survivors,
+        // Same bucket-claim preservation as mutationCandidate: survivors,
         // post-images AND inserts repartition by the head's bucket spec,
         // so every file this merge writes is bucket-attributed (part
         // index = bucket id) and the upserted fact table keeps its
@@ -3445,14 +3379,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           props = bucketProps + (SnapshotStore.OpProp -> "merge")))
       }
     }
-    // Chain-vector backstop (see rowMutation): fold an over-cap vector
-    // chain before merging, so reader broadcasts stay bounded however
-    // many sparse merges stack.
-    latestVersion(table).foreach { v =>
-      if (dvInChain(table, v).valuesIterator.map(_.size.toLong).sum >
-          dvChainFoldRows)
-        compactVectored(table)
-    }
+    foldVectorsOverCap(table)
     optimisticCommit(table, "merge", maxRetries)(candidate)
   }
 
@@ -3985,30 +3912,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * every table's predicate-delete commits together or not at all, so no
     * reader can ever observe the dangling half of a cascade (an edge
     * whose concept is gone, or a concept whose edges outlived it).
-    *
-    * Mechanics: each table's delete prepares EXACTLY like [[delete]] —
-    * matched-file scan, DV policy split, bucket-attributed survivors,
-    * tombstones, delete images — as an unexposed candidate
-    * ([[mutationCandidate]]); the commit point is [[appendAll]]'s
-    * write-ahead intent protocol: under the sorted pointer locks every
-    * table's base is re-validated, the `_txn/` intent lands (the
-    * roll-forward point — a crash after it completes the WHOLE cascade
-    * via [[recoverPendingTxns]]), sentinels stamp, pointers move, intent
-    * deleted. Tables whose predicate matched nothing participate in the
-    * validation (the cascade serializes against them too) but commit no
-    * version.
-    *
-    * CONTENTION posture (r16): when EVERY stale table's conflict is a
-    * pure APPEND, each candidate re-bases in place over the appended
-    * delta — single-table [[delete]]'s O(delta) liveness path, extended
-    * to the transaction — so a sustained appender on a participating
-    * table can no longer starve the cascade (rebase rounds are not
-    * counted against `maxRetries`; each serializes after appends some
-    * writer committed). Any NON-append conflict (sibling delete/update/
-    * compact/rewrite) still discards ALL candidates and re-prepares
-    * against the new heads, bounded by `maxRetries` with backoff
-    * (merge's recompute-on-conflict posture — rewrites don't commute
-    * with deletes). */
+    * [[mutateAll]] with deletes only. */
   def deleteAll(predicates: Map[String, org.apache.spark.sql.Column],
       maxRetries: Int = 5,
       dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction)
@@ -4016,15 +3920,43 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     mutateAll(deletes = predicates, maxRetries = maxRetries,
       dvMaxFraction = dvMaxFraction)
 
-  /** [[deleteAll]] generalized to a MIXED atomic transaction: per-table
-    * predicate DELETEs and predicate UPDATEs committing at one point —
-    * the reference's reassign-then-dissolve shape (move an ontology's
-    * members, update, AND retire the ontology row, delete, in one tx:
-    * ontology_scoring.py:447-731) with exactly [[deleteAll]]'s intent
-    * protocol (published through [[publishTxn]], like [[appendAll]]),
-    * crash contract, and stale-base re-prepare. A table may
-    * appear in `deletes` or `updates`, not both (one mutation per table
-    * per tx — split the predicate instead). */
+  /** ATOMIC ROW MUTATION — per-table predicate DELETEs and predicate
+    * UPDATEs committing at one point, and the store's ONE mutation commit
+    * loop: single-table [[delete]] and [[update]] are calls into it over
+    * their own table. The multi-table form is the reference's
+    * reassign-then-dissolve shape (move an ontology's members, update,
+    * AND retire the ontology row, delete, in one tx:
+    * ontology_scoring.py:447-731). A table may appear in `deletes` or
+    * `updates`, not both (one mutation per table per tx — split the
+    * predicate instead). Returns every table's version: the new one, or
+    * the unchanged head when its predicate matched nothing.
+    *
+    * Mechanics: each round folds over-cap vector chains
+    * ([[foldVectorsOverCap]]), then prepares every table's unexposed
+    * candidate against its head ([[mutationCandidate]]: matched-file scan,
+    * DV policy split, bucket-attributed survivors, tombstones, delete
+    * images). [[SnapshotStore.testRaceHook]] fires once per round; then,
+    * under the sorted pointer locks, every table's base is re-validated
+    * and [[publishTxn]] lands the `_txn/` intent (the roll-forward point —
+    * a crash after it completes the WHOLE transaction via
+    * [[recoverPendingTxns]]), moves the pointers and removes the intent.
+    * Tables whose predicate matched nothing participate in the validation
+    * (the transaction serializes against them too: a sibling landing on a
+    * no-match table could have added rows the predicate now matches) but
+    * commit no version.
+    *
+    * CONTENTION: when EVERY stale table's conflict is a pure APPEND
+    * ([[pureAppendsBetween]]), each candidate re-bases in place over the
+    * appended delta ([[rebaseMutationCandidate]]), O(delta-since-base)
+    * however hot the appenders, and a stale table that matched nothing
+    * re-prepares against its new head. Rebase rounds are not counted
+    * against `maxRetries`: each serializes after appends some writer
+    * committed, so a sustained appender cannot starve a mutation. Any
+    * NON-append conflict (sibling delete/update/compact/rewrite) discards
+    * ALL candidates and re-prepares against the new heads, bounded by
+    * `maxRetries` with [[recomputeBackoff]] (rewrites don't commute with
+    * deletes); out of budget, it fails loudly naming the operation —
+    * `delete(t)`/`update(t)` for one table, `mutateAll(t, u)` otherwise. */
   def mutateAll(
       deletes: Map[String, org.apache.spark.sql.Column] = Map.empty,
       updates: Map[String, (org.apache.spark.sql.Column,
@@ -4039,16 +3971,12 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     require(both.isEmpty,
       s"mutateAll: table(s) ${both.mkString(", ")} appear in deletes AND " +
         "updates — one mutation per table per transaction")
-    recoverPendingTxns()
     val tables = (deletes.keySet ++ updates.keySet).toSeq.sorted
-    /** A table's transaction half: predicate, op tag, and the rewrite
-      * functions — needed both to PREPARE a candidate and to RE-BASE it
-      * over pure-append conflicts. */
-    def fnsOf(t: String): (org.apache.spark.sql.Column, String,
-        (DataFrame, StructType) => DataFrame,
-        (DataFrame, StructType) => Option[DataFrame],
-        (DataFrame, StructType) => Option[DataFrame]) =
-      deletes.get(t) match {
+    // Each table's half, built once (an update without assignments is
+    // refused here): predicate, op tag and the rewrite functions that
+    // PREPARE a candidate and RE-BASE it over pure-append conflicts.
+    val fns = tables.map { t =>
+      t -> (deletes.get(t) match {
         case Some(pred) =>
           val hit = coalesce(pred, lit(false))
           (pred, "delete",
@@ -4059,107 +3987,85 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
           val (pred, assignments) = updates(t)
           val (rw, cs, dv) = updateFns(pred, assignments)
           (pred, "update", rw, cs, dv)
-      }
-    def attempt(maxRetries: Int): Map[String, Long] = {
-      var retriesLeft = maxRetries
-      def backstopAndBases(): Map[String, Long] = {
-        // per-table chain-vector backstop, like any mutation (committed
-        // separately BEFORE the transaction: the fold is content-neutral)
-        tables.foreach { t =>
-          latestVersion(t).foreach { v =>
-            if (dvInChain(t, v).valuesIterator.map(_.size.toLong).sum >
-                dvChainFoldRows) compactVectored(t)
-          }
-        }
-        tables.map { t =>
-          t -> latestVersion(t).getOrElse(throw new IllegalArgumentException(
-            s"no committed version of $t"))
-        }.toMap
-      }
-      var bases: Map[String, Long] = backstopAndBases()
-      def prepare(t: String): Option[Long] = {
-        val (pred, op, rw, cs, dv) = fnsOf(t)
-        mutationCandidate(t, bases(t), pred, op, dvMaxFraction)(
-          rewrite = rw, changeSetOf = cs, dvReplacement = dv)
-      }
-      var cands: Map[String, Option[Long]] = tables.map(t => t -> prepare(t)).toMap
-      while (true) {
-        val withCand = tables.filter(cands(_).isDefined)
-        if (withCand.isEmpty) return bases // nothing matched anywhere: no-op tx
-        SnapshotStore.testRaceHook() // spec seam: force a sibling commit
-        val committed = underPointerLocks(tables) {
-          tables.foreach(applyPendingIntentsFor) // crashed-txn intents first
-          // EVERY table re-validates, matched or not: the cascade's
-          // serialization point must see all its tables at the prepared
-          // bases (a sibling landing on a no-match table could have
-          // added rows the predicate would now match).
-          val stale = tables.filter(t => !latestVersion(t).contains(bases(t)))
-          if (stale.nonEmpty) None
-          else {
-            publishTxn(withCand.map(t => t -> cands(t).get).toMap)
-            Some(tables.map(t => t -> cands(t).getOrElse(bases(t))).toMap)
-          }
-        }
-        committed match {
-          case Some(r) => return r
-          case None =>
-            val staleTables = tables.filter(t =>
-              !latestVersion(t).contains(bases(t)))
-            val heads = staleTables.map(t => t -> latestVersion(t).getOrElse(
-              throw new IllegalStateException(
-                s"pointer of $t vanished mid-transaction"))).toMap
-            if (staleTables.nonEmpty && staleTables.forall(t =>
-                pureAppendsBetween(t, bases(t), heads(t)))) {
-              // PURE-APPEND LIVENESS PATH (the single-table rebase,
-              // extended to the transaction): every stale table's
-              // conflict only ADDED files, so each candidate re-bases in
-              // place — the appended delta is scanned for new matches and
-              // folded in, O(delta-since-base) however hot the appenders —
-              // instead of the whole cascade discarding and re-preparing.
-              // A stale table whose predicate matched NOTHING at the old
-              // base re-prepares against the new head (the appends may
-              // have introduced matches). Not counted against maxRetries:
-              // like the single-table path, every rebase round serializes
-              // after appends some writer actually committed, so a
-              // sustained appender can no longer starve the cascade.
-              // A failure mid-rebase (e.g. the grown-CHECK refusal)
-              // discards every remaining candidate before rethrowing.
-              try staleTables.foreach { t =>
-                val (pred, op, rw, cs, _) = fnsOf(t)
-                val rebased = cands(t) match {
-                  case Some(c) =>
-                    val r = rebaseMutationCandidate(t, c, bases(t),
-                      heads(t), pred, op, rw, cs)
-                    bases += t -> heads(t)
-                    Some(r)
-                  case None =>
-                    bases += t -> heads(t)
-                    prepare(t)
-                }
-                cands += t -> rebased
-              } catch { case e: Throwable =>
-                discardCandidates(tables.flatMap(t => cands(t).map(t -> _)), Some(e))
-                throw e
-              }
-            } else if (retriesLeft > 0) {
-              withCand.foreach(t => discardCandidate(t, cands(t).get))
-              recomputeBackoff(maxRetries - retriesLeft)
-              retriesLeft -= 1
-              bases = backstopAndBases()
-              cands = tables.map(t => t -> prepare(t)).toMap
-            } else {
-              withCand.foreach(t => discardCandidate(t, cands(t).get))
-              throw new IllegalStateException(
-                s"mutateAll(${tables.mkString(", ")}) lost the commit race " +
-                  s"to conflicting rewrites $maxRetries times — retry later " +
-                  "or widen maxRetries (pure-append contention re-bases " +
-                  "and cannot starve this)")
-            }
-        }
-      }
-      throw new IllegalStateException("unreachable")
+      })
+    }.toMap
+    val name = tables match {
+      case Seq(t) => s"${fns(t)._2}($t)"
+      case _ => s"mutateAll(${tables.mkString(", ")})"
     }
-    attempt(maxRetries)
+    recoverPendingTxns()
+    var retriesLeft = maxRetries
+    def backstopAndBases(): Map[String, Long] = {
+      tables.foreach(foldVectorsOverCap)
+      tables.map { t =>
+        t -> latestVersion(t).getOrElse(throw new IllegalArgumentException(
+          s"no committed version of $t"))
+      }.toMap
+    }
+    var bases: Map[String, Long] = backstopAndBases()
+    def prepare(t: String): Option[Long] = {
+      val (pred, op, rw, cs, dv) = fns(t)
+      mutationCandidate(t, bases(t), pred, op, dvMaxFraction)(
+        rewrite = rw, changeSetOf = cs, dvReplacement = dv)
+    }
+    var cands: Map[String, Option[Long]] = tables.map(t => t -> prepare(t)).toMap
+    while (true) {
+      val withCand = tables.filter(cands(_).isDefined)
+      if (withCand.isEmpty) return bases // nothing matched anywhere: no-op tx
+      SnapshotStore.testRaceHook() // spec seam: force a sibling commit
+      val committed = underPointerLocks(tables) {
+        tables.foreach(applyPendingIntentsFor) // crashed-txn intents first
+        val stale = tables.filter(t => !latestVersion(t).contains(bases(t)))
+        if (stale.nonEmpty) None
+        else {
+          publishTxn(withCand.map(t => t -> cands(t).get).toMap)
+          Some(tables.map(t => t -> cands(t).getOrElse(bases(t))).toMap)
+        }
+      }
+      committed match {
+        case Some(r) => return r
+        case None =>
+          val staleTables = tables.filter(t =>
+            !latestVersion(t).contains(bases(t)))
+          val heads = staleTables.map(t => t -> latestVersion(t).getOrElse(
+            throw new IllegalStateException(
+              s"pointer of $t vanished mid-transaction"))).toMap
+          if (staleTables.nonEmpty && staleTables.forall(t =>
+              pureAppendsBetween(t, bases(t), heads(t)))) {
+            // Pure-append liveness path (see CONTENTION above). A failure
+            // mid-rebase (e.g. the grown-CHECK refusal) discards every
+            // remaining candidate before rethrowing.
+            try staleTables.foreach { t =>
+              val (pred, op, rw, cs, _) = fns(t)
+              val rebased = cands(t) match {
+                case Some(c) =>
+                  val r = rebaseMutationCandidate(t, c, bases(t),
+                    heads(t), pred, op, rw, cs)
+                  bases += t -> heads(t)
+                  Some(r)
+                case None =>
+                  bases += t -> heads(t)
+                  prepare(t)
+              }
+              cands += t -> rebased
+            } catch { case e: Throwable =>
+              discardCandidates(tables.flatMap(t => cands(t).map(t -> _)), Some(e))
+              throw e
+            }
+          } else {
+            withCand.foreach(t => discardCandidate(t, cands(t).get))
+            if (retriesLeft == 0) throw new IllegalStateException(
+              s"$name lost the commit race to conflicting rewrites " +
+                s"$maxRetries times — retry later or widen maxRetries " +
+                "(pure-append contention re-bases and cannot starve this)")
+            recomputeBackoff(maxRetries - retriesLeft)
+            retriesLeft -= 1
+            bases = backstopAndBases()
+            cands = tables.map(t => t -> prepare(t)).toMap
+          }
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Steps 2-4 of [[appendAll]] and [[appendAllSerialized]] — their ONE

@@ -17,42 +17,31 @@ import graft.dedup.Dedup
   * content-hash lookup (api/app/services/content_hasher.py), here it is
   * one set-oriented job per micro-batch.
   *
-  * EXACTLY-ONCE: foreachBatch is at-least-once, and the batch performs
-  * TWO appends that cannot be one atomic commit. Both ride
-  * [[SnapshotSink.appendBatch]]'s batch-id idempotence (`_batch_id`
-  * stamped into the rows, checked on replay), ordered docs-first —
-  * deliberately. A crash between the appends replays the batch against an
-  * index that does NOT yet contain this batch's fingerprints, so the
-  * anti-join re-derives the identical fresh set (replayable-source
-  * contract + pinned index version); the docs append then skips on its
-  * committed batch id and only the index catches up. The reverse order
-  * would poison the replay: fingerprints already committed to the index
-  * would filter the admitted rows out of `fresh` BEFORE they ever reached
-  * the docs table — silent loss, not duplication. The reference gets the
-  * same guarantee from one Postgres transaction
-  * (api/app/services/job_queue.py); here the atomic unit is a store
-  * version commit, so idempotence replaces atomicity across the pair.
+  * EXACTLY-ONCE: foreachBatch is at-least-once, so the batch commits
+  * both tables in ONE [[SnapshotSink.appendAllBatch]] — one `_txn/`
+  * intent over the two deltas, with the batch id recorded in both. A
+  * crash before the intent exposes nothing and the replay re-derives the
+  * same fresh set against the same index; a crash after it rolls the
+  * whole batch forward, and the replay skips on the committed batch id.
+  * The reference gets the same guarantee from one Postgres transaction
+  * (api/app/services/job_queue.py).
   */
 final class DedupIngest(spark: SparkSession, store: SnapshotStore,
     docsTable: String = "docs", indexTable: String = "fp_index") {
 
   /** Process ONE micro-batch exactly-once. Public so the crash-replay
     * contract is directly testable: re-invoking with the same `batchId`
-    * (any prefix of the two appends already committed) must add zero new
-    * docs and zero new index rows. */
+    * after a committed batch must add zero new docs and zero new index
+    * rows. */
   def processBatch(batch: DataFrame, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // The index is appended LAST, so its committed batch id implies the
-    // docs append committed too: a replay of a fully-committed batch
-    // (crash between sink success and checkpoint write) skips everything,
-    // anti-join included.
-    if (SnapshotSink.lastBatchId(store, indexTable).exists(_ >= batchId)) return
-    // Lazy outputs over ONE pinned index version: the docs append cannot
-    // move what the index append's anti-join reads.
+    // Lazy outputs over ONE pinned index version, taken after any crashed
+    // batch's intent rolled forward so its fingerprints count.
+    store.recoverPendingTxns()
     val ix = store.latestVersion(indexTable).map(store.readAt(indexTable, _))
     val (fresh, delta) = Dedup.dedupAgainstIndex(batch, idCol, textCol, ix)
-    SnapshotSink.appendBatch(store, docsTable, fresh, batchId)
-    SnapshotSink.appendBatch(store, indexTable, delta, batchId)
+    SnapshotSink.appendAllBatch(store, Map(docsTable -> fresh, indexTable -> delta),
+      batchId)
     ()
   }
 

@@ -901,7 +901,7 @@ class GraftChangeFeedSpec extends SparkSpec {
       == Seq(10L, 11L, 20L))
   }
 
-  test("DedupIngest replay is exactly-once, including a crash between appends") {
+  test("DedupIngest replay is exactly-once, including a crash before and after the commit intent") {
     val root = tmp("graft-di-replay")
     val st = new SnapshotStore(spark, root)
     val ingest = new graft.streaming.DedupIngest(spark, st)
@@ -917,24 +917,41 @@ class GraftChangeFeedSpec extends SparkSpec {
     assert(st.history("docs").size == d0 && st.history("fp_index").size == i0)
     assert(docsCount == 2L && indexReps == Set(1L, 2L))
 
-    // crash BETWEEN the appends: docs committed, index not — replicate the
-    // batch's first half by hand, then replay the whole batch
+    // a crash in the batch's one commit BEFORE its intent: nothing is
+    // exposed, and the replay on a reopened store admits the batch
     val b1 = Seq(3L -> "alpha beta", 4L -> "epsilon zeta").toDF("doc_id", "text")
-    val (fresh, _) = graft.dedup.Dedup.dedupAgainstIndex(
-      b1, "doc_id", "text", Some(st.read("fp_index")))
-    graft.streaming.SnapshotSink.appendBatch(st, "docs",
-      fresh.localCheckpoint(true), 1L)
-    assert(docsCount == 3L && indexReps == Set(1L, 2L)) // the torn state
-    ingest.processBatch(b1, 1L)
-    // doc 4 admitted exactly once; the index caught up with its fingerprint
-    assert(docsCount == 3L)
-    assert(ingest.corpus().get.select("doc_id").as[Long].collect().toSet
-      == Set(1L, 2L, 4L))
-    assert(indexReps == Set(1L, 2L, 4L))
-    // and replaying the now-complete batch once more is a no-op
-    val (d1, i1) = (st.history("docs").size, st.history("fp_index").size)
-    ingest.processBatch(b1, 1L)
-    assert(st.history("docs").size == d1 && st.history("fp_index").size == i1)
+    var fired = false
+    SnapshotStore.testRaceHook = () => if (!fired) {
+      fired = true; throw new RuntimeException("simulated crash before intent")
+    }
+    val e1 = try intercept[RuntimeException](ingest.processBatch(b1, 1L))
+      finally SnapshotStore.testRaceHook = () => ()
+    assert(e1.getMessage.contains("simulated crash"))
+    assert(docsCount == 2L && indexReps == Set(1L, 2L), "nothing exposed")
+    new graft.streaming.DedupIngest(spark, new SnapshotStore(spark, root))
+      .processBatch(b1, 1L)
+    // a crash AFTER the intent: the reopened store's replay rolls the
+    // batch forward and skips it on its committed batch id
+    val b2 = Seq(5L -> "epsilon zeta", 6L -> "eta theta", 7L -> "eta theta")
+      .toDF("doc_id", "text")
+    SnapshotStore.testTxnIntentHook =
+      () => throw new RuntimeException("simulated crash after intent")
+    val e2 = try intercept[RuntimeException](ingest.processBatch(b2, 2L))
+      finally SnapshotStore.testTxnIntentHook = () => ()
+    assert(e2.getMessage.contains("simulated crash"))
+    val reopened = new graft.streaming.DedupIngest(spark,
+      new SnapshotStore(spark, root))
+    reopened.processBatch(b2, 2L)
+    // every doc admitted once; the index holds each fingerprint once
+    val admitted = reopened.corpus().get.select("doc_id").as[Long].collect()
+    assert(admitted.sorted.toSeq == Seq(1L, 2L, 4L, 6L))
+    assert(indexReps == Set(1L, 2L, 4L, 6L))
+    assert(st.read("fp_index").select("fingerprint").distinct().count() == 4L &&
+      st.read("fp_index").count() == 4L)
+    // and replaying the committed batch once more is a no-op
+    val (d2, i2) = (st.history("docs").size, st.history("fp_index").size)
+    reopened.processBatch(b2, 2L)
+    assert(st.history("docs").size == d2 && st.history("fp_index").size == i2)
   }
 
   test("feed composes with DedupIngest: admitted docs stream downstream") {

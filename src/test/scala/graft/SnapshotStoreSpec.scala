@@ -640,6 +640,28 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(orphanDirs(root, "t").isEmpty)
   }
 
+  test("a single-table delete out of budget fails loudly under its own name, table unchanged, no orphan") {
+    val root = java.nio.file.Files.createTempDirectory("graft-delbudget").toString
+    val st = new SnapshotStore(spark, root)
+    val sibling = new SnapshotStore(spark, root)
+    st.commit("t", spark.range(0, 10).toDF("id"))
+    st.append("t", spark.range(10, 20).toDF("id"))
+    var compacted = Option.empty[Long]
+    var fired = false
+    SnapshotStore.testRaceHook = () => if (!fired) {
+      fired = true // set FIRST: compact fires the hook too
+      compacted = Some(sibling.compact("t"))
+    }
+    val e = try intercept[IllegalStateException](
+        st.delete("t", col("id") % 3 === 0, maxRetries = 0))
+      finally SnapshotStore.testRaceHook = () => ()
+    assert(e.getMessage.startsWith("delete(t) lost the commit race"),
+      e.getMessage)
+    assert(st.latestVersion("t") == compacted, "the sibling's compaction is the head")
+    assert(st.read("t").as[Long].collect().sorted.toSeq == (0L until 20L))
+    assert(orphanDirs(root, "t").isEmpty, orphanDirs(root, "t"))
+  }
+
   test("delete re-bases over a pure-append conflict: no recompute, no starvation") {
     // Force the exact interleaving that starved the old recompute loop: a
     // sibling append lands AFTER the delete's survivor candidate is fully
@@ -1385,7 +1407,11 @@ class SnapshotStoreSpec extends SparkSpec {
       ("mutateAll", _.mutateAll(
         deletes = Map("a" -> (col("id") === 1L)),
         updates = Map("b" -> ((col("id") === 1L, Map("id" -> lit(9L)))))),
-        Map("a" -> Set(2L), "b" -> Set(2L, 9L))))
+        Map("a" -> Set(2L), "b" -> Set(2L, 9L))),
+      ("delete", _.delete("a", col("id") === 1L),
+        Map("a" -> Set(2L), "b" -> Set(1L, 2L))),
+      ("update", _.update("b", col("id") === 1L, Map("id" -> lit(9L))),
+        Map("a" -> Set(1L, 2L), "b" -> Set(2L, 9L))))
     writers.foreach { case (name, write, expected) =>
       val st = freshStore()
       st.commit("a", Seq(1L, 2L).toDF("id"))

@@ -21,6 +21,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * the `"_txn"` name is spelled only in `txnDir`. A copy of either
   * protocol half elsewhere fails here with `file:line`.
   *
+  * The store's row mutations run one commit loop. `casAdvance` is called
+  * only from `publishIf` and `occAppendCommit`; `mutationCandidate` and
+  * `rebaseMutationCandidate` only from `mutateAll`, which single-table
+  * `delete` and `update` call; and the chain-vector fold threshold
+  * `dvChainFoldRows` is read only in the one backstop helper,
+  * `foldVectorsOverCap`. A second mutation loop or backstop fails here
+  * with `file:line`.
+  *
   * The choice between a driver-resident structure and the Spark engines
   * has one owner: an `AccelCache` is constructed, and `probeAndLoad` is
   * called, only in `graph/GraphOps.scala`.
@@ -63,12 +71,22 @@ class SourceGuardSpec extends AnyFunSuite {
         lazyCheckpoint.exists(_.findFirstIn(c).isDefined)) => i + 1
     }
 
-  /** (pattern, the one member allowed to contain it, what it is). */
-  private val txnProtocol = Seq(
-    ("""(?<!def )\bwriteTxnIntent\s*\(""".r, "publishTxn", "writeTxnIntent call"),
+  /** (pattern, the members allowed to contain it, what it is). */
+  private type Protocol = Seq[(scala.util.matching.Regex, Set[String], String)]
+
+  private val txnProtocol: Protocol = Seq(
+    ("""(?<!def )\bwriteTxnIntent\s*\(""".r, Set("publishTxn"), "writeTxnIntent call"),
     ("""\bFiles\s*\.\s*(?:list|walk|find|newDirectoryStream)\s*\(\s*txnDir\b""".r,
-      "pendingIntents", "_txn/ listing"),
-    ("\"_txn".r, "txnDir", "_txn/ path"))
+      Set("pendingIntents"), "_txn/ listing"),
+    ("\"_txn".r, Set("txnDir"), "_txn/ path"))
+
+  private val mutationProtocol: Protocol = Seq(
+    ("""(?<!def )\bcasAdvance\s*\(""".r, Set("publishIf", "occAppendCommit"),
+      "casAdvance call"),
+    ("""(?<!def )\b(?:rebaseMutationCandidate|mutationCandidate)\s*\(""".r,
+      Set("mutateAll"), "mutation candidate step"),
+    ("""(?<!var )\bdvChainFoldRows\b""".r, Set("foldVectorsOverCap"),
+      "vector backstop"))
 
   /** A member `def` of a class or object: declared at two-space indent. */
   private val memberDef =
@@ -79,11 +97,12 @@ class SourceGuardSpec extends AnyFunSuite {
     lines.scanLeft("")((m, line) =>
       memberDef.findFirstMatchIn(line).map(_.group(1)).getOrElse(m)).tail
 
-  /** (1-based line, what) for each txn-protocol step outside its owner. */
-  private def txnProtocolBreaches(lines: Seq[String]): Seq[(Int, String)] =
+  /** (1-based line, what) for each protocol step outside its owners. */
+  private def protocolBreaches(protocol: Protocol, lines: Seq[String])
+      : Seq[(Int, String)] =
     lines.zip(members(lines)).zipWithIndex.flatMap { case ((line, member), i) =>
-      code(line).toSeq.flatMap(c => txnProtocol.collect {
-        case (re, owner, what) if member != owner &&
+      code(line).toSeq.flatMap(c => protocol.collect {
+        case (re, owners, what) if !owners(member) &&
             re.findFirstIn(c).isDefined => (i + 1, what)
       })
     }
@@ -139,16 +158,57 @@ class SourceGuardSpec extends AnyFunSuite {
       "    // writeTxnIntent(x) and Files.list(txnDir) in prose",
       "    Files.walk(Paths.get(root, \"_txn\"))",
       "    def inner(): Path = writeTxnIntent(v)")
-    assert(txnProtocolBreaches(src).map(_._1) == Seq(8, 9, 11, 12))
+    assert(protocolBreaches(txnProtocol, src).map(_._1) == Seq(8, 9, 11, 12))
   }
 
   test("src/main/scala writes and lists _txn/ intents in one place each") {
     val offenders = mainSources().flatMap { f =>
-      txnProtocolBreaches(linesOf(f)).map { case (n, what) => s"$f:$n ($what)" }
+      protocolBreaches(txnProtocol, linesOf(f)).map { case (n, what) => s"$f:$n ($what)" }
     }
     assert(offenders.isEmpty,
       "txn intents are written only by publishTxn and listed only by " +
         s"pendingIntents: ${offenders.mkString(", ")}")
+  }
+
+  test("the mutation-loop matcher flags each step outside its owners and nothing else") {
+    val src = Seq(
+      "  private def publishIf(table: String, cand: Long,",
+      "    if (casAdvance(table, cand, expectedHead)) Some(cand)",
+      "  @tailrec private def occAppendCommit(table: String, base: Long): Long =",
+      "    if (casAdvance(table, myVersion, myBase)) myVersion",
+      "  private def casAdvance(table: String, next: Long,",
+      "  def mutateAll(",
+      "      mutationCandidate(t, bases(t), pred, op, dvMaxFraction)(",
+      "          val r = rebaseMutationCandidate(t, c, bases(t),",
+      "  private def foldVectorsOverCap(table: String): Unit =",
+      "          dvChainFoldRows) compactVectored(table)",
+      "  private[graft] var dvChainFoldRows: Long = 1L",
+      "  def delete(table: String): Long = {",
+      "    if (casAdvance(table, cand, Some(base))) Some(cand)",
+      "    mutationCandidate(table, v, predicate, op, dvMaxFraction)(",
+      "    // rebaseMutationCandidate(t) and casAdvance( in prose",
+      "    if (dvInChain(table, v).size > dvChainFoldRows) compactVectored(table)",
+      "  def merge(table: String): Long = {",
+      "    def casLoop(): Boolean = casAdvance(table, c, b)",
+      "    val c = rebaseMutationCandidate(table, c, b, h, p, op, rw, cs)")
+    assert(protocolBreaches(mutationProtocol, src).map(_._1) == Seq(13, 14, 16, 18, 19))
+  }
+
+  test("src/main/scala runs row mutations through one commit loop and one vector backstop") {
+    val offenders = mainSources().flatMap { f =>
+      protocolBreaches(mutationProtocol, linesOf(f)).map { case (n, what) => s"$f:$n ($what)" }
+    }
+    assert(offenders.isEmpty,
+      "casAdvance belongs to publishIf/occAppendCommit, mutation candidates " +
+        s"to mutateAll, the vector backstop to foldVectorsOverCap: ${offenders.mkString(", ")}")
+    // and each step is really where the guard expects it
+    val store = linesOf(java.nio.file.Paths.get(
+      "src", "main", "scala", "graft", "core", "SnapshotStore.scala"))
+    mutationProtocol.foreach { case (re, owners, what) =>
+      assert(store.zip(members(store)).exists { case (line, member) =>
+        owners(member) && code(line).exists(re.findFirstIn(_).isDefined)
+      }, s"no $what in ${owners.mkString(" or ")}")
+    }
   }
 
   /** An accelerator-cache construction or a `probeAndLoad` call. */
