@@ -1109,6 +1109,9 @@ class SnapshotStoreSpec extends SparkSpec {
     st.delete("t", col("id") % 1000 === 5) // pre-check 4 > 4 false → stacks to 8
     val head = st.latestVersion("t").get
     assert(st.dvInChain("t", head).valuesIterator.map(_.size).sum == 8)
+    // an update without assignments is refused before any fold runs
+    intercept[IllegalArgumentException](st.update("t", col("id") === 1L, Map.empty))
+    assert(st.latestVersion("t").contains(head), "a refused update must not fold")
     // next mutation sees 8 > 4: folds first, then mutates the clean head
     st.delete("t", col("id") % 1000 === 7)
     val after = st.latestVersion("t").get
