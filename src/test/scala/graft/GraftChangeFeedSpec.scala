@@ -901,7 +901,7 @@ class GraftChangeFeedSpec extends SparkSpec {
       == Seq(10L, 11L, 20L))
   }
 
-  test("DedupIngest replay is exactly-once, including a crash before and after the commit intent") {
+  test("DedupIngest replay is exactly-once, including a crash between appends") {
     val root = tmp("graft-di-replay")
     val st = new SnapshotStore(spark, root)
     val ingest = new graft.streaming.DedupIngest(spark, st)
