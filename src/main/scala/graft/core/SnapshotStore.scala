@@ -1387,7 +1387,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         val survivors = scanWithDv(table, paths, schema, dvs)
           .select(schema.fieldNames
             .map(org.apache.spark.sql.functions.col(_)).toIndexedSeq: _*)
-        // Bucket-claim preservation, same contract as mutationCandidate: the
+        // Bucket-claim preservation, same contract as mutationCommit: the
         // vectored files' survivors repartition by the chain's bucket
         // spec, so the fold's rewrite files are bucket-attributed and a
         // bucketed fact table's zero-exchange joins survive the DV fold.
@@ -2900,11 +2900,16 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
 
   /** One UNEXPOSED mutation candidate against snapshot `v` — the write
     * step of [[mutateAll]], so of [[delete]], [[update]] and
-    * [[deleteAll]]: matched-file scan, DV policy split, rewrite/post-image
-    * data (bucket-attributed when the chain claims a layout), tombstones,
-    * change images — committed with `advance = false`, pointer untouched.
-    * None when nothing matched. `rewrite(matchedFilesScan, schema)`
-    * returns the rows replacing the matched files; `changeSetOf` the rows
+    * [[deleteAll]]: matched-file scan, DV policy split ([[dvSplit]]),
+    * rewrite/post-image data, tombstones, vector ([[vectorRecord]]) and
+    * change images, committed unexposed through [[mutationCommit]]
+    * (bucket-attributed, pointer untouched). [[merge]] shares those three
+    * steps but not this one: a predicate counts matches per file in one
+    * partially aggregated `groupBy(__file_key)`, while merge's cardinality
+    * rule needs a `(__file_key, __row_idx)` grouping first — one path for
+    * both would add a shuffle to dense deletes. None when nothing
+    * matched. `rewrite(matchedFilesScan, schema)` returns the rows
+    * replacing the matched files; `changeSetOf` the rows
     * recorded as the version's admitted change set (update's post-images;
     * None for delete). Matched rows (`predicate` TRUE, null-safe) are
     * always recorded to `_changes_removed` as the change-data feed's
@@ -2913,18 +2918,14 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * DELETION VECTORS (the row-granular escape from copy-on-write's
     * worst case): one matching row in a fat, badly-clustered file forces
     * a whole-file rewrite — on a 100 TB table a sparse predicate
-    * degrades toward O(table) write cost. Files whose matched fraction
-    * is ≤ `dvMaxFraction` (and whose manifest knows their row count) are
-    * NOT rewritten: the version records their matched rows' indexes in a
-    * `_dv.json` sidecar, readers anti-join the accumulated vectors (a
-    * broadcast of O(DV rows)), and `compact` folds the vectors away like
-    * tombstones. `dvReplacement(matchedDvRows, schema)` contributes the
+    * degrades toward O(table) write cost. The sparse files [[dvSplit]]
+    * picks are NOT rewritten: the version records their matched rows'
+    * indexes in a `_dv.json` sidecar, readers anti-join the accumulated
+    * vectors (a broadcast of O(DV rows)), and `compact` folds the vectors
+    * away like tombstones. `dvReplacement(matchedDvRows, schema)` contributes the
     * rows a DV'd file's matches are REPLACED by (update's post-images,
     * written as ordinary version data; None for delete). Write cost for
-    * the sparse case: O(matched rows), not O(matched files × size). The
-    * per-mutation vector is capped at [[SnapshotStore.DvMaxRowsPerMutation]]
-    * (it transits the driver and every reader's broadcast) — over the
-    * cap, the dense-predicate reality wins and those files rewrite. */
+    * the sparse case: O(matched rows), not O(matched files × size). */
   private def mutationCandidate(table: String, v: Long,
       predicate: org.apache.spark.sql.Column, op: String,
       dvMaxFraction: Double)(
@@ -2946,31 +2947,11 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
         // re-match (they'd re-emit delete images into the change feed).
         val matchedCounts = scanWithDv(table, live, schema, chainDv)
           .where(predicate).groupBy(col("__file_key")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-          .toSeq.sortBy(_._1)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
         if (matchedCounts.isEmpty) None
         else {
-          // DV policy split: a file goes row-granular when the manifest
-          // knows its LIVE row count (total minus accumulated DV) and the
-          // matched fraction is within dvMaxFraction; manifest-less files
-          // and dense hits take the copy-on-write rewrite.
-          val liveTotals: Map[String, Long] = live.flatMap { p =>
-            val dirV = p.getParent.getFileName.toString.stripPrefix("v=").toLong
-            val k = fileKey(p)
-            fileStats(table, dirV).flatMap(_.get(p.getFileName.toString))
-              .map(st => k -> (st.rows -
-                chainDv.get(k).map(_.size.toLong).getOrElse(0L)))
-          }.toMap
-          var (dvEligible, cowSeq) = matchedCounts.partition { case (k, c) =>
-            dvMaxFraction > 0 && liveTotals.get(k).exists(t =>
-              t > 0 && c.toDouble / t <= dvMaxFraction)
-          }
-          if (dvEligible.iterator.map(_._2).sum >
-              SnapshotStore.DvMaxRowsPerMutation) {
-            cowSeq = matchedCounts; dvEligible = Seq.empty
-          }
-          val cowKeys = cowSeq.map(_._1)
-          val dvKeys = dvEligible.map(_._1)
+          val (cowKeys, dvKeys) =
+            dvSplit(table, live, chainDv, matchedCounts, dvMaxFraction)
           def pathsOf(keys: Seq[String]): Seq[Path] =
             keys.map(k => tableDir(table).resolve(k))
           val matchedRows = scanWithDv(table, pathsOf(cowKeys ++ dvKeys),
@@ -2987,36 +2968,76 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
             .map(_.select(selSchema: _*))
           val data = (cowData.toSeq ++ dvData.toSeq)
             .reduceOption(_.unionByName(_))
-          // The recorded vector: (file, row index) of every DV'd match —
-          // O(matched sparse rows), bounded by the cap above.
-          val dvRecord: Map[String, Seq[Long]] = dvMatched.map(
-            _.select(col("__file_key"), col("__row_idx")).collect()
-              .groupBy(_.getString(0))
-              .map { case (k, rs) => k -> rs.map(_.getLong(1)).toSeq.sorted })
-            .getOrElse(Map.empty)
-          // BUCKET-CLAIM PRESERVATION across the mutation. A pure-vector
-          // link (no rewrite files) moves no row, so the claim re-stamps
-          // trivially. A link that WRITES files (copy-on-write survivors,
-          // update post-images) keeps the claim too — by making the new
-          // files bucket-attributed: the written data is repartitioned by
-          // the head's bucket spec, so each part file holds only its
-          // bucket's rows and its part index IS the bucket id, exactly
-          // commitBucketed's layout contract. Delete survivors keep their
-          // key; an update that ASSIGNS the bucket column just lands its
-          // post-image in the new key's file — either way the layout rule
-          // ("bucket b's files hold only bucket-b rows") holds, and a
-          // mutation-heavy bucketed fact table keeps its zero-exchange
-          // joins without waiting for a re-bucket.
-          val (bucketProps, bucketed) = bucketClaimOf(table, v)
-          val dataOut = data.map(bucketed)
-          Some(commitWith(table, dataOut,
-            changeSet = changeSetOf(matchedRows, schema),
-            base = Some(v), snapshot = schema, advance = false,
-            removed = cowKeys,
+          Some(mutationCommit(table, v, schema, data,
+            changeSet = changeSetOf(matchedRows, schema), removed = cowKeys,
             removedRows = Some(matchedRows.select(selSchema: _*)),
-            dv = dvRecord, props = bucketProps + (SnapshotStore.OpProp -> op)))
+            dv = dvMatched.fold(Map.empty[String, Seq[Long]])(vectorRecord),
+            op = op))
         }
     }
+  }
+
+  /** The deletion-vector policy split of a row mutation's matched files;
+    * called by [[mutationCandidate]] and [[merge]]. A file goes
+    * row-granular when the manifest knows its LIVE row count (total minus
+    * the chain's accumulated vector) and its matched fraction is within
+    * `dvMaxFraction`; manifest-less files and dense hits take the
+    * copy-on-write rewrite. The vector transits the driver and every
+    * reader's broadcast, so when its rows would exceed
+    * [[SnapshotStore.DvMaxRowsPerMutation]], every matched file rewrites.
+    * `matched` holds (file key, matched live rows); returns the sorted
+    * (copy-on-write keys, vectored keys). */
+  private def dvSplit(table: String, live: Seq[Path],
+      chainDv: Map[String, Seq[Long]], matched: Seq[(String, Long)],
+      dvMaxFraction: Double): (Seq[String], Seq[String]) = {
+    val liveTotals: Map[String, Long] = live.flatMap { p =>
+      val dirV = p.getParent.getFileName.toString.stripPrefix("v=").toLong
+      val k = fileKey(p)
+      fileStats(table, dirV).flatMap(_.get(p.getFileName.toString))
+        .map(st => k -> (st.rows -
+          chainDv.get(k).map(_.size.toLong).getOrElse(0L)))
+    }.toMap
+    val (dv, cow) = matched.partition { case (k, c) =>
+      dvMaxFraction > 0 && liveTotals.get(k).exists(t =>
+        t > 0 && c.toDouble / t <= dvMaxFraction)
+    }
+    def keys(s: Seq[(String, Long)]) = s.map(_._1).sorted
+    if (dv.iterator.map(_._2).sum > SnapshotStore.DvMaxRowsPerMutation)
+      (keys(matched), Nil)
+    else (keys(cow), keys(dv))
+  }
+
+  /** The deletion vector a row mutation records: the (file, row index) of
+    * each of `dvMatched`'s rows, grouped by file and sorted — O(vectored
+    * rows), which [[dvSplit]] bounds. Called by [[mutationCandidate]] and
+    * [[merge]]. */
+  private def vectorRecord(dvMatched: DataFrame): Map[String, Seq[Long]] =
+    dvMatched.select("__file_key", "__row_idx").collect()
+      .groupBy(_.getString(0))
+      .map { case (k, rs) => k -> rs.map(_.getLong(1)).toSeq.sorted }
+
+  /** Commit a row mutation's unexposed candidate over `v`; called by
+    * [[mutationCandidate]] and [[merge]]. BUCKET-CLAIM PRESERVATION: a
+    * pure-vector link (no data) moves no row, so the claim re-stamps
+    * trivially. A link that WRITES files (copy-on-write survivors, update
+    * post-images, merge inserts) keeps the claim too — by making the new
+    * files bucket-attributed: `data` is repartitioned by the head's bucket
+    * spec, so each part file holds only its bucket's rows and its part
+    * index IS the bucket id, exactly commitBucketed's layout contract.
+    * Delete survivors keep their key; a row whose bucket column is
+    * assigned just lands in the new key's file — either way the layout
+    * rule ("bucket b's files hold only bucket-b rows") holds, and a
+    * mutation-heavy bucketed fact table keeps its zero-exchange joins
+    * without waiting for a re-bucket. */
+  private def mutationCommit(table: String, v: Long, schema: StructType,
+      data: Option[DataFrame], changeSet: Option[DataFrame],
+      removed: Seq[String], removedRows: Option[DataFrame],
+      dv: Map[String, Seq[Long]], op: String): Long = {
+    val (bucketProps, bucketed) = bucketClaimOf(table, v)
+    commitWith(table, data.map(bucketed), changeSet = changeSet,
+      base = Some(v), snapshot = schema, advance = false, removed = removed,
+      removedRows = removedRows, dv = dv,
+      props = bucketProps + (SnapshotStore.OpProp -> op))
   }
 
   /** Row-level UPDATE at O(matched files) write cost — `delete`'s
@@ -3047,9 +3068,10 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * like `delete`: one `_txn/` intent, append-rebase liveness, and
     * bounded recompute over non-append conflicts.
     *
-    * TYPE SAFETY: each assignment's resolved type must equal the pinned
-    * column type or up-cast to it losslessly ([[Cast.canUpCast]]) —
-    * refused loudly up front otherwise. Under non-ANSI evaluation a lossy
+    * TYPE SAFETY ([[AssignmentGate]], shared with `merge`): each
+    * assignment's resolved type must equal the pinned column type or
+    * up-cast to it losslessly ([[Cast.canUpCast]]) — refused loudly up
+    * front otherwise. Under non-ANSI evaluation a lossy
     * `Column.cast` (a non-numeric string into a long column) silently
     * NULLs every matched row, which is data corruption wearing a type
     * coercion's clothes; a caller who wants a parsing/lossy conversion
@@ -3063,67 +3085,85 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
 
   /** The rewrite / change-set / DV-replacement functions of a predicate
     * UPDATE with `assignments`, for [[mutateAll]]'s per-table candidates.
-    * The assignments are validated once per snapshot schema they meet. */
+    * Each function passes the snapshot schema it meets through the
+    * [[AssignmentGate]] before projecting. */
   private def updateFns(predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column])
       : ((DataFrame, StructType) => DataFrame,
          (DataFrame, StructType) => Option[DataFrame],
          (DataFrame, StructType) => Option[DataFrame]) = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(assignments.nonEmpty, "update requires at least one assignment")
     val hit = coalesce(predicate, lit(false))
-    def assigned(schema: StructType, fieldName: String)
-        : Option[org.apache.spark.sql.Column] =
-      assignments.collectFirst {
-        case (k, c) if k.equalsIgnoreCase(fieldName) => c
-      }
-    var validatedFor = Option.empty[StructType]
-    def validate(schema: StructType): Unit = if (!validatedFor.contains(schema)) {
-      val badCols = assignments.keys.filterNot(k =>
-        schema.fieldNames.exists(_.equalsIgnoreCase(k)))
-      require(badCols.isEmpty,
-        s"update assigns to unknown column(s) ${badCols.mkString(", ")}")
-      // Resolve each assignment's type against an empty frame of the
-      // pinned schema — plan-time only, no data touched.
-      val probe = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      schema.fields.foreach { f =>
-        assigned(schema, f.name).foreach { c =>
-          val from = probe.select(c.as(f.name)).schema.head.dataType
-          require(from == f.dataType ||
-            org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, f.dataType),
-            s"update assigns ${from.simpleString} to column ${f.name}: " +
-              s"${f.dataType.simpleString} — a lossy or invalid coercion " +
-              "would silently NULL matched rows under non-ANSI semantics; " +
-              "cast explicitly in the assignment expression if intended")
-        }
-      }
-      validatedFor = Some(schema)
-    }
-    def postImage(rows: DataFrame, schema: StructType): DataFrame = {
-      validate(schema)
-      rows.select(schema.fields.map { f =>
-        assigned(schema, f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }.toIndexedSeq: _*)
+    val gate = new AssignmentGate("update", assignments)
+    def project(rows: DataFrame, schema: StructType,
+        where: Option[org.apache.spark.sql.Column]): DataFrame = {
+      gate.check(schema)
+      rows.select(gate.project(schema, where)(f => col(f.name)): _*)
     }
     (
-      (matchedScan, schema) => {
-        validate(schema)
-        matchedScan.select(schema.fields.map { f =>
-          assigned(schema, f.name) match {
-            case Some(c) =>
-              when(hit, c.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toIndexedSeq: _*)
-      },
+      (matchedScan, schema) => project(matchedScan, schema, Some(hit)),
       (matchedScan, schema) =>
-        Some(postImage(matchedScan.where(hit), schema)),
+        Some(project(matchedScan.where(hit), schema, None)),
       // A sparse update's DV'd rows are REPLACED by their post-images,
       // written as ordinary version data — delete(old row via vector) +
       // insert(new row in the delta) in one commit, O(matched rows).
-      (dvMatched, schema) => Some(postImage(dvMatched, schema)))
+      (dvMatched, schema) => Some(project(dvMatched, schema, None)))
+  }
+
+  /** The ONE assignment gate of the row mutations; built by [[updateFns]]
+    * for `update`'s assignments and by [[merge]] for its `matchedUpdate`
+    * and `insertAssignments`. Target columns match case-insensitively.
+    * `check(schema, on)` refuses an assignment to a column `schema` lacks,
+    * and one whose type — resolved plan-only against `on` applied to an
+    * empty frame of `schema` — neither equals the column's type nor
+    * up-casts to it losslessly ([[Cast.canUpCast]]). Under non-ANSI
+    * evaluation a lossy `Column.cast` silently NULLs (a non-numeric string
+    * into a long column) or truncates (7.9 into an int column), which is
+    * data corruption wearing a type coercion's clothes; a caller who wants
+    * the conversion writes the cast in the assignment expression. Each
+    * snapshot schema is checked once. `project(schema, hit)(old)` is the
+    * written row: each assigned column cast to its pinned type (only where
+    * `hit`, when given), every other column `old(field)`. */
+  private final class AssignmentGate(op: String,
+      assignments: Map[String, org.apache.spark.sql.Column]) {
+    private def assigned(name: String): Option[org.apache.spark.sql.Column] =
+      assignments.collectFirst { case (k, c) if k.equalsIgnoreCase(name) => c }
+    private var checkedFor = Option.empty[StructType]
+    def check(schema: StructType,
+        on: DataFrame => DataFrame = identity): Unit =
+      if (!checkedFor.contains(schema)) {
+        val unknown = assignments.keys.filterNot(k =>
+          schema.fieldNames.exists(_.equalsIgnoreCase(k)))
+        require(unknown.isEmpty,
+          s"$op assigns to unknown column(s) ${unknown.mkString(", ")}")
+        val probe = on(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+        schema.fields.foreach { f =>
+          assigned(f.name).foreach { c =>
+            val from = probe.select(c.as(f.name)).schema.head.dataType
+            require(from == f.dataType ||
+              org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, f.dataType),
+              s"$op assigns ${from.simpleString} to column ${f.name}: " +
+                s"${f.dataType.simpleString} — a lossy or invalid coercion " +
+                "would silently NULL or truncate under non-ANSI semantics; " +
+                "cast explicitly in the assignment expression if intended")
+          }
+        }
+        checkedFor = Some(schema)
+      }
+    def project(schema: StructType, hit: Option[org.apache.spark.sql.Column])(
+        old: org.apache.spark.sql.types.StructField => org.apache.spark.sql.Column)
+        : Seq[org.apache.spark.sql.Column] =
+      schema.fields.map { f =>
+        assigned(f.name) match {
+          case Some(c) =>
+            val v = c.cast(f.dataType)
+            hit.fold(v)(h => org.apache.spark.sql.functions.when(h, v)
+              .otherwise(old(f))).as(f.name)
+          case None => old(f).as(f.name)
+        }
+      }.toIndexedSeq
   }
 
   /** MERGE — the ANSI upsert over the snapshot store (the reference's
@@ -3133,34 +3173,40 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     *   - WHEN MATCHED THEN UPDATE SET `matchedUpdate` assignments
     *     (expressions over BOTH sides), or WHEN MATCHED THEN DELETE
     *     (`matchedDelete`), and/or
-    *   - WHEN NOT MATCHED THEN INSERT by NAME (`insertNotMatched`):
-    *     source columns project into the target schema, missing columns
-    *     null, types gated by the same lossless up-cast rule as `update`.
+    *   - WHEN NOT MATCHED THEN INSERT (`insertNotMatched`): the explicit
+    *     `insertAssignments` (expressions over the source), or by default
+    *     source columns BY NAME into the target schema — extra source
+    *     columns ignored, missing ones NULL, types gated by the same
+    *     lossless up-cast rule as `update`.
     *
     * `condition` and assignment Columns reference the two sides through
     * the ALIASES `target` and `source` (`col("target.id") ===
     * col("source.id")`, `col("source.v") + col("target.v")`) — both
     * frames are aliased internally, the idiomatic Spark spelling of
-    * Delta's target()/source() contract.
+    * Delta's target()/source() contract. `matchedUpdate` and
+    * `insertAssignments` pass `update`'s [[AssignmentGate]] before a
+    * candidate reads the target: an unknown target column or a lossy
+    * coercion is refused with an IllegalArgumentException, and the table
+    * is left as it was.
     *
-    * Mechanics — `update`'s copy-on-write machinery generalized to a
-    * two-sided match: the source is materialized ONCE (localCheckpoint —
-    * it is evaluated in three passes and must not drift); one inner-join
-    * pass finds the matched files AND the per-target-row match
-    * multiplicity (grouped on the scan's (file, row-index) identity —
-    * multiple source matches for one target row make an UPDATE ambiguous
-    * and fail loudly, ANSI/Delta's cardinality rule; deletes tolerate
-    * them); matched files rewrite once via a left join (hit rows updated
-    * or dropped, unhit rows copied) — EXCEPT sparse ones: a file whose
-    * matched fraction is within `delete`'s dvMaxFraction policy records
-    * a deletion vector for its old rows instead of rewriting (the CDC
-    * upsert shape — one changed row per fat file — is copy-on-write's
-    * worst case here too), with an update's post-images riding as
-    * ordinary delta data; not-matched source rows append as
+    * Mechanics — `update`'s candidate steps on a two-sided match. Shared
+    * with [[mutationCandidate]]: the DV policy split ([[dvSplit]]), the
+    * vector record ([[vectorRecord]]), the bucket-claimed candidate commit
+    * ([[mutationCommit]]) and the assignment gate. Merge's own: the
+    * source is materialized ONCE (localCheckpoint — it is evaluated in
+    * three passes and must not drift); one inner-join pass finds the
+    * matched files AND the per-target-row match multiplicity (grouped on
+    * the scan's (file, row-index) identity — multiple source matches for
+    * one target row make an UPDATE ambiguous and fail loudly, ANSI/Delta's
+    * cardinality rule; deletes tolerate them), a pass an insert-only merge
+    * skips; copy-on-write files rewrite once via a left join (hit rows
+    * updated or dropped, unhit rows copied), while vectored files' updated
+    * rows ride as ordinary delta data; not-matched source rows append as
     * ordinary delta data. One commit carries the rewrite + inserts +
-    * tombstones + change images (delete pre-images, insert post-images
-    * — the feed's delete(pre)+insert(post) update contract extends to
-    * merge unchanged).
+    * tombstones + vectors + change images (delete pre-images, insert
+    * post-images — the feed's delete(pre)+insert(post) update contract
+    * extends to merge unchanged); a merge with nothing to write commits
+    * nothing.
     *
     * CONCURRENCY: CAS commit with RECOMPUTE on any conflict — unlike
     * delete/update, a merge cannot re-base over pure appends: an
@@ -3175,7 +3221,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       insertAssignments: Option[Map[String, org.apache.spark.sql.Column]] = None,
       maxRetries: Int = 5,
       dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, when}
+    import org.apache.spark.sql.functions.{col, count, lit, max}
     require(!(matchedUpdate.isDefined && matchedDelete),
       "merge takes ONE matched action: update or delete")
     require(matchedUpdate.isDefined || matchedDelete || insertNotMatched,
@@ -3186,37 +3232,25 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       s"merge source reserves column name(s) ${clash.mkString(", ")}")
     val src = source.localCheckpoint(true)
       .withColumn("__src_hit", lit(true)).alias("source")
+    val updateGate = matchedUpdate.map(new AssignmentGate("merge", _))
+    val insertGate = insertAssignments.map(new AssignmentGate("merge insert", _))
 
     /** One merge candidate against head `v` (None: a no-op merge). */
     def candidate(v: Long): Option[Long] = {
       val schema = snapshotSchema(table, Some(v))
+      updateGate.foreach(_.check(schema,
+        _.alias("target").join(src, condition, "inner")))
+      insertGate.foreach(_.check(schema, _ => src))
       val selTarget = schema.fieldNames
         .map(n => col(s"target.$n").as(n)).toIndexedSeq
+      def targetCol(f: org.apache.spark.sql.types.StructField) =
+        col(s"target.${f.name}")
       // INSERT projection: explicit assignments (SQL MERGE's aligned
-      // INSERT clause — expressions over the source, types resolved
-      // plan-only against the not-matched frame) or, by default, source
-      // columns BY NAME into the target schema; either way gated by the
-      // same lossless up-cast rule as update's assignments.
-      def insertProjection(notMatched: DataFrame): Seq[org.apache.spark.sql.Column] =
-        insertAssignments match {
-          case Some(assigns) =>
-            def assigned(n: String) = assigns.collectFirst {
-              case (k, c) if k.equalsIgnoreCase(n) => c
-            }
-            schema.fields.map { f =>
-              assigned(f.name) match {
-                case Some(c) =>
-                  val from = notMatched.select(c.as(f.name)).schema.head.dataType
-                  require(from == f.dataType ||
-                    org.apache.spark.sql.catalyst.expressions.Cast
-                      .canUpCast(from, f.dataType),
-                    s"merge inserts ${from.simpleString} into column " +
-                      s"${f.name}: ${f.dataType.simpleString} — lossy/" +
-                      "invalid; cast in the insert expression")
-                  c.cast(f.dataType).as(f.name)
-                case None => lit(null).cast(f.dataType).as(f.name)
-              }
-            }.toIndexedSeq
+      // INSERT clause) or, by default, source columns BY NAME into the
+      // target schema under the same lossless up-cast rule.
+      def insertProjection: Seq[org.apache.spark.sql.Column] =
+        insertGate match {
+          case Some(g) => g.project(schema, None)(f => lit(null).cast(f.dataType))
           case None => schema.fields.map { f =>
             source.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
               case Some(s) =>
@@ -3235,149 +3269,85 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       val live = liveDataFiles(table, v)
       def tgt(files: Seq[Path]): DataFrame =
         scanWithDv(table, files, schema, chainDv).alias("target")
+      def pathsOf(keys: Seq[String]): Seq[Path] =
+        keys.map(k => tableDir(table).resolve(k))
 
-      val hasMatchedAction = matchedUpdate.isDefined || matchedDelete
       // Pass 1: matched files, per-target-row match multiplicity, and
-      // per-file matched-row counts (the deletion-vector policy's input)
-      // in ONE job — at most #files rows come back. An insert-only merge
-      // never consumes matched files (no rewrite, no vectors, no images,
-      // no cardinality check), so it skips this full target⋈source scan
-      // outright — its only join is the left_anti below.
+      // per-file matched-row counts (the DV split's input) in ONE job — at
+      // most #files rows come back. An insert-only merge never consumes
+      // matched files (no rewrite, no vectors, no images, no cardinality
+      // check), so it skips this full target⋈source scan outright — its
+      // only join is the left_anti below.
       val perFile =
-        if (live.isEmpty || !hasMatchedAction) Array.empty[(String, Long, Long)]
+        if (live.isEmpty || (matchedUpdate.isEmpty && !matchedDelete))
+          Array.empty[(String, Long, Long)]
         else tgt(live).join(src, condition, "inner")
           .groupBy(col("__file_key"), col("__row_idx"))
           .agg(count(lit(1)).as("__m"))
           .groupBy(col("__file_key"))
           .agg(max(col("__m")).as("__mm"), count(lit(1)).as("__rows"))
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val matchedKeys = perFile.map(_._1).toSeq.sorted
       if (matchedUpdate.isDefined && perFile.exists(_._2 > 1))
         throw new IllegalStateException(
           s"merge into $table: a target row matches multiple source rows — " +
             "UPDATE is ambiguous (ANSI cardinality violation); deduplicate " +
             "the source or tighten the condition")
-      // DV policy split — the same sparse-predicate rule as delete/update,
-      // because the CDC upsert shape (one changed row per fat file) is
-      // copy-on-write's worst case here too: files whose matched fraction
-      // is within dvMaxFraction vector their old rows instead of
-      // rewriting; an update's post-images for them ride as ordinary
-      // delta data, a delete's contribute nothing.
-      val liveTotals: Map[String, Long] = live.flatMap { p =>
-        val dirV = p.getParent.getFileName.toString.stripPrefix("v=").toLong
-        val k = fileKey(p)
-        fileStats(table, dirV).flatMap(_.get(p.getFileName.toString))
-          .map(st => k -> (st.rows -
-            chainDv.get(k).map(_.size.toLong).getOrElse(0L)))
-      }.toMap
-      var (dvEligible, cowSeq) =
-        if (!hasMatchedAction) (Array.empty[(String, Long, Long)], perFile)
-        else perFile.partition { case (k, _, c) =>
-          dvMaxFraction > 0 && liveTotals.get(k).exists(t =>
-            t > 0 && c.toDouble / t <= dvMaxFraction)
-        }
-      if (dvEligible.iterator.map(_._3).sum > SnapshotStore.DvMaxRowsPerMutation) {
-        cowSeq = perFile; dvEligible = Array.empty
-      }
-      val cowKeys = cowSeq.map(_._1).toSeq.sorted
-      val dvKeySet = dvEligible.map(_._1).toSet
-      val doRewrite = cowKeys.nonEmpty && hasMatchedAction
+      val (cowKeys, dvKeys) = dvSplit(table, live, chainDv,
+        perFile.map(r => r._1 -> r._3).toSeq, dvMaxFraction)
       val hit = col("__src_hit").isNotNull
       // one joint matched-row frame over ALL matched files feeds the
       // change images and the vector record; the left-join rewrite runs
       // over the copy-on-write files only
       val matchedAll =
-        if (hasMatchedAction && matchedKeys.nonEmpty)
-          Some(tgt(matchedKeys.map(k => tableDir(table).resolve(k)))
-            .join(src, condition, "inner"))
-        else None
-      val lj = if (doRewrite)
-        Some(tgt(cowKeys.map(k => tableDir(table).resolve(k)))
-          .join(src, condition, "left_outer")) else None
-      def postProjection(j: DataFrame,
-          assignments: Map[String, org.apache.spark.sql.Column]): DataFrame = {
-        def assigned(n: String) = assignments.collectFirst {
-          case (k, c) if k.equalsIgnoreCase(n) => c
+        if (perFile.isEmpty) None
+        else Some(tgt(pathsOf(cowKeys ++ dvKeys)).join(src, condition, "inner"))
+      val rewritten: Option[DataFrame] =
+        if (cowKeys.isEmpty) None
+        else {
+          val j = tgt(pathsOf(cowKeys)).join(src, condition, "left_outer")
+          Some(updateGate match {
+            case Some(g) => j.select(g.project(schema, Some(hit))(targetCol): _*)
+            case None => // matched DELETE: unhit rows survive (exactly once
+              // even when a dropped row matched several source rows)
+              j.where(!hit).dropDuplicates("__file_key", "__row_idx")
+                .select(selTarget: _*)
+          })
         }
-        j.select(schema.fields.map { f =>
-          assigned(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(col(s"target.${f.name}").as(f.name))
-        }.toIndexedSeq: _*)
-      }
-      val rewritten: Option[DataFrame] = lj.map { j =>
-        matchedUpdate match {
-          case Some(assignments) =>
-            def assigned(n: String) = assignments.collectFirst {
-              case (k, c) if k.equalsIgnoreCase(n) => c
-            }
-            j.select(schema.fields.map { f =>
-              assigned(f.name) match {
-                case Some(c) => when(hit, c.cast(f.dataType))
-                  .otherwise(col(s"target.${f.name}")).as(f.name)
-                case None => col(s"target.${f.name}").as(f.name)
-              }
-            }.toIndexedSeq: _*)
-          case None => // matched DELETE: unhit rows survive (exactly once
-            // even when a dropped row matched several source rows)
-            j.where(!hit).dropDuplicates("__file_key", "__row_idx")
-              .select(selTarget: _*)
-        }
-      }
-      // pre-images: every matched target row (cow AND vectored), once
-      val preImages = matchedAll.map(
-        _.dropDuplicates("__file_key", "__row_idx").select(selTarget: _*))
+      // every matched target row (copy-on-write AND vectored), once
+      val matchedOnce = matchedAll.map(
+        _.dropDuplicates("__file_key", "__row_idx"))
+      def inDvFiles(j: DataFrame) = j.where(col("__file_key").isin(dvKeys: _*))
+      val dvRecord =
+        if (dvKeys.isEmpty) Map.empty[String, Seq[Long]]
+        else vectorRecord(inDvFiles(matchedOnce.get))
       // post-images: multiplicity == 1 is enforced for update, so the
-      // inner-join rows ARE the updated rows, no dedup needed
-      val postImages = (matchedAll, matchedUpdate) match {
-        case (Some(j), Some(assignments)) => Some(postProjection(j, assignments))
-        case _ => None
-      }
-      // the vector: (file, row index) of every matched row in a DV'd file
-      val dvRecord: Map[String, Seq[Long]] =
-        if (dvKeySet.isEmpty) Map.empty
-        else matchedAll.get
-          .where(col("__file_key").isin(dvKeySet.toSeq: _*))
-          .select(col("__file_key"), col("__row_idx")).distinct()
-          .collect().groupBy(_.getString(0))
-          .map { case (k, rs) => k -> rs.map(_.getLong(1)).toSeq.sorted }
-      // a DV'd file's updated rows land as ordinary version data
-      val dvPost: Option[DataFrame] = (matchedAll, matchedUpdate) match {
-        case (Some(j), Some(assignments)) if dvKeySet.nonEmpty =>
-          Some(postProjection(
-            j.where(col("__file_key").isin(dvKeySet.toSeq: _*)), assignments))
-        case _ => None
-      }
+      // inner-join rows ARE the updated rows, no dedup needed; a DV'd
+      // file's updated rows land as ordinary version data
+      def postImages(j: DataFrame) = updateGate.map(g =>
+        j.select(g.project(schema, None)(targetCol): _*))
+      val dvPost =
+        if (dvKeys.isEmpty) None else matchedAll.flatMap(j => postImages(inDvFiles(j)))
       val inserts: Option[DataFrame] =
         if (!insertNotMatched) None
         else {
           val notMatched =
             if (live.isEmpty) src
             else src.join(tgt(live), condition, "left_anti")
-          Some(notMatched.select(insertProjection(notMatched): _*))
+          Some(notMatched.select(insertProjection: _*))
         }
 
       // No-op guard: nothing to rewrite, nothing to vector, nothing to
       // insert — return the unchanged version instead of committing an
       // empty one. The isEmpty probe only runs on this already-rare path.
-      if (!doRewrite && dvRecord.isEmpty && inserts.forall(_.isEmpty)) None
-      else {
-        val data = (rewritten.toSeq ++ dvPost.toSeq ++ inserts.toSeq)
-          .reduceOption(_.unionByName(_))
-        val changeSet = (postImages.toSeq ++ inserts.toSeq)
-          .reduceOption(_.unionByName(_))
-        // Same bucket-claim preservation as mutationCandidate: survivors,
-        // post-images AND inserts repartition by the head's bucket spec,
-        // so every file this merge writes is bucket-attributed (part
-        // index = bucket id) and the upserted fact table keeps its
-        // zero-exchange storage-partitioned joins.
-        val (bucketProps, bucketed) = bucketClaimOf(table, v)
-        val dataOut = data.map(bucketed)
-        Some(commitWith(table, dataOut, changeSet = changeSet,
-          base = Some(v), snapshot = schema, advance = false,
-          removed = if (hasMatchedAction) cowKeys else Nil,
-          removedRows = preImages, dv = dvRecord,
-          props = bucketProps + (SnapshotStore.OpProp -> "merge")))
-      }
+      if (cowKeys.isEmpty && dvRecord.isEmpty && inserts.forall(_.isEmpty)) None
+      else Some(mutationCommit(table, v, schema,
+        data = (rewritten.toSeq ++ dvPost.toSeq ++ inserts.toSeq)
+          .reduceOption(_.unionByName(_)),
+        changeSet = (matchedAll.flatMap(postImages).toSeq ++ inserts.toSeq)
+          .reduceOption(_.unionByName(_)),
+        removed = cowKeys,
+        removedRows = matchedOnce.map(_.select(selTarget: _*)),
+        dv = dvRecord, op = "merge"))
     }
     foldVectorsOverCap(table)
     optimisticCommit(table, "merge", maxRetries)(candidate)
@@ -3935,7 +3905,9 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     * ([[foldVectorsOverCap]]), then prepares every table's unexposed
     * candidate against its head ([[mutationCandidate]]: matched-file scan,
     * DV policy split, bucket-attributed survivors, tombstones, delete
-    * images). [[SnapshotStore.testRaceHook]] fires once per round; then,
+    * images); a refused or failed prepare discards the candidates already
+    * written before it rethrows. [[SnapshotStore.testRaceHook]] fires
+    * once per round; then,
     * under the sorted pointer locks, every table's base is re-validated
     * and [[publishTxn]] lands the `_txn/` intent (the roll-forward point —
     * a crash after it completes the WHOLE transaction via
@@ -4008,7 +3980,17 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       mutationCandidate(t, bases(t), pred, op, dvMaxFraction)(
         rewrite = rw, changeSetOf = cs, dvReplacement = dv)
     }
-    var cands: Map[String, Option[Long]] = tables.map(t => t -> prepare(t)).toMap
+    // every table's candidate against `bases`; nothing orphaned on a refusal
+    def prepareAll(): Map[String, Option[Long]] = {
+      var done = Map.empty[String, Option[Long]]
+      try tables.foreach(t => done += t -> prepare(t))
+      catch { case e: Throwable =>
+        discardCandidates(done.collect { case (t, Some(c)) => t -> c }, Some(e))
+        throw e
+      }
+      done
+    }
+    var cands = prepareAll()
     while (true) {
       val withCand = tables.filter(cands(_).isDefined)
       if (withCand.isEmpty) return bases // nothing matched anywhere: no-op tx
@@ -4061,7 +4043,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
             recomputeBackoff(maxRetries - retriesLeft)
             retriesLeft -= 1
             bases = backstopAndBases()
-            cands = tables.map(t => t -> prepare(t)).toMap
+            cands = prepareAll()
           }
       }
     }

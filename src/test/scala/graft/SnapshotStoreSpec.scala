@@ -1020,6 +1020,132 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(row.isNullAt(0) && row.isNullAt(1))
   }
 
+  /** Every file under `table`'s directory, relative to it. */
+  private def filesOf(st: SnapshotStore, table: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(st.root, table)
+    val w = java.nio.file.Files.walk(dir)
+    try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(dir.relativize(_).toString).toSet
+    finally w.close()
+  }
+
+  /** `call` on table t is refused with an IllegalArgumentException whose
+    * message contains `why`, and t keeps its head and every file. */
+  private def assertRefusedLeavingT(st: SnapshotStore, why: String)(call: => Long): Unit = {
+    val (head, files) = (st.latestVersion("t"), filesOf(st, "t"))
+    val e = intercept[IllegalArgumentException](call)
+    assert(e.getMessage.contains(why), e.getMessage)
+    assert(st.latestVersion("t") == head)
+    assert(filesOf(st, "t") == files)
+  }
+
+  test("merge refuses a matched update of an unknown column, as update does") {
+    val st = freshStore()
+    st.commit("t", Seq((1L, 1), (2L, 2)).toDF("id", "v"))
+    assertRefusedLeavingT(st, "unknown column(s) nope") {
+      st.merge("t", Seq((1L, 9)).toDF("id", "v"),
+        col("target.id") === col("source.id"),
+        matchedUpdate = Some(Map("nope" -> col("source.v"))))
+    }
+  }
+
+  test("merge refuses a lossy matched update (7.9 into an int column), as update does") {
+    val st = freshStore()
+    st.commit("t", Seq((1L, 1), (2L, 2)).toDF("id", "v"))
+    val src = Seq((1L, 7.9)).toDF("id", "x")
+    assertRefusedLeavingT(st, "lossy") {
+      st.merge("t", src, col("target.id") === col("source.id"),
+        matchedUpdate = Some(Map("v" -> col("source.x"))))
+    }
+    // the cast written out in the assignment is the caller's choice
+    st.merge("t", src, col("target.id") === col("source.id"),
+      matchedUpdate = Some(Map("V" -> col("source.x").cast("int"))))
+    assert(st.read("t").as[(Long, Int)].collect().toMap == Map(1L -> 7, 2L -> 2))
+  }
+
+  test("merge refuses an insert assignment to an unknown column") {
+    val st = freshStore()
+    st.commit("t", Seq((1L, 1), (2L, 2)).toDF("id", "v"))
+    assertRefusedLeavingT(st, "unknown column(s) nope") {
+      st.merge("t", Seq((5L, 9)).toDF("id", "v"),
+        col("target.id") === col("source.id"),
+        insertAssignments = Some(Map("id" -> col("source.id"),
+          "nope" -> col("source.v"))))
+    }
+  }
+
+  test("mutateAll: a later table's refused prepare discards the earlier candidates: heads unchanged, no orphan") {
+    val st = freshStore()
+    Seq("a", "b").foreach(t => st.commit(t, Seq((1L, 1L), (2L, 2L)).toDF("id", "v")))
+    val e = intercept[IllegalArgumentException](st.mutateAll(
+      deletes = Map("a" -> (col("id") === 1L)),
+      updates = Map("b" -> ((col("id") === 1L, Map("nope" -> col("v")))))))
+    assert(e.getMessage.contains("unknown column(s) nope"), e.getMessage)
+    assert(st.latestVersion("a").contains(1L) && st.latestVersion("b").contains(1L))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(st.root, "a", "v=2")),
+      "a's candidate was orphaned")
+    Seq("a", "b").foreach(t => assert(orphanDirs(st.root, t).isEmpty,
+      s"$t: ${orphanDirs(st.root, t)}"))
+  }
+
+  /** A store over a copy of `st`'s root: the same state down to its file
+    * names, so two mutations' tombstones and vectors compare key for key. */
+  private def copyOf(st: SnapshotStore): SnapshotStore = {
+    val from = java.nio.file.Paths.get(st.root)
+    val to = java.nio.file.Files.createTempDirectory("graft-twin")
+    val w = java.nio.file.Files.walk(from)
+    try w.iterator().asScala.foreach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q)
+    } finally w.close()
+    new SnapshotStore(spark, to.toString)
+  }
+
+  test("merge and delete/update apply one row-mutation policy on copy-on-write and DV layouts") {
+    def rows(n: Long) = spark.range(0, n).selectExpr("id", "cast(id as double) as v")
+    // One matched row is a tenth of a clustered file, over the default
+    // dvMaxFraction (copy-on-write), and 0.01% of the single file
+    // (vectored). The update's row 7 sits in the one clustered file the
+    // delete leaves as it was.
+    val layouts = Seq[(String, SnapshotStore => Unit, Boolean)](
+      ("4-file clustered", _.commitClustered("t", rows(40),
+        clusterBy = Seq("id"), targetPartitions = 4), true),
+      ("10,000-row single-file", _.commit("t", rows(10000).coalesce(1)), false))
+    layouts.foreach { case (layout, build, copyOnWrite) =>
+      val viaMerge = freshStore()
+      build(viaMerge)
+      val viaMutation = copyOf(viaMerge)
+      def same(what: String, vm: Long, vd: Long, prev: Long): Unit = {
+        val clue = s"$layout, $what"
+        assert(vm == vd && vm > prev, clue)
+        Seq(viaMerge, viaMutation).foreach { st =>
+          assert(st.removedAt("t", vm).nonEmpty == copyOnWrite, clue)
+          assert(st.dvAt("t", vm).nonEmpty != copyOnWrite, clue)
+        }
+        def live(st: SnapshotStore) = st.read("t").as[(Long, Double)].collect().sorted.toSeq
+        def feed(st: SnapshotStore) =
+          st.changeFeedSince("t", prev).select("id", "v", "_version", "_change_type")
+            .collect().map(_.toString).sorted.toSeq
+        assert(live(viaMerge) == live(viaMutation), clue)
+        assert(viaMerge.removedAt("t", vm) == viaMutation.removedAt("t", vd), clue)
+        assert(viaMerge.dvAt("t", vm) == viaMutation.dvAt("t", vd), clue)
+        assert(feed(viaMerge) == feed(viaMutation), clue)
+      }
+      val v1 = viaMerge.latestVersion("t").get
+      val ids = Seq(10L, 20L, 30L)
+      same("delete",
+        viaMerge.merge("t", ids.toDF("id"), col("target.id") === col("source.id"),
+          matchedDelete = true, insertNotMatched = false),
+        viaMutation.delete("t", col("id").isin(ids: _*)), v1)
+      same("update",
+        viaMerge.merge("t", Seq((7L, -1.0)).toDF("id", "v"),
+          col("target.id") === col("source.id"),
+          matchedUpdate = Some(Map("v" -> col("source.v"))), insertNotMatched = false),
+        viaMutation.update("t", col("id") === 7L, Map("v" -> lit(-1.0))), v1 + 1)
+    }
+  }
+
   test("migrateLegacyTable stamps a pre-sentinel store back to readable") {
     // A store written before the _committed protocol has _SUCCESS-only
     // versions everywhere — all genuinely committed (the old protocol

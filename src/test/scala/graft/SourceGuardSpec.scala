@@ -29,6 +29,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * `foldVectorsOverCap`. A second mutation loop or backstop fails here
   * with `file:line`.
   *
+  * The row mutations' write policies have one owner each, which
+  * `mutationCandidate` and `merge` both call: the deletion-vector split
+  * (`DvMaxRowsPerMutation` and the `<= dvMaxFraction` partition) lives
+  * only in `dvSplit`, and `bucketClaimOf(` is called only by
+  * `mutationCommit` and by the steps that bucket-attribute files outside
+  * a candidate commit (`rebaseMutationCandidate`'s extra rewrite files,
+  * `compactCandidate`, `compactVectored`). A copy of either fails here
+  * with `file:line`.
+  *
   * The choice between a driver-resident structure and the Spark engines
   * has one owner: an `AccelCache` is constructed, and `probeAndLoad` is
   * called, only in `graph/GraphOps.scala`.
@@ -87,6 +96,14 @@ class SourceGuardSpec extends AnyFunSuite {
       Set("mutateAll"), "mutation candidate step"),
     ("""(?<!var )\bdvChainFoldRows\b""".r, Set("foldVectorsOverCap"),
       "vector backstop"))
+
+  private val mutationPolicy: Protocol = Seq(
+    ("""(?<!val )\bDvMaxRowsPerMutation\b|<=\s*dvMaxFraction\b""".r, Set("dvSplit"),
+      "DV policy split"),
+    ("""(?<!def )\bbucketClaimOf\s*\(""".r,
+      Set("mutationCommit", "rebaseMutationCandidate", "compactCandidate",
+        "compactVectored"),
+      "bucket-claimed commit"))
 
   /** A member `def` of a class or object: declared at two-space indent. */
   private val memberDef =
@@ -205,6 +222,44 @@ class SourceGuardSpec extends AnyFunSuite {
     val store = linesOf(java.nio.file.Paths.get(
       "src", "main", "scala", "graft", "core", "SnapshotStore.scala"))
     mutationProtocol.foreach { case (re, owners, what) =>
+      assert(store.zip(members(store)).exists { case (line, member) =>
+        owners(member) && code(line).exists(re.findFirstIn(_).isDefined)
+      }, s"no $what in ${owners.mkString(" or ")}")
+    }
+  }
+
+  test("the mutation-policy matcher flags each step outside its owners and nothing else") {
+    val src = Seq(
+      "  private def dvSplit(table: String, live: Seq[Path],",
+      "      t > 0 && c.toDouble / t <= dvMaxFraction)",
+      "    if (dv.iterator.map(_._2).sum > SnapshotStore.DvMaxRowsPerMutation)",
+      "  private def mutationCommit(table: String, v: Long, schema: StructType,",
+      "    val (bucketProps, bucketed) = bucketClaimOf(table, v)",
+      "  private def bucketClaimOf(table: String, v: Long)",
+      "  val DvMaxRowsPerMutation: Long = 1L << 22",
+      "  def merge(table: String): Long = {",
+      "          t > 0 && c.toDouble / t <= dvMaxFraction)",
+      "      if (dvEligible.iterator.map(_._3).sum > SnapshotStore.DvMaxRowsPerMutation) {",
+      "        val (bucketProps, bucketed) = bucketClaimOf(table, v)",
+      "    // bucketClaimOf(table, v) and DvMaxRowsPerMutation in prose",
+      "      dvMaxFraction: Double = SnapshotStore.DefaultDvMaxFraction): Long = {",
+      "  private def mutationCandidate(table: String, v: Long,",
+      "            dvMaxFraction > 0 && liveTotals.get(k).exists(t =>",
+      "          if (dvEligible.iterator.map(_._2).sum >",
+      "              SnapshotStore.DvMaxRowsPerMutation) {")
+    assert(protocolBreaches(mutationPolicy, src).map(_._1) == Seq(9, 10, 11, 17))
+  }
+
+  test("src/main/scala gives the DV split and the bucket-claimed mutation commit one owner each") {
+    val offenders = mainSources().flatMap { f =>
+      protocolBreaches(mutationPolicy, linesOf(f)).map { case (n, what) => s"$f:$n ($what)" }
+    }
+    assert(offenders.isEmpty,
+      "the DV policy split belongs to dvSplit, a row mutation's bucket-claimed " +
+        s"commit to mutationCommit: ${offenders.mkString(", ")}")
+    val store = linesOf(java.nio.file.Paths.get(
+      "src", "main", "scala", "graft", "core", "SnapshotStore.scala"))
+    mutationPolicy.foreach { case (re, owners, what) =>
       assert(store.zip(members(store)).exists { case (line, member) =>
         owners(member) && code(line).exists(re.findFirstIn(_).isDefined)
       }, s"no $what in ${owners.mkString(" or ")}")
